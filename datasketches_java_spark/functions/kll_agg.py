@@ -22,6 +22,7 @@ lossy tiers the rank-error contract 2.446/k^0.9433
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -42,6 +43,40 @@ def _quantile_frac(sk: KllDoubles, p: int, q: int) -> float:
     return float(it[min(idx, len(it) - 1)])
 
 
+def kll_partial(values: np.ndarray, k: int = DEFAULT_K, seed: int = 9001) -> bytes:
+    """One serialized partial sketch over `values` (NaN skipped)."""
+    return KllDoubles(k=k, seed=seed).update_many(values).serialize()
+
+
+def kll_merge(blobs, seed: int = 9001) -> KllDoubles:
+    """Merge serialized partial sketches, in the order given."""
+    return reduce(KllDoubles.merge,
+                  (KllDoubles.deserialize(b, seed=seed) for b in blobs))
+
+
+def _kll_partials(
+    df: DataFrame, group_col: str, value_col: str, k: int, seed: int
+) -> DataFrame:
+    """(group, sketch): one partial sketch per (Arrow batch, group)."""
+
+    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out_g, out_s = [], []
+            for g, sub in pdf.groupby(group_col, sort=False):
+                out_g.append(g)
+                out_s.append(
+                    kll_partial(sub[value_col].to_numpy(np.float64), k, seed)
+                )
+            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
+
+    return df.select(
+        F.col(group_col).cast("string").alias(group_col),
+        F.col(value_col).cast("double").alias(value_col),
+    ).mapInPandas(partial, f"{group_col} string, sketch binary")
+
+
 def kll_sketch_agg(
     df: DataFrame,
     group_col: str,
@@ -54,32 +89,13 @@ def kll_sketch_agg(
     toByteArray), for operators that consume sketch state directly
     (KS drift tests, cross-window comparisons) rather than quantiles."""
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                sk = KllDoubles(k=k, seed=seed)
-                sk.update_many(sub[value_col].to_numpy(np.float64))
-                out_g.append(g)
-                out_s.append(sk.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
-
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
-
     def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllDoubles.deserialize(pdf["sketch"].iloc[0], seed=seed)
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(KllDoubles.deserialize(b, seed=seed))
+        sk = kll_merge(pdf["sketch"], seed)
         return pd.DataFrame({group_col: [key[0]], "sketch": [sk.serialize()]})
 
-    return partials.groupBy(group_col).applyInPandas(
-        final, f"{group_col} string, sketch binary"
-    )
+    return _kll_partials(df, group_col, value_col, k, seed).groupBy(
+        group_col
+    ).applyInPandas(final, f"{group_col} string, sketch binary")
 
 
 def kll_quantile_agg(
@@ -94,30 +110,10 @@ def kll_quantile_agg(
     (p, q); output columns are named q_p_q (e.g. q_1_2 for the median).
 
     Output: (group, n, q_p_q...) with n = exact item count."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                sk = KllDoubles(k=k, seed=seed)
-                sk.update_many(sub[value_col].to_numpy(np.float64))
-                out_g.append(g)
-                out_s.append(sk.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
-
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
-
     qcols = [f"q_{p}_{q}" for p, q in quantiles]
 
     def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllDoubles.deserialize(pdf["sketch"].iloc[0], seed=seed)
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(KllDoubles.deserialize(b, seed=seed))
+        sk = kll_merge(pdf["sketch"], seed)
         row = {group_col: [key[0]], "n": [sk.n]}
         for (p, q), name in zip(quantiles, qcols):
             row[name] = [_quantile_frac(sk, p, q)]
@@ -126,7 +122,9 @@ def kll_quantile_agg(
     schema = f"{group_col} string, n bigint, " + ", ".join(
         f"{c} double" for c in qcols
     )
-    return partials.groupBy(group_col).applyInPandas(final, schema)
+    return _kll_partials(df, group_col, value_col, k, seed).groupBy(
+        group_col
+    ).applyInPandas(final, schema)
 
 
 def kll_items_quantile_agg(

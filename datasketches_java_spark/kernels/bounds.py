@@ -14,13 +14,6 @@ import math
 
 import numpy as np
 
-_erf = np.vectorize(math.erf, otypes=[np.float64])
-
-
-def normal_cdf(x: np.ndarray) -> np.ndarray:
-    return 0.5 * (1.0 + _erf(np.asarray(x, dtype=np.float64) / math.sqrt(2.0)))
-
-
 def approx_lower_bound_on_p(n: int, k: int, num_std_devs: float) -> float:
     """Lower bound on binomial p having seen k successes in n trials
     (BoundsOnBinomialProportions.approximateLowerBoundOnP analog)."""

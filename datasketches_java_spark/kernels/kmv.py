@@ -253,16 +253,6 @@ def jaccard_bounds(
     return max(0.0, f - num_std_dev * sd), f, min(1.0, f + num_std_dev * sd)
 
 
-def jaccard_batch(
-    sigs_a: list[np.ndarray], sigs_b: list[np.ndarray], k: int
-) -> np.ndarray:
-    """Vectorized-ish pairwise Jaccard estimates for verification batches."""
-    out = np.empty(len(sigs_a), dtype=np.float64)
-    for i, (a, b) in enumerate(zip(sigs_a, sigs_b)):
-        out[i] = jaccard_estimate(a, b, k)
-    return out
-
-
 def jaccard_bounds_batch(
     sigs_a: list[np.ndarray], sigs_b: list[np.ndarray], k: int,
     num_std_dev: float = 2.0,

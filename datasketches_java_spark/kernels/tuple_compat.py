@@ -503,8 +503,9 @@ def from_ref_updatable_bytes(buf: bytes, summary: str = "double") -> LegacyTuple
         # sampling-mode QS image with theta == p·LONG_MAX elides the
         # theta long; the reference reconstructs it from the stored
         # float (QuickSelectSketch.java deserialization:
-        # thetaLong = (long)(Long.MAX_VALUE * samplingProbability))
-        theta = int(_LONG_MAX * sampling_p)
+        # thetaLong = (long)(Long.MAX_VALUE * samplingProbability)),
+        # a saturating cast: p == 1.0 (product 2^63) gives LONG_MAX
+        theta = min(int(_LONG_MAX * sampling_p), _LONG_MAX)
     count = 0
     if flags & 8:  # HAS_ENTRIES
         count = int(np.frombuffer(buf[off:off + 4], dtype="<i4")[0])

@@ -1,20 +1,21 @@
-"""Per-cluster sketch audits — the Tuple-sketch-shaped aggregation
-(SURVEY.md U1): groupBy(cluster) + a struct of sketch columns.
+"""Per-cluster sketch audits (SURVEY.md U1): one mergeable-sketch
+reduce over one joined row set, members ⋈ signatures ⋈ captions.
 
- - distinct captions per cluster: Spark's built-in hll_sketch_agg /
-   hll_sketch_estimate (the same Apache DataSketches HLL algorithm the
-   reference implements in hll/HllSketch.java — we delegate, SURVEY §2a H1-H3)
- - distinct shingles per cluster: our KMV union (theta/ThetaUnionImpl
-   semantics) as a TWO-LEVEL partial/final aggregation — each Arrow
-   batch collapses its clusters to one serialized sketch (map-side
-   combine), the grouped final stage unions sketches; per-task state is
-   O(k) per cluster no matter how large the cluster
-   (sampling/VarOptItemsUnion.java:205 and ThetaUnionImpl.java:272-303
-   are the reference precedents for this split)
- - caption-length quantiles: the KLL sketch UDAF (kernels/kll.py via
-   functions/kll_agg.py), discrete inclusive quantiles with integer
-   rank fractions — exact when cluster size <= k (the gate regime),
-   rank-error-bounded 2.446/k^0.9433 beyond (kll/KllHelper.java:295-299)
+ 1. partial (mapInPandas): per (Arrow batch, cluster) the row count,
+    the KMV union of the member signatures (ThetaUnionImpl.java:272-303)
+    and a KLL sketch of the caption lengths — map-side combine, O(k)
+    state per cluster whatever its size.
+ 2. merge: one native ObjectHashAggregate exchange sums the counts and
+    collects each sketch column as a SORTED array, so the merge order
+    is a function of the partial bytes, not of task completion order.
+ 3. finisher (mapInPandas, batched): per cluster row, the KMV union +
+    binomial bounds and the KLL merge + integer-rank-fraction quantiles
+    — exact when cluster size <= k (the gate regime), rank error
+    2.446/k^0.9433 beyond (kll/KllHelper.java:295-299).
+
+Distinct captions stay native: Spark's hll_sketch_agg (the reference's
+HLL algorithm, hll/HllSketch.java — SURVEY §2a H1-H3) beside the exact
+countDistinct twin, joined on cluster_id.
 """
 
 from __future__ import annotations
@@ -27,14 +28,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, FROZEN
+from ..functions.kll_agg import _quantile_frac, kll_merge, kll_partial
 from ..kernels import kmv
 
 AUDIT_SCHEMA = (
     "cluster_id string, n_rows bigint, kmv_union_est double, "
     "kmv_union_lb double, kmv_union_ub double"
 )
+_QUANTILE_COLS = ("caption_len_p50", "caption_len_p99")
 
 _HASH_SPACE_32 = float(2**31)  # pipeline signatures are top-32-bit truncated
+
+
+def reduce_partials(partials: DataFrame, k: int) -> DataFrame:
+    """Partial rows (cluster_id, n_rows, kmv, kll) → one row per cluster
+    (AUDIT_SCHEMA + caption-length p50/p99 as doubles): the native merge
+    exchange, then the batched finisher."""
+    merged = partials.groupBy("cluster_id").agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.array_sort(F.collect_list("kmv")).alias("kmv"),
+        F.array_sort(F.collect_list("kll")).alias("kll"),
+    )
+
+    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            recs = []
+            for kmv_blobs, kll_blobs in zip(pdf["kmv"], pdf["kll"]):
+                u = kmv.union_many([kmv.deserialize(b)[0] for b in kmv_blobs], k)
+                sk = kll_merge(kll_blobs)
+                recs.append((
+                    *kmv.estimate_bounds(u, k, 2, hash_space=_HASH_SPACE_32),
+                    _quantile_frac(sk, 1, 2), _quantile_frac(sk, 99, 100),
+                ))
+            out = pd.DataFrame(recs, dtype=np.float64, columns=[
+                "kmv_union_lb", "kmv_union_est", "kmv_union_ub", *_QUANTILE_COLS
+            ])
+            out["cluster_id"] = pdf["cluster_id"].to_numpy()
+            out["n_rows"] = pdf["n_rows"].to_numpy()
+            yield out
+
+    return merged.mapInPandas(
+        finish, AUDIT_SCHEMA + "".join(f", {c} double" for c in _QUANTILE_COLS)
+    )
 
 
 def cluster_audits(
@@ -65,66 +100,46 @@ def cluster_audits(
         members = base.select(
             "image_id", F.xxhash64("image_id").alias("id64"), "cluster_id"
         )
-    sig = signatures.select("id64", "sig")
-    joined = members.join(sig, "id64").select("cluster_id", "sig")
+    if corpus is not None:
+        caps = members.join(corpus.select("image_id", "caption"), "image_id")
+        cap_len = F.length("caption").cast("double")
+    else:
+        caps, cap_len = members, F.lit(None).cast("double")
+    rows = caps.select("id64", "cluster_id", cap_len.alias("cap_len")).join(
+        signatures.select("id64", "sig"), "id64"
+    )
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            out_c, out_n, out_s = [], [], []
+            out_c, out_n, out_kmv, out_kll = [], [], [], []
             for cid, sub in pdf.groupby("cluster_id", sort=False):
                 # sig wire format: little-endian int32 bytes
                 sigs = [np.frombuffer(s, dtype="<i4") for s in sub["sig"]]
-                u = kmv.union_many(sigs, k)
                 out_c.append(cid)
                 out_n.append(len(sub))
-                out_s.append(kmv.serialize(u, k))
-            yield pd.DataFrame(
-                {"cluster_id": out_c, "n_rows": out_n, "sketch": out_s}
-            )
+                out_kmv.append(kmv.serialize(kmv.union_many(sigs, k), k))
+                out_kll.append(kll_partial(sub["cap_len"].to_numpy(np.float64)))
+            yield pd.DataFrame({"cluster_id": out_c, "n_rows": out_n,
+                                "kmv": out_kmv, "kll": out_kll})
 
-    partials = joined.mapInPandas(
-        partial, "cluster_id string, n_rows bigint, sketch binary"
+    out = reduce_partials(rows.select("cluster_id", "sig", "cap_len").mapInPandas(
+        partial, "cluster_id string, n_rows bigint, kmv binary, kll binary"
+    ), k)
+    if corpus is None:
+        return out.drop(*_QUANTILE_COLS)
+    hll = caps.groupBy("cluster_id").agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("caption", F.lit(12))).alias(
+            "distinct_captions_hll"
+        ),
+        # the exact twin every estimate column is audited against
+        # (clusters are small; at web scale this column is dropped
+        # and the HLL/KMV estimates carry the audit)
+        F.countDistinct("caption").alias("distinct_captions_exact"),
     )
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sigs = [kmv.deserialize(b)[0] for b in pdf["sketch"]]
-        u = kmv.union_many(sigs, k)
-        lb, est, ub = kmv.estimate_bounds(u, k, 2, hash_space=_HASH_SPACE_32)
-        return pd.DataFrame(
-            {
-                "cluster_id": [key[0]],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "kmv_union_est": [est],
-                "kmv_union_lb": [lb],
-                "kmv_union_ub": [ub],
-            }
-        )
-
-    kmv_part = partials.groupBy("cluster_id").applyInPandas(final, AUDIT_SCHEMA)
-
-    out = kmv_part
-    if corpus is not None:
-        from ..functions.kll_agg import kll_quantile_agg
-
-        caps = members.join(corpus.select("image_id", "caption"), "image_id")
-        hll = caps.groupBy("cluster_id").agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("caption", F.lit(12))).alias(
-                "distinct_captions_hll"
-            ),
-            # the exact twin every estimate column is audited against
-            # (clusters are small; at web scale this column is dropped
-            # and the HLL/KMV estimates carry the audit)
-            F.countDistinct("caption").alias("distinct_captions_exact"),
-        )
-        kll = kll_quantile_agg(
-            caps.select("cluster_id", F.length("caption").alias("cap_len")),
-            "cluster_id", "cap_len", quantiles=((1, 2), (99, 100)),
-        ).select(
-            "cluster_id",
-            F.col("q_1_2").cast("int").alias("caption_len_p50"),
-            F.col("q_99_100").cast("int").alias("caption_len_p99"),
-        )
-        out = out.join(hll, "cluster_id").join(kll, "cluster_id")
-    return out
+    return out.join(hll, "cluster_id").select(
+        *out.drop(*_QUANTILE_COLS).columns,
+        "distinct_captions_hll", "distinct_captions_exact",
+        *(F.col(c).cast("int").alias(c) for c in _QUANTILE_COLS),
+    )

@@ -80,8 +80,8 @@ def _apply_map(labels: DataFrame, m: DataFrame) -> DataFrame:
 
 
 # one task comfortably owns this many tail edges (int64 pair ≈ 16 B/row
-# → 32 MB of arrays at the cap; the vectorized min-hook kernel below
-# clears 2M edges in well under a second)
+# → 32 MB of edges, ≤ 2·TAIL_EDGES label rows ≈ 64 MB at the cap; the
+# vectorized min-hook kernel below clears 2M edges in well under a second)
 TAIL_EDGES = 2_000_000
 
 
@@ -287,7 +287,7 @@ def connected_components(
                     metrics["cc_rounds"] = rounds + 1
 
         # Small-graph path: the label table is bounded by construction
-        # (≤ 2·TAIL_EDGES rows ≈ 32 MB of int64 pairs), so the size
+        # (≤ 2·TAIL_EDGES rows × 16 B ≈ 64 MB of int64 pairs), so the size
         # attach and the singleton anti-join broadcast it instead of
         # exchanging the (much larger) vertex table — two Exchanges
         # become none on the stage's fixed-cost tail (guide §3.1).

@@ -12,6 +12,8 @@ int32 signatures/band keys (operators/signatures.py) — every shuffle
 between the scan and the final cluster table moves only fixed-width
 integers. String image_ids re-enter at the two boundary products
 (`verified`, `clusters`) via a broadcast join against the slim id map.
+`clusters` is persisted, so its collect and the audit join share one
+CC tail + id-map join + min-name aggregate; releasing it is the caller's.
 """
 
 from __future__ import annotations
@@ -217,6 +219,7 @@ def run_pipeline(
             F.col("min_name").alias("cluster_id"),
             "cluster_size",
         )
+        .persist()
     )
 
     result = PipelineResult(

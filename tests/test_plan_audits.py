@@ -78,6 +78,23 @@ def test_pipeline_boundary_joins_broadcast(spark, smoke_sf_dir):
     assert "CartesianProduct" not in p
 
 
+def test_pipeline_audits_single_sketch_reduce(spark, smoke_sf_dir):
+    """The cluster audit is one partial pass, one native merge and one
+    batched finisher: no per-group Python final (FlatMapGroupsInPandas,
+    one Python call per cluster per sketch), and the sketch merge is
+    Spark's own ObjectHashAggregate."""
+    from datasketches_java_spark.config import FROZEN
+    from datasketches_java_spark.plans.pipeline import run_pipeline
+    from datasketches_java_spark.sources import tables
+
+    corpus = tables.load_corpus(spark, smoke_sf_dir)
+    res = run_pipeline(spark, corpus, FROZEN, with_audits=True)
+    p = plan_str(res.audits, mode="simple")
+    assert "FlatMapGroupsInPandas" not in p, p
+    assert "ObjectHashAggregate" in p, p
+    assert "CartesianProduct" not in p
+
+
 def test_ks_pairwise_no_cartesian(spark, queries):
     """ks_caption_len_sources compares all source pairs — must be a
     sketch-side pairwise compare, not a row-level cartesian."""

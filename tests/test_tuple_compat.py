@@ -63,3 +63,36 @@ def test_aod_empty_estimation_and_rejects():
         aod_from_ref_bytes(bytes(bad))
     with pytest.raises(ValueError):
         aod_from_ref_bytes(aod_to_ref_bytes(est), check_seed_hash=9)
+
+
+# ------------------------- updatable QuickSelectSketch, sampling mode
+
+def _qs_sampling_image(p: float, entries=()) -> bytes:
+    """Updatable tuple QS image (serVer 2, family 9, type 0) in sampling
+    mode with the theta long elided, double summaries."""
+    import struct
+    flags = 2 | (8 if entries else 4)  # IN_SAMPLING_MODE | HAS_ENTRIES/EMPTY
+    buf = bytes([1, 2, 9, 0, flags, 12, 5, 3]) + struct.pack("<f", p)
+    if entries:
+        buf += struct.pack("<i", len(entries))
+        for h, v in entries:
+            buf += struct.pack("<qdB", h, v, 0)
+    return buf
+
+
+def test_qs_sampling_theta_saturates_at_p_one():
+    """At p == 1.0, LONG_MAX·p rounds to 2^63; Java's (long) cast
+    saturates to LONG_MAX, so the image is not in estimation mode."""
+    from datasketches_java_spark.kernels.tuple_compat import (
+        from_ref_updatable_bytes,
+    )
+    long_max = (1 << 63) - 1
+    sk = from_ref_updatable_bytes(_qs_sampling_image(1.0, [(5, 2.5), (3, 1.0)]))
+    assert sk.theta_long == long_max
+    assert not sk.is_estimation_mode()
+    assert list(sk.hashes) == [3, 5] and list(sk.values) == [1.0, 2.5]
+    assert sk.estimate() == 2.0
+    assert from_ref_updatable_bytes(_qs_sampling_image(1.0)).theta_long == long_max
+    # below 1.0 the product is in range and the cast truncates as before
+    half = from_ref_updatable_bytes(_qs_sampling_image(0.5))
+    assert half.theta_long == int(long_max * 0.5) < long_max
