@@ -113,10 +113,6 @@ def phash64(img: np.ndarray) -> np.int64:
     return np.int64(packed.view(">u8")[0].astype(np.uint64).astype(np.int64))
 
 
-def phash_batch(bufs: list[bytes]) -> np.ndarray:
-    return np.array([phash64(decode(b)[0]) for b in bufs], dtype=np.int64)
-
-
 def phash64_batch_pixels(stack: np.ndarray) -> np.ndarray:
     """Batched phash64 over a SAME-DIMENSION image stack (g, h, w, 3):
     one broadcasted resize + one batched (d @ G) @ d.T BLAS pass for

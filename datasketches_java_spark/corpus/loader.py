@@ -12,7 +12,6 @@ import os
 import re
 import shutil
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -90,11 +89,3 @@ def corpus_dir(n_rows: int, cfg: DedupConfig = FROZEN, seed: int = 42) -> str:
 
 def corpus_dir_for_sf(sf_dir: str, cfg: DedupConfig = FROZEN) -> str:
     return corpus_dir(rows_for_sf_dir(sf_dir), cfg)
-
-
-def load_corpus_pandas(n_rows: int, cfg: DedupConfig = FROZEN) -> dict[str, pd.DataFrame]:
-    d = corpus_dir(n_rows, cfg)
-    return {
-        name: pq.read_table(os.path.join(d, f"{name}.parquet")).to_pandas()
-        for name in ("corpus", "groups", "golden_pairs", "golden_clusters")
-    }

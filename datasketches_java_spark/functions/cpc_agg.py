@@ -1,12 +1,12 @@
 """CPC distinct-count sketch as a distributed partial/final aggregation.
 
 Spark face over kernels/cpc.py (reference cpc/CpcUnion.java merge
-semantics): partial CPC per (Arrow batch, group) via mapInPandas —
-map-side combine, 8·k bytes of state per group cross the shuffle
+semantics) on functions/sketch_reduce.py: partial CPC per (Arrow batch,
+group) — map-side combine, 8·k bytes of state per group cross the shuffle
 regardless of group size (40% smaller serialized than HLL at equal
 accuracy in the reference's compressed form; our uncompressed images
-trade that for vectorized updates, see kernels/cpc.py) — then a
-per-group applyInPandas union. Merged results use the ICON estimator
+trade that for vectorized updates, see kernels/cpc.py) — then the
+sorted native merge and one batched finisher that unions each group. Merged results use the ICON estimator
 with the reference's own confidence tables; accuracy is pytest-gated
 (tests/test_cpc.py) and the gate query cpc_users_by_type is rows-only
 (probabilistic estimates are not SQL-expressible), mirroring
@@ -14,7 +14,7 @@ hll_users_by_type."""
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.cpc import DEFAULT_LG_K, CpcSketch
+from .sketch_reduce import group_partials, reduce_partials
 
 
 def cpc_distinct_agg(
@@ -36,44 +37,27 @@ def cpc_distinct_agg(
     value_col may be integral (vectorized long updates) or string."""
     int_vals = dict(df.dtypes)[value_col] in ("bigint", "int", "smallint", "tinyint")
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                sk = CpcSketch(lg_k=lg_k)
-                if int_vals:
-                    sk.update_longs(sub[value_col].to_numpy(np.int64))
-                else:
-                    sk.update_strings(sub[value_col].astype(str).to_numpy())
-                out_g.append(g)
-                out_s.append(sk.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
+    def build(sub: pd.DataFrame) -> tuple:
+        sk = CpcSketch(lg_k=lg_k)
+        if int_vals:
+            sk.update_longs(sub[value_col].to_numpy(np.int64))
+        else:
+            sk.update_strings(sub[value_col].astype(str).to_numpy())
+        return (sk.serialize(),)
 
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col), F.col(value_col)
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = CpcSketch.deserialize(pdf["sketch"].iloc[0])
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(CpcSketch.deserialize(b))
+    def finish(blobs) -> tuple:
+        sk = reduce(CpcSketch.merge, map(CpcSketch.deserialize, blobs))
         if not sk.merge_flag:
             sk.merge_flag = True  # one partial: still report union-form ICON
         lb, ub = sk.get_bounds(kappa)
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "distinct_est": [sk.get_estimate()],
-                "distinct_lb": [lb],
-                "distinct_ub": [ub],
-                "coupons": [sk.num_coupons],
-            }
-        )
+        return (sk.get_estimate(), lb, ub, sk.num_coupons)
 
-    return partials.groupBy(group_col).applyInPandas(
-        final,
+    partials = group_partials(
+        df.select(F.col(group_col).cast("string").alias(group_col), F.col(value_col)),
+        group_col, build, f"{group_col} string, sketch binary",
+    )
+    return reduce_partials(
+        partials, group_col, finish,
         f"{group_col} string, distinct_est double, distinct_lb double, "
         "distinct_ub double, coupons bigint",
     )

@@ -115,7 +115,7 @@ def fdt_group_list(
     partials = proj.mapInPandas(
         partial, f"__h long, {mid_schema}, __theta long")
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key, pdf):
         theta = np.int64(pdf["__theta"].min())
         h = pdf["__h"].to_numpy(np.int64)
         keep = h < theta

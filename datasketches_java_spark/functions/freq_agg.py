@@ -92,7 +92,7 @@ def mg_frequent_items_agg(
         partial, "item string, cnt bigint, offset bigint"
     )
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key, pdf):
         meta = pdf[pdf["item"].isna()]
         offset = int(meta["offset"].sum())
         rows = pdf[pdf["item"].notna()]
@@ -120,8 +120,5 @@ def mg_frequent_items_agg(
     return (
         partials.withColumn("_g", F.lit(0))
         .groupBy("_g")
-        .applyInPandas(
-            lambda key, pdf: final(key, pdf),
-            "item string, est bigint, lb bigint, ub bigint",
-        )
+        .applyInPandas(final, "item string, est bigint, lb bigint, ub bigint")
     )

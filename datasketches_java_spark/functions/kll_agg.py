@@ -4,10 +4,11 @@ The reference's quantile story at scale is the mergeable sketch
 (kll/KllDoublesSketch.java:275 merge, kll/KllDoublesHelper.java:134-196);
 this is its Spark face over kernels/kll.py:
 
- 1. partial (mapInPandas): one serialized KLL sketch per (Arrow batch,
-    group) — map-side combine; O(k log n) state per group crosses the
-    shuffle regardless of group size.
- 2. final (applyInPandas per group): merge sketches, answer quantile
+ 1. partial (sketch_reduce.group_partials): one serialized KLL sketch
+    per (Arrow batch, group) — map-side combine; O(k log n) state per
+    group crosses the shuffle regardless of group size.
+ 2. final (sketch_reduce.reduce_partials): sorted native merge, then a
+    batched finisher merges each group's sketches and answers quantile
     queries from the weight-sorted view.
 
 Quantile extraction uses INTEGER rank fractions (p/q), not float ranks:
@@ -31,10 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.kll import DEFAULT_K, KllDoubles
+from .sketch_reduce import group_partials, reduce_partials
 
 
-def _quantile_frac(sk: KllDoubles, p: int, q: int) -> float:
-    """min v with q·cumweight(v) >= p·n — inclusive rank, integer math."""
+def _quantile_frac(sk, p: int, q: int) -> float:
+    """min v with q·cumweight(v) >= p·n — inclusive rank, integer math.
+    Any sketch with a weighted `_sorted_view()` and an item count `n`
+    (KllDoubles here, ReqDoubles in functions/req_agg.py)."""
     it, wt = sk._sorted_view()
     if len(it) == 0:
         return float("nan")
@@ -58,23 +62,15 @@ def _kll_partials(
     df: DataFrame, group_col: str, value_col: str, k: int, seed: int
 ) -> DataFrame:
     """(group, sketch): one partial sketch per (Arrow batch, group)."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                out_g.append(g)
-                out_s.append(
-                    kll_partial(sub[value_col].to_numpy(np.float64), k, seed)
-                )
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
-
-    return df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
+    return group_partials(
+        df.select(
+            F.col(group_col).cast("string").alias(group_col),
+            F.col(value_col).cast("double").alias(value_col),
+        ),
+        group_col,
+        lambda sub: (kll_partial(sub[value_col].to_numpy(np.float64), k, seed),),
+        f"{group_col} string, sketch binary",
+    )
 
 
 def kll_sketch_agg(
@@ -88,14 +84,11 @@ def kll_sketch_agg(
     mergeable partial-aggregate form (kll/KllDoublesSketch.java
     toByteArray), for operators that consume sketch state directly
     (KS drift tests, cross-window comparisons) rather than quantiles."""
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = kll_merge(pdf["sketch"], seed)
-        return pd.DataFrame({group_col: [key[0]], "sketch": [sk.serialize()]})
-
-    return _kll_partials(df, group_col, value_col, k, seed).groupBy(
-        group_col
-    ).applyInPandas(final, f"{group_col} string, sketch binary")
+    return reduce_partials(
+        _kll_partials(df, group_col, value_col, k, seed), group_col,
+        lambda blobs: (kll_merge(blobs, seed).serialize(),),
+        f"{group_col} string, sketch binary",
+    )
 
 
 def kll_quantile_agg(
@@ -110,21 +103,17 @@ def kll_quantile_agg(
     (p, q); output columns are named q_p_q (e.g. q_1_2 for the median).
 
     Output: (group, n, q_p_q...) with n = exact item count."""
-    qcols = [f"q_{p}_{q}" for p, q in quantiles]
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = kll_merge(pdf["sketch"], seed)
-        row = {group_col: [key[0]], "n": [sk.n]}
-        for (p, q), name in zip(quantiles, qcols):
-            row[name] = [_quantile_frac(sk, p, q)]
-        return pd.DataFrame(row)
+    def finish(blobs) -> tuple:
+        sk = kll_merge(blobs, seed)
+        return (sk.n, *(_quantile_frac(sk, p, q) for p, q in quantiles))
 
     schema = f"{group_col} string, n bigint, " + ", ".join(
-        f"{c} double" for c in qcols
+        f"q_{p}_{q} double" for p, q in quantiles
     )
-    return _kll_partials(df, group_col, value_col, k, seed).groupBy(
-        group_col
-    ).applyInPandas(final, schema)
+    return reduce_partials(
+        _kll_partials(df, group_col, value_col, k, seed), group_col, finish, schema
+    )
 
 
 def kll_items_quantile_agg(
@@ -140,9 +129,9 @@ def kll_items_quantile_agg(
     with an ArrayOfStringsSerDe; sorted-view queries per
     quantilescommon/ItemsSketchSortedView.java). Answers "p99 caption
     by lexicographic order" — inexpressible with the doubles kernel.
-    Same two-level shape as kll_quantile_agg: mapInPandas partial
-    (one O(k) sketch per batch×group crosses the shuffle) →
-    applyInPandas final merge + integer-rank-fraction queries. String
+    Same two-level shape as kll_quantile_agg: one O(k) partial sketch
+    per batch×group crosses the shuffle, then the batched finisher
+    merges and answers integer-rank-fraction queries. String
     order is identical across Python/Spark/DuckDB (UTF-8 binary
     collation), so the exact regime (n ≤ k per group) is
     SQL-oracle-able; lossy-regime rank error is the type-agnostic
@@ -152,40 +141,28 @@ def kll_items_quantile_agg(
     (the reference's update(null) no-op)."""
     from ..kernels.kll_items import KllItems
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                sk = KllItems(k=k, seed=seed)
-                sk.update_many(
-                    [v for v in sub[value_col] if v is not None]
-                )
-                out_g.append(g)
-                out_s.append(sk.serialize_strings())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
+    def build(sub: pd.DataFrame) -> tuple:
+        sk = KllItems(k=k, seed=seed)
+        sk.update_many([v for v in sub[value_col] if v is not None])
+        return (sk.serialize_strings(),)
 
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("string").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
+    def finish(blobs) -> tuple:
+        sk = reduce(KllItems.merge, (
+            KllItems.deserialize_strings(bytes(b), seed=seed) for b in blobs
+        ))
+        return (sk.n, *(sk.get_quantile_frac(p, q) for p, q in quantiles))
 
-    qcols = [f"q_{p}_{q}" for p, q in quantiles]
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllItems.deserialize_strings(bytes(pdf["sketch"].iloc[0]), seed=seed)
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(KllItems.deserialize_strings(bytes(b), seed=seed))
-        row = {group_col: [key[0]], "n": [sk.n]}
-        for (p, q), name in zip(quantiles, qcols):
-            row[name] = [sk.get_quantile_frac(p, q)]
-        return pd.DataFrame(row)
-
-    schema = f"{group_col} string, n bigint, " + ", ".join(
-        f"{c} string" for c in qcols
+    partials = group_partials(
+        df.select(
+            F.col(group_col).cast("string").alias(group_col),
+            F.col(value_col).cast("string").alias(value_col),
+        ),
+        group_col, build, f"{group_col} string, sketch binary",
     )
-    return partials.groupBy(group_col).applyInPandas(final, schema)
+    schema = f"{group_col} string, n bigint, " + ", ".join(
+        f"q_{p}_{q} string" for p, q in quantiles
+    )
+    return reduce_partials(partials, group_col, finish, schema)
 
 
 def ks_pairwise(sketches: DataFrame, group_col: str = "group",

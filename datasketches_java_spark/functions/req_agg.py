@@ -1,9 +1,10 @@
 """REQ sketch as a distributed partial/final aggregation.
 
 Spark face over kernels/req.py (reference req/ReqSketch.java merge
-:381-405): partial REQ sketch per (Arrow batch, group) via mapInPandas
-— map-side combine, O(k·log(n/k)) state per group crosses the shuffle
-— then a per-group applyInPandas merge + quantile stage. Identical
+:381-405) on functions/sketch_reduce.py: partial REQ sketch per (Arrow
+batch, group) — map-side combine, O(k·log(n/k)) state per group crosses
+the shuffle — then the sorted native merge and one batched finisher
+that merges each group's sketches and answers quantiles. Identical
 two-level shape to functions/kll_agg.py; quantile extraction uses the
 same INCLUSIVE integer rank fractions (min v with q·cumweight(v) ≥
 p·n) so exact-regime results are SQL-oracle-able (gate query
@@ -14,7 +15,8 @@ tests/test_req.py.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from functools import reduce
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -22,15 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.req import DEFAULT_K, ReqDoubles
-
-
-def _quantile_frac(sk: ReqDoubles, p: int, q: int) -> float:
-    it, wt = sk._sorted_view()
-    if len(it) == 0:
-        return float("nan")
-    cum = np.cumsum(wt)
-    idx = int(np.searchsorted(q * cum, p * sk.n, side="left"))
-    return float(it[min(idx, len(it) - 1)])
+from .kll_agg import _quantile_frac
+from .sketch_reduce import group_partials, reduce_partials
 
 
 def req_quantile_agg(
@@ -45,35 +40,24 @@ def req_quantile_agg(
     """Per-group REQ quantiles at integer rank fractions (p, q);
     output columns q_p_q. Output: (group, n, q_p_q...)."""
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                sk = ReqDoubles(k=k, hra=hra, seed=seed)
-                sk.update_many(sub[value_col].to_numpy(np.float64))
-                out_g.append(g)
-                out_s.append(sk.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
+    def build(sub: pd.DataFrame) -> tuple:
+        sk = ReqDoubles(k=k, hra=hra, seed=seed)
+        sk.update_many(sub[value_col].to_numpy(np.float64))
+        return (sk.serialize(),)
 
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
+    def finish(blobs) -> tuple:
+        sk = reduce(ReqDoubles.merge,
+                    (ReqDoubles.deserialize(b, seed=seed) for b in blobs))
+        return (sk.n, *(_quantile_frac(sk, p, q) for p, q in quantiles))
 
-    qcols = [f"q_{p}_{q}" for p, q in quantiles]
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = ReqDoubles.deserialize(pdf["sketch"].iloc[0], seed=seed)
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(ReqDoubles.deserialize(b, seed=seed))
-        row = {group_col: [key[0]], "n": [sk.n]}
-        for (p, q), name in zip(quantiles, qcols):
-            row[name] = [_quantile_frac(sk, p, q)]
-        return pd.DataFrame(row)
-
-    schema = f"{group_col} string, n bigint, " + ", ".join(
-        f"{c} double" for c in qcols
+    partials = group_partials(
+        df.select(
+            F.col(group_col).cast("string").alias(group_col),
+            F.col(value_col).cast("double").alias(value_col),
+        ),
+        group_col, build, f"{group_col} string, sketch binary",
     )
-    return partials.groupBy(group_col).applyInPandas(final, schema)
+    schema = f"{group_col} string, n bigint, " + ", ".join(
+        f"q_{p}_{q} double" for p, q in quantiles
+    )
+    return reduce_partials(partials, group_col, finish, schema)

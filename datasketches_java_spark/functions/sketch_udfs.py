@@ -3,13 +3,17 @@
 `kmv_distinct_agg` is the Spark face of the Theta/KMV distinct-count
 lifecycle (SURVEY.md §3.1): per-group vectorized hash → bottom-k →
 estimate with binomial bounds (theta/ThetaSketch.java:621-623 estimate,
-thetacommon/BinomialBoundsN.java bounds). The group stage is Spark's
-partial/final aggregation; within a group, applyInPandas streams Arrow
-batches so signature state stays O(k) regardless of group size.
+thetacommon/BinomialBoundsN.java bounds). The KMV and tuple aggregates
+run on functions/sketch_reduce.py: a partial sketch per (Arrow batch,
+group), a sorted native merge, one batched finisher — signature state
+stays O(k) per group regardless of group size. The samplers below keep
+their own grouped final: their partials are item rows, not one sketch
+per group.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -21,21 +25,37 @@ from ..config import DEFAULT_UPDATE_SEED
 from ..kernels import kmv
 from ..kernels.hashing import hash_bytes_batch
 from ..kernels.shingle import _flatten_utf8
+from .sketch_reduce import group_partials, reduce_partials
 
 
 def _hash_strings(values: pd.Series, seed: int) -> np.ndarray:
-    """63-bit hashes; the caller must handle NULLs (see _hash_valid —
+    """63-bit hashes; the caller must handle NULLs (see _kmv_partials —
     the reference's update(null) is a NO-OP, theta/UpdatableThetaSketch
     update contract, so NULL must not hash like an empty string)."""
     data, starts, lens = _flatten_utf8(values.fillna("").astype(str))
     return (hash_bytes_batch(data, starts, lens, seed) >> np.uint64(1)).astype(np.int64)
 
 
-def _hash_valid(values: pd.Series, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """(hashes, valid_mask): NULL values are masked out (reference
-    update(null) no-op) instead of hashing as ''."""
-    valid = values.notna().to_numpy()
-    return _hash_strings(values, seed), valid
+def _kmv_partials(
+    df: DataFrame, group_col: str, value_col: str, k: int, seed: int
+) -> DataFrame:
+    """(group, sketch): one bottom-k sketch per (Arrow batch, group).
+    NULL values are masked out (reference update(null) no-op) instead
+    of hashing as ''."""
+
+    def build(sub: pd.DataFrame) -> tuple:
+        v = sub[value_col]
+        h = _hash_strings(v, seed)[v.notna().to_numpy()]
+        return (kmv.serialize(kmv.bottom_k(h, k), k),)
+
+    return group_partials(
+        df.select(F.col(group_col).cast("string").alias(group_col), value_col),
+        group_col, build, f"{group_col} string, sketch binary",
+    )
+
+
+def _kmv_union(blobs, k: int) -> np.ndarray:
+    return kmv.union_many([kmv.deserialize(b)[0] for b in blobs], k)
 
 
 def kmv_distinct_agg(
@@ -47,52 +67,24 @@ def kmv_distinct_agg(
 ) -> DataFrame:
     """Per-group distinct-count estimate with 2SD bounds.
 
-    Two-level, like Catalyst's partial/final split: (1) mapInPandas
-    builds one serialized sketch per (arrow batch, group) — map-side
-    combine, so only O(k) bytes per group cross the shuffle; (2) the
-    grouped merge unions sketches (ThetaUnionImpl semantics). A group
+    Two-level, like Catalyst's partial/final split: (1) one serialized
+    sketch per (arrow batch, group) — map-side combine, so only O(k)
+    bytes per group cross the shuffle; (2) the batched finisher unions
+    each group's sorted sketches (ThetaUnionImpl semantics). A group
     of 10^10 rows never materializes in one pandas frame.
     Output: (group, distinct_est, distinct_lb, distinct_ub, retained).
     """
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h, valid = _hash_valid(pdf[value_col], seed)
-            out_g, out_b = [], []
-            # one groupby pass (the factorize+rescan form was O(G*N));
-            # dropna=False keeps a NULL group like SQL GROUP BY
-            for g, sub in pdf.groupby(group_col, sort=False, dropna=False):
-                idx = sub.index.to_numpy()
-                hv = h[idx][valid[idx]]  # NULL values: update no-op
-                out_g.append(None if pd.isna(g) else g)
-                out_b.append(kmv.serialize(kmv.bottom_k(hv, k), k))
-            yield pd.DataFrame({group_col: out_g, "sketch": out_b})
-
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col), value_col
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sigs = [kmv.deserialize(b)[0] for b in pdf["sketch"]]
-        u = kmv.union_many(sigs, k)
+    def finish(blobs) -> tuple:
+        u = _kmv_union(blobs, k)
         lb, est, ub = kmv.estimate_bounds(u, k, 2)
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "distinct_est": [est],
-                "distinct_lb": [lb],
-                "distinct_ub": [ub],
-                "retained": [len(u)],
-            }
-        )
+        return (est, lb, ub, len(u))
 
-    schema = (
+    return reduce_partials(
+        _kmv_partials(df, group_col, value_col, k, seed), group_col, finish,
         f"{group_col} string, distinct_est double, distinct_lb double, "
-        "distinct_ub double, retained bigint"
+        "distinct_ub double, retained bigint",
     )
-    return partials.groupBy(group_col).applyInPandas(final, schema)
 
 
 def kmv_sketch_bytes_agg(
@@ -101,17 +93,13 @@ def kmv_sketch_bytes_agg(
 ) -> DataFrame:
     """Per-group serialized KMV sketch (BinaryType) — the mergeable
     partial-aggregate form that crosses checkpoints/shuffles, the
-    analog of CompactThetaSketch.toByteArray (theta/ThetaSketch.java:423)."""
-
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        h, valid = _hash_valid(pdf[value_col], seed)
-        sig = kmv.bottom_k(h[valid], k)
-        return pd.DataFrame({group_col: [key[0]], "sketch": [kmv.serialize(sig, k)]})
-
-    return (
-        df.select(F.col(group_col).cast("string").alias(group_col), value_col)
-        .groupBy(group_col)
-        .applyInPandas(agg, f"{group_col} string, sketch binary")
+    analog of CompactThetaSketch.toByteArray (theta/ThetaSketch.java:423).
+    The union of per-batch bottom-k sketches is the bottom-k of the
+    whole group, so the bytes match a one-pass sketch."""
+    return reduce_partials(
+        _kmv_partials(df, group_col, value_col, k, seed), group_col,
+        lambda blobs: (kmv.serialize(_kmv_union(blobs, k), k),),
+        f"{group_col} string, sketch binary",
     )
 
 
@@ -151,12 +139,9 @@ def tuple_sketch_agg(
     (group, distinct_est, retained, total_<name>... ) where totals are
     the unbiased all-keys estimates (exact when distinct <= k).
     """
-    import numpy as np
-
     from ..kernels.tuple_kmv import TupleKmv
 
     names = list(summary_exprs.keys())
-    d = len(names)
     proj = df.select(
         F.col(group_col).cast("string").alias(group_col),
         F.col(key_col).cast("string").alias("__key"),
@@ -165,40 +150,25 @@ def tuple_sketch_agg(
           for n, c in summary_exprs.items()],
     )
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_b = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                h = _hash_strings(sub["__key"], seed)
-                s = sub[[f"__s_{n}" for n in names]].to_numpy(np.float64)
-                sk = TupleKmv.from_stream(h, s, k, combiner=combiner)
-                out_g.append(g)
-                out_b.append(sk.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_b})
+    def build(sub: pd.DataFrame) -> tuple:
+        h = _hash_strings(sub["__key"], seed)
+        v = sub[[f"__s_{n}" for n in names]].to_numpy(np.float64)
+        return (TupleKmv.from_stream(h, v, k, combiner=combiner).serialize(),)
 
-    partials = proj.mapInPandas(partial, f"{group_col} string, sketch binary")
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = TupleKmv.deserialize(pdf["sketch"].iloc[0])
-        for b in pdf["sketch"].iloc[1:]:
-            sk = sk.union(TupleKmv.deserialize(b), combiner=combiner)
-        totals = sk.summary_totals()
-        row = {
-            group_col: [key[0]],
-            "distinct_est": [sk.distinct_estimate()],
-            "retained": [len(sk.hashes)],
-        }
-        for i, n in enumerate(names):
-            row[f"total_{n}"] = [float(totals[i])]
-        return pd.DataFrame(row)
+    def finish(blobs) -> tuple:
+        sk = reduce(lambda a, b: a.union(b, combiner=combiner),
+                    map(TupleKmv.deserialize, blobs))
+        return (sk.distinct_estimate(), len(sk.hashes),
+                *(float(t) for t in sk.summary_totals()))
 
     schema = (
         f"{group_col} string, distinct_est double, retained bigint, "
         + ", ".join(f"total_{n} double" for n in names)
     )
-    return partials.groupBy(group_col).applyInPandas(final, schema)
+    return reduce_partials(
+        group_partials(proj, group_col, build, f"{group_col} string, sketch binary"),
+        group_col, finish, schema,
+    )
 
 
 def varopt_sample_agg(
@@ -257,7 +227,7 @@ def varopt_sample_agg(
         F.col(group_col).cast("string").alias(group_col), item_col, weight_col
     ).mapInPandas(partial, schema)
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key, pdf):
         it, adj = _sample(
             pdf[item_col].astype(str).to_numpy(),
             pdf["adj_weight"].to_numpy(np.float64),
@@ -290,7 +260,7 @@ def ebpps_sample_agg(
     kernel's, exercised in tests."""
     from ..kernels.ebpps import ebpps_sample
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key, pdf):
         # NULL item/weight rows: update no-op (see varopt_sample_agg)
         pdf = pdf[pdf[item_col].notna() & pdf[weight_col].notna()]
         items = pdf[item_col].astype(str).to_numpy()

@@ -1,10 +1,11 @@
 """t-digest as a distributed partial/final aggregation.
 
 Spark face over kernels/tdigest.py (reference tdigest/TDigestDouble.java
-merge :115-130): partial digest per (Arrow batch, group) via mapInPandas
-— map-side combine, O(k) centroids per group cross the shuffle — then a
-per-group applyInPandas merge + query stage. The same two-level shape as
-functions/kll_agg.py.
+merge :115-130) on functions/sketch_reduce.py: partial digest per (Arrow
+batch, group) — map-side combine, O(k) centroids per group cross the
+shuffle — then the sorted native merge and one batched finisher that
+merges each group's digests and queries them. The same two-level shape
+as functions/kll_agg.py.
 
 Gate contract (tdigest_caption_len_by_source): while every group's item
 count keeps the K_2 packing bound below 2 (n ≲ 150 at k=200; any n ≤ a
@@ -19,7 +20,7 @@ contract is pytest-gated in tests/test_tdigest.py.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.tdigest import DEFAULT_K, TDigest
+from .sketch_reduce import group_partials, reduce_partials
 
 
 def tdigest_median_agg(
@@ -39,27 +41,13 @@ def tdigest_median_agg(
     med2 = round(2·median) (doubled so the even-n midpoint stays an
     integer for integer inputs), min/max exact."""
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_g, out_s = [], []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                td = TDigest(k=k)
-                td.update_many(sub[value_col].to_numpy(np.float64))
-                out_g.append(g)
-                out_s.append(td.serialize())
-            yield pd.DataFrame({group_col: out_g, "sketch": out_s})
+    def build(sub: pd.DataFrame) -> tuple:
+        td = TDigest(k=k)
+        td.update_many(sub[value_col].to_numpy(np.float64))
+        return (td.serialize(),)
 
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(value_col).cast("double").alias(value_col),
-    ).mapInPandas(partial, f"{group_col} string, sketch binary")
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        td = TDigest.deserialize(pdf["sketch"].iloc[0])
-        for b in pdf["sketch"].iloc[1:]:
-            td.merge(TDigest.deserialize(b))
+    def finish(blobs) -> tuple:
+        td = reduce(TDigest.merge, map(TDigest.deserialize, blobs))
         # med2 = v_⌊(n+1)/2⌋ + v_⌈(n+1)/2⌉ via the INCLUSIVE-criterion
         # order statistic over the centroid view (first centroid whose
         # cumulative weight reaches j). In the singleton regime this
@@ -74,17 +62,16 @@ def tdigest_median_agg(
         j_lo, j_hi = (n + 1) // 2, (n + 2) // 2
         lo = float(td.means[min(int(np.searchsorted(cum, j_lo)), len(cum) - 1)])
         hi = float(td.means[min(int(np.searchsorted(cum, j_hi)), len(cum) - 1)])
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "n": [n],
-                "med2": [int(round(lo + hi))],
-                "min_v": [int(round(td.min))],
-                "max_v": [int(round(td.max))],
-            }
-        )
+        return (n, int(round(lo + hi)), int(round(td.min)), int(round(td.max)))
 
-    return partials.groupBy(group_col).applyInPandas(
-        final,
+    partials = group_partials(
+        df.select(
+            F.col(group_col).cast("string").alias(group_col),
+            F.col(value_col).cast("double").alias(value_col),
+        ),
+        group_col, build, f"{group_col} string, sketch binary",
+    )
+    return reduce_partials(
+        partials, group_col, finish,
         f"{group_col} string, n bigint, med2 bigint, min_v bigint, max_v bigint",
     )

@@ -11,7 +11,7 @@ divergence between engines).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 PUNCT_CLASS = r"[.,!?;:]"
@@ -182,13 +182,3 @@ def fingerprint(text: Column, k: int = 8) -> Column:
     """Bottom-1 sketch of char-k shingles under md5 — a deterministic
     64-hex document fingerprint (rolling-hash family, KMV with k=1)."""
     return F.array_min(F.transform(char_shingles(text, k), F.md5))
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    out = df
-    for name, col in quality_columns(c).items():
-        out = out.withColumn(name, col)
-    return out.withColumn("lang_pred", lang_id(c)).withColumn(
-        "fingerprint", fingerprint(c)
-    )

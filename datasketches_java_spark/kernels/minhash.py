@@ -169,8 +169,3 @@ def band_hashes(
         band_idx = np.arange(b, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
         acc = mix64(acc ^ band_idx[None, :])
     return (acc >> np.uint64(1)).astype(np.int64)
-
-
-def expected_candidate_prob(j: float, b: int, r: int) -> float:
-    """P(two rows with Jaccard j share ≥1 band) = 1-(1-j^r)^b."""
-    return 1.0 - (1.0 - j**r) ** b

@@ -1,17 +1,17 @@
 """Per-cluster sketch audits (SURVEY.md U1): one mergeable-sketch
-reduce over one joined row set, members ⋈ signatures ⋈ captions.
+reduce over one joined row set, members ⋈ signatures ⋈ captions, on
+the shared functions/sketch_reduce.py:
 
- 1. partial (mapInPandas): per (Arrow batch, cluster) the row count,
-    the KMV union of the member signatures (ThetaUnionImpl.java:272-303)
-    and a KLL sketch of the caption lengths — map-side combine, O(k)
-    state per cluster whatever its size.
- 2. merge: one native ObjectHashAggregate exchange sums the counts and
-    collects each sketch column as a SORTED array, so the merge order
-    is a function of the partial bytes, not of task completion order.
- 3. finisher (mapInPandas, batched): per cluster row, the KMV union +
-    binomial bounds and the KLL merge + integer-rank-fraction quantiles
-    — exact when cluster size <= k (the gate regime), rank error
-    2.446/k^0.9433 beyond (kll/KllHelper.java:295-299).
+ 1. group_partials: per (Arrow batch, cluster) the row count, the KMV
+    union of the member signatures (ThetaUnionImpl.java:272-303) and a
+    KLL sketch of the caption lengths — map-side combine, O(k) state
+    per cluster whatever its size.
+ 2. reduce_partials: one native ObjectHashAggregate exchange (summed
+    counts, sorted sketch arrays), then the batched finisher: per
+    cluster row, the KMV union + binomial bounds and the KLL merge +
+    integer-rank-fraction quantiles — exact when cluster size <= k
+    (the gate regime), rank error 2.446/k^0.9433 beyond
+    (kll/KllHelper.java:295-299).
 
 Distinct captions stay native: Spark's hll_sketch_agg (the reference's
 HLL algorithm, hll/HllSketch.java — SURVEY §2a H1-H3) beside the exact
@@ -20,7 +20,7 @@ countDistinct twin, joined on cluster_id.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -29,47 +29,34 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig, FROZEN
 from ..functions.kll_agg import _quantile_frac, kll_merge, kll_partial
+from ..functions.sketch_reduce import group_partials, reduce_partials
 from ..kernels import kmv
 
-AUDIT_SCHEMA = (
-    "cluster_id string, n_rows bigint, kmv_union_est double, "
-    "kmv_union_lb double, kmv_union_ub double"
-)
 _QUANTILE_COLS = ("caption_len_p50", "caption_len_p99")
+_AUDIT_SCHEMA = (
+    "cluster_id string, n_rows bigint, kmv_union_est double, "
+    "kmv_union_lb double, kmv_union_ub double, "
+    "caption_len_p50 double, caption_len_p99 double"
+)
 
 _HASH_SPACE_32 = float(2**31)  # pipeline signatures are top-32-bit truncated
 
 
-def reduce_partials(partials: DataFrame, k: int) -> DataFrame:
-    """Partial rows (cluster_id, n_rows, kmv, kll) → one row per cluster
-    (AUDIT_SCHEMA + caption-length p50/p99 as doubles): the native merge
-    exchange, then the batched finisher."""
-    merged = partials.groupBy("cluster_id").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.array_sort(F.collect_list("kmv")).alias("kmv"),
-        F.array_sort(F.collect_list("kll")).alias("kll"),
-    )
+def _finish(n_rows, kmv_blobs, kll_blobs, k: int) -> tuple:
+    """KMV union + binomial bounds, KLL merge + p50/p99 for one cluster."""
+    u = kmv.union_many([kmv.deserialize(b)[0] for b in kmv_blobs], k)
+    lb, est, ub = kmv.estimate_bounds(u, k, 2, hash_space=_HASH_SPACE_32)
+    sk = kll_merge(kll_blobs)
+    return (n_rows, est, lb, ub,
+            _quantile_frac(sk, 1, 2), _quantile_frac(sk, 99, 100))
 
-    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for kmv_blobs, kll_blobs in zip(pdf["kmv"], pdf["kll"]):
-                u = kmv.union_many([kmv.deserialize(b)[0] for b in kmv_blobs], k)
-                sk = kll_merge(kll_blobs)
-                recs.append((
-                    *kmv.estimate_bounds(u, k, 2, hash_space=_HASH_SPACE_32),
-                    _quantile_frac(sk, 1, 2), _quantile_frac(sk, 99, 100),
-                ))
-            out = pd.DataFrame(recs, dtype=np.float64, columns=[
-                "kmv_union_lb", "kmv_union_est", "kmv_union_ub", *_QUANTILE_COLS
-            ])
-            out["cluster_id"] = pdf["cluster_id"].to_numpy()
-            out["n_rows"] = pdf["n_rows"].to_numpy()
-            yield out
 
-    return merged.mapInPandas(
-        finish, AUDIT_SCHEMA + "".join(f", {c} double" for c in _QUANTILE_COLS)
-    )
+def _build(sub: pd.DataFrame, k: int) -> tuple:
+    """Row count, KMV partial union, KLL partial of caption lengths."""
+    # sig wire format: little-endian int32 bytes
+    sigs = [np.frombuffer(s, dtype="<i4") for s in sub["sig"]]
+    return (len(sub), kmv.serialize(kmv.union_many(sigs, k), k),
+            kll_partial(sub["cap_len"].to_numpy(np.float64)))
 
 
 def cluster_audits(
@@ -109,24 +96,12 @@ def cluster_audits(
         signatures.select("id64", "sig"), "id64"
     )
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_c, out_n, out_kmv, out_kll = [], [], [], []
-            for cid, sub in pdf.groupby("cluster_id", sort=False):
-                # sig wire format: little-endian int32 bytes
-                sigs = [np.frombuffer(s, dtype="<i4") for s in sub["sig"]]
-                out_c.append(cid)
-                out_n.append(len(sub))
-                out_kmv.append(kmv.serialize(kmv.union_many(sigs, k), k))
-                out_kll.append(kll_partial(sub["cap_len"].to_numpy(np.float64)))
-            yield pd.DataFrame({"cluster_id": out_c, "n_rows": out_n,
-                                "kmv": out_kmv, "kll": out_kll})
-
-    out = reduce_partials(rows.select("cluster_id", "sig", "cap_len").mapInPandas(
-        partial, "cluster_id string, n_rows bigint, kmv binary, kll binary"
-    ), k)
+    partials = group_partials(
+        rows.select("cluster_id", "sig", "cap_len"), "cluster_id",
+        partial(_build, k=k),
+        "cluster_id string, n_rows bigint, kmv binary, kll binary",
+    )
+    out = reduce_partials(partials, "cluster_id", partial(_finish, k=k), _AUDIT_SCHEMA)
     if corpus is None:
         return out.drop(*_QUANTILE_COLS)
     hll = caps.groupBy("cluster_id").agg(

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.kll_agg import kll_merge, kll_partial
+from ..functions.sketch_reduce import reduce_partials
 from ..kernels.kll import DEFAULT_K, KllDoubles
 
 INCLUDE_BOTH = "INCLUDE_BOTH"
@@ -173,23 +175,18 @@ def _sketch_ranges(
                 rid_s[np.concatenate([[0], cuts])],
                 np.split(v_s, cuts),
             ):
-                sk = KllDoubles(k=k, seed=seed)
-                sk.update_many(seg)
                 out_r.append(int(seg_rid))
-                out_s.append(sk.serialize())
+                out_s.append(kll_partial(seg, k, seed))
             yield pd.DataFrame({"rid": out_r, "sketch": out_s})
 
     partials = df.select(F.col(col).cast("double").alias(col)).mapInPandas(
         partial, "rid long, sketch binary"
     )
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllDoubles.deserialize(pdf["sketch"].iloc[0], seed=seed)
-        for b in pdf["sketch"].iloc[1:]:
-            sk.merge(KllDoubles.deserialize(b, seed=seed))
-        return pd.DataFrame({"rid": [key[0]], "sketch": [sk.serialize()]})
-
-    merged = partials.groupBy("rid").applyInPandas(final, "rid long, sketch binary")
+    merged = reduce_partials(
+        partials, "rid", lambda blobs: (kll_merge(blobs, seed).serialize(),),
+        "rid long, sketch binary",
+    )
     return {
         int(r["rid"]): KllDoubles.deserialize(bytes(r["sketch"]), seed=seed)
         for r in merged.collect()

@@ -201,12 +201,6 @@ def _signature_batches(cfg: DedupConfig):
     return gen
 
 
-def with_id64(corpus: DataFrame) -> DataFrame:
-    """Attach the internal 64-bit row key (JVM-side xxhash64 — reference
-    hash/XxHash64.java is the same algorithm family, SURVEY X2)."""
-    return corpus.withColumn("id64", F.xxhash64("image_id"))
-
-
 def id_map(corpus: DataFrame, remap: DataFrame | None = None,
            key=None) -> DataFrame:
     """(id64, image_id) dimension for boundary remaps. Small relative to

@@ -521,35 +521,6 @@ def srp_buckets_array(vec_col, n_planes: int, n_tables: int, seed: int):
     return _buckets(vec_col)
 
 
-def srp_bucket(vec, n_planes: int = 16, seed: int = 9001):
-    """Single-table SRP bucket id as a pure column expression:
-    bit_j = sign(sum_i h(i,j)·v_i) with h(i,j) = xxhash64(i,j,seed)
-    mapped to ±1 — Charikar hyperplanes without shipping a plane
-    matrix (pure built-ins, deterministic across executors). Kept for
-    SQL-only contexts; the hot path uses srp_buckets_array (vectorized
-    Arrow batches)."""
-    idx = F.sequence(F.lit(0), F.size(vec) - 1)
-    bits = []
-    for j in range(n_planes):
-        s = F.aggregate(
-            F.zip_with(
-                vec,
-                idx,
-                lambda x, i: x.cast("double")
-                * F.when(
-                    F.xxhash64(i, F.lit(j), F.lit(seed)) % 2 == 0, F.lit(1.0)
-                ).otherwise(F.lit(-1.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(s > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("bigint")
-
-
 def _lsh_candidates(
     src: DataFrame, n_planes: int | None, n_tables: int, seed: int,
     bucket_cap: int, target_bucket: int, dedup: bool = True,

@@ -21,10 +21,6 @@ DRIVER_TABLES = (
 ).split()
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def load_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The image+caption corpus for a scale tier (generated+cached)."""
     from ..corpus.loader import corpus_dir_for_sf

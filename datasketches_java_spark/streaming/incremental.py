@@ -8,7 +8,7 @@ with parquet/Iceberg state instead of heap memory.
 
 `run_incremental_signatures` wires: readStream (file source) →
 foreachBatch( signature map → per-group KMV partials → DISTRIBUTED
-merge with the persisted state via grouped applyInPandas ) → versioned
+merge with the persisted state via sketch_reduce.reduce_partials ) → versioned
 state write + atomic CURRENT-pointer flip (the Iceberg snapshot
 pattern) + Spark checkpointing for exactly-once resume. Nothing sketch-
 sized ever passes through the driver — state merge scales with
@@ -32,12 +32,12 @@ import json
 import os
 import shutil
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.sketch_udfs import kmv_sketch_bytes_agg
+from ..functions.sketch_reduce import reduce_partials
+from ..functions.sketch_udfs import _kmv_union, kmv_sketch_bytes_agg
 from ..kernels import kmv
 
 _CURRENT = "CURRENT"
@@ -96,23 +96,6 @@ def _bucket_paths(state_dir: str, bmap: dict, buckets=None) -> list[str]:
     return out
 
 
-def merge_sketch_states(old: pd.DataFrame, new: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Union two (group, sketch) state tables (executor-side helper;
-    also usable standalone for tests)."""
-    merged: dict[str, np.ndarray] = {}
-    for df in (old, new):
-        for g, b in zip(df.iloc[:, 0], df["sketch"]):
-            sig, kk = kmv.deserialize(bytes(b))
-            # union with the empty identity even for first-seen groups:
-            # a state serialized at a larger k must still cap at THIS k
-            prev = merged.get(g, np.empty(0, np.int64))
-            merged[g] = kmv.union(prev, sig, k)
-    return pd.DataFrame(
-        {old.columns[0]: list(merged.keys()),
-         "sketch": [kmv.serialize(s, k) for s in merged.values()]}
-    )
-
-
 def run_incremental_signatures(
     spark: SparkSession,
     source_dir: str,
@@ -136,10 +119,8 @@ def run_incremental_signatures(
     )
     os.makedirs(state_dir, exist_ok=True)
 
-    def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sigs = [kmv.deserialize(bytes(b))[0] for b in pdf["sketch"]]
-        u = kmv.union_many(sigs, k)
-        return pd.DataFrame({group_col: [key[0]], "sketch": [kmv.serialize(u, k)]})
+    def merge_group(blobs) -> tuple:
+        return (kmv.serialize(_kmv_union(blobs, k), k),)
 
     def _bucket_of(col):
         return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
@@ -201,11 +182,9 @@ def run_incremental_signatures(
                 new = new.unionByName(prev_df)
         # distributed merge of touched buckets only: per-group sketch
         # union on executors, written partitioned by bucket
-        merged = (
-            new.groupBy(group_col)
-            .applyInPandas(merge_group, f"{group_col} string, sketch binary")
-            .withColumn("bucket", _bucket_of(F.col(group_col)))
-        )
+        merged = reduce_partials(
+            new, group_col, merge_group, f"{group_col} string, sketch binary"
+        ).withColumn("bucket", _bucket_of(F.col(group_col)))
         out = os.path.join(state_dir, version)
         merged.write.mode("overwrite").partitionBy("bucket").parquet(out)
         new_map = {} if legacy else dict(prev_map)

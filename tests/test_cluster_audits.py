@@ -124,7 +124,10 @@ def test_finisher_merge_order_invariant(spark):
     merge order changes the compacted state, and a task retry can change
     the order partials arrive in. The sorted merge makes p50/p99 a
     function of the partial bytes alone."""
-    from datasketches_java_spark.operators.audits import reduce_partials
+    from functools import partial
+
+    from datasketches_java_spark.functions.sketch_reduce import reduce_partials
+    from datasketches_java_spark.operators.audits import _AUDIT_SCHEMA, _finish
 
     k = FROZEN.kmv_k
     vals = np.random.default_rng(7).integers(5, 400, 1200).astype(float)
@@ -140,7 +143,8 @@ def test_finisher_merge_order_invariant(spark):
             "kmv": [kmv_blobs[i] for i in order],
             "kll": [kll_blobs[i] for i in order],
         })
-        out = reduce_partials(spark.createDataFrame(pdf).coalesce(1), k)
+        out = reduce_partials(spark.createDataFrame(pdf).coalesce(1), "cluster_id",
+                              partial(_finish, k=k), _AUDIT_SCHEMA)
         return out.toPandas().iloc[0]
 
     a, b = [0, 1, 2, 3, 4], [2, 0, 4, 1, 3]

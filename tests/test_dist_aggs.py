@@ -273,3 +273,100 @@ def test_kmv_agg_null_semantics_and_int_groups(spark):
     assert got["2"] == 1.0      # '' is a real value
     null_keys = [k for k in got if k is None or (isinstance(k, float))]
     assert len(out) == 3        # NULL group kept
+
+
+def _converted_aggs():
+    """The aggregates that run on functions/sketch_reduce.py, over the
+    (g long, s string, v double, u long) test frame."""
+    from pyspark.sql import functions as F
+
+    from datasketches_java_spark.functions.cpc_agg import cpc_distinct_agg
+    from datasketches_java_spark.functions.kll_agg import (
+        kll_items_quantile_agg, kll_sketch_agg,
+    )
+    from datasketches_java_spark.functions.req_agg import req_quantile_agg
+    from datasketches_java_spark.functions.sketch_udfs import (
+        kmv_distinct_agg, kmv_sketch_bytes_agg, tuple_sketch_agg,
+    )
+    from datasketches_java_spark.functions.tdigest_agg import tdigest_median_agg
+
+    return {
+        "kmv_distinct_agg": lambda df: kmv_distinct_agg(df, "g", "s", k=64),
+        "kmv_sketch_bytes_agg": lambda df: kmv_sketch_bytes_agg(df, "g", "s", k=64),
+        "tuple_sketch_agg": lambda df: tuple_sketch_agg(
+            df, "g", "s", {"n": F.lit(1), "v": "v"}, k=64),
+        "cpc_distinct_agg": lambda df: cpc_distinct_agg(df, "g", "u", lg_k=8),
+        "kll_sketch_agg": lambda df: kll_sketch_agg(df, "g", "v"),
+        "kll_quantile_agg": lambda df: kll_quantile_agg(df, "g", "v"),
+        "kll_items_quantile_agg": lambda df: kll_items_quantile_agg(df, "g", "s"),
+        "req_quantile_agg": lambda df: req_quantile_agg(df, "g", "v"),
+        "tdigest_median_agg": lambda df: tdigest_median_agg(df, "g", "v"),
+    }
+
+
+def _nulls_frame(spark):
+    rows = pd.DataFrame({
+        "g": pd.array([1, 1, 2, None, None, None], dtype="Int64"),
+        "s": ["a", "b", "c", "x", "y", "z"],
+        "v": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+        "u": [1, 2, 3, 4, 5, 6],
+    })
+    return spark.createDataFrame(rows, "g long, s string, v double, u long")
+
+
+@pytest.mark.parametrize("name", sorted(_converted_aggs()))
+def test_null_group_kept(spark, name):
+    """Every sketch aggregate on the shared reduce keeps a NULL group
+    like SQL GROUP BY, and the NULL group's rows land only there."""
+    out = _converted_aggs()[name](_nulls_frame(spark)).toPandas()
+    assert len(out) == 3
+    assert sorted(out["g"].dropna()) == ["1", "2"]
+    assert out["g"].isna().sum() == 1
+    null_row = out[out["g"].isna()].iloc[0]
+    for col in ("n", "retained", "coupons"):  # the NULL group's 3 rows
+        if col in out:
+            assert null_row[col] == 3
+
+
+@pytest.mark.parametrize("name", sorted(_converted_aggs()))
+def test_converted_agg_plan_has_no_grouped_map(spark, name):
+    """No per-group Python final: the merge is Spark's own
+    ObjectHashAggregate and the finisher a batched MapInPandas."""
+    df = _converted_aggs()[name](_nulls_frame(spark))
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    p = df._jdf.queryExecution().explainString(mode.fromString("simple"))
+    assert "FlatMapGroupsInPandas" not in p, p
+    assert "ObjectHashAggregate" in p and "MapInPandas" in p, p
+
+
+def test_no_eval_type_warning(spark):
+    """Building any package aggregate's plan raises no "Cannot infer
+    the eval type" warning (a grouped-map function with partial type
+    hints)."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from datasketches_java_spark.functions.fdt_agg import fdt_group_list
+    from datasketches_java_spark.functions.freq_agg import mg_frequent_items_agg
+    from datasketches_java_spark.functions.live_audit import sketch_family_audit
+    from datasketches_java_spark.functions.sketch_udfs import (
+        ebpps_sample_agg, varopt_sample_agg,
+    )
+
+    df = _nulls_frame(spark).dropna()
+    builds = [
+        *_converted_aggs().values(),
+        lambda d: varopt_sample_agg(d, "g", "s", "v", k=2),
+        lambda d: ebpps_sample_agg(d, "g", "s", "v", k=2.0),
+        lambda d: mg_frequent_items_agg(d, "s"),
+        lambda d: fdt_group_list(
+            d.withColumn("t", F.col("g").cast("string")), ["t", "s"], [0]),
+        lambda d: sketch_family_audit(d, "g", "u", "v"),
+    ]
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        for build in builds:
+            build(df)
+    msgs = [str(w.message) for w in seen if issubclass(w.category, UserWarning)]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs

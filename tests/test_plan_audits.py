@@ -7,6 +7,7 @@ ref that defeats pruning, a join that silently degrades to
 CartesianProduct) fails in CI instead of at the 100 TB tier."""
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 
@@ -149,3 +150,56 @@ def test_fdt_face_scan_prunes_and_single_final_exchange(spark, queries):
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
     assert n_exchanges == 1, p
     assert "CartesianProduct" not in p
+
+
+def _node_names(df) -> list[str]:
+    """Pre-order physical node names of df's plan (AQE input plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    out = []
+
+    def walk(p):
+        out.append(p.nodeName())
+        ch = p.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(plan)
+    return out
+
+
+def test_cluster_audits_plan_nodes(spark):
+    """cluster_audits over local inputs plans exactly this node list:
+    one partial MapInPandas, one ObjectHashAggregate pair, one finisher
+    MapInPandas, the native HLL aggregate and the join."""
+    import numpy as np
+
+    from datasketches_java_spark.operators.audits import cluster_audits
+
+    clusters = spark.createDataFrame(
+        [("a", "c1", 2), ("b", "c1", 2), ("c", "c2", 2), ("d", "c2", 2)],
+        "image_id string, cluster_id string, cluster_size long",
+    )
+    corpus = spark.createDataFrame(
+        [("a", "x y"), ("b", "x y z"), ("c", "p"), ("d", None)],
+        "image_id string, caption string",
+    )
+    signatures = clusters.select(
+        F.xxhash64("image_id").alias("id64"),
+        F.lit(np.arange(4, dtype="<i4").tobytes()).alias("sig"),
+    )
+    out = cluster_audits(spark, clusters, signatures, corpus=corpus)
+    assert _node_names(out) == [
+        "Project", "SortMergeJoin", "Filter",
+        "MapInPandas",                                  # batched finisher
+        "ObjectHashAggregate", "ObjectHashAggregate",   # native merge
+        "MapInPandas",                                  # partial
+        "Project", "SortMergeJoin", "Project", "SortMergeJoin", "Project",
+        "Filter", "Scan ExistingRDD", "Filter", "Scan ExistingRDD",
+        "Project", "Scan ExistingRDD",
+        "ObjectHashAggregate", "ObjectHashAggregate",   # HLL + exact distinct
+        "ObjectHashAggregate", "ObjectHashAggregate",
+        "Project", "SortMergeJoin", "Project", "Filter", "Scan ExistingRDD",
+        "Filter", "Scan ExistingRDD",
+    ]

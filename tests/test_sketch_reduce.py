@@ -1,0 +1,66 @@
+"""functions/sketch_reduce.py: the shared partial → sorted native merge →
+batched finisher reduce.
+
+In the lossy regime (KLL, REQ and t-digest compaction) merging the same
+partial sketches in a different order gives a different state, and a
+task retry can change the order partials reach a per-group final. The
+sorted merge makes the finisher's input a function of the partial bytes
+alone."""
+
+from functools import reduce
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from datasketches_java_spark.functions.sketch_reduce import reduce_partials
+from datasketches_java_spark.kernels.kll import KllDoubles
+from datasketches_java_spark.kernels.req import ReqDoubles
+from datasketches_java_spark.kernels.tdigest import TDigest
+
+# family -> (new empty sketch, deserialize); all three merge in place
+# and return self, so reduce(merge) folds blobs in the order given
+_FAMILIES = {
+    "kll": (lambda: KllDoubles(k=8), KllDoubles.deserialize),
+    "req": (lambda: ReqDoubles(k=12), ReqDoubles.deserialize),
+    "tdigest": (lambda: TDigest(k=20), TDigest.deserialize),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_reduce_partials_merge_order_invariant(spark, family):
+    new, load = _FAMILIES[family]
+    vals = np.random.default_rng(11).normal(100.0, 30.0, 1500)
+    blobs = []
+    for part in np.array_split(vals, 6):
+        sk = new()
+        sk.update_many(part)
+        blobs.append(sk.serialize())
+
+    def fold(sketches) -> bytes:  # merge in the order given
+        return reduce(lambda x, y: x.merge(y), map(load, sketches)).serialize()
+
+    a, b = [0, 1, 2, 3, 4, 5], [3, 5, 0, 4, 2, 1]
+    # precondition: a per-group final that folds partials in arrival
+    # order gives two different states for these two orders
+    assert fold([blobs[i] for i in a]) != fold([blobs[i] for i in b])
+
+    def run(order):
+        pdf = pd.DataFrame({"g": "x", "sketch": [blobs[i] for i in order]})
+        out = reduce_partials(
+            spark.createDataFrame(pdf).coalesce(1), "g", lambda s: (fold(s),),
+            "g string, sketch binary",
+        ).toPandas()
+        return bytes(out["sketch"].iloc[0])
+
+    got = run(a)
+    assert got == run(b)
+    assert got == fold(sorted(blobs))
+
+
+def test_reduce_partials_rejects_unmergeable_columns(spark):
+    """The merge rule follows the column type: binary → sorted list,
+    integral → sum; anything else has no rule and fails at plan time."""
+    df = spark.createDataFrame(pd.DataFrame({"g": ["x"], "v": [1.0]}))
+    with pytest.raises(TypeError, match="v double"):
+        reduce_partials(df, "g", lambda v: (v,), "g string, v double")
