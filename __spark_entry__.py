@@ -663,7 +663,9 @@ def _q_embedding_topk_ivf(spark, sf_dir):
     """IVF-flat ANN over the embedding table (the driver brief's 'IVF
     or LSH-bucketed variant as the scale path' — this is the IVF lane;
     LSH lane = embedding_topk_lsh). Deterministic hash-chosen coarse
-    centroids, ids-only cell join, vectors re-joined once for scoring.
+    centroids, ids-only cell join, candidates scored by the ANN lanes'
+    shared scorer (a broadcast matrix in budget, a vector join-back
+    above it).
     Rows-only gate; recall contracts pytest-gated
     (tests/test_operators.py::test_ivf_topk_recall)."""
     from datasketches_java_spark.operators.similarity import ivf_topk_cosine
@@ -681,8 +683,8 @@ def _q_embedding_topk_lsh_recall(spark, sf_dir):
     per-pair miss prob 0.422^16 ≈ 1e-6 — at this tier that means near-
     exhaustive candidates, which is a property of the fixture, not the
     operator; the gate's job is to hash-pin the MACHINERY (bucket
-    hashing, ids-only band join, pair dedup, vector re-join, scoring,
-    ranking) so any regression mismatches. The recall/compute tradeoff
+    hashing, ids-only band join, pair dedup, scoring, ranking) so any
+    regression mismatches. The recall/compute tradeoff
     at production configs stays pytest-gated (tests/test_operators.py).
     Output: one row (n_expected, n_hit); the oracle derives n_expected
     from the exact top-5 SQL and asserts n_hit equals it."""

@@ -141,6 +141,20 @@ def _integral(df: DataFrame, cols: tuple[str, ...]) -> bool:
     )
 
 
+def name_clusters(labels: DataFrame, names: DataFrame, key: str) -> DataFrame:
+    """labels(key, cluster_id, cluster_size) ⋈ names(key, name) →
+    (name, cluster_id, cluster_size) with cluster_id = the component's
+    minimum member name (the golden oracle's convention). `names` is
+    joined as given, so a caller that wants a broadcast join passes
+    F.broadcast(names)."""
+    name = next(c for c in names.columns if c != key)
+    named = labels.withColumnRenamed("cluster_id", "__cid").join(names, key)
+    minname = named.groupBy("__cid").agg(F.min(name).alias("__min_name"))
+    return named.join(minname, "__cid").select(
+        name, F.col("__min_name").alias("cluster_id"), "cluster_size"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
@@ -179,17 +193,7 @@ def connected_components(
             e64, v64.select(F.col("__id64")), id_col="__id64",
             max_iter=max_iter, n_edges=n_edges, metrics=metrics,
         )
-        named = labels64.withColumnRenamed("cluster_id", "__cid64").join(
-            v64, "__id64"
-        )
-        minname = named.groupBy("__cid64").agg(
-            F.min(id_col).alias("__min_member")
-        )
-        return named.join(minname, "__cid64").select(
-            F.col(id_col),
-            F.col("__min_member").alias("cluster_id"),
-            "cluster_size",
-        )
+        return name_clusters(labels64, v64, "__id64")
 
     spark = edges.sparkSession
     if n_edges is None:

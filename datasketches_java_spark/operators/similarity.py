@@ -6,40 +6,51 @@
    across engines in the last ulp and flip rankings).
  - brute_force_topk_cosine: float cosine variant (rows-only check).
  - brute_force_topk_cosine_q: oracle-exact integer-quantized cosine.
- - lsh_topk_cosine: the scale path — sign-random-projection bucketing
-   (SimHash over vector components) so each query only scores its
-   bucket; brute force within bucket. Approximate by design.
+ - cosine_dup_pairs: every pair at or above a quantized cosine.
+ - lsh_topk_cosine / ivf_topk_cosine: the ANN scale lanes — SRP
+   buckets or IVF cells turn the all-pairs scan into candidate pairs,
+   rescored exactly. Approximate by design.
 
-Exact top-k execution (round 4): when the embedding matrix fits the
-broadcast budget, ONE scan of the table scores each Arrow batch
-against the broadcast matrix with an int64 matmul and emits its top-k
-directly — no crossJoin, no O(n²) shuffle, no window. b×n score tiles
-never materialize outside a worker. Over budget, the plan falls back
-to the crossJoin+window form (the all-pairs shuffle IS the exact
-semantics at that point; the scale lane is lsh_topk_cosine). This is
-the classic broadcast-side/stream-side split: the probe set is the
-small side, the corpus streams.
+ONE plan decision per call, made by input size: _collect_matrix runs
+one cheap aggregate (n, min/max dimension, max |component|) and
+collects the (ids, matrix) pair only when n·(d+1)·8 bytes fit
+_MATRIX_BUDGET_BYTES. In budget the matrix is broadcast: the exact
+lanes score each Arrow batch against it with one matmul and emit
+their top-k or pairs directly (no crossJoin, no O(n²) shuffle, no
+window; b×n score tiles never leave a worker), and the ANN lanes score
+their candidate pairs in one vec_id-partitioned pass (_ann_topk). Over
+budget the exact lanes crossJoin (the all-pairs shuffle IS the exact
+semantics at that point) and the ANN lanes join vectors back onto the
+deduped candidates; both distributed plans end in one top-k tail,
+_topk. Either plan computes the same rows. This is the classic
+broadcast-or-repartition choice by measured input size.
 """
 
 from __future__ import annotations
 
+import operator
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 QUANT = 1_000_000
 COS_QUANT = 1_000_000_000
 
-# broadcast cap for the (ids, matrix) pair in the matmul plan
+# broadcast cap for the (ids, matrix) pair of the broadcast plans
 _MATRIX_BUDGET_BYTES = 256 << 20
 
 
-def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+
+
+def _quantized(src: DataFrame) -> DataFrame:
+    return src.select(
+        "id",
         F.transform(
-            F.col(vec_col),
+            F.col("v"),
             lambda x: F.round(x.cast("double") * QUANT).cast("bigint"),
         ).alias("q"),
     )
@@ -53,155 +64,135 @@ def _dot(a, b):
     )
 
 
-def _matrix_fits(
-    df: DataFrame, id_col: str, vec_col: str, exact_bits: int = 53
-) -> bool:
-    """True when the (ids, int64 matrix) broadcast fits the budget.
+def _collect_matrix(src: DataFrame, exact_bits: int | None = None):
+    """(ids sorted asc, matrix) of the (id, v) frame for the broadcast
+    plans, or None when the caller must take its distributed plan.
 
-    Also enforces the integer-exactness contract the oracle depends on
-    (round-4 advice): with components quantized to 1e6, a dot product
-    is exact only while d·max_q² stays under 2^exact_bits (53 for the
-    cos_q path, whose dot must convert losslessly to float64; 62 for
-    the raw-int64 IP path, leaving a sign bit + headroom for the int64
-    matmul). Components large enough to break that raise instead of
-    silently hash-mismatching the oracle — the crossJoin fallback has
-    the identical quantized arithmetic, so falling back would not help.
-    EAGER: one count/max aggregate at plan-construction time.
-    """
-    row = df.select(
-        F.count("*").alias("n"),
-        F.max(F.size(vec_col)).alias("d"),
-        F.max(
-            F.array_max(
-                F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double")))
+    One aggregate decides first, observed over a no-op scan (one Spark
+    job, no shuffle): n, min/max dimension and max |component|. With
+    exact_bits (the quantized lanes) it enforces the integer-exactness
+    contract the oracle depends on: with components quantized to 1e6,
+    a dot product is exact only while d·max_q² < 2^exact_bits (53 for
+    cos_q, whose dot must convert losslessly to float64; 62 for the
+    raw-int64 IP path, leaving a sign bit + headroom for the int64
+    matmul). Data that breaks it raises — the distributed plan has the
+    identical quantized arithmetic, so falling back would not help.
+
+    The matrix is collected only when the ids are integral (the
+    broadcast scorers pack them as int64), every vector has the same
+    dimension d, and n·(d+1)·8 bytes fit _MATRIX_BUDGET_BYTES: int64
+    quantized components with exact_bits, float64 without."""
+    stats = Observation()
+    src.observe(
+        stats,
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.coalesce(F.size("v"), F.lit(-1))).alias("d_min"),
+        F.max(F.size("v")).alias("d"),
+        F.max(F.array_max(
+            F.transform("v", lambda x: F.abs(x.cast("double")))
+        )).alias("mx"),
+    ).write.format("noop").mode("overwrite").save()
+    row = stats.get
+    n, d = row["n"], row["d"] or 0
+    if exact_bits is not None:
+        max_q = int(round((row["mx"] or 0.0) * QUANT)) + 1
+        if n and d and d * max_q * max_q >= (1 << exact_bits):
+            raise ValueError(
+                f"integer-exact quantized scores need d*max_q^2 < "
+                f"2^{exact_bits} (d={d}, max|component|~{row['mx']:.3g} "
+                f"-> max_q={max_q}); rescale the embeddings or lower QUANT"
             )
-        ).alias("mx"),
-    ).collect()[0]
-    n, d, mx = row["n"] or 0, row["d"] or 0, row["mx"] or 0.0
-    max_q = int(round(mx * QUANT)) + 1
-    if n and d and d * max_q * max_q >= (1 << exact_bits):
-        raise ValueError(
-            f"integer-exact quantized scores need d*max_q^2 < 2^{exact_bits} "
-            f"(d={d}, max|component|~{mx:.3g} -> max_q={max_q}); rescale the "
-            "embeddings or lower QUANT"
-        )
-    if dict(df.dtypes)[id_col] not in ("bigint", "int"):
-        return False  # matmul path packs ids as int64
-    return 0 < n * d * 8 + n * 8 <= _MATRIX_BUDGET_BYTES
-
-
-def _collect_quantized(df: DataFrame, id_col: str, vec_col: str):
-    """(ids sorted asc, int64 matrix) for the broadcast side."""
-    pdf = _quantized(df, id_col, vec_col).toPandas()
+    if (n == 0 or row["d_min"] != d
+            or dict(src.dtypes)["id"] not in ("bigint", "int")
+            or n * (d + 1) * 8 > _MATRIX_BUDGET_BYTES):
+        return None
+    pdf = (src if exact_bits is None else _quantized(src)).toPandas()
     ids = pdf["id"].to_numpy(np.int64)
-    M = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+    M = np.stack(pdf.iloc[:, 1].to_numpy()).astype(
+        np.float64 if exact_bits is None else np.int64)
     order = np.argsort(ids, kind="stable")
     return ids[order], M[order]
 
 
-# hard row cap for the single-pass collect below: the most rows that
-# could possibly fit the byte budget at the narrowest realistic d=1
-_MATRIX_MAX_ROWS = _MATRIX_BUDGET_BYTES // 16
+def _topk(scored: DataFrame, score_col: str, topk: int) -> DataFrame:
+    """Per-vec_id top-k of (vec_id, neighbor_id, score) rows, ranked by
+    (score desc, neighbor_id asc): the tail of every distributed plan."""
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select("vec_id", "neighbor_id", score_col,
+                F.col("rank").cast("int").alias("rank"))
+    )
 
 
-def _collect_quantized_checked(
-    df: DataFrame, id_col: str, vec_col: str, exact_bits: int
-):
-    """ONE Spark job replacing the former _matrix_fits + collect pair
-    (guide §1/§5: the fits-stats aggregate and the broadcast collect
-    each cost a full scheduled job; at plan-construction time they ran
-    back to back). Collects the quantized table (row-capped; a
-    too-big result raises through spark.driver.maxResultSize and falls
-    back), derives n/d/max_q from the collected frame — max over
-    per-element round() equals round() of the max since round is
-    monotone, so the exactness check is the SAME predicate
-    _matrix_fits evaluates — and returns (ids sorted, int64 matrix),
-    or None when the broadcast budget (or the id-dtype contract) says
-    the caller must use its over-budget fallback plan. Raises the
-    identical integer-exactness ValueError _matrix_fits raises; both
-    paths compute the same result, so the fallback choice never
-    changes the output."""
-    if dict(df.dtypes)[id_col] not in ("bigint", "int"):
-        return None  # matmul path packs ids as int64
-    try:
-        pdf = _quantized(df, id_col, vec_col) \
-            .limit(_MATRIX_MAX_ROWS + 1).toPandas()
-    except Exception:
-        return None  # driver.maxResultSize guard tripped: over budget
-    n = len(pdf)
-    if n == 0 or n > _MATRIX_MAX_ROWS:
-        return None
-    qcol = pdf["q"].to_numpy()
-    d = max((len(v) for v in qcol), default=0)
-    max_q = int(max((int(np.max(np.abs(v))) for v in qcol if len(v)),
-                    default=0)) + 1
-    if n and d and d * max_q * max_q >= (1 << exact_bits):
-        raise ValueError(
-            f"integer-exact quantized scores need d*max_q^2 < 2^{exact_bits} "
-            f"(d={d}, max|component|~{(max_q - 1) / QUANT:.3g} -> "
-            f"max_q={max_q}); rescale the embeddings or lower QUANT"
-        )
-    if not (0 < n * d * 8 + n * 8 <= _MATRIX_BUDGET_BYTES):
-        return None
-    ids = pdf["id"].to_numpy(np.int64)
-    M = np.stack(qcol).astype(np.int64)
-    order = np.argsort(ids, kind="stable")
-    return ids[order], M[order]
+def _broadcast_scored(src, mat, key, score_fn, emit, schema) -> DataFrame:
+    """One scan of the quantized (id, q) table against the broadcast
+    (ids sorted, int64 matrix) pair: every Arrow batch's (b, n) score
+    tile S = score_fn(Q, M) becomes output rows through
+    emit(qid, ids, S) inside the worker."""
+    from ._bc import register
 
-
-def _topk_scored_batches(bc, topk: int, score_fn, id_dtype):
-    """mapInPandas generator: score each query batch against the
-    broadcast matrix, emit per-query top-k. Ties break on neighbor_id
-    ascending: the broadcast ids are pre-sorted ascending and the
-    argsort on negated scores is stable."""
+    sc = src.sparkSession.sparkContext
+    bc = register(key, sc.broadcast(mat))
 
     def gen(batches):
         ids_b, M = bc.value
-        n = len(ids_b)
-        k = min(topk, n - 1)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qid = pdf["id"].to_numpy(np.int64)
-            Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            S = score_fn(Q, M)  # (b, n)
-            pos = np.searchsorted(ids_b, qid)
-            # mask self with min+1: np.argsort(-S) negates, and
-            # -int64.min overflows back to int64.min (sorting the
-            # masked self FIRST instead of last); min+1 negates cleanly
-            S[np.arange(len(qid)), pos] = np.iinfo(np.int64).min + 1
-            order = np.argsort(-S, axis=1, kind="stable")[:, :k]
-            rows = np.repeat(np.arange(len(qid)), k)
-            yield pd.DataFrame(
-                {
-                    "vec_id": qid.repeat(k).astype(id_dtype),
-                    "neighbor_id": ids_b[order.ravel()].astype(id_dtype),
-                    "score": S[rows, order.ravel()],
-                    "rank": np.tile(np.arange(1, k + 1, dtype=np.int32), len(qid)),
-                }
-            )
+            if len(pdf):
+                qid = pdf["id"].to_numpy(np.int64)
+                Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+                yield emit(qid, ids_b, score_fn(Q, M))
 
-    return gen
+    return _quantized(src).repartition(sc.defaultParallelism) \
+        .mapInPandas(gen, schema)
 
 
-def _topk_broadcast(
-    df: DataFrame, id_col: str, vec_col: str, topk: int, score_fn,
-    score_name: str, mat=None,
-) -> DataFrame:
-    from ._bc import register
+def _emit_topk(topk: int, score_name: str):
+    """Per-query top-k of a score tile, self excluded. Ties break on
+    neighbor_id ascending: the broadcast ids are sorted ascending and
+    the argsort on negated scores is stable."""
 
-    ids, M = mat if mat is not None else \
-        _collect_quantized(df, id_col, vec_col)
-    sc = df.sparkSession.sparkContext
-    bc = register(f"topk_matrix_{score_name}", sc.broadcast((ids, M)))
-    id_type = dict(df.dtypes)[id_col]
-    q = _quantized(df, id_col, vec_col)
-    par = sc.defaultParallelism
-    out = q.repartition(par).mapInPandas(
-        _topk_scored_batches(bc, topk, score_fn, np.int64),
-        f"vec_id {id_type}, neighbor_id {id_type}, score bigint, rank int",
-    )
-    return out.withColumnRenamed("score", score_name)
+    def emit(qid, ids_b, S):
+        k = min(topk, len(ids_b) - 1)
+        # mask self with min+1: np.argsort(-S) negates, and
+        # -int64.min overflows back to int64.min (sorting the masked
+        # self FIRST instead of last); min+1 negates cleanly
+        S[np.arange(len(qid)), np.searchsorted(ids_b, qid)] = \
+            np.iinfo(np.int64).min + 1
+        order = np.argsort(-S, axis=1, kind="stable")[:, :k]
+        rows = np.repeat(np.arange(len(qid)), k)
+        return pd.DataFrame({
+            "vec_id": qid.repeat(k),
+            "neighbor_id": ids_b[order.ravel()],
+            score_name: S[rows, order.ravel()],
+            "rank": np.tile(np.arange(1, k + 1, dtype=np.int32), len(qid)),
+        })
+
+    return emit
+
+
+def _emit_pairs(thr_q: int):
+    """Every (a < b) pair of a score tile at or above thr_q: output is
+    O(qualifying pairs)."""
+
+    def emit(qid, ids_b, S):
+        r, c = np.nonzero((S >= thr_q) & (qid[:, None] < ids_b[None, :]))
+        return pd.DataFrame(
+            {"id_a": qid[r], "id_b": ids_b[c], "cos_q": S[r, c]})
+
+    return emit
+
+
+def _cross(src: DataFrame, a: str, b: str, keep) -> DataFrame:
+    """Every (a, b) pair of quantized rows passing keep(a, b), with the
+    two vectors as qa / qb: the exact over-budget plan."""
+    q = _quantized(src)
+    qa = q.select(F.col("id").alias(a), F.col("q").alias("qa"))
+    qb = q.select(F.col("id").alias(b), F.col("q").alias("qb"))
+    return qa.crossJoin(qb).filter(keep(F.col(a), F.col(b)))
 
 
 def _ip_scores(Q: np.ndarray, M: np.ndarray) -> np.ndarray:
@@ -222,6 +213,31 @@ def _cos_q_scores(Q: np.ndarray, M: np.ndarray) -> np.ndarray:
     return np.floor(c + 0.5).astype(np.int64)
 
 
+def _cos_q_expr():
+    """SQL twin of _cos_q_scores over the crossed qa / qb columns."""
+    qa, qb = F.col("qa"), F.col("qb")
+    return F.round(
+        F.lit(float(COS_QUANT)) * _dot(qa, qb).cast("double")
+        / F.sqrt(_dot(qa, qa).cast("double") * _dot(qb, qb).cast("double"))
+    ).cast("bigint")
+
+
+def _exact_topk(df, id_col, vec_col, topk, score_name, exact_bits,
+                score_fn, score_expr) -> DataFrame:
+    src = _vectors(df, id_col, vec_col)
+    mat = _collect_matrix(src, exact_bits)
+    if mat is not None:
+        t = dict(df.dtypes)[id_col]
+        return _broadcast_scored(
+            src, mat, f"topk_matrix_{score_name}", score_fn,
+            _emit_topk(topk, score_name),
+            f"vec_id {t}, neighbor_id {t}, {score_name} bigint, rank int",
+        )
+    scored = _cross(src, "vec_id", "neighbor_id", operator.ne).select(
+        "vec_id", "neighbor_id", score_expr.alias(score_name))
+    return _topk(scored, score_name, topk)
+
+
 def brute_force_topk_ip(
     df: DataFrame, id_col: str, vec_col: str, topk: int = 5
 ) -> DataFrame:
@@ -229,38 +245,9 @@ def brute_force_topk_ip(
 
     Broadcast-matmul plan when the matrix fits (one scan, no shuffle);
     crossJoin+window fallback above the budget. EAGER: the plan choice
-    collects the broadcast matrix (one job — stats derive from the
-    collected frame, see _collect_quantized_checked) at construction
-    time."""
-    mat = _collect_quantized_checked(df, id_col, vec_col, exact_bits=62)
-    if mat is not None:
-        return _topk_broadcast(df, id_col, vec_col, topk, _ip_scores,
-                               "dot_q", mat=mat) \
-            .select("vec_id", "neighbor_id", "dot_q", "rank")
-    _matrix_fits(df, id_col, vec_col, exact_bits=62)  # exactness raise
-    qa = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("vec_id"), F.col("q").alias("qa")
-    )
-    qb = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("neighbor_id"), F.col("q").alias("qb")
-    )
-    scored = (
-        qa.crossJoin(qb)
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            _dot(F.col("qa"), F.col("qb")).alias("dot_q"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("vec_id", "neighbor_id", "dot_q", F.col("rank").cast("int").alias("rank"))
-    )
+    runs _collect_matrix's aggregate, and its collect in budget."""
+    return _exact_topk(df, id_col, vec_col, topk, "dot_q", 62, _ip_scores,
+                       _dot(F.col("qa"), F.col("qb")))
 
 
 def _cosine_batch(a, b):
@@ -329,14 +316,7 @@ def brute_force_topk_cosine(
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id", _cosine(F.col("va"), F.col("vb")).alias("cosine"))
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("vec_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(scored, "cosine", topk)
 
 
 def brute_force_topk_cosine_q(
@@ -349,68 +329,8 @@ def brute_force_topk_cosine_q(
     (tightened from the round-3 left-fold formulation). Ties break on
     neighbor_id. Broadcast-matmul plan under the budget, crossJoin
     fallback above it."""
-    mat = _collect_quantized_checked(df, id_col, vec_col, exact_bits=53)
-    if mat is not None:
-        return _topk_broadcast(
-            df, id_col, vec_col, topk, _cos_q_scores, "cos_q", mat=mat
-        ).select("vec_id", "neighbor_id", "cos_q", "rank")
-    _matrix_fits(df, id_col, vec_col)  # exactness raise on bad data
-    qa = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("vec_id"), F.col("q").alias("qa")
-    )
-    qb = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("neighbor_id"), F.col("q").alias("qb")
-    )
-    nq = lambda c: F.aggregate(  # noqa: E731
-        c, F.lit(0).cast("bigint"), lambda acc, x: acc + x * x
-    ).cast("double")
-    scored = (
-        qa.crossJoin(qb)
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(
-                F.lit(float(COS_QUANT)) * _dot(F.col("qa"), F.col("qb")).cast("double")
-                / F.sqrt(nq(F.col("qa")) * nq(F.col("qb")))
-            ).cast("bigint").alias("cos_q"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("vec_id", "neighbor_id", "cos_q", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def _pair_scored_batches(bc, thr_q: int, score_fn, id_dtype):
-    """mapInPandas generator: score each batch against the broadcast
-    matrix, emit every (a < b) pair at or above the quantized
-    threshold. The b×n score tile lives only inside the worker; output
-    is O(qualifying pairs)."""
-
-    def gen(batches):
-        ids_b, M = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qid = pdf["id"].to_numpy(np.int64)
-            Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            S = score_fn(Q, M)  # (b, n)
-            mask = (S >= thr_q) & (qid[:, None] < ids_b[None, :])
-            r, c = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": qid[r].astype(id_dtype),
-                    "id_b": ids_b[c].astype(id_dtype),
-                    "cos_q": S[r, c],
-                }
-            )
-
-    return gen
+    return _exact_topk(df, id_col, vec_col, topk, "cos_q", 53,
+                       _cos_q_scores, _cos_q_expr())
 
 
 def cosine_dup_pairs(
@@ -433,40 +353,17 @@ def cosine_dup_pairs(
     bucketing + this same exact rescore within buckets.
     """
     thr_q = int(round(threshold * COS_QUANT))
-    mat = _collect_quantized_checked(df, id_col, vec_col, exact_bits=53)
+    src = _vectors(df, id_col, vec_col)
+    mat = _collect_matrix(src, exact_bits=53)
     if mat is not None:
-        from ._bc import register
-
-        ids, M = mat
-        sc = df.sparkSession.sparkContext
-        bc = register("cosine_pairs_matrix", sc.broadcast((ids, M)))
-        id_type = dict(df.dtypes)[id_col]
-        q = _quantized(df, id_col, vec_col)
-        return q.repartition(sc.defaultParallelism).mapInPandas(
-            _pair_scored_batches(bc, thr_q, _cos_q_scores, np.int64),
-            f"id_a {id_type}, id_b {id_type}, cos_q bigint",
+        t = dict(df.dtypes)[id_col]
+        return _broadcast_scored(
+            src, mat, "cosine_pairs_matrix", _cos_q_scores,
+            _emit_pairs(thr_q), f"id_a {t}, id_b {t}, cos_q bigint",
         )
-    _matrix_fits(df, id_col, vec_col)  # exactness raise on bad data
-    qa = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("id_a"), F.col("q").alias("qa")
-    )
-    qb = _quantized(df, id_col, vec_col).select(
-        F.col("id").alias("id_b"), F.col("q").alias("qb")
-    )
-    nq = lambda c: F.aggregate(  # noqa: E731
-        c, F.lit(0).cast("bigint"), lambda acc, x: acc + x * x
-    ).cast("double")
     return (
-        qa.crossJoin(qb)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.lit(float(COS_QUANT)) * _dot(F.col("qa"), F.col("qb")).cast("double")
-                / F.sqrt(nq(F.col("qa")) * nq(F.col("qb")))
-            ).cast("bigint").alias("cos_q"),
-        )
+        _cross(src, "id_a", "id_b", operator.lt)
+        .select("id_a", "id_b", _cos_q_expr().alias("cos_q"))
         .filter(F.col("cos_q") >= F.lit(thr_q))
     )
 
@@ -522,18 +419,13 @@ def srp_buckets_array(vec_col, n_planes: int, n_tables: int, seed: int):
 
 
 def _lsh_candidates(
-    src: DataFrame, n_planes: int | None, n_tables: int, seed: int,
-    bucket_cap: int, target_bucket: int, dedup: bool = True,
+    src: DataFrame, n_planes: int, n_tables: int, seed: int, bucket_cap: int,
 ) -> DataFrame:
-    """(id, v) → deduped candidate (vec_id, neighbor_id) pairs via the
-    capped multi-table bucket join (see lsh_topk_cosine's BOUNDED
-    BUCKET JOIN notes). Split out so the O(g·cap) pair bound is
+    """(id, v) → candidate (vec_id, neighbor_id) pairs via the capped
+    multi-table bucket join (see lsh_topk_cosine's BOUNDED BUCKET JOIN
+    notes). A pair sharing buckets in several tables repeats; the
+    scorer dedups (_ann_topk). Split out so the O(g·cap) pair bound is
     directly testable (tests/test_operators.py)."""
-    if n_planes is None:
-        n = src.count()
-        n_planes = int(
-            min(24, max(1, np.ceil(np.log2(max(n, 2) / target_bucket))))
-        )
     with_b = src.select(
         "id",
         F.posexplode(
@@ -549,52 +441,22 @@ def _lsh_candidates(
         .filter(F.col("__r") <= bucket_cap)
         .select(F.col("id").alias("neighbor_id"), "table_idx", "bucket")
     )
-    out = (
+    return (
         a.join(b, ["table_idx", "bucket"])
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
     )
-    # dedup=False lets a caller that immediately repartitions by
-    # vec_id fold the global dedup into its own partition-local pass
-    # (one exchange instead of two — guide §2.4)
-    return out.dropDuplicates(["vec_id", "neighbor_id"]) if dedup else out
 
 
-def _collect_float_matrix(src: DataFrame):
-    """(ids sorted asc, float64 matrix) of the (id, v) frame — the
-    broadcast scorer side for the ANN lanes — or None when the budget,
-    the int-id contract, or uniform dims don't hold (callers keep the
-    join-based scorer as the over-budget plan). One Spark job."""
-    if dict(src.dtypes)["id"] not in ("bigint", "int"):
-        return None
-    try:
-        pdf = src.limit(_MATRIX_MAX_ROWS + 1).toPandas()
-    except Exception:
-        return None  # driver.maxResultSize guard: over budget
-    n = len(pdf)
-    if n == 0 or n > _MATRIX_MAX_ROWS:
-        return None
-    vs = pdf["v"].to_numpy()
-    d0 = len(vs[0])
-    if any(len(v) != d0 for v in vs):
-        return None  # ragged dims: the join path size-checks per pair
-    if not (0 < n * d0 * 8 + n * 8 <= _MATRIX_BUDGET_BYTES):
-        return None
-    ids = pdf["id"].to_numpy(np.int64)
-    M = np.stack(vs).astype(np.float64)
-    order = np.argsort(ids, kind="stable")
-    return ids[order], M[order]
-
-
-def _lsh_scored_partition(bc, topk: int):
+def _ann_scored_partition(bc, topk: int):
     """mapInPandas over candidate (vec_id, neighbor_id) pairs hash-
     partitioned by vec_id: buffer the partition, dedup pairs (global
     dedup — every pair of a vec lands in this partition), score from
     the broadcast float64 matrix with the same einsum expressions
     _cosine_batch evaluates (bit-identical sums), rank per vec by
-    (cosine desc, neighbor_id asc) exactly like the row_number window
-    it replaces. Spark orders NaN above every double in a desc sort;
-    the sort key maps NaN to +inf to match."""
+    (cosine desc, neighbor_id asc) exactly like _topk's window.
+    Spark orders NaN above every double in a desc sort; the sort key
+    maps NaN to +inf to match."""
 
     def gen(batches):
         ids_b, M = bc.value
@@ -639,6 +501,45 @@ def _lsh_scored_partition(bc, topk: int):
     return gen
 
 
+def _ann_topk(cand: DataFrame, src: DataFrame, mat, topk: int) -> DataFrame:
+    """Exact cosine top-k over ANN candidate pairs (vec_id, neighbor_id,
+    repeats allowed) of the (id, v) frame — the scorer both ANN lanes
+    share. `mat` is _collect_matrix(src): in budget, the pairs are
+    scored against the broadcast float64 matrix in ONE vec_id-
+    partitioned Arrow pass (one exchange; the pair dedup happens in
+    the same pass). Over budget, the deduped pairs join their vectors
+    back once per side and end in _topk — same einsum scores, same
+    (cosine desc, neighbor_id asc) ranking, so the same rows."""
+    if mat is not None:
+        from ..session import plan_width
+        from ._bc import register
+
+        sess = src.sparkSession
+        bc = register("ann_topk_matrix", sess.sparkContext.broadcast(mat))
+        t = dict(src.dtypes)["id"]
+        return cand.repartition(plan_width(sess), "vec_id").mapInPandas(
+            _ann_scored_partition(bc, topk),
+            f"vec_id {t}, neighbor_id {t}, cosine double, rank int",
+        )
+    va = src.select(F.col("id").alias("vec_id"), F.col("v").alias("va"))
+    vb = src.select(F.col("id").alias("neighbor_id"), F.col("v").alias("vb"))
+    scored = (
+        _drop_invalid_pairs(
+            cand.dropDuplicates(["vec_id", "neighbor_id"])
+            .join(va, "vec_id").join(vb, "neighbor_id"), "va", "vb")
+        .select(
+            "vec_id", "neighbor_id",
+            _cosine_batch(F.col("va"), F.col("vb")).alias("cosine"),
+        )
+    )
+    return _topk(scored, "cosine", topk)
+
+
+def _ann_src(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return _vectors(df, id_col, vec_col) \
+        .filter(F.col("v").isNotNull() & (F.size("v") > 0))
+
+
 def lsh_topk_cosine(
     df: DataFrame, id_col: str, vec_col: str, topk: int = 5,
     n_planes: int | None = None, n_tables: int = 8, seed: int = 9001,
@@ -650,13 +551,13 @@ def lsh_topk_cosine(
     1-(1-p)^L — the classic LSH recall/compute dial (MMDS ch.3). Turns
     the O(n²) cross join into per-bucket joins.
 
-    IDS-ONLY EXCHANGE (round 4): the ×L explode, the band self-join,
-    and the pair dedup move only (id, table_idx, bucket) int64 triples
-    — vector payload never rides the multi-table fan-out. Vectors join
-    back exactly once per side onto the DEDUPED candidate pairs for
-    scoring (the same two-join pattern the signature verify stage
-    uses). At 100×-scale embedding tables this is the difference
-    between shuffling ids and shuffling the corpus.
+    IDS-ONLY EXCHANGE (round 4): the ×L explode and the band self-join
+    move only (id, table_idx, bucket) int64 triples — vector payload
+    never rides the multi-table fan-out. The candidate pairs are
+    scored by _ann_topk: against the broadcast matrix when it fits the
+    budget, else by joining vectors back once per side onto the
+    deduped pairs. At 100×-scale embedding tables this is the
+    difference between shuffling ids and shuffling the corpus.
 
     BOUNDED BUCKET JOIN (round 4 verdict #2 — was the last O(g²)
     scale hole): two mechanisms, mirroring the text lane's cap-and-
@@ -666,8 +567,8 @@ def lsh_topk_cosine(
       ceil(log2(n / target_bucket)) planes ⇒ average bucket ≈
       target_bucket regardless of n, instead of the old fixed 64
       buckets/table that at 10⁸ vectors meant ~10⁶-member buckets.
-      EAGER: the derivation runs one count() at plan time (pass
-      n_planes explicitly to avoid it).
+      n comes from the budget decision's collect; over budget it costs
+      one count() at plan time (pass n_planes explicitly to avoid it).
     - the NEIGHBOR side of the per-bucket self-join is capped at
       bucket_cap members per (table, bucket), chosen by deterministic
       hash rank — a skew backstop (e.g. a mass of identical vectors)
@@ -677,60 +578,19 @@ def lsh_topk_cosine(
       multi-table OR usually recovers. The cap's row_number window
       partitions on the same (table_idx, bucket) key as the join, so
       AQE reuses one exchange.
-    """
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")) \
-        .filter(F.col("v").isNotNull() & (F.size("v") > 0))
-    # BROADCAST-SCORED plan under the matrix budget (round 6, guide
-    # §3.1/§2.4): candidates stay the same capped ids-only bucket
-    # join, but the deduped pairs are scored against the broadcast
-    # float64 matrix inside ONE vec_id-partitioned Arrow pass — the
-    # dropDuplicates exchange, both vector-attach join exchanges and
-    # the top-k window exchange collapse into a single repartition
-    # (same einsum scores, same (cosine desc, neighbor_id) ranking).
-    # Over budget / ragged dims / non-int ids: the join-based scorer
-    # below is the plan, unchanged.
-    mat = _collect_float_matrix(src)
-    if mat is not None:
-        from ..session import plan_width
-        from ._bc import register
 
-        bc = register(
-            "lsh_topk_matrix",
-            src.sparkSession.sparkContext.broadcast(mat),
+    EAGER: the budget decision runs _collect_matrix's aggregate, and
+    its collect in budget.
+    """
+    src = _ann_src(df, id_col, vec_col)
+    mat = _collect_matrix(src)
+    if n_planes is None:
+        n = len(mat[0]) if mat is not None else src.count()
+        n_planes = int(
+            min(24, max(1, np.ceil(np.log2(max(n, 2) / target_bucket))))
         )
-        cand = _lsh_candidates(
-            src, n_planes, n_tables, seed, bucket_cap, target_bucket,
-            dedup=False,
-        )
-        id_type = dict(df.dtypes)[id_col]
-        return cand.repartition(
-            plan_width(src.sparkSession), "vec_id"
-        ).mapInPandas(
-            _lsh_scored_partition(bc, topk),
-            f"vec_id {id_type}, neighbor_id {id_type}, "
-            f"cosine double, rank int",
-        )
-    cand = _lsh_candidates(
-        src, n_planes, n_tables, seed, bucket_cap, target_bucket
-    )
-    va = src.select(F.col("id").alias("vec_id"), F.col("v").alias("va"))
-    vb = src.select(F.col("id").alias("neighbor_id"), F.col("v").alias("vb"))
-    scored = (
-        _drop_invalid_pairs(
-            cand.join(va, "vec_id").join(vb, "neighbor_id"), "va", "vb")
-        .select(
-            "vec_id", "neighbor_id",
-            _cosine_batch(F.col("va"), F.col("vb")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("vec_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    cand = _lsh_candidates(src, n_planes, n_tables, seed, bucket_cap)
+    return _ann_topk(cand, src, mat, topk)
 
 
 def ivf_topk_cosine(
@@ -747,19 +607,21 @@ def ivf_topk_cosine(
     with n_probe, compute ~ n·d·n_cells (assignment matmul) +
     n·(n/n_cells)·n_probe·d (scoring).
 
-    Scale shape mirrors lsh_topk_cosine: the cell join and pair dedup
-    move (id, cell) int pairs ONLY; vectors join back once per side
-    onto deduped candidate pairs. The centroid matrix (√n·d floats) is
-    a Spark broadcast variable. EAGER: plan construction runs Spark
-    jobs — a full `count()` when n_cells is None (pass n_cells
-    explicitly to avoid it) and the centroid TopK+collect (orderBy+
-    limit compiles to TakeOrderedAndProject, O(n_cells) per task, not
-    a global sort)."""
+    Scale shape mirrors lsh_topk_cosine: the cell join moves (id, cell)
+    int pairs ONLY, and the candidate pairs go through the same scorer,
+    _ann_topk (a broadcast matrix in budget, a vector join-back above
+    it).
+    The centroid matrix (√n·d floats) is a Spark broadcast variable.
+    EAGER: plan construction runs Spark jobs — _collect_matrix's
+    aggregate (whose n sizes n_cells=None; over budget that costs one
+    count() instead) and collect, and the centroid TopK+collect
+    (orderBy+limit compiles to TakeOrderedAndProject, O(n_cells) per
+    task, not a global sort)."""
     sess = df.sparkSession
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")) \
-        .filter(F.col("v").isNotNull() & (F.size("v") > 0))
+    src = _ann_src(df, id_col, vec_col)
+    mat = _collect_matrix(src)
     if n_cells is None:
-        n_rows = src.count()
+        n_rows = len(mat[0]) if mat is not None else src.count()
         n_cells = max(4, int(np.ceil(np.sqrt(max(n_rows, 1)))))
     n_probe = min(n_probe, n_cells)
 
@@ -810,23 +672,5 @@ def ivf_topk_cosine(
         queries.join(indexed.withColumnRenamed("id", "neighbor_id"), "cell")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
-        .dropDuplicates(["vec_id", "neighbor_id"])
     )
-    va = src.select(F.col("id").alias("vec_id"), F.col("v").alias("va"))
-    vb = src.select(F.col("id").alias("neighbor_id"), F.col("v").alias("vb"))
-    scored = (
-        _drop_invalid_pairs(
-            cand.join(va, "vec_id").join(vb, "neighbor_id"), "va", "vb")
-        .select(
-            "vec_id", "neighbor_id",
-            _cosine_batch(F.col("va"), F.col("vb")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("vec_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ann_topk(cand, src, mat, topk)

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FROZEN, DedupConfig
-from ..operators.cluster import connected_components
+from ..operators.cluster import connected_components, name_clusters
 from ..operators.lsh import candidate_pairs
 from ..operators.signatures import compute_signatures, explode_bands
 from ..operators.verify import verify_pairs
@@ -204,14 +204,4 @@ def state_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     idmap = spark.read.parquet(
         *[os.path.join(state_dir, "idmap", b["id"]) for b in manifest["batches"]]
     )
-    named = labels64.join(idmap, "id64")
-    minname = named.groupBy(F.col("cluster_id").alias("cid64")).agg(
-        F.min("image_id").alias("min_name")
-    )
-    return (
-        named.select(F.col("cluster_id").alias("cid64"), "image_id",
-                     "cluster_size")
-        .join(minname, "cid64")
-        .select("image_id", F.col("min_name").alias("cluster_id"),
-                "cluster_size")
-    )
+    return name_clusters(labels64, idmap, "id64")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, FROZEN
-from ..operators.cluster import connected_components
+from ..operators.cluster import connected_components, name_clusters
 from ..operators.lsh import candidate_pairs
 from ..operators.signatures import compute_signatures, explode_bands, id_map
 from ..operators.verify import verify_pairs
@@ -205,22 +205,7 @@ def run_pipeline(
     # bench loop, audits) never pay for it.
     idmap = id_map(corpus, remap=remap, key=id_key)
     verified = _remap_pairs(verified64, idmap)
-    named = labels64.join(F.broadcast(idmap), "id64")
-    minname = named.groupBy(F.col("cluster_id").alias("cid64")).agg(
-        F.min("image_id").alias("min_name")
-    )
-    clusters = (
-        named.select(
-            F.col("cluster_id").alias("cid64"), "image_id", "cluster_size"
-        )
-        .join(minname, "cid64")
-        .select(
-            "image_id",
-            F.col("min_name").alias("cluster_id"),
-            "cluster_size",
-        )
-        .persist()
-    )
+    clusters = name_clusters(labels64, F.broadcast(idmap), "id64").persist()
 
     result = PipelineResult(
         signatures, candidates, verified64, verified, clusters, metrics

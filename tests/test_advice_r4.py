@@ -75,13 +75,14 @@ def test_matrix_fits_raises_on_exactness_break(spark):
 
 
 def test_matrix_fits_accepts_unit_range(spark):
-    from datasketches_java_spark.operators.similarity import _matrix_fits
+    from datasketches_java_spark.operators.similarity import _collect_matrix
 
     ok = spark.createDataFrame(
         [(i, [0.5, -0.25, 1.0]) for i in range(4)],
         "id bigint, emb array<double>",
     )
-    assert _matrix_fits(ok, "id", "emb") is True
+    src = ok.withColumnRenamed("emb", "v")
+    assert _collect_matrix(src, exact_bits=53) is not None
 
 
 def test_bc_registry_unpersists_previous(spark):

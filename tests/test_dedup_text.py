@@ -112,7 +112,8 @@ def _np_cos_pairs(ids, M, thr_q):
     return out
 
 
-def test_cosine_dup_pairs_matches_numpy_and_fallback(spark, smoke_sf_dir):
+def test_cosine_dup_pairs_matches_numpy_and_fallback(spark, smoke_sf_dir,
+                                                    monkeypatch):
     emb = spark.read.parquet(f"{smoke_sf_dir}/embeddings.parquet")
     pdf = emb.orderBy("vec_id").toPandas()
     ids = pdf["vec_id"].to_numpy(np.int64)
@@ -128,18 +129,11 @@ def test_cosine_dup_pairs_matches_numpy_and_fallback(spark, smoke_sf_dir):
     # over-budget crossJoin fallback computes the identical pair set
     import datasketches_java_spark.operators.similarity as sim
 
-    orig = sim._matrix_fits
-    orig_cc = sim._collect_quantized_checked
-    sim._matrix_fits = lambda *a, **k: False
-    sim._collect_quantized_checked = lambda *a, **k: None
-    try:
-        slow = {
-            (r.id_a, r.id_b, r.cos_q)
-            for r in cosine_dup_pairs(emb, "vec_id", "embedding", 0.4).collect()
-        }
-    finally:
-        sim._matrix_fits = orig
-        sim._collect_quantized_checked = orig_cc
+    monkeypatch.setattr(sim, "_MATRIX_BUDGET_BYTES", 0)
+    slow = {
+        (r.id_a, r.id_b, r.cos_q)
+        for r in cosine_dup_pairs(emb, "vec_id", "embedding", 0.4).collect()
+    }
     assert slow == expected
 
 

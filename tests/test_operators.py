@@ -312,8 +312,7 @@ def test_lsh_bucket_join_bounded_on_skew(spark):
     df = spark.createDataFrame(rows, "id bigint, v array<double>")
     cand = _lsh_candidates(
         df, n_planes=2, n_tables=4, seed=9001, bucket_cap=cap,
-        target_bucket=128,
-    )
+    ).dropDuplicates()
     n_pairs = cand.count()
     assert 0 < n_pairs <= n * cap, n_pairs
 
@@ -370,7 +369,7 @@ def test_lsh_topk_skips_null_and_ragged_vectors(spark):
     assert out.cosine.notna().all()
 
 
-def test_lsh_broadcast_scorer_matches_join_scorer(spark):
+def test_lsh_broadcast_scorer_matches_join_scorer(spark, monkeypatch):
     """Round-6 optimization: under the matrix budget the LSH lane
     scores deduped candidates against a broadcast float64 matrix in
     one vec_id-partitioned Arrow pass. The result frame must be
@@ -388,12 +387,8 @@ def test_lsh_broadcast_scorer_matches_join_scorer(spark):
     df = spark.createDataFrame(rows, "id bigint, v array<double>")
     kw = dict(topk=3, n_planes=3, n_tables=4)
     fast = sim.lsh_topk_cosine(df, "id", "v", **kw).toPandas()
-    orig = sim._collect_float_matrix
-    sim._collect_float_matrix = lambda *a, **k: None
-    try:
-        slow = sim.lsh_topk_cosine(df, "id", "v", **kw).toPandas()
-    finally:
-        sim._collect_float_matrix = orig
+    monkeypatch.setattr(sim, "_MATRIX_BUDGET_BYTES", 0)
+    slow = sim.lsh_topk_cosine(df, "id", "v", **kw).toPandas()
 
     def norm(p):
         return p.sort_values(["vec_id", "rank"]).reset_index(drop=True)
@@ -404,3 +399,71 @@ def test_lsh_broadcast_scorer_matches_join_scorer(spark):
     assert (f.neighbor_id.to_numpy() == s.neighbor_id.to_numpy()).all()
     assert (f.cosine.to_numpy() == s.cosine.to_numpy()).all()  # bitwise
     assert (f["rank"].to_numpy() == s["rank"].to_numpy()).all()
+
+
+def _budget_fixture(spark):
+    """Random 16-d vectors plus exact duplicates (cosine ties)."""
+    rng = np.random.default_rng(23)
+    rows = [(i, rng.standard_normal(16).tolist()) for i in range(160)]
+    rows += [(1000 + i, rows[i][1]) for i in range(12)]
+    return spark.createDataFrame(rows, "id bigint, v array<double>")
+
+
+_BUDGET_CALLS = {
+    "topk_ip": lambda sim, df: sim.brute_force_topk_ip(df, "id", "v", 4),
+    "topk_cosine_q": lambda sim, df: sim.brute_force_topk_cosine_q(
+        df, "id", "v", 4),
+    "cosine_dup_pairs": lambda sim, df: sim.cosine_dup_pairs(
+        df, "id", "v", 0.4),
+    "lsh": lambda sim, df: sim.lsh_topk_cosine(
+        df, "id", "v", 4, n_planes=2, n_tables=4),
+    "ivf": lambda sim, df: sim.ivf_topk_cosine(df, "id", "v", 4, n_probe=3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUDGET_CALLS))
+def test_tiny_budget_rows_equal_in_budget_rows(spark, monkeypatch, name):
+    """The broadcast-or-distribute choice is made by input size alone:
+    at a zero byte budget every embedding lane takes its distributed
+    plan and returns the in-budget rows — same pairs, bitwise-equal
+    scores, equal ranks."""
+    import datasketches_java_spark.operators.similarity as sim
+
+    df = _budget_fixture(spark)
+    fast = _BUDGET_CALLS[name](sim, df).toPandas()
+    monkeypatch.setattr(sim, "_MATRIX_BUDGET_BYTES", 0)
+    slow = _BUDGET_CALLS[name](sim, df).toPandas()
+
+    def norm(p):
+        return p.sort_values(list(p.columns[:2])).reset_index(drop=True)
+
+    assert len(fast) > 0
+    pd.testing.assert_frame_equal(norm(fast), norm(slow), check_exact=True)
+
+
+def test_collect_matrix_over_budget_collects_nothing(spark, monkeypatch):
+    """Over the byte budget the decision comes from one aggregate: wide
+    vectors (d=512) are never pulled to the driver, neither by the
+    budget check itself nor by the plan construction of a lane."""
+    import datasketches_java_spark.operators.similarity as sim
+
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.uniform(-0.1, 0.1, 512).tolist()) for i in range(400)]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    # 400 · 513 · 8 B ≈ 1.6 MB > 1 MB
+    monkeypatch.setattr(sim, "_MATRIX_BUDGET_BYTES", 1 << 20)
+    pulls = []
+    for meth in ("toPandas", "collect"):
+        orig = getattr(type(df), meth)
+        monkeypatch.setattr(
+            type(df), meth,
+            lambda self, *a, _m=meth, _o=orig, **k: (
+                pulls.append(_m), _o(self, *a, **k))[1],
+        )
+    sim.brute_force_topk_ip(df, "id", "v", 3)
+    sim.cosine_dup_pairs(df, "id", "v", 0.4)
+    sim.lsh_topk_cosine(df, "id", "v", 3, n_planes=4)
+    assert pulls == []
+    assert sim._collect_matrix(df) is None
+    assert sim._collect_matrix(df, exact_bits=53) is None
+    assert pulls == []

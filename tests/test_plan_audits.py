@@ -153,10 +153,12 @@ def test_fdt_face_scan_prunes_and_single_final_exchange(spark, queries):
 
 
 def _node_names(df) -> list[str]:
-    """Pre-order physical node names of df's plan (AQE input plan)."""
+    """Pre-order physical node names of df's plan (AQE input plan; a
+    persisted frame reads as the plan that fills its cache)."""
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.inputPlan()
+    while plan.nodeName() in ("AdaptiveSparkPlan", "InMemoryTableScan"):
+        plan = (plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan"
+                else plan.relation().cachedPlan())
     out = []
 
     def walk(p):
@@ -203,3 +205,70 @@ def test_cluster_audits_plan_nodes(spark):
         "Project", "SortMergeJoin", "Project", "Filter", "Scan ExistingRDD",
         "Filter", "Scan ExistingRDD",
     ]
+
+
+
+def test_cluster_naming_plan_nodes(spark, smoke_sf_dir, tmp_path):
+    """The three cluster-naming sites (the pipeline boundary, the delta
+    state and the string-id connected_components) share one naming
+    tail: members = labels ⋈ names, joined back to their
+    groupBy(cluster).agg(min(name)). Each plans exactly this node list
+    (recorded before the sites were folded into name_clusters)."""
+    from datasketches_java_spark.config import FROZEN
+    from datasketches_java_spark.plans.delta import (
+        ingest_batch, state_clusters,
+    )
+    from datasketches_java_spark.plans.pipeline import run_pipeline
+    from datasketches_java_spark.sources import tables
+
+    corpus = tables.load_corpus(spark, smoke_sf_dir)
+    clusters = run_pipeline(spark, corpus, FROZEN).clusters
+    state = str(tmp_path / "state")
+    ingest_batch(spark, state, corpus, FROZEN, compute_clusters=False)
+    got = {
+        "pipeline": _node_names(clusters),
+        "state": _node_names(state_clusters(spark, state)),
+        "corpus": _node_names(
+            em.queries()["corpus_clusters"](spark, smoke_sf_dir)),
+    }
+    head = [
+        "Project", "BroadcastHashJoin", "Union", "Project",
+        "BroadcastHashJoin", "Filter", "InMemoryTableScan",
+        "HashAggregate", "HashAggregate", "Filter", "InMemoryTableScan",
+        "Project",
+    ]
+    tails = {
+        "pipeline": [
+            "Exchange", "BroadcastHashJoin", "Project", "Filter",
+            "MapInPandas", "Exchange", "Project", "Project", "Scan parquet ",
+            "Project", "Filter", "InMemoryTableScan", "Project",
+            "Scan parquet ",
+        ],
+        "state": [
+            "BroadcastHashJoin", "Project", "Filter", "Scan parquet ",
+            "Project", "Filter", "InMemoryTableScan", "Project", "Filter",
+            "Scan parquet ",
+        ],
+        "corpus": [
+            "BroadcastHashJoin", "Project", "Scan parquet ", "Project",
+            "Filter", "InMemoryTableScan", "Project", "Scan parquet ",
+        ],
+    }
+    for site, tail in tails.items():
+        members = head + tail
+        assert got[site] == [
+            "Project", "SortMergeJoin", *members,
+            "SortAggregate", "SortAggregate", *members,
+        ], site
+
+
+def test_ivf_in_budget_scores_in_one_pass(spark):
+    """In budget, IVF scores its candidates against the broadcast
+    matrix in one MapInPandas pass: no top-k Window, no vector join."""
+    from datasketches_java_spark.operators.similarity import ivf_topk_cosine
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    nodes = _node_names(
+        ivf_topk_cosine(emb, "vec_id", "embedding", 5, n_cells=16, n_probe=8))
+    assert "Window" not in nodes, nodes
+    assert nodes.count("MapInPandas") == 1, nodes
