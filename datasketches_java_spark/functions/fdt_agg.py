@@ -4,9 +4,11 @@ the standard two-level theta partial/final split:
 
   stage 1 (mapInPandas, per partition): bottom-k theta sample of the
     DISTINCT full tuples — O(k) state, one hash pass per Arrow batch,
-    emits ≤ k (hash, dims..., theta) rows per partition;
-  stage 2 (one final task): theta-rule union of the partials
-    (θ = min, re-trim to k) — O(partitions·k) rows in, ≤ k out;
+    emits one frame_blob of ≤ k (hash, dims..., theta) rows per
+    partition;
+  stage 2 (sketch_reduce.reduce_partials on one constant key, one
+    finisher task): theta-rule union of the partials (θ = min, re-trim
+    to k) — O(partitions·k) rows in, ≤ k out;
   stage 3: reference post-processing over the ≤ k retained tuples
     (kernels/fdt.py — group by primary key, BinomialBoundsN bounds).
 
@@ -28,13 +30,15 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_UPDATE_SEED
 from ..kernels.fdt import extract_pri_keys, post_process
+from .sketch_reduce import blob_frame, frame_blob, reduce_partials
 from .sketch_udfs import _hash_strings
 
 _MAX63 = np.int64(2**62 - 1 + 2**62)
 
+_OUT_COLS = ("pri_key", "grp_count", "est", "lb", "ub", "fraction", "rse")
 _OUT_SCHEMA = (
-    "pri_key string, grp_count long, est double, lb double, ub double, "
-    "fraction double, rse double"
+    "__g int, pri_key array<string>, grp_count array<long>, est array<double>, "
+    "lb array<double>, ub array<double>, fraction array<double>, rse array<double>"
 )
 
 
@@ -72,7 +76,6 @@ def fdt_group_list(
         F.coalesce(F.col(c).cast("string"), F.lit("")).alias(a)
         for c, a in zip(dims, dcols)
     ])
-    mid_schema = ", ".join(f"{c} string" for c in dcols)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         hs = np.empty(0, np.int64)
@@ -110,12 +113,12 @@ def fdt_group_list(
         out = tups.copy()
         out.insert(0, "__h", hs)
         out["__theta"] = np.int64(theta)
-        yield out
+        yield pd.DataFrame({"__g": [0], "fdt": [frame_blob(out)]})
 
-    partials = proj.mapInPandas(
-        partial, f"__h long, {mid_schema}, __theta long")
+    partials = proj.mapInPandas(partial, "__g int, fdt binary")
 
-    def final(key, pdf):
+    def finish(blobs) -> tuple:
+        pdf = blob_frame(blobs)
         theta = np.int64(pdf["__theta"].min())
         h = pdf["__h"].to_numpy(np.int64)
         keep = h < theta
@@ -131,8 +134,8 @@ def fdt_group_list(
             theta = np.int64(h[k])
             h, t = h[:k], t.iloc[:k]
         pri = extract_pri_keys(t.to_numpy(dtype=object), pri_key_indices, sep)
-        return post_process(pri, int(theta), num_std_dev, limit)
+        res = post_process(pri, int(theta), num_std_dev, limit)
+        return tuple(res[c].to_numpy() for c in _OUT_COLS)
 
-    # literal int in groupBy parses as an ordinal — use a named column
-    return (partials.withColumn("__g", F.lit(1))
-            .groupBy("__g").applyInPandas(final, _OUT_SCHEMA))
+    return reduce_partials(partials, "__g", finish, _OUT_SCHEMA).select(
+        F.inline(F.arrays_zip(*_OUT_COLS)))

@@ -4,12 +4,13 @@ The reference makes MG a mergeable partial/final aggregate
 (frequencies/FrequentItemsSketch.java:467 merge; ε = 3.5/M per
 frequencies/FrequentLongsSketch.java:120); this is its Spark face:
 
- 1. partial (mapInPandas): each Arrow batch collapses to one MG map of
-    at most M rows (item, cnt) plus one meta row carrying (offset, n)
-    — map-side combine, so at 100 TB the shuffle moves O(partitions·M)
-    rows instead of every token.
- 2. final (single narrow group): sum counts per item, sum offsets and
-    n (the MG merge rule), reverse-purge back down to M.
+ 1. partial (mapInPandas): each worker partition collapses to one MG
+    map of at most M (item, cnt) rows, shipped as one frame_blob with
+    its purge offset — map-side combine, so at 100 TB the shuffle moves
+    O(partitions·M) rows instead of every token.
+ 2. final (sketch_reduce.reduce_partials on one constant key): the
+    offsets are summed natively, and the finisher sums counts per item
+    (the MG merge rule) and reverse-purges back down to M.
 
 The MG guarantee survives the tree: every reported count is an
 underestimate by at most sum-of-offsets, and any item with true count
@@ -27,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sketch_reduce import blob_frame, frame_blob, reduce_partials
 
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
@@ -61,7 +64,7 @@ def mg_frequent_items_agg(
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one MG map per worker partition (merging batches locally):
-        # the whole partition collapses to <= m item rows + 1 meta row
+        # the whole partition collapses to one row of <= m items
         agg: dict = {}
         offset = 0
         n = 0
@@ -80,23 +83,18 @@ def mg_frequent_items_agg(
                 agg = dict(zip(items.tolist(), counts.tolist()))
         if n == 0:
             return
-        yield pd.DataFrame(
-            {
-                "item": list(agg.keys()) + [None],
-                "cnt": list(agg.values()) + [0],
-                "offset": [0] * len(agg) + [offset],
-            }
-        )
+        blob = frame_blob(pd.DataFrame({
+            "item": pd.Series(list(agg.keys()), dtype=object),
+            "cnt": pd.Series(list(agg.values()), dtype=np.int64),
+        }))
+        yield pd.DataFrame({"_g": [0], "mg": [blob], "offset": [offset]})
 
     partials = df.select(F.col(item_col).cast("string").alias(item_col)).mapInPandas(
-        partial, "item string, cnt bigint, offset bigint"
+        partial, "_g int, mg binary, offset bigint"
     )
 
-    def final(key, pdf):
-        meta = pdf[pdf["item"].isna()]
-        offset = int(meta["offset"].sum())
-        rows = pdf[pdf["item"].notna()]
-        merged = rows.groupby("item", sort=False)["cnt"].sum()
+    def finish(blobs, offset) -> tuple:
+        merged = blob_frame(blobs).groupby("item", sort=False)["cnt"].sum()
         items = merged.index.to_numpy(dtype=object)
         counts = merged.to_numpy(np.int64)
         items, counts, cut = _purge_to(items, counts, m)
@@ -106,19 +104,12 @@ def mg_frequent_items_agg(
             ub >= threshold if error_type == NO_FALSE_NEGATIVES
             else counts >= threshold
         )
-        return pd.DataFrame(
-            {
-                "item": items[keep],
-                "est": ub[keep],
-                "lb": counts[keep],
-                "ub": ub[keep],
-            }
-        )
+        return items[keep], ub[keep], counts[keep], ub[keep]
 
     # the final merge is one narrow task over <= partitions·M rows —
     # the same single-reducer shape as the reference's union object
-    return (
-        partials.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(final, "item string, est bigint, lb bigint, ub bigint")
-    )
+    return reduce_partials(
+        partials, "_g", finish,
+        "_g int, item array<string>, est array<bigint>, lb array<bigint>, "
+        "ub array<bigint>",
+    ).select(F.inline(F.arrays_zip("item", "est", "lb", "ub")))

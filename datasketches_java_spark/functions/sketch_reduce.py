@@ -18,7 +18,10 @@ key. In Spark that is two functions:
     task retry. finish(*values) then runs once per merged key row.
 
 Both emit rows (key, *values) as unlabelled pandas columns, which Spark
-assigns to the output schema by position.
+assigns to the output schema by position. A partial that is a small
+frame rather than one sketch (a sample, a frequency map, a theta
+sample of tuples) crosses as one frame_blob; its finisher reads the
+key's sorted blobs back with blob_frame.
 """
 
 from __future__ import annotations
@@ -26,9 +29,27 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegralType
+
+
+def frame_blob(frame: pd.DataFrame) -> bytes:
+    """`frame` as one Arrow IPC stream: a binary partial value."""
+    table = pa.Table.from_pandas(frame, preserve_index=False)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+def blob_frame(blobs) -> pd.DataFrame:
+    """The frame_blob partials of one key, concatenated in the order
+    given (an empty partial's untyped columns promote to the others')."""
+    return pa.concat_tables(
+        [pa.ipc.open_stream(b).read_all() for b in blobs], promote_options="default"
+    ).to_pandas()
 
 
 def group_partials(

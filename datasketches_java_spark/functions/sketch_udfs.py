@@ -6,9 +6,9 @@ estimate with binomial bounds (theta/ThetaSketch.java:621-623 estimate,
 thetacommon/BinomialBoundsN.java bounds). The KMV and tuple aggregates
 run on functions/sketch_reduce.py: a partial sketch per (Arrow batch,
 group), a sorted native merge, one batched finisher — signature state
-stays O(k) per group regardless of group size. The samplers below keep
-their own grouped final: their partials are item rows, not one sketch
-per group.
+stays O(k) per group regardless of group size. VarOpt runs on it too,
+its partial a k-sample frame per (Arrow batch, group); EBPPS keeps its
+own single-level grouped map (see ebpps_sample_agg).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from ..config import DEFAULT_UPDATE_SEED
 from ..kernels import kmv
 from ..kernels.hashing import hash_bytes_batch
 from ..kernels.shingle import _flatten_utf8
-from .sketch_reduce import group_partials, reduce_partials
+from .sketch_reduce import blob_frame, frame_blob, group_partials, reduce_partials
 
 
 def _hash_strings(values: pd.Series, seed: int) -> np.ndarray:
@@ -182,16 +182,15 @@ def varopt_sample_agg(
 
     TWO-LEVEL, mirroring VarOptItemsUnion (VarOptItemsUnion.java:205):
     each Arrow batch collapses its groups to a k-sample over true
-    weights (map-side combine), then the grouped final stage re-samples
-    the union of partial samples over their ADJUSTED weights. Each
-    stage preserves E[adjusted weight] = true weight (tower property),
-    so subset-sum estimates stay unbiased while per-task state is O(k)
-    per group — a 10^10-row mega-group never sits in one pandas frame.
-    Samples are deterministic given the batch layout (each stage sorts
-    its input canonically and derives the PPS offset from item
-    hashes), matching the reference's own order-dependent union."""
-    import numpy as np
-
+    weights (map-side combine, one frame_blob per group), then the
+    finisher re-samples the union of partial samples over their
+    ADJUSTED weights. Each stage preserves E[adjusted weight] = true
+    weight (tower property), so subset-sum estimates stay unbiased
+    while per-task state is O(k) per group — a 10^10-row mega-group
+    never sits in one pandas frame. Samples are deterministic given
+    the batch layout (each stage sorts its input canonically and
+    derives the PPS offset from item hashes; the reduce hands the
+    finisher the partials in sorted-byte order)."""
     from ..kernels.varopt import varopt_sample
 
     def _sample(items: np.ndarray, w: np.ndarray):
@@ -202,41 +201,31 @@ def varopt_sample_agg(
         idx, adj, _tau = varopt_sample(np.arange(len(items)), w, k, seed=s)
         return items[idx], adj
 
-    schema = f"{group_col} string, {item_col} string, adj_weight double"
-
-    def partial(batches) -> "pd.DataFrame":
-        for pdf in batches:
-            # NULL item/weight rows are update no-ops (reference rule;
-            # a NaN weight would otherwise slip the kernel's positive
-            # guard and poison the cumulative-weight solve)
-            pdf = pdf[pdf[item_col].notna() & pdf[weight_col].notna()]
-            if len(pdf) == 0:
-                continue
-            frames = []
-            for g, sub in pdf.groupby(group_col, sort=False):
-                it, adj = _sample(
-                    sub[item_col].astype(str).to_numpy(),
-                    sub[weight_col].to_numpy(np.float64),
-                )
-                frames.append(pd.DataFrame(
-                    {group_col: g, item_col: it, "adj_weight": adj}
-                ))
-            yield pd.concat(frames, ignore_index=True)
-
-    partials = df.select(
-        F.col(group_col).cast("string").alias(group_col), item_col, weight_col
-    ).mapInPandas(partial, schema)
-
-    def final(key, pdf):
+    def build(sub: pd.DataFrame) -> tuple:
+        # NULL item/weight rows are update no-ops (reference rule; a
+        # NaN weight would otherwise slip the kernel's positive guard
+        # and poison the cumulative-weight solve)
+        sub = sub[sub[item_col].notna() & sub[weight_col].notna()]
         it, adj = _sample(
-            pdf[item_col].astype(str).to_numpy(),
-            pdf["adj_weight"].to_numpy(np.float64),
+            sub[item_col].astype(str).to_numpy(),
+            sub[weight_col].to_numpy(np.float64),
         )
-        return pd.DataFrame(
-            {group_col: [key[0]] * len(it), item_col: it, "adj_weight": adj}
+        return (frame_blob(pd.DataFrame({"item": it, "adj_weight": adj})),)
+
+    def finish(blobs) -> tuple:
+        pdf = blob_frame(blobs)
+        return _sample(
+            pdf["item"].to_numpy(object), pdf["adj_weight"].to_numpy(np.float64)
         )
 
-    return partials.groupBy(group_col).applyInPandas(final, schema)
+    partials = group_partials(
+        df.select(F.col(group_col).cast("string").alias(group_col), item_col, weight_col),
+        group_col, build, f"{group_col} string, sample binary",
+    )
+    return reduce_partials(
+        partials, group_col, finish,
+        f"{group_col} string, {item_col} array<string>, adj_weight array<double>",
+    ).select(group_col, F.inline(F.arrays_zip(item_col, "adj_weight")))
 
 
 def ebpps_sample_agg(
@@ -256,15 +245,21 @@ def ebpps_sample_agg(
     proportionality is pytest-gated (tests/test_ebpps.py).
 
     Single-level per-group aggregation (applyInPandas streams each
-    group); the merge-by-resample contract for a two-level form is the
-    kernel's, exercised in tests."""
+    group into one frame). It stays off the two-level sketch reduce:
+    re-sampling a union of partial samples over the true weights is
+    not shown to keep pi_i = min(1, w_i/tau) of the whole group, and
+    no test merges EBPPS samples. Each group is stable-sorted by item
+    before sampling, so the sample does not depend on the order rows
+    arrive in (task retry, shuffle order)."""
     from ..kernels.ebpps import ebpps_sample
 
     def agg(key, pdf):
         # NULL item/weight rows: update no-op (see varopt_sample_agg)
         pdf = pdf[pdf[item_col].notna() & pdf[weight_col].notna()]
         items = pdf[item_col].astype(str).to_numpy()
-        w = pdf[weight_col].to_numpy(np.float64)
+        order = np.argsort(items, kind="stable")
+        items = items[order]
+        w = pdf[weight_col].to_numpy(np.float64)[order]
         idx = np.arange(len(items))
         sel, tau = ebpps_sample(idx, w, float(k), seed=seed)
         return pd.DataFrame(

@@ -1,11 +1,11 @@
-"""Closed-form audit bounds math.
-
-NumPy re-derivations of the reference's bounds helpers:
+"""Closed-form bounds math, transcribed from the reference's estimator
+arithmetic (Apache-2.0) so results are BIT-EQUAL to datasketches-java
+(validated live in tests/test_live_jvm_interop.py):
  - binomial proportion bounds (common/BoundsOnBinomialProportions.java:106-190)
- - ratios in sampled sets (common/BoundsOnRatiosInSampledSets.java:52-102)
- - binomial bounds on distinct counts (thetacommon/BinomialBoundsN.java:234-257)
-All use the normal/Agresti-Coull approximations the reference uses for
-large n; exactness at tiny n is not load-bearing for our audits.
+ - ratios in sampled sets (common/BoundsOnRatiosInSampledSets.java:52-112)
+ - B-over-A ratios in theta/tuple sketched sets
+   (thetacommon/BoundsOnRatiosInThetaSketchedSets.java:59-120)
+ - binomial bounds on distinct counts (thetacommon/BinomialBoundsN.java:36-267)
 """
 
 from __future__ import annotations
@@ -13,71 +13,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-
-def approx_lower_bound_on_p(n: int, k: int, num_std_devs: float) -> float:
-    """Lower bound on binomial p having seen k successes in n trials
-    (BoundsOnBinomialProportions.approximateLowerBoundOnP analog)."""
-    if n <= 0:
-        return 0.0
-    if k <= 0:
-        return 0.0
-    if k == n:
-        # one-sided exact-ish bound
-        return math.exp(-(num_std_devs**2) / 2.0) ** (1.0 / n) * 0.0 + max(
-            0.0, 1.0 - num_std_devs / math.sqrt(n)
-        )
-    # Agresti-Coull style center adjustment
-    z = num_std_devs
-    nt = n + z * z
-    pt = (k + z * z / 2.0) / nt
-    return max(0.0, pt - z * math.sqrt(pt * (1.0 - pt) / nt))
-
-
-def approx_upper_bound_on_p(n: int, k: int, num_std_devs: float) -> float:
-    if n <= 0:
-        return 1.0
-    if k >= n:
-        return 1.0
-    z = num_std_devs
-    nt = n + z * z
-    pt = (k + z * z / 2.0) / nt
-    return min(1.0, pt + z * math.sqrt(pt * (1.0 - pt) / nt))
-
-
-def ratio_bounds(num: int, den: int, num_std_devs: float = 2.0) -> tuple[float, float, float]:
-    """(lb, est, ub) for a ratio estimated from a sampled set
-    (BoundsOnRatiosInSampledSets.java:52-102)."""
-    if den <= 0:
-        return 0.0, 0.0, 1.0
-    est = num / den
-    return (
-        approx_lower_bound_on_p(den, num, num_std_devs),
-        est,
-        approx_upper_bound_on_p(den, num, num_std_devs),
-    )
-
-
-def binomial_bounds_n(
-    retained: int, theta: float, num_std_devs: float = 2.0
-) -> tuple[float, float]:
-    """(lb, ub) on distinct count given retained hashes below θ∈(0,1]
-    (BinomialBoundsN.getLowerBound/getUpperBound analog, normal approx)."""
-    if theta >= 1.0:
-        return float(retained), float(retained)
-    if retained == 0:
-        return 0.0, math.log(1e6) / theta  # loose; reference special-cases too
-    est = retained / theta
-    rse = math.sqrt(1.0 - theta) / math.sqrt(retained)
-    lb = max(retained, est / (1.0 + num_std_devs * rse))
-    ub = est * (1.0 + num_std_devs * rse)
-    return lb, ub
-
-
-# --- exact reference transcriptions (bit-equal to datasketches-java) ---
-# The helpers above are fast NumPy *analogs* for our audits; the
-# functions below transcribe the reference's own estimator arithmetic
-# (Apache-2.0) so results are BIT-EQUAL to the Java library — validated
-# live in tests/test_live_jvm_interop.py.
 
 
 def ref_erf(x: float) -> float:
@@ -220,9 +155,8 @@ def b_over_a_bounds(
 # reference's frequentist binomial tail bounds on a distinct count
 # given `num_samples` retained below sampling probability theta.
 # Bit-equal to datasketches-java (validated live in
-# tests/test_live_jvm_interop.py); used by theta/tuple/FDT bound
-# surfaces where reference parity matters. The analog
-# `binomial_bounds_n` above remains the fast vectorized audit path.
+# tests/test_live_jvm_interop.py); used by the theta/tuple/FDT bound
+# surfaces.
 
 _DELTA_OF_NUM_SDEV = (
     0.5000000000000000000,

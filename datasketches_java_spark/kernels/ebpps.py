@@ -18,11 +18,13 @@ realizes floor/ceil of the fractional budget. Inclusion probability of
 item i is pi_i = min(1, w_i/tau); Horvitz-Thompson subset-sum
 estimates use w_i/pi_i = max(w_i, tau).
 
-Merge = re-sample the union with capacity k over true weights
-(inclusion probabilities re-solve; presence-proportionality is
-preserved because pi is a function of the final threshold only) — the
-reference's merge likewise re-feeds the smaller sketch's items into
-the larger (EbppsItemsSketch.java:258-261,289-330).
+No merge is implemented here. The reference merges by re-feeding the
+smaller sketch's items into the larger (EbppsItemsSketch.java:258-261,
+289-330), over sketch state (C, rho, the partial item) that a plain
+batch sample does not carry; re-sampling a union of batch samples over
+true weights is not shown to keep pi_i = min(1, w_i/tau) of the whole
+population, so the Spark face (functions/sketch_udfs.ebpps_sample_agg)
+samples each group in one pass.
 """
 
 from __future__ import annotations

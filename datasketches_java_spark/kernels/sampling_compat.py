@@ -210,7 +210,7 @@ def varopt_estimate_subset_sum(sk: VarOptLongs, predicate) -> dict:
     with the reference's pseudo-hypergeometric bounds
     (SamplingUtil.java:71-79 — binomial bounds on p with kappa
     adjusted by sqrt(1 - effectiveSamplingRate))."""
-    from .bounds import approx_lower_bound_on_p, approx_upper_bound_on_p
+    from .bounds import ref_approx_lower_bound_on_p, ref_approx_upper_bound_on_p
 
     h, r = len(sk.heavy_items), len(sk.r_items)
     if sk.n == 0 or (h == 0 and r == 0):
@@ -228,8 +228,8 @@ def varopt_estimate_subset_sum(sk: VarOptLongs, predicate) -> dict:
     rate = r / num_sampled
     r_true = int(sum(bool(predicate(int(i))) for i in sk.r_items))
     kappa = 2.0 * np.sqrt(1.0 - rate)
-    lb_frac = approx_lower_bound_on_p(r, r_true, kappa)
-    ub_frac = approx_upper_bound_on_p(r, r_true, kappa)
+    lb_frac = ref_approx_lower_bound_on_p(r, r_true, kappa)
+    ub_frac = ref_approx_upper_bound_on_p(r, r_true, kappa)
     est_frac = r_true / r
     return {
         "estimate": h_true + sk.total_r_weight * est_frac,

@@ -204,10 +204,6 @@ def connected_components(
     # fraction of a web corpus (no hardcoded cap)
     n_parts = int(np.clip(2 * n_edges / 500_000, 4, 4 * par))
 
-    state_root = tempfile.mkdtemp(prefix="cc_state_")
-    # the returned DataFrame lazily reads the final parquet state, so
-    # the directory must outlive this call; reclaim it at exit
-    atexit.register(shutil.rmtree, state_root, ignore_errors=True)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
@@ -229,6 +225,11 @@ def connected_components(
             if metrics is not None:
                 metrics["cc_rounds"] = 1
         else:
+            state_root = tempfile.mkdtemp(prefix="cc_state_")
+            # the returned DataFrame lazily reads the final parquet
+            # state, so the directory must outlive this call; reclaim
+            # it at exit
+            atexit.register(shutil.rmtree, state_root, ignore_errors=True)
             E = _pq_checkpoint(
                 edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
                 .repartition(n_parts, "u"),

@@ -40,14 +40,12 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     total_cores = cores * executors if executors else cores
     if shuffle_partitions is None:
-        # tasks-per-core multiplier (SPARK_GRAFT_PAR_MULT): 1 measured
-        # fastest on this flat-memory host (extra partitions only add
-        # scheduling + shuffle-file overhead; AQE splits skewed
-        # partitions when it matters). On a real cluster 2-3 is the
-        # standard straggler insurance — the knob exists so the same
-        # code serves both and so the trade is measurable, not assumed.
-        mult = max(1, int(os.environ.get("SPARK_GRAFT_PAR_MULT", "1")))
-        shuffle_partitions = total_cores * mult
+        # one task per core measured fastest on a flat-memory host
+        # (extra partitions only add scheduling + shuffle-file
+        # overhead; AQE splits skewed partitions when it matters). On a
+        # real cluster 2-3 tasks per core is the standard straggler
+        # insurance: pass shuffle_partitions.
+        shuffle_partitions = total_cores
     if executors:
         master = f"local-cluster[{executors},{cores},{executor_mem_mb}]"
     else:
@@ -80,10 +78,8 @@ def get_spark(
         # c8 45.1s -> 42.6s, headline c32 9.8s -> 7.4s). On a real
         # cluster the same trade wins harder: shuffle bytes cross the
         # network. Level 1 (default) keeps compression CPU negligible.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"))
-        .config("spark.io.compression.zstd.level",
-                os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "1"))
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.io.compression.zstd.level", "1")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -104,7 +100,7 @@ def plan_width(spark: SparkSession) -> int:
     Returns spark.sql.shuffle.partitions so hand-placed exchanges
     (signature spread, band grouping, id64 output partitioning) agree
     with the width Catalyst gives implicit ones — co-partitioned joins
-    stay exchange-free whatever SPARK_GRAFT_PAR_MULT says."""
+    stay exchange-free whatever width the session was built with."""
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:

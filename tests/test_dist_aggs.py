@@ -146,6 +146,31 @@ def test_varopt_two_level_unbiased_mega_group(spark):
         assert it in got and abs(got[it] - w_by_item[it]) < 1e-9
 
 
+def test_varopt_agg_null_rows_are_no_ops(spark):
+    """NULL item and NULL/NaN weight rows are update no-ops. A batch
+    whose group holds only such rows sends an empty sample partial,
+    which merges with the group's other partials; a group with only
+    such rows emits nothing. A NULL group key is a group, as in SQL
+    GROUP BY (a batch of only NULL-key rows used to raise
+    "No objects to concatenate")."""
+    from datasketches_java_spark.functions.sketch_udfs import varopt_sample_agg
+
+    rows = [
+        ("a", None, 1.0), ("b", "y", None),           # batch 1: empty partials
+        ("a", "x", 2.0), ("a", "z", float("nan")),    # batch 2
+        (None, "n", 3.0),                             # batch 3: NULL key only
+    ]
+    df = spark.createDataFrame(rows, "g string, item string, w double").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = varopt_sample_agg(df, "g", "item", "w", k=4).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert sorted(map(tuple, out), key=repr) == [("a", "x", 2.0), (None, "n", 3.0)]
+
+
 # ---- round-4 agg faces: t-digest, EBPPS, theta set ops, KS --------------
 
 
@@ -208,6 +233,28 @@ def test_ebpps_agg_full_budget_and_sub_budget(spark):
     sizes = samp.groupby("g").size()
     assert sizes["a"] in (7, 8)
     assert sizes["b"] in (7, 8)  # k=7 < n=10: sub-budget here too
+
+
+def test_ebpps_agg_sample_independent_of_row_order(spark):
+    """A sub-budget EBPPS sample is a function of the group's rows, not
+    of the order they reach the grouped map (task retry, shuffle
+    order): the group is sorted by item before the kernel hashes
+    positions into its systematic offset."""
+    from datasketches_java_spark.functions.sketch_udfs import ebpps_sample_agg
+
+    rng = np.random.default_rng(1)
+    pdf = pd.DataFrame({"g": "a", "item": [f"i{j:02d}" for j in range(50)],
+                        "w": rng.pareto(1.5, 50) + 0.1})
+
+    def sample(rows):
+        df = spark.createDataFrame(rows).coalesce(1)
+        out = ebpps_sample_agg(df, "g", "item", "w", k=7.0).toPandas()
+        assert (out["tau"] > 0).all()  # sub-budget regime
+        return sorted(out["item"])
+
+    first = sample(pdf)
+    for seed in (2, 3, 4):
+        assert sample(pdf.sample(frac=1.0, random_state=seed)) == first
 
 
 def test_theta_pair_set_ops_exact(spark):
@@ -339,29 +386,50 @@ def test_converted_agg_plan_has_no_grouped_map(spark, name):
     assert "ObjectHashAggregate" in p and "MapInPandas" in p, p
 
 
+def _row_aggs():
+    """The aggregates whose finisher returns arrays that one
+    inline(arrays_zip(...)) turns back into rows."""
+    from pyspark.sql import functions as F
+
+    from datasketches_java_spark.functions.fdt_agg import fdt_group_list
+    from datasketches_java_spark.functions.freq_agg import mg_frequent_items_agg
+    from datasketches_java_spark.functions.sketch_udfs import varopt_sample_agg
+
+    return {
+        "mg_frequent_items_agg": lambda df: mg_frequent_items_agg(df, "s"),
+        "varopt_sample_agg": lambda df: varopt_sample_agg(df, "g", "s", "v", k=2),
+        "fdt_group_list": lambda df: fdt_group_list(
+            df.withColumn("t", F.col("g").cast("string")), ["t", "s"], [0]),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_row_aggs()))
+def test_row_agg_plan_has_no_grouped_map(spark, name):
+    """MG, VarOpt and FDT merge on the shared reduce too: a native
+    ObjectHashAggregate, one batched finisher and one Generate, no
+    per-group Python final."""
+    df = _row_aggs()[name](_nulls_frame(spark))
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    p = df._jdf.queryExecution().explainString(mode.fromString("simple"))
+    assert "FlatMapGroupsInPandas" not in p, p
+    assert "ObjectHashAggregate" in p and "MapInPandas" in p, p
+    assert "Generate inline" in p, p
+
+
 def test_no_eval_type_warning(spark):
     """Building any package aggregate's plan raises no "Cannot infer
     the eval type" warning (a grouped-map function with partial type
     hints)."""
     import warnings
 
-    from pyspark.sql import functions as F
-
-    from datasketches_java_spark.functions.fdt_agg import fdt_group_list
-    from datasketches_java_spark.functions.freq_agg import mg_frequent_items_agg
     from datasketches_java_spark.functions.live_audit import sketch_family_audit
-    from datasketches_java_spark.functions.sketch_udfs import (
-        ebpps_sample_agg, varopt_sample_agg,
-    )
+    from datasketches_java_spark.functions.sketch_udfs import ebpps_sample_agg
 
     df = _nulls_frame(spark).dropna()
     builds = [
         *_converted_aggs().values(),
-        lambda d: varopt_sample_agg(d, "g", "s", "v", k=2),
+        *_row_aggs().values(),
         lambda d: ebpps_sample_agg(d, "g", "s", "v", k=2.0),
-        lambda d: mg_frequent_items_agg(d, "s"),
-        lambda d: fdt_group_list(
-            d.withColumn("t", F.col("g").cast("string")), ["t", "s"], [0]),
         lambda d: sketch_family_audit(d, "g", "u", "v"),
     ]
     with warnings.catch_warnings(record=True) as seen:

@@ -11,7 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from datasketches_java_spark.kernels import bounds, kll, kmv, minhash, simhash, suffix
+from datasketches_java_spark.kernels import kll, kmv, minhash, simhash, suffix
 from datasketches_java_spark.kernels.hashing import hash63, hash64, popcount64
 from datasketches_java_spark.kernels.shingle import (
     char_shingle_hashes,
@@ -298,15 +298,9 @@ def test_kll_serialization_roundtrip():
 
 # ---------- bounds ----------
 
-def test_ratio_bounds_cover():
-    lb, est, ub = bounds.ratio_bounds(80, 100, 2.0)
-    assert lb <= 0.8 <= ub and abs(est - 0.8) < 1e-12
-
-
 def test_binomial_bounds_cover_true_n():
     n, k = 1_000_000, 4096
     h = hash63(np.arange(n, dtype=np.uint64))
     sig = kmv.bottom_k(h, k)
-    theta = float(sig[k - 1]) / float(2**63)
-    lb, ub = bounds.binomial_bounds_n(k - 1, theta, 3.0)
+    lb, _est, ub = kmv.estimate_bounds(sig, k, 3)
     assert lb <= n <= ub

@@ -121,6 +121,36 @@ def test_varopt_subset_sum_bounds_match_reference_shape():
     assert everything["estimate"] == pytest.approx(5900.0)
 
 
+@pytest.mark.parametrize("n", [10_000, 622])
+@pytest.mark.parametrize("pred", ["even", "all", "none"])
+def test_varopt_subset_sum_r_bounds_are_reference_composition(n, pred):
+    """The R-region bounds are SamplingUtil.pseudoHypergeometric{LB,UB}onP:
+    the reference's binomial-proportion bounds (the bit-equal
+    transcriptions in kernels/bounds.py) at kappa = 2·sqrt(1 - rate),
+    rate = r / (n - h). n=622 gives kappa ≈ 1.897; "all" and "none"
+    reach the k == n and k == 0 closed forms."""
+    from datasketches_java_spark.kernels import bounds as B
+
+    keep = {"even": lambda i: i % 2 == 0, "all": lambda i: True,
+            "none": lambda i: False}[pred]
+    r_items = np.random.default_rng(3).integers(10, 10_000, 62).astype(np.int64)
+    sk = VarOptLongs(
+        k=64, n=n,
+        heavy_items=np.array([1, 2], np.int64),
+        heavy_weights=np.array([500.0, 400.0]),
+        r_items=r_items,
+        total_r_weight=5000.0,
+    )
+    s = varopt_estimate_subset_sum(sk, keep)
+    h_true = 400.0 if keep(2) else 0.0
+    h_true += 500.0 if keep(1) else 0.0
+    r_true = sum(bool(keep(int(i))) for i in r_items)
+    kappa = 2.0 * np.sqrt(1.0 - 62 / (n - 2))
+    assert s["lower_bound"] == h_true + 5000.0 * B.ref_approx_lower_bound_on_p(62, r_true, kappa)
+    assert s["upper_bound"] == h_true + 5000.0 * B.ref_approx_upper_bound_on_p(62, r_true, kappa)
+    assert s["estimate"] == h_true + 5000.0 * (r_true / 62)
+
+
 def test_ebpps_roundtrip_with_partial_item():
     sk = EbppsLongs(
         k=10, n=1000, cum_weight=123.5, max_weight=9.75, rho=0.081,

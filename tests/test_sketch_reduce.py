@@ -64,3 +64,55 @@ def test_reduce_partials_rejects_unmergeable_columns(spark):
     df = spark.createDataFrame(pd.DataFrame({"g": ["x"], "v": [1.0]}))
     with pytest.raises(TypeError, match="v double"):
         reduce_partials(df, "g", lambda v: (v,), "g string, v double")
+
+
+def _row_agg_cases(spark):
+    """(module, build) for the three aggregates whose partials are
+    frame_blob frames, each over 8 input partitions in its lossy
+    regime: MG purges (M=16), VarOpt re-samples items that repeat
+    across partials, FDT trims to k=16 retained tuples."""
+    from datasketches_java_spark.functions import fdt_agg, freq_agg, sketch_udfs
+
+    rng = np.random.default_rng(4)
+    n = 4000
+    pdf = pd.DataFrame({
+        "g": rng.choice(["a", "b"], n),
+        "item": rng.zipf(1.6, n).astype(str),
+        "w": rng.pareto(1.5, n) + 0.1,
+    })
+    df = spark.createDataFrame(pdf).repartition(8)
+    return {
+        "mg": (freq_agg, lambda: freq_agg.mg_frequent_items_agg(
+            df, "item", max_map_size=16)),
+        "varopt": (sketch_udfs, lambda: sketch_udfs.varopt_sample_agg(
+            df, "g", "item", "w", k=32)),
+        "fdt": (fdt_agg, lambda: fdt_agg.fdt_group_list(
+            df, ["g", "item"], [0], lgk=4)),
+    }
+
+
+@pytest.mark.parametrize("family", ["fdt", "mg", "varopt"])
+def test_row_agg_finisher_order_invariant(spark, monkeypatch, family):
+    """Each frame-blob finisher returns the same rows for two row orders
+    of the same partials: the aggregate's real partials are collected,
+    reversed, and reduced again with its real finisher."""
+    module, build = _row_agg_cases(spark)[family]
+    seen = {}
+
+    def spy(partials, key, finish, schema):
+        seen.update(partials=partials, key=key, finish=finish, schema=schema)
+        return reduce_partials(partials, key, finish, schema)
+
+    monkeypatch.setattr(module, "reduce_partials", spy)
+    build()
+    parts = seen["partials"].toPandas()
+    assert len(parts) > 1
+
+    def run(rows):
+        df = spark.createDataFrame(rows, seen["partials"].schema).coalesce(1)
+        out = reduce_partials(df, seen["key"], seen["finish"], seen["schema"])
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    got = run(parts)
+    assert got == run(parts.iloc[::-1].reset_index(drop=True))
+    assert any(len(r[1]) for r in got)

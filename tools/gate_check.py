@@ -34,17 +34,17 @@ for name in only:
         sp = qs[name](spark, SF).toPandas()
         if name not in oras:
             results[name] = {"rows": len(sp), "oracle": None}
-            continue
-        o = con.execute(oras[name]).fetchdf()
-        a, b = canon(sp), canon(o)
-        match = (len(a) == len(b)) and list(a.columns) == list(b.columns) and a.equals(b)
-        results[name] = {"rows": len(sp), "oracle_rows": len(o), "match": bool(match)}
-        if not match and len(a) == len(b) and list(a.columns) == list(b.columns):
-            neq = (a != b).any(axis=1)
-            results[name]["first_diff"] = {
-                "spark": a[neq].head(2).to_dict("records"),
-                "oracle": b[neq].head(2).to_dict("records"),
-            }
+        else:
+            o = con.execute(oras[name]).fetchdf()
+            a, b = canon(sp), canon(o)
+            match = (len(a) == len(b)) and list(a.columns) == list(b.columns) and a.equals(b)
+            results[name] = {"rows": len(sp), "oracle_rows": len(o), "match": bool(match)}
+            if not match and len(a) == len(b) and list(a.columns) == list(b.columns):
+                neq = (a != b).any(axis=1)
+                results[name]["first_diff"] = {
+                    "spark": a[neq].head(2).to_dict("records"),
+                    "oracle": b[neq].head(2).to_dict("records"),
+                }
     except Exception as e:
         results[name] = {"error": str(e)[:300]}
     print(name, "->", json.dumps(results[name])[:400], flush=True)
