@@ -119,6 +119,25 @@ def xxhash64_long(x: np.ndarray, seed) -> np.ndarray:
         k1 = k1 * _XXP1
         h = h ^ k1
         h = ((h << np.uint64(27)) | (h >> np.uint64(37))) * _XXP1 + _XXP4
+        return _xx_avalanche(h)
+
+
+def xxhash64_int(x: np.ndarray, seed) -> np.ndarray:
+    """Vectorized XXH64 of int32 elements (one 4-byte input): Spark
+    SQL's XxHash64Function.hashInt, which `xxhash64` applies to int
+    columns and literals. `seed` may be a per-element uint64 array, so
+    a multi-column Spark hash chains: xxhash64(a, b) with seed 42 is
+    xxhash64_int(b, xxhash64_long(a, 42)) for a long a and an int b."""
+    x = np.asarray(x).astype(np.int64).astype(np.uint64) & np.uint64(0xFFFFFFFF)
+    s = np.asarray(seed).astype(np.uint64, copy=False)
+    with np.errstate(over="ignore"):
+        h = (s + _XXP5 + np.uint64(4)) ^ (x * _XXP1)
+        h = ((h << np.uint64(23)) | (h >> np.uint64(41))) * _XXP2 + _XXP3
+        return _xx_avalanche(h)
+
+
+def _xx_avalanche(h: np.ndarray) -> np.ndarray:
+    with np.errstate(over="ignore"):
         h = h ^ (h >> np.uint64(33))
         h = h * _XXP2
         h = h ^ (h >> np.uint64(29))

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..kernels.hashing import xxhash64_int, xxhash64_long
+
 QUANT = 1_000_000
 COS_QUANT = 1_000_000_000
 
@@ -613,10 +615,11 @@ def ivf_topk_cosine(
     it).
     The centroid matrix (√n·d floats) is a Spark broadcast variable.
     EAGER: plan construction runs Spark jobs — _collect_matrix's
-    aggregate (whose n sizes n_cells=None; over budget that costs one
-    count() instead) and collect, and the centroid TopK+collect
-    (orderBy+limit compiles to TakeOrderedAndProject, O(n_cells) per
-    task, not a global sort)."""
+    aggregate (whose n sizes n_cells=None) and collect; in budget the
+    centroids are picked from the collected matrix in the same hash
+    order. Over budget n_cells=None costs one count(), and the
+    centroids one TopK+collect (orderBy+limit compiles to
+    TakeOrderedAndProject, O(n_cells) per task, not a global sort)."""
     sess = df.sparkSession
     src = _ann_src(df, id_col, vec_col)
     mat = _collect_matrix(src)
@@ -625,13 +628,23 @@ def ivf_topk_cosine(
         n_cells = max(4, int(np.ceil(np.sqrt(max(n_rows, 1)))))
     n_probe = min(n_probe, n_cells)
 
-    cent_pdf = (
-        src.withColumn("__h", F.xxhash64(F.col("id"), F.lit(seed)))
-        .orderBy("__h").limit(n_cells).select("v").toPandas()
-    )
+    if mat is not None:
+        # the order of Spark's xxhash64(id, lit(seed)) below: seed 42,
+        # each column hashed by its type into the running hash
+        ids, M = mat
+        h = np.uint64(42)
+        for v, is_int in ((ids, dict(src.dtypes)["id"] == "int"),
+                          (seed, -(2**31) <= seed < 2**31)):
+            h = (xxhash64_int if is_int else xxhash64_long)(v, h)
+        C = M[np.argsort(h.astype(np.int64), kind="stable")[:n_cells]]
+    else:
+        cent_pdf = (
+            src.withColumn("__h", F.xxhash64(F.col("id"), F.lit(seed)))
+            .orderBy("__h").limit(n_cells).select("v").toPandas()
+        )
+        C = np.stack(cent_pdf["v"].to_numpy()).astype(np.float64)
     from ._bc import register
 
-    C = np.stack(cent_pdf["v"].to_numpy()).astype(np.float64)
     C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
     bc = register("ivf_centroids", sess.sparkContext.broadcast(C))
 

@@ -4,6 +4,20 @@ Local mode stands in for a 1000-executor cluster; every knob here is
 one we'd set identically at 100 TB: Arrow for all Python boundaries,
 AQE (+skew join) on, explicit shuffle parallelism, bounded Arrow batch
 sizes so pandas-UDF peak memory is independent of partition size.
+
+Python workers start from `datasketches_java_spark._pydaemon` (the
+stock `spark.python.daemon.module` conf) instead of `pyspark.daemon`.
+Spark's worker calls `importlib.invalidate_caches()` before every task,
+and on CPython < 3.13 that re-parses the directory of every zip archive
+on the worker's path (pyspark.zip, py4j, the spark-core jar), about
+0.25 s of CPU per task; the daemon re-reads an archive only when its
+mtime or size changed. CPython >= 3.13 re-reads lazily, so there the
+daemon is plain `pyspark.daemon`. Sessions built without `get_spark`
+keep the stock daemon and its per-task cost.
+
+The compiled-class cache (`spark.sql.codegen.cache.maxEntries`) holds
+1000 entries instead of 100: a warm run_pipeline then re-uses every
+whole-stage class instead of re-compiling and re-JITting ~150 of them.
 """
 
 from __future__ import annotations
@@ -61,6 +75,15 @@ def get_spark(
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "2147483648")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "2147483648")
+        # Python workers fork from a daemon that skips per-task re-reads
+        # of unchanged zip archives on sys.path (see module docstring)
+        .config("spark.python.daemon.module", "datasketches_java_spark._pydaemon")
+        # the JVM-wide LRU of compiled whole-stage classes: one
+        # run_pipeline with audits generates ~150 distinct classes, so
+        # the stock 100 entries evict each class before its next use
+        # and every run re-compiles all of them in Janino (and re-JITs
+        # them), over a third of a warm run's CPU; sized for the pipeline
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(total_cores))
         .config("spark.sql.adaptive.enabled", "true")

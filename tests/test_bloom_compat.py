@@ -11,6 +11,7 @@ in-process via the session JVM):
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +20,7 @@ from datasketches_java_spark.kernels.bloom_compat import (
     from_ref_bytes,
     to_ref_bytes,
 )
-from datasketches_java_spark.kernels.hashing import xxhash64_long
+from datasketches_java_spark.kernels.hashing import xxhash64_int, xxhash64_long
 
 
 def _as_i64(u):
@@ -52,6 +53,27 @@ def test_xxhash64_long_matches_spark_sql_vectorized(spark):
     ours = xxhash64_long(got["id"].to_numpy(np.int64), np.uint64(42))
     np.testing.assert_array_equal(
         got["h"].to_numpy(np.int64), ours.astype(np.int64))
+
+
+def test_xxhash64_int_chain_matches_spark_sql(spark):
+    """Spark's xxhash64(id, lit(seed)) — seed 42 over the id, then the
+    int seed — equals the NumPy chain for random long and int ids (the
+    IVF centroid order, operators/similarity.py)."""
+    rng = np.random.default_rng(5)
+    longs = np.concatenate([np.array([0, -1, 2**63 - 1, -(2**63)], dtype=np.int64),
+                            rng.integers(-(2**63), 2**63 - 1, 2000, dtype=np.int64)])
+    ints = np.concatenate([np.array([0, -1, 2**31 - 1, -(2**31)], dtype=np.int64),
+                           rng.integers(-(2**31), 2**31, 2000)])
+    pdf = pd.DataFrame({"l": longs, "i": ints.astype(np.int32)})
+    for seed in (9001, -7):
+        got = spark.createDataFrame(pdf).select(
+            F.xxhash64("l", F.lit(seed)).alias("hl"),
+            F.xxhash64("i", F.lit(seed)).alias("hi"),
+        ).toPandas()
+        for col, first in (("hl", xxhash64_long(longs, np.uint64(42))),
+                           ("hi", xxhash64_int(ints, np.uint64(42)))):
+            ours = xxhash64_int(np.int32(seed), first).astype(np.int64)
+            np.testing.assert_array_equal(got[col].to_numpy(np.int64), ours)
 
 
 @pytest.fixture()
