@@ -353,7 +353,9 @@ def _measure_main(cores: int, n_rows: int, reps: int = 2) -> None:
     local[cores]; reports the best run (+ every rep's wall)."""
     from datasketches_java_spark.config import FROZEN
     from datasketches_java_spark.corpus.loader import corpus_dir
-    from datasketches_java_spark.plans.pipeline import run_pipeline
+    from datasketches_java_spark.plans.pipeline import (
+        release_cached_results, run_pipeline,
+    )
     from datasketches_java_spark.session import get_spark
     from datasketches_java_spark.sources import tables
 
@@ -407,12 +409,13 @@ def _measure_main(cores: int, n_rows: int, reps: int = 2) -> None:
     corpus = tables.load_corpus_dir(spark, cdir)
     n = corpus.count()
     warm = corpus if wdir == cdir else tables.load_corpus_dir(spark, wdir)
-    run_pipeline(spark, warm, FROZEN)            # steady-state warm-up
+    run_pipeline(spark, warm, FROZEN).release()  # steady-state warm-up
     best = None
     walls = []
     host = []
     for _ in range(max(1, reps)):
         spark.catalog.clearCache()
+        release_cached_results()
         pre = _host_state()
         t0 = time.time()
         res = run_pipeline(spark, corpus, FROZEN)
@@ -421,6 +424,7 @@ def _measure_main(cores: int, n_rows: int, reps: int = 2) -> None:
         walls.append(round(wall, 3))
         if best is None or wall < best[0]:
             best = (wall, res.metrics)
+        res.release()
     wall, m = best
     stages = {k: round(v, 3) for k, v in m.items() if k.endswith("_sec")}
     print(json.dumps({
@@ -445,6 +449,7 @@ def _warm_gen(batches):
 def run_aux_queries(sf_dir: str, cores: int) -> dict:
     """Secondary per-query timings over the driver tables."""
     import __spark_entry__ as entrymod
+    from datasketches_java_spark.plans.pipeline import release_cached_results
     from datasketches_java_spark.session import get_spark
 
     spark = get_spark(app="bench-aux", cores=cores)
@@ -479,6 +484,7 @@ def run_aux_queries(sf_dir: str, cores: int) -> dict:
             best = None
             for _ in range(2):  # best-of-2: interference is one-sided
                 spark.catalog.clearCache()
+                release_cached_results()
                 t0 = time.time()
                 qs[name](spark, sf_dir).count()
                 dt = time.time() - t0

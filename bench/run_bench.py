@@ -50,7 +50,7 @@ def main() -> None:
         cdir = corpus_dir(args.rows)
     corpus = tables.load_corpus_dir(spark, cdir)
     n = corpus.count()
-    run_pipeline(spark, corpus, FROZEN)  # steady-state warm-up
+    run_pipeline(spark, corpus, FROZEN).release()  # steady-state warm-up
     best = None
     walls = []
     for _ in range(max(1, args.reps)):
@@ -61,6 +61,7 @@ def main() -> None:
         walls.append(round(wall, 3))
         if best is None or wall < best[0]:
             best = (wall, res.metrics)
+        res.release()
     wall, m = best
     print(json.dumps({
         "rows": n,

@@ -49,6 +49,7 @@ def main() -> None:
     import pandas as _pd
 
     import __spark_entry__ as em
+    from datasketches_java_spark.plans.pipeline import release_cached_results
     from datasketches_java_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -83,6 +84,7 @@ def main() -> None:
         best = None
         for _ in range(reps):
             spark.catalog.clearCache()
+            release_cached_results()
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode(

@@ -24,6 +24,9 @@ SizeInBytesOnlyStatsPlanVisitor multiplies sizeInBytes across joins
 (repeated squaring), and by ~10 rounds the BigInteger products reach
 1e8 digits — one planning pass then burns CPU-minutes in
 BigInteger.multiply. A parquet round-trip severs the stats chain. The
+contraction loop's chain is unbounded (it grows with the graph), so it
+needs that severing; plans/pipeline.py chains a fixed four stages, a
+depth at which local-checkpoint leaves stay cheap to plan. The
 loop runs at its own shuffle parallelism, derived from the edge count,
 so each round costs a handful of tasks instead of
 spark.sql.shuffle.partitions tasks per join.
@@ -162,6 +165,7 @@ def connected_components(
     max_iter: int = 25,
     n_edges: int | None = None,
     metrics: dict | None = None,
+    caches: list | None = None,
 ) -> DataFrame:
     """edges(id_a, id_b) + vertices(id_col) → (id_col, cluster_id,
     cluster_size); cluster_id = min member id (the golden oracle's
@@ -179,7 +183,12 @@ def connected_components(
     Only vertices that appear in an edge enter the iteration — at web
     scale the overwhelming majority of rows are singletons and must not
     pay the per-iteration shuffles; they rejoin as size-1 clusters at
-    the end."""
+    the end.
+
+    `caches`, when given, receives the frames this call persists (the
+    small-graph label table) for the caller to unpersist once it has
+    materialized the result; spark.catalog.clearCache() frees them
+    otherwise."""
     if not _integral(edges, ("id_a", "id_b")):
         e64 = edges.select(
             F.xxhash64(F.col("id_a").cast("string")).alias("id_a"),
@@ -192,6 +201,7 @@ def connected_components(
         labels64 = connected_components(
             e64, v64.select(F.col("__id64")), id_col="__id64",
             max_iter=max_iter, n_edges=n_edges, metrics=metrics,
+            caches=caches,
         )
         return name_clusters(labels64, v64, "__id64")
 
@@ -222,6 +232,8 @@ def connected_components(
             labels = _unionfind_finish(E).select(
                 F.col("u").alias("x"), F.col("m").alias("label")
             ).persist()
+            if caches is not None:
+                caches.append(labels)
             if metrics is not None:
                 metrics["cc_rounds"] = 1
         else:

@@ -12,8 +12,19 @@ int32 signatures/band keys (operators/signatures.py) — every shuffle
 between the scan and the final cluster table moves only fixed-width
 integers. String image_ids re-enter at the two boundary products
 (`verified`, `clusters`) via a broadcast join against the slim id map.
-`clusters` is persisted, so its collect and the audit join share one
-CC tail + id-map join + min-name aggregate; releasing it is the caller's.
+
+In memory, each stage (signatures, candidates, verified, the id64
+cluster labels) is materialized as a local-checkpoint plan leaf, not a
+persisted frame: a cached frame carries its whole upstream plan, and
+Spark re-plans, canonicalizes and re-renders that nested plan in every
+later query. A leaf's materializing query is planned without AQE, so the
+leaf keeps the hash partitioning its consumers rely on (signatures by
+id64, candidates by id_a: verify's first join needs no exchange).
+The boundary `clusters` frame stays a lazy persist over the labels
+leaf, so its collect and the audit join share one id-map join +
+min-name aggregate. `spark.catalog.clearCache()` does not free local
+checkpoints: `PipelineResult.release()` frees one result, and
+`release_cached_results()` frees the `run_pipeline_cached` memo.
 """
 
 from __future__ import annotations
@@ -38,9 +49,19 @@ class PipelineResult:
     signatures: DataFrame
     candidates: DataFrame
     verified64: DataFrame
+    labels64: DataFrame      # id64, cluster_id, cluster_size
     verified: DataFrame      # boundary schema: string id_a < id_b + scores
     clusters: DataFrame      # boundary schema: image_id, cluster_id, cluster_size
     metrics: dict = field(default_factory=dict)
+
+    def release(self) -> None:
+        """Free the stage leaves and the boundary cache."""
+        self.clusters.unpersist()
+        for df in (self.signatures, self.candidates, self.verified64,
+                   self.labels64):
+            plan = df._jdf.logicalPlan()
+            if plan.nodeName() == "LogicalRDD":  # a leaf, not a read-back
+                plan.rdd().unpersist(False)
 
 
 # memoized results for repeated queries over the same corpus in one session
@@ -56,6 +77,14 @@ def run_pipeline_cached(
     return _RESULT_CACHE[key]
 
 
+def release_cached_results() -> None:
+    """Release and forget every memoized run_pipeline_cached result.
+    Its leaves would otherwise outlive spark.catalog.clearCache() and
+    turn a later repetition of the same query into a cache hit."""
+    while _RESULT_CACHE:
+        _RESULT_CACHE.popitem()[1].release()
+
+
 def _stage(
     spark: SparkSession,
     root: str | None,
@@ -67,9 +96,11 @@ def _stage(
 ):
     """Run (or resume) one stage; record wall time + row count.
 
-    persist=True caches BEFORE the count so the counting pass populates
-    the cache — otherwise every stage would compute twice (once for the
-    count, once for its consumer)."""
+    persist=True (in memory only) materializes the stage as a plan leaf
+    before the count, so its consumers neither recompute it nor carry
+    its plan. The leaf is eager, so every SQL metric of the stage lands
+    in this call, not in a later consumer's query. With a checkpoint
+    root the parquet/Iceberg read-back is already a leaf."""
     t0 = time.time()
     if root is not None and not force and tables.checkpoint_exists(
             root, name, spark=spark):
@@ -89,10 +120,25 @@ def _stage(
             )
         metrics[f"{name}_resumed"] = False
     if persist and root is None:
-        df = df.persist()
+        df = _leaf(df)
     metrics[f"{name}_rows"] = df.count()
     metrics[f"{name}_sec"] = round(time.time() - t0, 3)
     return df
+
+
+def _leaf(df: DataFrame) -> DataFrame:
+    """Materialize df as a local-checkpoint leaf. AQE is off while its
+    query is planned: AQE's final plan exposes no output partitioning,
+    so the leaf would report UnknownPartitioning and every join on its
+    key would re-shuffle it. Planned statically, the leaf reports its
+    last exchange's hashpartitioning."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _corpus_fingerprint(corpus: DataFrame) -> str:
@@ -191,13 +237,16 @@ def run_pipeline(
     )
 
     vertices = signatures.select("id64")
+    cc_caches: list = []
     labels64 = _stage(
         spark, checkpoint_root, _key_prefix + "clusters",
         lambda: connected_components(
             verified64.select("id_a", "id_b"), vertices,
-            n_edges=metrics["verified_rows"],
-        ), metrics,
+            n_edges=metrics["verified_rows"], caches=cc_caches,
+        ), metrics, persist=True,
     )
+    for df in cc_caches:  # the labels leaf now holds what these cached
+        df.unpersist()
 
     # boundary remaps: internal int64 keys → image_id strings. The id
     # map is two slim columns; broadcast at this scale, bucketed join at
@@ -208,7 +257,8 @@ def run_pipeline(
     clusters = name_clusters(labels64, F.broadcast(idmap), "id64").persist()
 
     result = PipelineResult(
-        signatures, candidates, verified64, verified, clusters, metrics
+        signatures, candidates, verified64, labels64, verified, clusters,
+        metrics,
     )
     if with_audits:
         from ..operators.audits import cluster_audits

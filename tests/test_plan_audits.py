@@ -231,34 +231,33 @@ def test_cluster_naming_plan_nodes(spark, smoke_sf_dir, tmp_path):
         "corpus": _node_names(
             em.queries()["corpus_clusters"](spark, smoke_sf_dir)),
     }
+    # labels ⋈ names; the pipeline's labels are a plan leaf (the
+    # clusters stage's local checkpoint), the other sites plan the CC tail
     head = [
         "Project", "BroadcastHashJoin", "Union", "Project",
         "BroadcastHashJoin", "Filter", "InMemoryTableScan",
         "HashAggregate", "HashAggregate", "Filter", "InMemoryTableScan",
         "Project",
     ]
-    tails = {
+    members = {
         "pipeline": [
-            "Exchange", "BroadcastHashJoin", "Project", "Filter",
-            "MapInPandas", "Exchange", "Project", "Project", "Scan parquet ",
-            "Project", "Filter", "InMemoryTableScan", "Project",
-            "Scan parquet ",
+            "Project", "BroadcastHashJoin", "Project", "Filter",
+            "Scan ExistingRDD", "Project", "Scan parquet ",
         ],
-        "state": [
+        "state": head + [
             "BroadcastHashJoin", "Project", "Filter", "Scan parquet ",
             "Project", "Filter", "InMemoryTableScan", "Project", "Filter",
             "Scan parquet ",
         ],
-        "corpus": [
+        "corpus": head + [
             "BroadcastHashJoin", "Project", "Scan parquet ", "Project",
             "Filter", "InMemoryTableScan", "Project", "Scan parquet ",
         ],
     }
-    for site, tail in tails.items():
-        members = head + tail
+    for site, m in members.items():
         assert got[site] == [
-            "Project", "SortMergeJoin", *members,
-            "SortAggregate", "SortAggregate", *members,
+            "Project", "SortMergeJoin", *m,
+            "SortAggregate", "SortAggregate", *m,
         ], site
 
 
