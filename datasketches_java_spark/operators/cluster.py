@@ -41,7 +41,7 @@ import tempfile
 import warnings
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
 
@@ -149,12 +149,23 @@ def name_clusters(labels: DataFrame, names: DataFrame, key: str) -> DataFrame:
     (name, cluster_id, cluster_size) with cluster_id = the component's
     minimum member name (the golden oracle's convention). `names` is
     joined as given, so a caller that wants a broadcast join passes
-    F.broadcast(names)."""
+    F.broadcast(names).
+
+    The minimum is a window over the cluster, not an aggregate joined
+    back to the members: the members are planned once and cross one
+    exchange on the cluster key, where the self-join planned the whole
+    member plan (at the delta state, the lazy connected-components
+    tail) twice. Trade-off: a window partition is one task, so a giant
+    cluster is named by one task (its rows spill past the window
+    buffer), where AQE could split a skewed join partition."""
     name = next(c for c in names.columns if c != key)
-    named = labels.withColumnRenamed("cluster_id", "__cid").join(names, key)
-    minname = named.groupBy("__cid").agg(F.min(name).alias("__min_name"))
-    return named.join(minname, "__cid").select(
-        name, F.col("__min_name").alias("cluster_id"), "cluster_size"
+    return (
+        labels.withColumnRenamed("cluster_id", "__cid").join(names, key)
+        .select(
+            name,
+            F.min(name).over(Window.partitionBy("__cid")).alias("cluster_id"),
+            "cluster_size",
+        )
     )
 
 

@@ -247,10 +247,12 @@ def substring_dup_pairs(
     )
 
     # Pass B — the original exact string-keyed plan, restricted to the
-    # few candidate docs (the group key IS the substring, so equality-
-    # verify comes free and the result is exact by construction).
+    # candidate docs (the group key IS the substring, so equality-
+    # verify comes free and the result is exact by construction). The
+    # candidate set has no size bound, so AQE's runtime size check, not
+    # a hint, decides whether it is broadcast.
     subs = (
-        base.join(F.broadcast(cand), "id")
+        base.join(cand, "id")
         .selectExpr(
             "id",
             f"explode(array_distinct(transform("

@@ -16,14 +16,24 @@ cost of a batch must scale with the DELTA, not the corpus. Per ingest:
      existed then);
   4. verify only the surviving delta pairs (channel scoring joins the
      signature columns back, old rows fetched by id);
-  5. connected components over prior ∪ new verified edges — CC cost is
-     edge-count-scaled (operators/cluster.py), never corpus-scaled;
-  6. append the new signatures and edges as a NEW batch directory and
-     atomically flip a JSON manifest (same snapshot-pointer pattern as
-     streaming/incremental.py): each ingest writes O(delta) bytes, a
-     crashed ingest leaves the previous manifest intact, and the
-     manifest carries per-batch lineage (batch id, row/edge counts,
-     config hash).
+  5. append the new signatures, edges and id map as a NEW batch
+     directory and atomically flip a JSON manifest (same
+     snapshot-pointer pattern as streaming/incremental.py): each ingest
+     writes O(delta) bytes, a crashed ingest leaves the previous
+     manifest intact, and the manifest carries per-batch lineage (batch
+     id, row/edge counts, config hash). The counts are observed in the
+     jobs that write the rows (an Observation directly above each
+     write, so a retried task counts once), never re-read from disk;
+  6. `state_clusters`: connected components over the stored verified
+     edges — CC cost is edge-count-scaled (operators/cluster.py), never
+     corpus-scaled — with the vertices and the min-image_id names both
+     taken from the id map, which holds the signature table's id64 set
+     under the same key.
+
+Every state read passes its fixed schema (SIG_SCHEMA, VERIFY_SCHEMA,
+the id map's two columns), so no read starts a footer job to infer
+it. The on-disk format is unchanged, so existing state directories read
+as before.
 
 Exactness: with hot-band caps disabled or untriggered, N sequential
 ingests produce the same verified-pair SET and cluster partition as a
@@ -45,16 +55,19 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FROZEN, DedupConfig
 from ..operators.cluster import connected_components, name_clusters
 from ..operators.lsh import candidate_pairs
-from ..operators.signatures import compute_signatures, explode_bands
-from ..operators.verify import verify_pairs
+from ..operators.signatures import (
+    SIG_SCHEMA, compute_signatures, explode_bands, id_map,
+)
+from ..operators.verify import VERIFY_SCHEMA, verify_pairs
 
 _MANIFEST = "MANIFEST.json"
+_IDMAP_SCHEMA = "id64 bigint, image_id string"
 
 
 def _read_manifest(state_dir: str) -> dict:
@@ -80,17 +93,31 @@ def _batch_paths(state_dir: str, manifest: dict, kind: str) -> list[str]:
     ]
 
 
+def _read_batches(
+    spark: SparkSession, state_dir: str, manifest: dict, kind: str, schema: str
+) -> DataFrame | None:
+    paths = _batch_paths(state_dir, manifest, kind)
+    return spark.read.schema(schema).parquet(*paths) if paths else None
+
+
 def read_state(
     spark: SparkSession, state_dir: str
 ) -> tuple[DataFrame | None, DataFrame | None, dict]:
     """(signatures, verified edges, manifest) for the CURRENT state —
     parquet reads of exactly the batch directories the manifest lists."""
     manifest = _read_manifest(state_dir)
-    sig_paths = _batch_paths(state_dir, manifest, "signatures")
-    edge_paths = _batch_paths(state_dir, manifest, "verified")
-    sigs = spark.read.parquet(*sig_paths) if sig_paths else None
-    edges = spark.read.parquet(*edge_paths) if edge_paths else None
-    return sigs, edges, manifest
+    return (
+        _read_batches(spark, state_dir, manifest, "signatures", SIG_SCHEMA),
+        _read_batches(spark, state_dir, manifest, "verified", VERIFY_SCHEMA),
+        manifest,
+    )
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Write df to parquet at path; return the rows the write wrote."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(path)
+    return obs.get["rows"]
 
 
 def ingest_batch(
@@ -120,11 +147,12 @@ def ingest_batch(
     checkpoint restarting at epoch 0, can never false-match each
     other's recorded epochs."""
     os.makedirs(state_dir, exist_ok=True)
-    sigs_old, _edges_old, manifest = read_state(spark, state_dir)
+    manifest = _read_manifest(state_dir)
     if epoch is not None and any(
         b.get("epoch") == epoch for b in manifest["batches"]
     ):
         return state_clusters(spark, state_dir) if compute_clusters else None
+    sigs_old = _read_batches(spark, state_dir, manifest, "signatures", SIG_SCHEMA)
 
     sigs_new = compute_signatures(new_corpus, cfg).persist()
     bands_new = explode_bands(sigs_new)
@@ -160,13 +188,9 @@ def ingest_batch(
     sig_path = os.path.join(state_dir, "signatures", batch_id)
     edge_path = os.path.join(state_dir, "verified", batch_id)
     map_path = os.path.join(state_dir, "idmap", batch_id)
-    sigs_new.write.parquet(sig_path)
-    verified_new.write.parquet(edge_path)
-    from ..operators.signatures import id_map
-
+    n_sig = _write_counted(sigs_new, sig_path)
+    n_edge = _write_counted(verified_new, edge_path)
     id_map(new_corpus).write.parquet(map_path)
-    n_sig = spark.read.parquet(sig_path).count()
-    n_edge = spark.read.parquet(edge_path).count()
     manifest["batches"].append(
         {
             "id": batch_id,
@@ -189,19 +213,18 @@ def state_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     """Cluster assignment (image_id, cluster_id, cluster_size) over the
     CURRENT state — connected components on the full stored edge set
     (edge-scaled, not corpus-scaled), min-image_id cluster naming (the
-    pipeline's convention, plans/pipeline.py)."""
-    sigs_cur, edges_cur, manifest = read_state(spark, state_dir)
-    vertices = sigs_cur.select("id64")
+    pipeline's convention, plans/pipeline.py). The id map is both the
+    vertex set and the boundary remap, so the signatures are not read."""
+    manifest = _read_manifest(state_dir)
+    edges_cur = _read_batches(spark, state_dir, manifest, "verified", VERIFY_SCHEMA)
+    idmap = _read_batches(spark, state_dir, manifest, "idmap", _IDMAP_SCHEMA)
     edges = (
         edges_cur.select("id_a", "id_b")
         if edges_cur is not None
         else spark.createDataFrame([], "id_a bigint, id_b bigint")
     )
     total_edges = sum(b["n_verified"] for b in manifest["batches"])
-    labels64 = connected_components(edges, vertices, n_edges=total_edges)
-
+    labels64 = connected_components(edges, idmap.select("id64"),
+                                    n_edges=total_edges)
     # boundary remap — slim two-column join, bucketed at web scale
-    idmap = spark.read.parquet(
-        *[os.path.join(state_dir, "idmap", b["id"]) for b in manifest["batches"]]
-    )
     return name_clusters(labels64, idmap, "id64")

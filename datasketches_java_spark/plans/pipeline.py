@@ -20,9 +20,10 @@ Spark re-plans, canonicalizes and re-renders that nested plan in every
 later query. A leaf's materializing query is planned without AQE, so the
 leaf keeps the hash partitioning its consumers rely on (signatures by
 id64, candidates by id_a: verify's first join needs no exchange).
-The boundary `clusters` frame stays a lazy persist over the labels
-leaf, so its collect and the audit join share one id-map join +
-min-name aggregate. `spark.catalog.clearCache()` does not free local
+Each stage's row count is observed in the job that materializes its
+leaf. The boundary `clusters` frame stays a lazy persist over the
+labels leaf, so its collect and the audit join share one id-map join +
+min-name window. `spark.catalog.clearCache()` does not free local
 checkpoints: `PipelineResult.release()` frees one result, and
 `release_cached_results()` frees the `run_pipeline_cached` memo.
 """
@@ -33,7 +34,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, FROZEN
@@ -92,15 +93,16 @@ def _stage(
     build,
     metrics: dict,
     force: bool = False,
-    persist: bool = False,
 ):
     """Run (or resume) one stage; record wall time + row count.
 
-    persist=True (in memory only) materializes the stage as a plan leaf
-    before the count, so its consumers neither recompute it nor carry
-    its plan. The leaf is eager, so every SQL metric of the stage lands
-    in this call, not in a later consumer's query. With a checkpoint
-    root the parquet/Iceberg read-back is already a leaf."""
+    In memory the stage is materialized as a plan leaf, so its
+    consumers neither recompute it nor carry its plan. The leaf is
+    eager, so every SQL metric of the stage lands in this call, not in
+    a later consumer's query, and its row count is observed in that
+    same job. With a checkpoint root the parquet/Iceberg read-back is
+    already a leaf; neither it nor a resumed stage has a materializing
+    job of its own here, so those lanes count with one more query."""
     t0 = time.time()
     if root is not None and not force and tables.checkpoint_exists(
             root, name, spark=spark):
@@ -119,9 +121,12 @@ def _stage(
                 lineage={"lineage_key": os.path.basename(root)},
             )
         metrics[f"{name}_resumed"] = False
-    if persist and root is None:
-        df = _leaf(df)
-    metrics[f"{name}_rows"] = df.count()
+    if root is None:
+        obs = Observation()
+        df = _leaf(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        metrics[f"{name}_rows"] = obs.get["rows"]
+    else:
+        metrics[f"{name}_rows"] = df.count()
     metrics[f"{name}_sec"] = round(time.time() - t0, 3)
     return df
 
@@ -224,16 +229,15 @@ def run_pipeline(
     signatures = _stage(
         spark, checkpoint_root, _key_prefix + "signatures",
         lambda: compute_signatures(corpus, cfg, remap=remap, key=id_key),
-        metrics, persist=True,
+        metrics,
     )
     candidates = _stage(
         spark, checkpoint_root, _key_prefix + "candidates",
         lambda: candidate_pairs(explode_bands(signatures), cfg), metrics,
-        persist=True,
     )
     verified64 = _stage(
         spark, checkpoint_root, _key_prefix + "verified",
-        lambda: verify_pairs(candidates, signatures, cfg), metrics, persist=True,
+        lambda: verify_pairs(candidates, signatures, cfg), metrics,
     )
 
     vertices = signatures.select("id64")
@@ -243,7 +247,7 @@ def run_pipeline(
         lambda: connected_components(
             verified64.select("id_a", "id_b"), vertices,
             n_edges=metrics["verified_rows"], caches=cc_caches,
-        ), metrics, persist=True,
+        ), metrics,
     )
     for df in cc_caches:  # the labels leaf now holds what these cached
         df.unpersist()

@@ -69,6 +69,28 @@ def test_simhash_dup_pairs_exact_vs_brute_force(spark, smoke_sf_dir):
     assert got == expected and len(got) > 0
 
 
+def test_substring_dup_pairs_rows_equal_without_broadcast(spark, smoke_sf_dir):
+    """The candidate-doc join is sized at run time, not forced to a
+    broadcast: with broadcasts disabled it plans a shuffle join and
+    returns the same rows."""
+    docs = spark.read.parquet(f"{smoke_sf_dir}/documents.parquet")
+
+    def run():
+        out = substring_dup_pairs(docs, "doc_id", "text")
+        rows = sorted(map(tuple, out.collect()))
+        return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    default, _ = run()
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        no_broadcast, plan = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert no_broadcast == default and default
+
+
 def test_simhash_dup_pairs_rejects_bad_band_split(spark, smoke_sf_dir):
     docs = spark.read.parquet(f"{smoke_sf_dir}/documents.parquet")
     with pytest.raises(ValueError):

@@ -211,9 +211,9 @@ def test_cluster_audits_plan_nodes(spark):
 def test_cluster_naming_plan_nodes(spark, smoke_sf_dir, tmp_path):
     """The three cluster-naming sites (the pipeline boundary, the delta
     state and the string-id connected_components) share one naming
-    tail: members = labels ⋈ names, joined back to their
-    groupBy(cluster).agg(min(name)). Each plans exactly this node list
-    (recorded before the sites were folded into name_clusters)."""
+    tail: members = labels ⋈ names, named by a min(name) window over
+    the cluster, so the members are planned once. Each plans exactly
+    this node list."""
     from datasketches_java_spark.config import FROZEN
     from datasketches_java_spark.plans.delta import (
         ingest_batch, state_clusters,
@@ -255,10 +255,7 @@ def test_cluster_naming_plan_nodes(spark, smoke_sf_dir, tmp_path):
         ],
     }
     for site, m in members.items():
-        assert got[site] == [
-            "Project", "SortMergeJoin", *m,
-            "SortAggregate", "SortAggregate", *m,
-        ], site
+        assert got[site] == ["Project", "Window", *m], site
 
 
 def test_ivf_in_budget_scores_in_one_pass(spark):

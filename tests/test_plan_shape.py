@@ -8,26 +8,26 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from datasketches_java_spark.config import FROZEN
 from datasketches_java_spark.corpus.loader import corpus_dir_for_sf
-from datasketches_java_spark.plans.delta import ingest_batch, state_clusters
 from datasketches_java_spark.plans.pipeline import run_pipeline
-from tools.plan_profile import Spans, stage_spans
+from tools.plan_profile import Spans, profile_delta, stage_spans
 
 # span -> (jobs, exchanges) on the sf0.001 corpus with the test session. A
 # span owns the jobs of its job group and the SQL executions that ran them;
 # exchanges are counted in those executions' formatted plans (see
-# tools/plan_profile.py), so the number is a pin, not a shuffle count
+# tools/plan_profile.py), so the number is a pin, not a shuffle count.
+# `tools/plan_profile.py CORPUS_DIR [--delta] --cores 8
+# --shuffle-partitions 16` on the sf0.001 corpus prints both tables
 PIPELINE = {
-    "signatures": (3, 4),
-    "candidates": (3, 4),
-    "verified": (4, 4),
-    "clusters": (6, 6),
-    "boundary_collect": (8, 13),
+    "signatures": (1, 2),
+    "candidates": (1, 2),
+    "verified": (2, 2),
+    "clusters": (4, 4),
+    "boundary_collect": (6, 8),
 }
-DELTA = {"ingest_batch": (23, 30), "state_clusters": (19, 21)}
+DELTA = {"ingest_batch": (15, 26), "state_clusters": (9, 11)}
 
 
 @pytest.fixture(scope="module")
@@ -59,12 +59,6 @@ def test_pipeline_plan_shape(spark, corpus):
 
 def test_delta_plan_shape(spark, corpus, tmp_path):
     shape = Spans(spark, "plan-shape:delta")
-    batches = [corpus.filter(F.crc32("image_id") % 2 == k) for k in (0, 1)]
-    state = str(tmp_path / "state")
-    ingest_batch(spark, state, batches[0], FROZEN, compute_clusters=False)
-    with shape.span("ingest_batch"):
-        ingest_batch(spark, state, batches[1], FROZEN, compute_clusters=False)
-    with shape.span("state_clusters"):
-        state_clusters(spark, state).toPandas()
+    profile_delta(spark, corpus, shape, str(tmp_path / "state"))
     seen = _pins(shape)
     assert seen == DELTA, seen

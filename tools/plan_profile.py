@@ -1,9 +1,13 @@
-"""Per-span Spark jobs, wall time and plan-text size of one pipeline run.
+"""Per-span Spark jobs, wall time and plan-text size of one pipeline run
+or one delta ingest.
 
 Runs `run_pipeline(with_audits=True)` over a corpus directory (one that
 holds `corpus.parquet`), then collects `verified` and `clusters` (the
 boundary collect) and the audit table. Each stage run_pipeline runs,
 the boundary collect and the audits is a span with its own job group.
+With --delta it instead ingests one half of the corpus into a fresh
+delta state untraced, then the other half (span `ingest_batch`), and
+collects `state_clusters` (span `state_clusters`).
 For each span it prints, read from Spark's status stores:
 
 - jobs: the Spark jobs of the span's job group;
@@ -22,7 +26,12 @@ For each span it prints, read from Spark's status stores:
 The first run is cold (JIT, codegen, Python workers); later runs are
 the steady state. The last line is the last run as one JSON object.
 
-Usage: python tools/plan_profile.py CORPUS_DIR [--cores 4] [--runs 2]
+Usage: python tools/plan_profile.py CORPUS_DIR [--delta] [--cores 4]
+       [--shuffle-partitions N] [--runs 2]
+
+The pins in tests/test_plan_shape.py are the test session's numbers
+(8 cores, 16 shuffle partitions) on the sf0.001 corpus; --cores 8
+--shuffle-partitions 16 reproduces that session.
 """
 
 from __future__ import annotations
@@ -32,6 +41,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 from contextlib import contextmanager
 
@@ -118,12 +128,11 @@ def stage_spans(spans: Spans):
         pipeline._stage = stage
 
 
-def profile(spark, corpus, run: int) -> dict:
+def profile(spark, corpus, spans: Spans) -> None:
     """One traced run_pipeline(with_audits=True) + its three collects."""
     from datasketches_java_spark.config import FROZEN
     from datasketches_java_spark.plans.pipeline import run_pipeline
 
-    spans = Spans(spark, f"plan_profile:{run}")
     with spans.span("run_pipeline"), stage_spans(spans):
         res = run_pipeline(spark, corpus, FROZEN, with_audits=True)
     with spans.span("boundary_collect"):
@@ -132,27 +141,53 @@ def profile(spark, corpus, run: int) -> dict:
     with spans.span("audits"):
         res.audits.toPandas()
     res.release()
-    return spans.report()
+
+
+def profile_delta(spark, corpus, spans: Spans, state_dir: str) -> None:
+    """Ingest one half of corpus into a new state at state_dir, then a
+    traced ingest of the other half and a traced state_clusters collect."""
+    from pyspark.sql import functions as F
+
+    from datasketches_java_spark.config import FROZEN
+    from datasketches_java_spark.plans.delta import ingest_batch, state_clusters
+
+    first, second = (corpus.filter(F.crc32("image_id") % 2 == k) for k in (0, 1))
+    ingest_batch(spark, state_dir, first, FROZEN, compute_clusters=False)
+    with spans.span("ingest_batch"):
+        ingest_batch(spark, state_dir, second, FROZEN, compute_clusters=False)
+    with spans.span("state_clusters"):
+        state_clusters(spark, state_dir).toPandas()
 
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("corpus_dir")
+    ap.add_argument("--delta", action="store_true",
+                    help="profile ingest_batch + state_clusters")
     ap.add_argument("--cores", type=int, default=4)
+    ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args(argv)
 
     from datasketches_java_spark.session import get_spark
     from datasketches_java_spark.sources import tables
 
-    spark = get_spark(app="plan_profile", cores=args.cores)
+    spark = get_spark(app="plan_profile", cores=args.cores,
+                      shuffle_partitions=args.shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         corpus = tables.load_corpus_dir(spark, args.corpus_dir)
         corpus.count()
         for run in range(args.runs):
             spark.catalog.clearCache()
-            rep = profile(spark, corpus, run)
+            spans = Spans(spark, f"plan_profile:{run}")
+            if args.delta:
+                with tempfile.TemporaryDirectory(prefix="plan_profile_") as work:
+                    profile_delta(spark, corpus, spans,
+                                  os.path.join(work, "state"))
+            else:
+                profile(spark, corpus, spans)
+            rep = spans.report()
             print(f"run {run}{' (cold)' if run == 0 else ''}")
             print(f"  {'span':<18}{'jobs':>6}{'wall_s':>9}{'execs':>7}"
                   f"{'plan_chars':>12}{'exchanges':>11}")
