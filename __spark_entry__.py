@@ -21,9 +21,36 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datasketches_java_spark.config import FROZEN, DedupConfig  # noqa: E402
+from datasketches_java_spark.scope import RunScope  # noqa: E402
 
 # text-only tables: no image channel
 TEXT_CFG = DedupConfig(phash_bands=0, phash_max_hamming=-1)
+
+
+class SharedRuns(RunScope):
+    """The pipeline runs the gate queries share: one run_pipeline per
+    (session, corpus, config), owned by this scope. Closing it frees
+    every run and forgets it, so the next query runs the pipeline anew."""
+
+    def __init__(self):
+        super().__init__()
+        self.runs: dict = {}
+
+    def get(self, spark, corpus, cfg, key):
+        from datasketches_java_spark.plans.pipeline import run_pipeline
+
+        k = (id(spark), key, cfg.config_hash())
+        if k not in self.runs:
+            self.runs[k] = run_pipeline(spark, corpus, cfg)
+            self.own(self.runs[k].scope)
+        return self.runs[k]
+
+    def close(self) -> None:
+        self.runs.clear()
+        super().close()
+
+
+SHARED_RUNS = SharedRuns()
 
 _STOP_SQL = "('the','of','and','a','to','in','is','it')"
 
@@ -471,14 +498,13 @@ def _q_minhash_dup_docs(spark, sf_dir):
     integer-Jaccard pair set — oracle-checkable against the same SQL as
     the relational SSJoin (the LSH path must find the identical pairs)."""
     from datasketches_java_spark.operators.rescore import exact_rescore_pairs
-    from datasketches_java_spark.plans.pipeline import run_pipeline_cached
 
     docs = _docs(spark, sf_dir)
     d = docs.select(
         F.col("doc_id").cast("string").alias("image_id"),
         F.col("text").alias("caption"),
     )
-    res = run_pipeline_cached(spark, d, TEXT_CFG, f"docs:{sf_dir}")
+    res = SHARED_RUNS.get(spark, d, TEXT_CFG, f"docs:{sf_dir}")
     resc = exact_rescore_pairs(
         res.verified, docs, "doc_id", "text", 5, 0.8, normalize=False
     )
@@ -761,20 +787,29 @@ def _q_embedding_topk_ivf_recall(spark, sf_dir):
 
 
 def _corpus_result(spark, sf_dir):
-    from datasketches_java_spark.plans.pipeline import run_pipeline_cached
     from datasketches_java_spark.sources import tables
 
     corpus = tables.load_corpus(spark, sf_dir)
-    return corpus, run_pipeline_cached(spark, corpus, FROZEN, f"corpus:{sf_dir}")
+    return corpus, SHARED_RUNS.get(spark, corpus, FROZEN, f"corpus:{sf_dir}")
 
 
-def _rescored_corpus_pairs(spark, sf_dir):
+def _rescored_corpus_pairs(corpus, res):
     from datasketches_java_spark.operators.rescore import exact_rescore_pairs
 
-    corpus, res = _corpus_result(spark, sf_dir)
-    return corpus, res, exact_rescore_pairs(
+    return exact_rescore_pairs(
         res.verified, corpus, "image_id", "caption",
         FROZEN.shingle_k, FROZEN.jaccard_golden, normalize=True,
+    )
+
+
+def _caption_clusters(corpus, res):
+    """Connected components over the exact-confirmed caption edges."""
+    from datasketches_java_spark.operators.cluster import connected_components
+
+    resc = _rescored_corpus_pairs(corpus, res)
+    return connected_components(
+        resc.select("id_a", "id_b"), corpus.select("image_id"),
+        id_col="image_id",
     )
 
 
@@ -783,7 +818,7 @@ def _q_corpus_dup_pairs(spark, sf_dir):
     by exact rescoring: the emitted pair set is the exact
     char-5-shingle Jaccard >= 0.8 relation — identical to the golden
     oracle iff the pipeline's recall is 1.0 (it is, at this tier)."""
-    _, _, resc = _rescored_corpus_pairs(spark, sf_dir)
+    resc = _rescored_corpus_pairs(*_corpus_result(spark, sf_dir))
     return resc.select("id_a", "id_b", "jaccard_exact")
 
 
@@ -791,13 +826,7 @@ def _q_corpus_clusters(spark, sf_dir):
     """Connected components over the exact-confirmed caption edges —
     the high-precision text-dedup clustering (golden convention:
     cluster_id = min member image_id; singletons included)."""
-    from datasketches_java_spark.operators.cluster import connected_components
-
-    corpus, _, resc = _rescored_corpus_pairs(spark, sf_dir)
-    return connected_components(
-        resc.select("id_a", "id_b"), corpus.select("image_id"),
-        id_col="image_id",
-    )
+    return _caption_clusters(*_corpus_result(spark, sf_dir))
 
 
 def _q_varopt_cluster_sample(spark, sf_dir):
@@ -871,9 +900,9 @@ def _q_corpus_clusters_multichannel_cover(spark, sf_dir):
     n_covered equals it. Deterministic under the frozen config — a
     regression in any channel's signature, band join, verify stage, or
     the union graph splits some golden cluster and flips the count."""
-    _, res = _corpus_result(spark, sf_dir)
+    corpus, res = _corpus_result(spark, sf_dir)
     mc = res.clusters.select("image_id", F.col("cluster_id").alias("mc_id"))
-    golden = _q_corpus_clusters(spark, sf_dir).filter(
+    golden = _caption_clusters(corpus, res).filter(
         F.col("cluster_size") > 1
     ).select("image_id", "cluster_id")
     per = (
@@ -894,13 +923,9 @@ def _q_corpus_cluster_audits(spark, sf_dir):
     also computes (KMV union, HLL) are pytest-audited against these
     exact twins and the reference error tables (kernels/hll_bounds.py)."""
     from datasketches_java_spark.operators.audits import cluster_audits
-    from datasketches_java_spark.operators.cluster import connected_components
 
-    corpus, res, resc = _rescored_corpus_pairs(spark, sf_dir)
-    clusters = connected_components(
-        resc.select("id_a", "id_b"), corpus.select("image_id"),
-        id_col="image_id",
-    )
+    corpus, res = _corpus_result(spark, sf_dir)
+    clusters = _caption_clusters(corpus, res)
     audits = cluster_audits(spark, clusters, res.signatures, FROZEN, corpus)
     return audits.select(
         "cluster_id", "n_rows", "distinct_captions_exact",

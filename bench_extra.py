@@ -49,7 +49,7 @@ def main() -> None:
     import pandas as _pd
 
     import __spark_entry__ as em
-    from datasketches_java_spark.plans.pipeline import release_cached_results
+    from datasketches_java_spark.scope import RunScope
     from datasketches_java_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -84,12 +84,13 @@ def main() -> None:
         best = None
         for _ in range(reps):
             spark.catalog.clearCache()
-            release_cached_results()
+            em.SHARED_RUNS.close()
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            dt = time.time() - t0
+            with RunScope():
+                t0 = time.time()
+                qs[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite").save()
+                dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         out[name] = round(best, 3)
         print(name, out[name], flush=True)

@@ -85,24 +85,20 @@ def varopt_sample(
 
 def estimate_subset_sum(
     sample_items: np.ndarray, adj_weights: np.ndarray, mask: np.ndarray,
-    num_std_dev: float = 2.0, tau: float | None = None,
+    num_std_dev: float = 2.0, *, tau: float,
 ) -> tuple[float, float, float]:
     """(lb, est, ub) for the true total weight of the subset selected by
     `mask`, from a VarOpt sample (reference estimateSubsetSum,
     VarOptItemsSketch.java:640). Normal-approximation bounds from the
     per-item Horvitz-Thompson variance of the thresholded design.
 
-    Pass the sample's `tau` (returned by varopt_sample): with tau = 0
-    (exact passthrough) no item carries variance. Omitting tau falls
-    back to inferring it as adj.min(), which misattributes variance to
-    the smallest exact item in all-heavy/passthrough samples."""
+    `tau` is the sample's threshold (returned by varopt_sample): with
+    tau = 0 (exact passthrough) no item carries variance."""
     adj = np.asarray(adj_weights, dtype=np.float64)
     m = np.asarray(mask, dtype=bool)
     est = float(adj[m].sum())
     if len(adj) == 0 or not m.any():
         return 0.0, 0.0, 0.0
-    if tau is None:
-        tau = adj.min()  # legacy inference; wrong for passthrough samples
     if tau <= 0:
         return est, est, est  # exact sample: zero variance
     light = m & (adj <= tau * (1 + 1e-12))

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
 
+from ..scope import own
+
 
 def _pq_checkpoint(df: DataFrame, root: str, name: str) -> DataFrame:
     """Materialize to parquet and read back — a plan-and-stats barrier
@@ -176,7 +178,6 @@ def connected_components(
     max_iter: int = 25,
     n_edges: int | None = None,
     metrics: dict | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """edges(id_a, id_b) + vertices(id_col) → (id_col, cluster_id,
     cluster_size); cluster_id = min member id (the golden oracle's
@@ -196,10 +197,9 @@ def connected_components(
     pay the per-iteration shuffles; they rejoin as size-1 clusters at
     the end.
 
-    `caches`, when given, receives the frames this call persists (the
-    small-graph label table) for the caller to unpersist once it has
-    materialized the result; spark.catalog.clearCache() frees them
-    otherwise."""
+    The small-graph label table is persisted for the returned frame and
+    owned by the innermost open `RunScope`: materialize the result
+    before that scope closes, or it recomputes uncached."""
     if not _integral(edges, ("id_a", "id_b")):
         e64 = edges.select(
             F.xxhash64(F.col("id_a").cast("string")).alias("id_a"),
@@ -212,7 +212,6 @@ def connected_components(
         labels64 = connected_components(
             e64, v64.select(F.col("__id64")), id_col="__id64",
             max_iter=max_iter, n_edges=n_edges, metrics=metrics,
-            caches=caches,
         )
         return name_clusters(labels64, v64, "__id64")
 
@@ -240,11 +239,9 @@ def connected_components(
             # parallelize (a contraction ROUND still checkpoints: its
             # state must survive plan-growth across iterations).
             E = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-            labels = _unionfind_finish(E).select(
+            labels = own(_unionfind_finish(E).select(
                 F.col("u").alias("x"), F.col("m").alias("label")
-            ).persist()
-            if caches is not None:
-                caches.append(labels)
+            ).persist())
             if metrics is not None:
                 metrics["cc_rounds"] = 1
         else:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import char_shingles
+from ..scope import own
 
 # 16-bit popcount lookup (numpy 1.26 has no bitwise_count)
 _POP16 = np.array(
@@ -53,14 +54,14 @@ def ssjoin_jaccard_pairs(
     EAGER-EXECUTION CONTRACT: this operator runs Spark jobs at
     plan-construction time (postings stats + the bitmap collect when
     the broadcast plan is chosen) and leaves the postings frame
-    persisted + the bitmap broadcast alive for the returned DataFrame
-    to consume. A new call releases the previous call's cache
-    automatically; `release_ssjoin_cache()` releases it explicitly
-    once the result has been materialized.
+    persisted (and, on the broadcast plan, the bitmap broadcast) alive
+    for the returned DataFrame to consume. Both belong to the innermost
+    open `RunScope` (scope.py): materialize the result before that
+    scope closes, or it recomputes uncached. Outside any scope they
+    stay until `spark.catalog.clearCache()` and the ContextCleaner
+    free them.
     """
     from ..operators.rescore import exact_rescore_pairs
-
-    release_ssjoin_cache()
 
     t = threshold
     text = F.col(text_col)
@@ -112,8 +113,7 @@ def ssjoin_jaccard_pairs(
     # without a persist the explode+hash of every shingle recomputes
     # per reference (the round-2 bench's worst query at 168s). At web
     # scale this is a checkpointed stage.
-    sh = sh.persist()
-    _CACHE.append(sh)
+    sh = own(sh.persist())
 
     freq = sh.groupBy("sh").agg(F.count("*").alias("f"))
     from pyspark.sql import Window
@@ -171,30 +171,6 @@ def ssjoin_jaccard_pairs(
 
 _BITMAP_BUDGET_BYTES = 256 << 20  # broadcast cap for the bitset matrix
 _PULL_BUDGET_BYTES = 512 << 20    # driver heap cap for the postings pull
-
-# persisted frames / broadcasts owned by the most recent ssjoin call
-# (eager-execution contract — see ssjoin_jaccard_pairs docstring)
-_CACHE: list = []
-
-
-def release_ssjoin_cache() -> None:
-    """Unpersist the postings frame and the bitmap broadcast left alive
-    by the last `ssjoin_jaccard_pairs` call. Safe to call any time; the
-    returned DataFrame recomputes (uncached) if executed after release.
-    Broadcasts are unpersisted, never destroyed: a prior call's result
-    that hasn't been materialized yet still closes over its broadcast,
-    and `unpersist` only evicts executor copies (tasks re-fetch from
-    the driver), where `destroy` would fail that plan hard (round-4
-    advice)."""
-    while _CACHE:
-        h = _CACHE.pop()
-        try:
-            if isinstance(h, DataFrame):
-                h.unpersist()
-            else:
-                h.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
 
 
 def _collect_doc_bitmaps(sh: DataFrame):
@@ -307,14 +283,8 @@ def _allpairs_bitmap(spark, bm, threshold: float, id_type: str) -> DataFrame:
 
 def _verify_pairs_bitmap(cand: DataFrame, bm, threshold: float, id_type: str) -> DataFrame:
     """Exact Jaccard per candidate pair from broadcast bitsets."""
-    from ._bc import register
-
     uids, B, nset = bm
-    bc = register(
-        "ssjoin_bitmap",
-        cand.sparkSession.sparkContext.broadcast((uids, B, nset)),
-    )
-    _CACHE.append(bc)
+    bc = own(cand.sparkSession.sparkContext.broadcast((uids, B, nset)))
     schema = (
         f"id_a {id_type}, id_b {id_type}, intersect_ct bigint, "
         "union_ct bigint, jaccard_exact double"

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..kernels.bloom import BloomFilter, suggest_num_filter_bits, \
     suggest_num_hashes_from_size
 from ..kernels.countmin import CountMinSketch
+from ..scope import own
 
 
 def bloom_build(df: DataFrame, key_col: str, max_distinct: int,
@@ -89,11 +90,7 @@ def bloom_might_contain(
         # [0] would raise at plan-construction time)
         return probe.filter(F.lit(False))
     blob = bytes(rows[0]["sketch"])
-    from ._bc import register
-
-    bc = register(
-        "bloom_probe", probe.sparkSession.sparkContext.broadcast(blob)
-    )
+    bc = own(probe.sparkSession.sparkContext.broadcast(blob))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bf = BloomFilter.deserialize(bc.value)
@@ -158,11 +155,7 @@ def countmin_counts(
             [], "item string, cm_count bigint"
         )
     blob = bytes(rows[0]["sketch"])
-    from ._bc import register
-
-    bc = register(
-        "countmin_score", items.sparkSession.sparkContext.broadcast(blob)
-    )
+    bc = own(items.sparkSession.sparkContext.broadcast(blob))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cm = CountMinSketch.deserialize(bc.value)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..kernels.hashing import xxhash64_int, xxhash64_long
+from ..scope import own
 
 QUANT = 1_000_000
 COS_QUANT = 1_000_000_000
@@ -130,15 +131,13 @@ def _topk(scored: DataFrame, score_col: str, topk: int) -> DataFrame:
     )
 
 
-def _broadcast_scored(src, mat, key, score_fn, emit, schema) -> DataFrame:
+def _broadcast_scored(src, mat, score_fn, emit, schema) -> DataFrame:
     """One scan of the quantized (id, q) table against the broadcast
     (ids sorted, int64 matrix) pair: every Arrow batch's (b, n) score
     tile S = score_fn(Q, M) becomes output rows through
     emit(qid, ids, S) inside the worker."""
-    from ._bc import register
-
     sc = src.sparkSession.sparkContext
-    bc = register(key, sc.broadcast(mat))
+    bc = own(sc.broadcast(mat))
 
     def gen(batches):
         ids_b, M = bc.value
@@ -231,8 +230,7 @@ def _exact_topk(df, id_col, vec_col, topk, score_name, exact_bits,
     if mat is not None:
         t = dict(df.dtypes)[id_col]
         return _broadcast_scored(
-            src, mat, f"topk_matrix_{score_name}", score_fn,
-            _emit_topk(topk, score_name),
+            src, mat, score_fn, _emit_topk(topk, score_name),
             f"vec_id {t}, neighbor_id {t}, {score_name} bigint, rank int",
         )
     scored = _cross(src, "vec_id", "neighbor_id", operator.ne).select(
@@ -360,8 +358,8 @@ def cosine_dup_pairs(
     if mat is not None:
         t = dict(df.dtypes)[id_col]
         return _broadcast_scored(
-            src, mat, "cosine_pairs_matrix", _cos_q_scores,
-            _emit_pairs(thr_q), f"id_a {t}, id_b {t}, cos_q bigint",
+            src, mat, _cos_q_scores, _emit_pairs(thr_q),
+            f"id_a {t}, id_b {t}, cos_q bigint",
         )
     return (
         _cross(src, "id_a", "id_b", operator.lt)
@@ -514,10 +512,9 @@ def _ann_topk(cand: DataFrame, src: DataFrame, mat, topk: int) -> DataFrame:
     (cosine desc, neighbor_id asc) ranking, so the same rows."""
     if mat is not None:
         from ..session import plan_width
-        from ._bc import register
 
         sess = src.sparkSession
-        bc = register("ann_topk_matrix", sess.sparkContext.broadcast(mat))
+        bc = own(sess.sparkContext.broadcast(mat))
         t = dict(src.dtypes)["id"]
         return cand.repartition(plan_width(sess), "vec_id").mapInPandas(
             _ann_scored_partition(bc, topk),
@@ -643,10 +640,8 @@ def ivf_topk_cosine(
             .orderBy("__h").limit(n_cells).select("v").toPandas()
         )
         C = np.stack(cent_pdf["v"].to_numpy()).astype(np.float64)
-    from ._bc import register
-
     C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-    bc = register("ivf_centroids", sess.sparkContext.broadcast(C))
+    bc = own(sess.sparkContext.broadcast(C))
 
     from pyspark.sql.functions import pandas_udf
 

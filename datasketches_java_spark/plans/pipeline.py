@@ -23,9 +23,10 @@ id64, candidates by id_a: verify's first join needs no exchange).
 Each stage's row count is observed in the job that materializes its
 leaf. The boundary `clusters` frame stays a lazy persist over the
 labels leaf, so its collect and the audit join share one id-map join +
-min-name window. `spark.catalog.clearCache()` does not free local
-checkpoints: `PipelineResult.release()` frees one result, and
-`release_cached_results()` frees the `run_pipeline_cached` memo.
+min-name window. Each result's leaves and boundary cache belong to its
+own `RunScope` (scope.py), owned in turn by the caller's open scope:
+`spark.catalog.clearCache()` does not free local checkpoints, but
+closing the caller's scope or `PipelineResult.release()` does.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from ..operators.cluster import connected_components, name_clusters
 from ..operators.lsh import candidate_pairs
 from ..operators.signatures import compute_signatures, explode_bands, id_map
 from ..operators.verify import verify_pairs
+from ..scope import RunScope, own
 from ..sources import tables
 
 
@@ -54,36 +56,11 @@ class PipelineResult:
     verified: DataFrame      # boundary schema: string id_a < id_b + scores
     clusters: DataFrame      # boundary schema: image_id, cluster_id, cluster_size
     metrics: dict = field(default_factory=dict)
+    scope: RunScope = field(default_factory=RunScope)
 
     def release(self) -> None:
         """Free the stage leaves and the boundary cache."""
-        self.clusters.unpersist()
-        for df in (self.signatures, self.candidates, self.verified64,
-                   self.labels64):
-            plan = df._jdf.logicalPlan()
-            if plan.nodeName() == "LogicalRDD":  # a leaf, not a read-back
-                plan.rdd().unpersist(False)
-
-
-# memoized results for repeated queries over the same corpus in one session
-_RESULT_CACHE: dict = {}
-
-
-def run_pipeline_cached(
-    spark: SparkSession, corpus: DataFrame, cfg: DedupConfig, cache_key: str
-) -> PipelineResult:
-    key = (id(spark), cache_key, cfg.config_hash())
-    if key not in _RESULT_CACHE:
-        _RESULT_CACHE[key] = run_pipeline(spark, corpus, cfg)
-    return _RESULT_CACHE[key]
-
-
-def release_cached_results() -> None:
-    """Release and forget every memoized run_pipeline_cached result.
-    Its leaves would otherwise outlive spark.catalog.clearCache() and
-    turn a later repetition of the same query into a cache hit."""
-    while _RESULT_CACHE:
-        _RESULT_CACHE.popitem()[1].release()
+        self.scope.close()
 
 
 def _stage(
@@ -93,6 +70,8 @@ def _stage(
     build,
     metrics: dict,
     force: bool = False,
+    *,
+    scope: RunScope,
 ):
     """Run (or resume) one stage; record wall time + row count.
 
@@ -102,7 +81,8 @@ def _stage(
     a later consumer's query, and its row count is observed in that
     same job. With a checkpoint root the parquet/Iceberg read-back is
     already a leaf; neither it nor a resumed stage has a materializing
-    job of its own here, so those lanes count with one more query."""
+    job of its own here, so those lanes count with one more query.
+    The leaf belongs to `scope`."""
     t0 = time.time()
     if root is not None and not force and tables.checkpoint_exists(
             root, name, spark=spark):
@@ -123,7 +103,7 @@ def _stage(
         metrics[f"{name}_resumed"] = False
     if root is None:
         obs = Observation()
-        df = _leaf(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        df = scope.own(_leaf(df.observe(obs, F.count(F.lit(1)).alias("rows"))))
         metrics[f"{name}_rows"] = obs.get["rows"]
     else:
         metrics[f"{name}_rows"] = df.count()
@@ -152,11 +132,7 @@ def _corpus_fingerprint(corpus: DataFrame) -> str:
     limits, in-memory frames)."""
     import hashlib
 
-    try:
-        files = sorted(corpus.inputFiles())
-    except Exception:
-        files = []
-    basis = "|".join(files) + f"#%{corpus.semanticHash()}"
+    basis = "|".join(sorted(corpus.inputFiles())) + f"#%{corpus.semanticHash()}"
     return hashlib.sha256(basis.encode()).hexdigest()[:10]
 
 
@@ -226,31 +202,32 @@ def run_pipeline(
     else:
         _key_prefix = ""
 
+    scope = own(RunScope())  # the result's; the caller's scope owns it
     signatures = _stage(
         spark, checkpoint_root, _key_prefix + "signatures",
         lambda: compute_signatures(corpus, cfg, remap=remap, key=id_key),
-        metrics,
+        metrics, scope=scope,
     )
     candidates = _stage(
         spark, checkpoint_root, _key_prefix + "candidates",
         lambda: candidate_pairs(explode_bands(signatures), cfg), metrics,
+        scope=scope,
     )
     verified64 = _stage(
         spark, checkpoint_root, _key_prefix + "verified",
         lambda: verify_pairs(candidates, signatures, cfg), metrics,
+        scope=scope,
     )
 
     vertices = signatures.select("id64")
-    cc_caches: list = []
-    labels64 = _stage(
-        spark, checkpoint_root, _key_prefix + "clusters",
-        lambda: connected_components(
-            verified64.select("id_a", "id_b"), vertices,
-            n_edges=metrics["verified_rows"], caches=cc_caches,
-        ), metrics,
-    )
-    for df in cc_caches:  # the labels leaf now holds what these cached
-        df.unpersist()
+    with RunScope():  # what CC caches, freed once the labels leaf holds it
+        labels64 = _stage(
+            spark, checkpoint_root, _key_prefix + "clusters",
+            lambda: connected_components(
+                verified64.select("id_a", "id_b"), vertices,
+                n_edges=metrics["verified_rows"],
+            ), metrics, scope=scope,
+        )
 
     # boundary remaps: internal int64 keys → image_id strings. The id
     # map is two slim columns; broadcast at this scale, bucketed join at
@@ -258,11 +235,12 @@ def run_pipeline(
     # bench loop, audits) never pay for it.
     idmap = id_map(corpus, remap=remap, key=id_key)
     verified = _remap_pairs(verified64, idmap)
-    clusters = name_clusters(labels64, F.broadcast(idmap), "id64").persist()
+    clusters = scope.own(
+        name_clusters(labels64, F.broadcast(idmap), "id64").persist())
 
     result = PipelineResult(
         signatures, candidates, verified64, labels64, verified, clusters,
-        metrics,
+        metrics, scope,
     )
     if with_audits:
         from ..operators.audits import cluster_audits

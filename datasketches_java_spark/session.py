@@ -26,14 +26,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# This sandbox's page-fault cost makes glibc's default mmap/munmap of
-# large (>128 KiB) buffers pathological: a fresh 28 MB NumPy temp costs
-# ~2 s on first touch. Keeping big allocations on the heap (reused, no
-# munmap) makes warm NumPy kernels 20-50x faster. Must be set before
-# the JVM forks Python workers so they inherit it.
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "2147483648")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "2147483648")
-
 
 def get_spark(
     app: str = "datasketches_java_spark",

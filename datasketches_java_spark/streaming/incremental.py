@@ -45,13 +45,9 @@ _CURRENT = "CURRENT"
 
 def _current_manifest(state_dir: str) -> tuple[str | None, dict]:
     """(manifest name, manifest dict) of the committed state. The dict
-    carries "buckets" (bucket→delta-dir map), plus — for manifests
-    written since the run-unique versioning fix — "commit" (monotone
-    commit index) and "batch" (the writing stream's namespaced batch
-    token, for retry detection). Legacy single-directory layouts
-    (round-3 full-rewrite states, or a bare state_vN dir) surface as
-    buckets={"*": dirname}: every bucket reads from that one directory
-    until the next batch migrates it."""
+    carries "buckets" (bucket→delta-dir map), "commit" (monotone commit
+    index) and "batch" (the writing stream's namespaced batch token,
+    for retry detection)."""
     ptr = os.path.join(state_dir, _CURRENT)
     if not os.path.exists(ptr):
         return None, {"buckets": {}}
@@ -63,8 +59,6 @@ def _current_manifest(state_dir: str) -> tuple[str | None, dict]:
             man = json.load(f)
         man.setdefault("buckets", {})
         return name, man
-    if os.path.isdir(path):  # legacy whole-state directory
-        return name, {"buckets": {"*": name}}
     return None, {"buckets": {}}
 
 
@@ -81,8 +75,6 @@ def _flip_current(state_dir: str, manifest_name: str) -> None:
 def _bucket_paths(state_dir: str, bmap: dict, buckets=None) -> list[str]:
     """Parquet paths for the given buckets (all when None) under the
     manifest map, skipping buckets never written."""
-    if "*" in bmap:  # legacy: single directory holds everything
-        return [os.path.join(state_dir, bmap["*"])]
     items = bmap.items() if buckets is None else (
         (str(b), bmap.get(str(b))) for b in buckets
     )
@@ -129,7 +121,7 @@ def run_incremental_signatures(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cur_name, prev_man = _current_manifest(state_dir)
+        _, prev_man = _current_manifest(state_dir)
         prev_map = prev_man["buckets"]
         # batch token namespaced by the checkpoint's persistent query
         # id: raw batch_ids are only unique PER CHECKPOINT, so a fresh
@@ -137,22 +129,13 @@ def run_incremental_signatures(
         # false-match a historic batch — and version names must never
         # collide with directories a live manifest still references.
         token = f"{_stream_tag(checkpoint_dir)}:{int(batch_id)}"
-        if prev_man.get("batch") == token or (
-            "batch" not in prev_man
-            and cur_name == f"MANIFEST_v{batch_id}.json"
-        ):
+        if prev_man.get("batch") == token:
             # retry of an already-committed batch (failure landed between
             # the CURRENT flip and the stream-checkpoint commit): state
             # already includes this batch — the KMV union is idempotent,
             # so skipping preserves exactly-once semantics.
             return
         commit = int(prev_man.get("commit", -1)) + 1
-        if "commit" not in prev_man and cur_name:
-            # legacy manifests were named by batch_id — start above it
-            import re as _re
-
-            m = _re.search(r"_v(\d+)", cur_name)
-            commit = (int(m.group(1)) + 1) if m else 0
         version = f"delta_c{commit}"
         manifest_name = f"MANIFEST_c{commit}.json"
         new = kmv_sketch_bytes_agg(
@@ -163,23 +146,10 @@ def run_incremental_signatures(
             r[0] for r in
             new.select(_bucket_of(F.col(group_col)).alias("b")).distinct().collect()
         )
-        legacy = "*" in prev_map
-        prev_paths = _bucket_paths(
-            state_dir, prev_map, None if legacy else touched
-        )
+        prev_paths = _bucket_paths(state_dir, prev_map, touched)
         if prev_paths:
-            prev_df = sess.read.parquet(*prev_paths).select(group_col, "sketch")
-            if legacy:
-                # one-time migration: fold the whole legacy state in, so
-                # every bucket lands in the new bucketed layout
-                new = new.unionByName(prev_df)
-                touched = sorted(
-                    r[0] for r in new.select(
-                        _bucket_of(F.col(group_col)).alias("b")
-                    ).distinct().collect()
-                )
-            else:
-                new = new.unionByName(prev_df)
+            new = new.unionByName(
+                sess.read.parquet(*prev_paths).select(group_col, "sketch"))
         # distributed merge of touched buckets only: per-group sketch
         # union on executors, written partitioned by bucket
         merged = reduce_partials(
@@ -187,7 +157,7 @@ def run_incremental_signatures(
         ).withColumn("bucket", _bucket_of(F.col(group_col)))
         out = os.path.join(state_dir, version)
         merged.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        new_map = {} if legacy else dict(prev_map)
+        new_map = dict(prev_map)
         for b in touched:
             new_map[str(b)] = version
         mpath = os.path.join(state_dir, manifest_name)
@@ -206,8 +176,7 @@ def run_incremental_signatures(
         referenced = set(new_map.values()) | set(prev_map.values())
         for d in os.listdir(state_dir):
             if (
-                (d.startswith("delta_v") or d.startswith("delta_c")
-                 or d.startswith("state_v"))
+                d.startswith("delta_c")
                 and d not in referenced
                 and os.path.isdir(os.path.join(state_dir, d))
             ):
@@ -227,14 +196,10 @@ def read_state_estimates(state_dir: str, k: int = 256) -> pd.DataFrame:
     import glob as _glob
 
     _, man = _current_manifest(state_dir)
-    bmap = man["buckets"]
-    if bmap:
-        dirs = _bucket_paths(state_dir, bmap)
-        files = [
-            f for d in dirs for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
-        ]
-    else:  # legacy single-file layout
-        files = [os.path.join(state_dir, "kmv_state.parquet")]
+    files = [
+        f for d in _bucket_paths(state_dir, man["buckets"])
+        for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
+    ]
     state = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
     rows = []
     for g, b in zip(state.iloc[:, 0], state["sketch"]):

@@ -1,5 +1,5 @@
 """Regression tests for the round-4 advice findings: broadcast
-lifecycle (unpersist-not-destroy + keyed registry), empty-build-side
+lifecycle (a closed scope unpersists, never destroys), empty-build-side
 guards in the bloom/count-min probes, the integer-exactness guard in
 the top-k matmul plan, and grace-period GC in the streaming state."""
 
@@ -9,31 +9,55 @@ from pyspark.sql import functions as F
 
 
 def test_ssjoin_prior_result_survives_second_call(spark):
-    """A not-yet-materialized ssjoin result must still execute after a
-    SECOND ssjoin call releases the first call's cache (round-4 medium:
-    destroy()d bitmap broadcasts failed such plans hard; unpersist only
-    evicts executor copies)."""
+    """A not-yet-materialized ssjoin result must still execute after the
+    scope that owned its cache and bitmap broadcast closed, and after a
+    second call in a scope of its own (round-4 medium: destroy()d
+    bitmap broadcasts failed such plans hard; unpersist only evicts
+    executor copies)."""
     from datasketches_java_spark.operators.dedup_relational import (
         ssjoin_jaccard_pairs,
     )
+    from datasketches_java_spark.scope import RunScope
 
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " + str(i % 3))
          for i in range(30)],
         "id bigint, text string",
     )
-    first = ssjoin_jaccard_pairs(docs, "id", "text", k=5, threshold=0.8)
+    with RunScope():
+        first = ssjoin_jaccard_pairs(docs, "id", "text", k=5, threshold=0.8)
     other = spark.createDataFrame(
         [(i, "pack my box with five dozen liquor jugs " + str(i % 2))
          for i in range(20)],
         "id bigint, text string",
     )
-    second = ssjoin_jaccard_pairs(other, "id", "text", k=5, threshold=0.8)
-    # materialize the FIRST result only after the second call released
-    # its cache — must recompute (possibly re-broadcast), not raise
+    with RunScope():
+        second = ssjoin_jaccard_pairs(other, "id", "text", k=5, threshold=0.8)
+        n2 = second.count()
+    # materialize the FIRST result only after both scopes closed — it
+    # must recompute over its unpersisted broadcast, not raise
     n1 = first.count()
-    n2 = second.count()
     assert n1 > 0 and n2 > 0
+
+
+def test_closed_scope_broadcast_still_serves(spark):
+    """A frame returned inside a closed scope that closes over a
+    broadcast (the bloom probe's filter) returns the same rows after
+    the close: the broadcast is unpersisted, not destroyed."""
+    from datasketches_java_spark.operators.filters import (
+        bloom_build, bloom_might_contain,
+    )
+    from datasketches_java_spark.scope import RunScope
+
+    build = spark.range(0, 400, 2).withColumnRenamed("id", "k")
+    probe = spark.range(0, 400).withColumnRenamed("id", "k")
+    with RunScope() as scope:
+        out = bloom_might_contain(probe, "k", bloom_build(build, "k", max_distinct=256))
+        assert scope._owned  # the filter's broadcast
+        inside = sorted(r.k for r in out.collect())
+    assert not scope._owned
+    assert sorted(r.k for r in out.collect()) == inside
+    assert set(range(0, 400, 2)) <= set(inside)
 
 
 def test_bloom_probe_empty_build_side(spark):
@@ -83,19 +107,6 @@ def test_matrix_fits_accepts_unit_range(spark):
     )
     src = ok.withColumnRenamed("emb", "v")
     assert _collect_matrix(src, exact_bits=53) is not None
-
-
-def test_bc_registry_unpersists_previous(spark):
-    from datasketches_java_spark.operators import _bc
-
-    b1 = spark.sparkContext.broadcast([1, 2, 3])
-    b2 = spark.sparkContext.broadcast([4, 5, 6])
-    assert _bc.register("t_key", b1) is b1
-    assert _bc.register("t_key", b2) is b2
-    # b1 was unpersisted, not destroyed: its value is still readable
-    assert b1.value == [1, 2, 3]
-    _bc.release_all()
-    assert b2.value == [4, 5, 6]
 
 
 def test_streaming_gc_grace_period(spark, tmp_path):

@@ -167,6 +167,7 @@ def test_ssjoin_fallback_matches_bitmap_on_nonascii_and_empty(spark, monkeypatch
     import pandas as pd
 
     from datasketches_java_spark.operators import dedup_relational as dr
+    from datasketches_java_spark.scope import RunScope
 
     rows = pd.DataFrame({
         "doc_id": [f"d{i}" for i in range(8)],
@@ -182,11 +183,10 @@ def test_ssjoin_fallback_matches_bitmap_on_nonascii_and_empty(spark, monkeypatch
     df = spark.createDataFrame(rows)
 
     def pairs():
-        out = dr.ssjoin_jaccard_pairs(df, "doc_id", "text", threshold=0.5)
-        got = {(r.id_a, r.id_b): round(r.jaccard_exact, 9)
-               for r in out.collect()}
-        dr.release_ssjoin_cache()
-        return got
+        with RunScope():
+            out = dr.ssjoin_jaccard_pairs(df, "doc_id", "text", threshold=0.5)
+            return {(r.id_a, r.id_b): round(r.jaccard_exact, 9)
+                    for r in out.collect()}
 
     fast = pairs()
     # force the shuffled rescore fallback

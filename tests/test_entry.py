@@ -32,10 +32,19 @@ def duck(smoke_sf_dir):
 
 @pytest.mark.parametrize("name", sorted(entrymod.oracle_sql().keys()))
 def test_oracle_query_matches(spark, smoke_sf_dir, duck, name):
-    sdf = entrymod.queries()[name](spark, smoke_sf_dir).toPandas()
+    """The query's rows match the oracle's, and once the query's scope
+    and the shared pipeline runs are closed, no RDD it persisted stays."""
+    from datasketches_java_spark.scope import RunScope
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with RunScope():
+        sdf = entrymod.queries()[name](spark, smoke_sf_dir).toPandas()
+    entrymod.SHARED_RUNS.close()
     odf = duck.sql(entrymod.oracle_sql()[name]).df()
     problems = compare(sdf, odf)
     assert not problems, problems
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
 
 
 def test_all_queries_have_impl():

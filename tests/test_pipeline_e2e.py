@@ -60,18 +60,24 @@ def test_clusters_cover_golden_clusters(spark, smoke_sf_dir, result):
 
 def test_checkpoint_resume_reproduces(spark, smoke_sf_dir, tmp_path):
     """Kill-after-stage-k resumability (SURVEY.md §5 g): a second run
-    over existing checkpoints resumes and reproduces identical pairs."""
+    over existing checkpoints resumes and reproduces identical pairs,
+    for a parquet-backed corpus and for an in-memory one (whose
+    checkpoint key has no input files, only the plan hash)."""
     corpus = tables.load_corpus(spark, smoke_sf_dir).limit(400)
-    root = str(tmp_path / "ckpt")
-    r1 = run_pipeline(spark, corpus, FROZEN, checkpoint_root=root)
-    assert r1.metrics["signatures_resumed"] is False
-    r2 = run_pipeline(spark, corpus, FROZEN, checkpoint_root=root)
-    assert r2.metrics["signatures_resumed"] is True
-    assert r2.metrics["verified_resumed"] is True
-    a = r1.verified.select("id_a", "id_b").sort("id_a", "id_b").collect()
-    b = r2.verified.select("id_a", "id_b").sort("id_a", "id_b").collect()
-    assert a == b
-    assert r1.metrics["verified_rows"] == r2.metrics["verified_rows"]
+    in_memory = spark.createDataFrame(
+        corpus.select("image_id", "caption", "phash").toPandas())
+    assert in_memory.inputFiles() == []
+    for i, c in enumerate((corpus, in_memory)):
+        root = str(tmp_path / f"ckpt{i}")
+        r1 = run_pipeline(spark, c, FROZEN, checkpoint_root=root)
+        assert r1.metrics["signatures_resumed"] is False
+        r2 = run_pipeline(spark, c, FROZEN, checkpoint_root=root)
+        assert r2.metrics["signatures_resumed"] is True
+        assert r2.metrics["verified_resumed"] is True
+        a = r1.verified.select("id_a", "id_b").sort("id_a", "id_b").collect()
+        b = r2.verified.select("id_a", "id_b").sort("id_a", "id_b").collect()
+        assert a and a == b
+        assert r1.metrics["verified_rows"] == r2.metrics["verified_rows"]
 
 
 def test_signature_stage_prunes_bytes_column(spark, smoke_sf_dir, result):

@@ -3,9 +3,9 @@
 A leaf keeps the hash partitioning of its last exchange, so verify's
 first join is exchange-free; it carries no upstream plan, so later
 queries stop re-rendering nested cached plans; its blocks outlive
-spark.catalog.clearCache(), so PipelineResult.release() and
-release_cached_results() free them. The checkpoint-root lane (parquet
-read-back) must return the same rows."""
+spark.catalog.clearCache(), so the result's RunScope owns them, and
+PipelineResult.release() or closing the caller's scope frees them. The
+checkpoint-root lane (parquet read-back) must return the same rows."""
 
 import os
 import shutil
@@ -128,11 +128,4 @@ def test_release_frees_every_block(spark, corpus):
     assert persisted() - before
     res.release()
     assert not persisted() - before
-
-    key = "leaves-test"
-    memo = pipeline.run_pipeline_cached(spark, corpus, FROZEN, key)
-    memo.clusters.toPandas()
-    assert persisted() - before
-    pipeline.release_cached_results()
-    assert not pipeline._RESULT_CACHE
-    assert not persisted() - before
+    res.release()  # a second release is a no-op
