@@ -1,11 +1,15 @@
-"""Reference Bloom filter interop — probe schedule + serial v1 wire
-format (filters/bloomfilter/BloomFilter.java, HeapBitArray.java).
+"""Bloom filter — the reference probe schedule and serial-v1 wire
+format (filters/bloomfilter/BloomFilter.java, HeapBitArray.java,
+builder sizing formulas BloomFilterBuilder.java:50-142).
 
-The engine's own `kernels/bloom.py` keeps its documented
-Kirsch–Mitzenmacher construction (same FPP guarantees, fastest NumPy
-shape); THIS module is the migration lane: a filter that sets/tests
-exactly the bits the reference does, so serialized images exchange
-losslessly in both directions and membership answers agree bit-for-bit.
+This is the engine's only Bloom filter: `operators/filters.py` builds,
+merges, broadcasts and probes it, so every filter the engine writes is
+an image the Java library heapifies, and a Java image queries
+identically here. Semantics mirror the reference: an m-bit array, h
+probes per item, `update` sets bits, `query` tests them (no false
+negatives, false-positive probability ~(1-e^{-hn/m})^h), and
+`union`/`intersect` are bitwise OR/AND of filters with identical
+(m, h, seed) (BloomFilter.java:681,695).
 
 Probe schedule (BloomFilter.java:268-270, 371-378): for item v,
   h0 = XXH64(v, seed);  h1 = XXH64(v, h0)
@@ -32,6 +36,8 @@ all little-endian:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from .hashing import popcount64, xxhash64_long
@@ -39,6 +45,28 @@ from .hashing import popcount64, xxhash64_long
 _FAMILY = 21
 _SER_VER = 1
 _EMPTY_FLAG = 4
+
+
+def suggest_num_hashes_from_size(max_distinct: int, num_bits: int) -> int:
+    """BloomFilterBuilder.suggestNumHashes(maxDistinctItems, numFilterBits)
+    (BloomFilterBuilder.java:50-55): ceil((m/n)·ln2), min 1."""
+    return max(1, math.ceil((num_bits / max_distinct) * math.log(2.0)))
+
+
+def suggest_num_hashes(target_fpp: float) -> int:
+    """BloomFilterBuilder.suggestNumHashes(targetFalsePositiveProb)
+    (BloomFilterBuilder.java:63-68): ceil(-log2(p))."""
+    if not (0.0 < target_fpp <= 1.0):
+        raise ValueError("target FPP must be in (0, 1]")
+    return math.ceil(-math.log(target_fpp) / math.log(2.0))
+
+
+def suggest_num_filter_bits(max_distinct: int, target_fpp: float) -> int:
+    """BloomFilterBuilder.suggestNumFilterBits (BloomFilterBuilder.java:78-80):
+    ceil(-n·ln(p) / ln(2)²)."""
+    if max_distinct <= 0:
+        raise ValueError("maxDistinctItems must be positive")
+    return math.ceil((-max_distinct * math.log(target_fpp)) / (math.log(2.0) ** 2))
 
 
 class RefBloomFilter:

@@ -1,15 +1,18 @@
-"""Reference Count-Min interop — row-hash schedule + serial v1 wire
-format (count/CountMinSketch.java; format shared with datasketches-cpp
-per CountMinSketch.java:38).
+"""Count-Min sketch — the reference row-hash schedule and serial-v1
+wire format (count/CountMinSketch.java; format shared with
+datasketches-cpp per CountMinSketch.java:38).
 
-The engine's own `kernels/countmin.py` keeps its documented
-independent-mix construction (same ε/δ guarantees); THIS module is the
-migration lane: per-row seeds drawn from `java.util.Random(seed)`
-exactly as the reference draws them (CountMinSketch.java:112-115) and
-bucket indexes from the byte-exact MurmurHash3 lane
-(CountMinSketch.java:127-136: floorMod(mmh3(longToBytes(v), rowSeed)[0],
-numBuckets)), so a sketch image written by Java/C++ estimates
-identically here and vice versa.
+This is the engine's only Count-Min: `operators/filters.py` builds,
+merges, broadcasts and scores it, so a sketch image written by
+Java/C++ estimates identically here and vice versa. d×w counter
+matrix; point estimate = min over the d rows (CountMinSketch.java:
+255-278: est >= true, and est <= true + ε·N with probability 1-δ for
+w = ceil(e/ε), d = ceil(ln(1/δ))); merge = elementwise add
+(CountMinSketch.java:365). Per-row seeds are drawn from
+`java.util.Random(seed)` exactly as the reference draws them
+(CountMinSketch.java:112-115) and bucket indexes come from the
+byte-exact MurmurHash3 lane (CountMinSketch.java:127-136:
+floorMod(mmh3(longToBytes(v), rowSeed)[0], numBuckets)).
 
 Wire layout (CountMinSketch.java:399-493), little-endian:
   byte 0      preLongs = 2 (Family.COUNTMIN, common/Family.java:150)
@@ -28,6 +31,8 @@ Wire layout (CountMinSketch.java:399-493), little-endian:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from .mmh3 import compute_seed_hash, mmh3_128_longs
@@ -39,6 +44,20 @@ _EMPTY_FLAG = 1
 _LCG_MULT = 0x5DEECE66D
 _LCG_ADD = 0xB
 _LCG_MASK = (1 << 48) - 1
+
+
+def suggest_num_hashes(confidence: float) -> int:
+    """ceil(ln(1/(1-confidence))), capped at 127 (CountMinSketch.java:191-196)."""
+    if not (0.0 <= confidence < 1.0):
+        raise ValueError("confidence must be in [0, 1)")
+    return min(max(1, math.ceil(math.log(1.0 / (1.0 - confidence)))), 127)
+
+
+def suggest_num_buckets(relative_error: float) -> int:
+    """ceil(e/relativeError) (CountMinSketch.java:204-209)."""
+    if relative_error <= 0.0:
+        raise ValueError("relative error must be positive")
+    return math.ceil(math.e / relative_error)
 
 
 class JavaRandom:

@@ -9,7 +9,8 @@ sum_i min(w_i/tau, 1) = k; items with w_i > tau ("heavy") are kept
 exactly with their true weight; exactly k - |heavy| of the light items
 are drawn by systematic PPS (inclusion probability w_i/tau) and carry
 adjusted weight tau. Subset-sum estimates over the adjusted weights
-are unbiased with variance-optimal fixed-size design.
+are unbiased with variance-optimal fixed-size design; the reference's
+estimator and bounds are `sampling_compat.varopt_estimate_subset_sum`.
 
 Merge = concatenate samples (adjusted weights) and re-run the batch
 construction: each stage preserves E[adjusted weight] = true weight
@@ -82,27 +83,3 @@ def varopt_sample(
     adj = np.concatenate([weights[heavy], np.full(len(chosen), tau)])
     return items[sel], adj, float(tau)
 
-
-def estimate_subset_sum(
-    sample_items: np.ndarray, adj_weights: np.ndarray, mask: np.ndarray,
-    num_std_dev: float = 2.0, *, tau: float,
-) -> tuple[float, float, float]:
-    """(lb, est, ub) for the true total weight of the subset selected by
-    `mask`, from a VarOpt sample (reference estimateSubsetSum,
-    VarOptItemsSketch.java:640). Normal-approximation bounds from the
-    per-item Horvitz-Thompson variance of the thresholded design.
-
-    `tau` is the sample's threshold (returned by varopt_sample): with
-    tau = 0 (exact passthrough) no item carries variance."""
-    adj = np.asarray(adj_weights, dtype=np.float64)
-    m = np.asarray(mask, dtype=bool)
-    est = float(adj[m].sum())
-    if len(adj) == 0 or not m.any():
-        return 0.0, 0.0, 0.0
-    if tau <= 0:
-        return est, est, est  # exact sample: zero variance
-    light = m & (adj <= tau * (1 + 1e-12))
-    # var of HT estimator per light item ≈ tau² - tau·w <= tau²
-    var = float((adj[light] ** 2).sum())
-    sd = np.sqrt(var)
-    return max(0.0, est - num_std_dev * sd), est, est + num_std_dev * sd

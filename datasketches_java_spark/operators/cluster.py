@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
 
-from ..scope import own
+from ..scope import RunScope, own
 
 
 def _pq_checkpoint(df: DataFrame, root: str, name: str) -> DataFrame:
@@ -276,12 +276,12 @@ def connected_components(
                 # cache instead of re-running both contraction chains
                 # (the two writes are separate Spark jobs — without
                 # this, every round paid ~2x its shuffle cost)
-                m1, m2 = m1.persist(), m2.persist()
-                E = _pq_checkpoint(E2, state_root, f"edges_{rounds}")
-                new_labels = _apply_map(_apply_map(labels, m1), m2)
-                labels = _pq_checkpoint(new_labels, state_root, f"labels_{rounds}")
-                m1.unpersist(blocking=False)
-                m2.unpersist(blocking=False)
+                with RunScope():
+                    m1, m2 = own(m1.persist()), own(m2.persist())
+                    E = _pq_checkpoint(E2, state_root, f"edges_{rounds}")
+                    new_labels = _apply_map(_apply_map(labels, m1), m2)
+                    labels = _pq_checkpoint(new_labels, state_root,
+                                            f"labels_{rounds}")
                 remaining = E.count()
                 for name in (f"labels_{rounds - 2}", f"edges_{rounds - 2}"):
                     shutil.rmtree(os.path.join(state_root, name), ignore_errors=True)

@@ -1,5 +1,5 @@
-"""Distributed Bloom-filter and Count-Min operators over the NumPy
-kernels (kernels/bloom.py, kernels/countmin.py).
+"""Distributed Bloom-filter and Count-Min operators over the reference
+sketches (kernels/bloom_compat.py, kernels/countmin_compat.py).
 
 Both sketches are mergeable (Bloom: bitwise OR, BloomFilter.java:681;
 Count-Min: elementwise add, CountMinSketch.java:365), so they follow
@@ -8,6 +8,11 @@ partial per Arrow batch → single-group merge → broadcast the compact
 final sketch to the probe side. The build side never shuffles raw
 rows — only O(sketch) bytes per batch cross the wire, which is the
 whole point of a shuffle-reduction prefilter at 100 TB.
+
+Every partial, merged sketch and broadcast blob is the reference's
+serial-v1 image: `bloom_build`'s `sketch` column is a filter that
+datasketches-java's `BloomFilter.heapify` reads, and its
+`query(xxhash64(key))` answers as `bloom_might_contain` does.
 """
 
 from __future__ import annotations
@@ -19,29 +24,28 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.bloom import BloomFilter, suggest_num_filter_bits, \
-    suggest_num_hashes_from_size
-from ..kernels.countmin import CountMinSketch
+from ..kernels import bloom_compat, countmin_compat
 from ..scope import own
 
 
 def bloom_build(df: DataFrame, key_col: str, max_distinct: int,
                 target_fpp: float = 0.01, seed: int = 9001) -> DataFrame:
-    """One-row DataFrame holding the serialized Bloom filter of
-    xxhash64(key_col). Sized by the reference builder formulas."""
-    m = suggest_num_filter_bits(max_distinct, target_fpp)
-    h = suggest_num_hashes_from_size(max_distinct, m)
+    """One-row DataFrame holding the Bloom filter of xxhash64(key_col)
+    as a reference serial-v1 image. Sized by the reference builder
+    formulas."""
+    m = bloom_compat.suggest_num_filter_bits(max_distinct, target_fpp)
+    h = bloom_compat.suggest_num_hashes_from_size(max_distinct, m)
     keys = df.select(F.xxhash64(key_col).alias("k"))
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(m, h, seed)
+        bf = bloom_compat.RefBloomFilter(m, h, seed)
         nonempty = False
         for pdf in batches:
             if len(pdf):
-                bf.update(pdf["k"].to_numpy(np.int64).astype(np.uint64))
+                bf.update(pdf["k"].to_numpy(np.int64))
                 nonempty = True
         if nonempty:
-            yield pd.DataFrame({"sketch": [bf.serialize()]})
+            yield pd.DataFrame({"sketch": [bloom_compat.to_ref_bytes(bf)]})
 
     partials = keys.mapInPandas(partial, "sketch binary")
 
@@ -49,10 +53,10 @@ def bloom_build(df: DataFrame, key_col: str, max_distinct: int,
         out = None
         for pdf in batches:
             for b in pdf["sketch"]:
-                nxt = BloomFilter.deserialize(b)
+                nxt = bloom_compat.from_ref_bytes(b)
                 out = nxt if out is None else out.union(nxt)
         if out is not None:
-            yield pd.DataFrame({"sketch": [out.serialize()]})
+            yield pd.DataFrame({"sketch": [bloom_compat.to_ref_bytes(out)]})
 
     # repartition(1) (single round-robin reduce task over O(filter)-
     # sized partial rows) instead of a groupBy(1) hash exchange whose
@@ -93,11 +97,11 @@ def bloom_might_contain(
     bc = own(probe.sparkSession.sparkContext.broadcast(blob))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter.deserialize(bc.value)
+        bf = bloom_compat.from_ref_bytes(bc.value)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ok = bf.query(pdf[kcol].to_numpy(np.int64).astype(np.uint64))
+            ok = bf.query(pdf[kcol].to_numpy(np.int64))
             yield pdf.loc[ok, cols]
 
     return with_k.mapInPandas(gen, schema)
@@ -119,14 +123,14 @@ def countmin_counts(
     )
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = CountMinSketch(num_hashes, num_buckets, seed)
+        cm = countmin_compat.RefCountMin(num_hashes, num_buckets, seed)
         nonempty = False
         for pdf in batches:
             if len(pdf):
-                cm.update(pdf["k"].to_numpy(np.int64).astype(np.uint64))
+                cm.update(pdf["k"].to_numpy(np.int64))
                 nonempty = True
         if nonempty:
-            yield pd.DataFrame({"sketch": [cm.serialize()]})
+            yield pd.DataFrame({"sketch": [countmin_compat.to_ref_bytes(cm)]})
 
     partials = keys.select("k").mapInPandas(partial, "sketch binary")
 
@@ -134,10 +138,10 @@ def countmin_counts(
         out = None
         for pdf in batches:
             for b in pdf["sketch"]:
-                nxt = CountMinSketch.deserialize(b)
+                nxt = countmin_compat.from_ref_bytes(b, seed)
                 out = nxt if out is None else out.merge(nxt)
         if out is not None:
-            yield pd.DataFrame({"sketch": [out.serialize()]})
+            yield pd.DataFrame({"sketch": [countmin_compat.to_ref_bytes(out)]})
 
     # single round-robin reduce task over the O(sketch) partials (see
     # bloom_build note — a groupBy(1) exchange is mostly empty tasks)
@@ -158,11 +162,11 @@ def countmin_counts(
     bc = own(items.sparkSession.sparkContext.broadcast(blob))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = CountMinSketch.deserialize(bc.value)
+        cm = countmin_compat.from_ref_bytes(bc.value, seed)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            est = cm.estimate(pdf["k"].to_numpy(np.int64).astype(np.uint64))
+            est = cm.estimate(pdf["k"].to_numpy(np.int64))
             yield pd.DataFrame({"item": pdf["item"], "cm_count": est})
 
     return distinct.mapInPandas(score, "item string, cm_count bigint")

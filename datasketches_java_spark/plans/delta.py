@@ -65,6 +65,7 @@ from ..operators.signatures import (
     SIG_SCHEMA, compute_signatures, explode_bands, id_map,
 )
 from ..operators.verify import VERIFY_SCHEMA, verify_pairs
+from ..scope import RunScope, own
 
 _MANIFEST = "MANIFEST.json"
 _IDMAP_SCHEMA = "id64 bigint, image_id string"
@@ -154,56 +155,58 @@ def ingest_batch(
         return state_clusters(spark, state_dir) if compute_clusters else None
     sigs_old = _read_batches(spark, state_dir, manifest, "signatures", SIG_SCHEMA)
 
-    sigs_new = compute_signatures(new_corpus, cfg).persist()
-    bands_new = explode_bands(sigs_new)
+    # the scope frees sigs_new even if a write below raises; it closes
+    # before state_clusters, whose CC labels the caller's scope owns
+    with RunScope():
+        sigs_new = own(compute_signatures(new_corpus, cfg).persist())
+        bands_new = explode_bands(sigs_new)
 
-    if sigs_old is None:
-        candidates = candidate_pairs(bands_new, cfg)
-        sigs_all = sigs_new
-    else:
-        touched = bands_new.select("band_key").distinct()
-        bands_old_touched = explode_bands(sigs_old).join(
-            F.broadcast(touched), "band_key", "semi"
+        if sigs_old is None:
+            candidates = candidate_pairs(bands_new, cfg)
+            sigs_all = sigs_new
+        else:
+            touched = bands_new.select("band_key").distinct()
+            bands_old_touched = explode_bands(sigs_old).join(
+                F.broadcast(touched), "band_key", "semi"
+            )
+            new_ids = sigs_new.select("id64").distinct()
+            pairs_all = candidate_pairs(bands_new.unionByName(bands_old_touched), cfg)
+            # keep pairs with >= 1 new member (old x old existed at their
+            # own ingest time); the new-id set is the small delta -> broadcast
+            candidates = pairs_all.join(
+                F.broadcast(new_ids.select(F.col("id64").alias("id_a"))
+                            .withColumn("__na", F.lit(True))),
+                "id_a", "left",
+            ).join(
+                F.broadcast(new_ids.select(F.col("id64").alias("id_b"))
+                            .withColumn("__nb", F.lit(True))),
+                "id_b", "left",
+            ).filter(
+                F.col("__na").isNotNull() | F.col("__nb").isNotNull()
+            ).select("id_a", "id_b")
+            sigs_all = sigs_old.unionByName(sigs_new)
+
+        verified_new = verify_pairs(candidates, sigs_all, cfg)
+
+        batch_id = f"b{len(manifest['batches']):05d}_{uuid.uuid4().hex[:8]}"
+        sig_path = os.path.join(state_dir, "signatures", batch_id)
+        edge_path = os.path.join(state_dir, "verified", batch_id)
+        map_path = os.path.join(state_dir, "idmap", batch_id)
+        n_sig = _write_counted(sigs_new, sig_path)
+        n_edge = _write_counted(verified_new, edge_path)
+        id_map(new_corpus).write.parquet(map_path)
+        manifest["batches"].append(
+            {
+                "id": batch_id,
+                "n_signatures": n_sig,
+                "n_verified": n_edge,
+                "n_idmap": n_sig,
+                "config_hash": cfg.config_hash(),
+                "ts": round(time.time(), 1),
+                **({"epoch": epoch} if epoch is not None else {}),
+            }
         )
-        new_ids = sigs_new.select("id64").distinct()
-        pairs_all = candidate_pairs(bands_new.unionByName(bands_old_touched), cfg)
-        # keep pairs with >= 1 new member (old x old existed at their
-        # own ingest time); the new-id set is the small delta -> broadcast
-        candidates = pairs_all.join(
-            F.broadcast(new_ids.select(F.col("id64").alias("id_a"))
-                        .withColumn("__na", F.lit(True))),
-            "id_a", "left",
-        ).join(
-            F.broadcast(new_ids.select(F.col("id64").alias("id_b"))
-                        .withColumn("__nb", F.lit(True))),
-            "id_b", "left",
-        ).filter(
-            F.col("__na").isNotNull() | F.col("__nb").isNotNull()
-        ).select("id_a", "id_b")
-        sigs_all = sigs_old.unionByName(sigs_new)
-
-    verified_new = verify_pairs(candidates, sigs_all, cfg)
-
-    batch_id = f"b{len(manifest['batches']):05d}_{uuid.uuid4().hex[:8]}"
-    sig_path = os.path.join(state_dir, "signatures", batch_id)
-    edge_path = os.path.join(state_dir, "verified", batch_id)
-    map_path = os.path.join(state_dir, "idmap", batch_id)
-    n_sig = _write_counted(sigs_new, sig_path)
-    n_edge = _write_counted(verified_new, edge_path)
-    id_map(new_corpus).write.parquet(map_path)
-    manifest["batches"].append(
-        {
-            "id": batch_id,
-            "n_signatures": n_sig,
-            "n_verified": n_edge,
-            "n_idmap": n_sig,
-            "config_hash": cfg.config_hash(),
-            "ts": round(time.time(), 1),
-            **({"epoch": epoch} if epoch is not None else {}),
-        }
-    )
-    _flip_manifest(state_dir, manifest)
-    sigs_new.unpersist()
+        _flip_manifest(state_dir, manifest)
     if not compute_clusters:
         return None
     return state_clusters(spark, state_dir)

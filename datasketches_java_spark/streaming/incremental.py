@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.sketch_reduce import reduce_partials
 from ..functions.sketch_udfs import _kmv_union, kmv_sketch_bytes_agg
 from ..kernels import kmv
+from ..scope import RunScope, own
 
 _CURRENT = "CURRENT"
 
@@ -138,35 +139,35 @@ def run_incremental_signatures(
         commit = int(prev_man.get("commit", -1)) + 1
         version = f"delta_c{commit}"
         manifest_name = f"MANIFEST_c{commit}.json"
-        new = kmv_sketch_bytes_agg(
-            batch_df.withColumn(group_col, F.col(group_col).cast("string")),
-            group_col, value_col, k,
-        ).persist()  # read 2-3x below (touched scan + merge write)
-        touched = sorted(
-            r[0] for r in
-            new.select(_bucket_of(F.col(group_col)).alias("b")).distinct().collect()
-        )
-        prev_paths = _bucket_paths(state_dir, prev_map, touched)
-        if prev_paths:
-            new = new.unionByName(
-                sess.read.parquet(*prev_paths).select(group_col, "sketch"))
-        # distributed merge of touched buckets only: per-group sketch
-        # union on executors, written partitioned by bucket
-        merged = reduce_partials(
-            new, group_col, merge_group, f"{group_col} string, sketch binary"
-        ).withColumn("bucket", _bucket_of(F.col(group_col)))
-        out = os.path.join(state_dir, version)
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        new_map = dict(prev_map)
-        for b in touched:
-            new_map[str(b)] = version
-        mpath = os.path.join(state_dir, manifest_name)
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(
-                {"buckets": new_map, "commit": commit, "batch": token}, f)
-        os.replace(mpath + ".tmp", mpath)
-        _flip_current(state_dir, manifest_name)
-        new.unpersist(blocking=False)
+        with RunScope():
+            new = own(kmv_sketch_bytes_agg(
+                batch_df.withColumn(group_col, F.col(group_col).cast("string")),
+                group_col, value_col, k,
+            ).persist())  # read 2-3x below (touched scan + merge write)
+            touched = sorted(
+                r[0] for r in
+                new.select(_bucket_of(F.col(group_col)).alias("b")).distinct().collect()
+            )
+            prev_paths = _bucket_paths(state_dir, prev_map, touched)
+            if prev_paths:
+                new = new.unionByName(
+                    sess.read.parquet(*prev_paths).select(group_col, "sketch"))
+            # distributed merge of touched buckets only: per-group sketch
+            # union on executors, written partitioned by bucket
+            merged = reduce_partials(
+                new, group_col, merge_group, f"{group_col} string, sketch binary"
+            ).withColumn("bucket", _bucket_of(F.col(group_col)))
+            out = os.path.join(state_dir, version)
+            merged.write.mode("overwrite").partitionBy("bucket").parquet(out)
+            new_map = dict(prev_map)
+            for b in touched:
+                new_map[str(b)] = version
+            mpath = os.path.join(state_dir, manifest_name)
+            with open(mpath + ".tmp", "w") as f:
+                json.dump(
+                    {"buckets": new_map, "commit": commit, "batch": token}, f)
+            os.replace(mpath + ".tmp", mpath)
+            _flip_current(state_dir, manifest_name)
         # GC with a one-generation grace period (round-4 advice): keep
         # every version referenced by the NEW manifest or the PREVIOUS
         # one, so a concurrent read_state_estimates that resolved the

@@ -17,7 +17,9 @@ from datasketches_java_spark.sources import tables
 
 @pytest.fixture(scope="module")
 def corpus(spark, smoke_sf_dir):
-    return tables.load_corpus(spark, smoke_sf_dir).cache()
+    df = tables.load_corpus(spark, smoke_sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 def _partition(clusters_df):
@@ -87,3 +89,24 @@ def test_crash_leaves_previous_manifest(spark, corpus, tmp_path):
     assert man_after == man_before
     with open(os.path.join(state, "MANIFEST.json")) as f:
         assert len(json.load(f)["batches"]) == 1
+
+
+def test_failed_ingest_frees_its_persist(spark, corpus, tmp_path, monkeypatch):
+    """A write that raises after the new signatures are persisted and
+    materialized leaves no persisted RDD behind."""
+    from datasketches_java_spark.plans import delta
+
+    write = delta._write_counted
+
+    def failing(df, path):
+        if os.path.basename(os.path.dirname(path)) == "verified":
+            raise RuntimeError("injected write failure")
+        return write(df, path)
+
+    monkeypatch.setattr(delta, "_write_counted", failing)
+    jsc = spark.sparkContext._jsc
+    corpus.count()  # materialize the fixture's cache, so `before` holds it
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="injected"):
+        ingest_batch(spark, str(tmp_path / "state4"), corpus, FROZEN)
+    assert set(jsc.getPersistentRDDs().keySet()) == before

@@ -23,7 +23,9 @@ from datasketches_java_spark.streaming.dedup_stream import (
 
 @pytest.fixture(scope="module")
 def corpus(spark, smoke_sf_dir):
-    return tables.load_corpus(spark, smoke_sf_dir).cache()
+    df = tables.load_corpus(spark, smoke_sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 def _partition(clusters_df):

@@ -5,9 +5,22 @@ exact, total-weight preservation in expectation, unbiased subset sums."""
 import numpy as np
 import pytest
 
-from datasketches_java_spark.kernels.varopt import (
-    _threshold, estimate_subset_sum, varopt_sample,
+from datasketches_java_spark.kernels.sampling_compat import (
+    VarOptLongs, varopt_estimate_subset_sum,
 )
+from datasketches_java_spark.kernels.varopt import _threshold, varopt_sample
+
+
+def _sketch(items, adj, tau, n, k):
+    """A batch sample as the reference's H/R state: heavy items are
+    those above tau (all of them in the tau == 0 passthrough), the rest
+    share tau."""
+    heavy = (adj > tau) if tau > 0 else np.ones(len(adj), dtype=bool)
+    return VarOptLongs(
+        k=k, n=n, heavy_items=items[heavy].astype(np.int64),
+        heavy_weights=adj[heavy], r_items=items[~heavy].astype(np.int64),
+        total_r_weight=float(adj[~heavy].sum()),
+    )
 
 
 def test_small_stream_kept_exactly():
@@ -49,9 +62,8 @@ def test_subset_sum_unbiased_over_seeds():
     ests = []
     for seed in range(200):
         s, adj, tau = varopt_sample(items, w, k, seed=seed * 7919 + 13)
-        mask = (s % 3) == 0
-        _, est, _ = estimate_subset_sum(s, adj, mask, tau=tau)
-        ests.append(est)
+        sk = _sketch(s, adj, tau, n, k)
+        ests.append(varopt_estimate_subset_sum(sk, lambda i: i % 3 == 0)["estimate"])
     mean = np.mean(ests)
     # unbiased within 3 standard errors of the empirical spread
     se = np.std(ests) / np.sqrt(len(ests))
@@ -79,6 +91,6 @@ def test_bounds_cover_true_subset_sum():
     trials = 60
     for seed in range(trials):
         s, adj, tau = varopt_sample(items, w, k, seed=seed * 104729 + 7)
-        lb, est, ub = estimate_subset_sum(s, adj, (s % 5) == 0, 2.0, tau=tau)
-        covered += int(lb <= true <= ub)
+        r = varopt_estimate_subset_sum(_sketch(s, adj, tau, n, k), lambda i: i % 5 == 0)
+        covered += int(r["lower_bound"] <= true <= r["upper_bound"])
     assert covered / trials >= 0.9  # 2SD nominal ≈ 95%
