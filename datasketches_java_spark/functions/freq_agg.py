@@ -29,22 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels.freq import NO_FALSE_NEGATIVES, NO_FALSE_POSITIVES, purge_to  # noqa: F401
 from .sketch_reduce import blob_frame, frame_blob, reduce_partials
-
-NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
-NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
-
-
-def _purge_to(items: np.ndarray, counts: np.ndarray, m: int):
-    """Reverse-purge: subtract the (len-m)-th smallest count, drop
-    non-positive rows (kernels/freq.py semantics, vectorized). Returns
-    (items, counts, decrement)."""
-    if len(items) <= m:
-        return items, counts, 0
-    cut = int(np.partition(counts, len(counts) - m)[len(counts) - m])
-    keep = counts > cut
-    return items[keep], counts[keep] - cut, cut
-
 
 def mg_frequent_items_agg(
     df: DataFrame,
@@ -78,7 +64,7 @@ def mg_frequent_items_agg(
             if len(agg) > m:
                 items = np.array(list(agg.keys()), dtype=object)
                 counts = np.array(list(agg.values()), dtype=np.int64)
-                items, counts, cut = _purge_to(items, counts, m)
+                items, counts, cut = purge_to(items, counts, m)
                 offset += cut
                 agg = dict(zip(items.tolist(), counts.tolist()))
         if n == 0:
@@ -97,7 +83,7 @@ def mg_frequent_items_agg(
         merged = blob_frame(blobs).groupby("item", sort=False)["cnt"].sum()
         items = merged.index.to_numpy(dtype=object)
         counts = merged.to_numpy(np.int64)
-        items, counts, cut = _purge_to(items, counts, m)
+        items, counts, cut = purge_to(items, counts, m)
         offset += cut
         ub = counts + offset
         keep = (

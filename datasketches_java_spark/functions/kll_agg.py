@@ -144,11 +144,11 @@ def kll_items_quantile_agg(
     def build(sub: pd.DataFrame) -> tuple:
         sk = KllItems(k=k, seed=seed)
         sk.update_many([v for v in sub[value_col] if v is not None])
-        return (sk.serialize_strings(),)
+        return (sk.serialize(),)
 
     def finish(blobs) -> tuple:
         sk = reduce(KllItems.merge, (
-            KllItems.deserialize_strings(bytes(b), seed=seed) for b in blobs
+            KllItems.deserialize(bytes(b), seed=seed) for b in blobs
         ))
         return (sk.n, *(sk.get_quantile_frac(p, q) for p, q in quantiles))
 

@@ -19,6 +19,17 @@ NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
 
 
+def purge_to(items: np.ndarray, counts: np.ndarray, m: int):
+    """Reverse-purge: subtract the (len-m)-th smallest count and drop
+    the rows it zeroes, leaving at most m (classic Misra-Gries purge).
+    Returns (items, counts, decrement)."""
+    if len(items) <= m:
+        return items, counts, 0
+    cut = int(np.partition(counts, len(counts) - m)[len(counts) - m])
+    keep = counts > cut
+    return items[keep], counts[keep] - cut, cut
+
+
 class FrequentItems:
     def __init__(self, max_map_size: int):
         self.m = max_map_size
@@ -39,14 +50,12 @@ class FrequentItems:
         return self
 
     def _purge(self) -> None:
-        # decrement all by the median of the smallest counts (classic
-        # reverse-purge: drop enough to fall under m)
-        vals = np.array(sorted(self.counts.values()))
-        cut = vals[len(vals) - self.m] if len(vals) > self.m else vals[0]
-        self.offset += int(cut)
-        self.counts = Counter(
-            {k: v - cut for k, v in self.counts.items() if v > cut}
-        )
+        size = len(self.counts)
+        items, counts, cut = purge_to(
+            np.fromiter(self.counts, object, size),
+            np.fromiter(self.counts.values(), np.int64, size), self.m)
+        self.offset += cut
+        self.counts = Counter(dict(zip(items.tolist(), counts.tolist())))
 
     def merge(self, other: "FrequentItems") -> "FrequentItems":
         self.n += other.n

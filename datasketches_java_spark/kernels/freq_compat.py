@@ -1,12 +1,15 @@
 """Reference wire format for the frequent-items (Misra-Gries) sketch —
-FrequentLongsSketch serial v1, both directions.
+FrequentLongsSketch and FrequentItemsSketch<String> serial v1, both
+directions. One writer and one reader serve both: the item type is a
+serde (kernels/serde.py) — int64 LE keys (ArrayOfLongsSerDe) or
+ArrayOfStringsSerDe strings; everything else in the layout is shared.
 
 Layout per frequencies/PreambleUtil.java:46-76 and
 frequencies/FrequentLongsSketch.java:570-607 (toByteArray):
 
     empty:      1 preamble long (8 bytes total)
     non-empty:  4 preamble longs, then activeItems VALUES (counts,
-                int64 LE), then activeItems KEYS (items, int64 LE)
+                int64 LE), then activeItems KEYS (serde-encoded items)
 
     pre0 byte 0: preamble longs (1 | 4)
          byte 1: serial version (1)
@@ -42,6 +45,7 @@ import struct
 
 import numpy as np
 
+from . import serde
 from .freq import FrequentItems
 
 _SER_VER = 1
@@ -63,70 +67,8 @@ def max_map_cap(lg_max_map_size: int) -> int:
     return int(_LOAD_FACTOR * (1 << lg_max_map_size))
 
 
-def to_ref_bytes(sk: FrequentItems, lg_max_map_size: int | None = None) -> bytes:
-    """FrequentLongsSketch serial-v1 image of a long-keyed sketch."""
-    if lg_max_map_size is None:
-        lg_max_map_size = _lg_size_for(sk.m)
-    active = len(sk.counts)
-    if active == 0 and sk.n == 0:
-        pre0 = struct.pack(
-            "<BBBBBBxx", 1, _SER_VER, _FAMILY_ID, lg_max_map_size,
-            _LG_MIN_MAP_SIZE, _EMPTY_FLAG_MASK,
-        )
-        return pre0
-    keys = np.fromiter(sk.counts.keys(), dtype=np.int64, count=active)
-    vals = np.fromiter(
-        (sk.counts[k] for k in keys), dtype=np.int64, count=active
-    )
-    order = np.argsort(keys, kind="stable")
-    keys, vals = keys[order], vals[order]
-    pre0 = struct.pack(
-        "<BBBBBBxx", 4, _SER_VER, _FAMILY_ID, lg_max_map_size,
-        _lg_size_for(active), 0,
-    )
-    pre1 = struct.pack("<ixxxx", active)
-    pre2 = struct.pack("<q", sk.n)
-    pre3 = struct.pack("<q", sk.offset)
-    return (
-        pre0 + pre1 + pre2 + pre3
-        + vals.astype("<i8").tobytes() + keys.astype("<i8").tobytes()
-    )
-
-
-def _serde_strings(items) -> bytes:
-    """ArrayOfStringsSerDe.serializeToByteArray(String[]) —
-    common/ArrayOfStringsSerDe.java:62-82: per item an int32 LE
-    UTF-8 byte length followed by the UTF-8 bytes."""
-    parts = []
-    for s in items:
-        b = s.encode("utf-8")
-        parts.append(struct.pack("<i", len(b)))
-        parts.append(b)
-    return b"".join(parts)
-
-
-def _deserde_strings(buf: bytes, offset: int, n_items: int) -> list[str]:
-    """ArrayOfStringsSerDe.deserializeFromMemorySegment
-    (common/ArrayOfStringsSerDe.java:89-107)."""
-    out = []
-    pos = offset
-    for _ in range(n_items):
-        if pos + 4 > len(buf):
-            raise ValueError("truncated string-items section")
-        (ln,) = struct.unpack_from("<i", buf, pos)
-        pos += 4
-        if ln < 0 or pos + ln > len(buf):
-            raise ValueError("corrupt string length in items section")
-        out.append(buf[pos:pos + ln].decode("utf-8"))
-        pos += ln
-    return out
-
-
-def to_ref_bytes_items(sk: FrequentItems, lg_max_map_size: int | None = None) -> bytes:
-    """FrequentItemsSketch<String> serial-v1 image
-    (frequencies/FrequentItemsSketch.java:498-540 toByteArray with
-    ArrayOfStringsSerDe): same preamble as the longs form, then
-    activeItems VALUES (int64 LE), then serde-encoded KEYS."""
+def _to_ref_bytes(sk: FrequentItems, lg_max_map_size: int | None,
+                  item_serde) -> bytes:
     if lg_max_map_size is None:
         lg_max_map_size = _lg_size_for(sk.m)
     active = len(sk.counts)
@@ -141,13 +83,10 @@ def to_ref_bytes_items(sk: FrequentItems, lg_max_map_size: int | None = None) ->
         "<BBBBBBxxixxxxqq", 4, _SER_VER, _FAMILY_ID, lg_max_map_size,
         _lg_size_for(active), 0, active, sk.n, sk.offset,
     )
-    return pre + vals.tobytes() + _serde_strings(keys)
+    return pre + vals.tobytes() + item_serde.to_bytes(keys)
 
 
-def from_ref_bytes_items(buf: bytes) -> FrequentItems:
-    """Heapify a FrequentItemsSketch<String> serial-v1 image
-    (frequencies/FrequentItemsSketch.java:232-296 getInstance with
-    ArrayOfStringsSerDe)."""
+def _from_ref_bytes(buf: bytes, item_serde) -> FrequentItems:
     if len(buf) < 8:
         raise ValueError("frequencies image too short")
     pre_longs, ser_ver, fam_id, lg_max, _lg_cur, flags = struct.unpack_from(
@@ -171,44 +110,35 @@ def from_ref_bytes_items(buf: bytes) -> FrequentItems:
     if len(buf) < 32 + 8 * active:
         raise ValueError("truncated values section")
     vals = np.frombuffer(buf, dtype="<i8", count=active, offset=32)
-    keys = _deserde_strings(buf, 32 + 8 * active, active)
-    for k, v in zip(keys, vals.tolist()):
-        sk.counts[k] = int(v)
+    keys, _ = item_serde.from_bytes(buf, 32 + 8 * active, active)
+    for k, v in zip(keys.tolist(), vals.tolist()):
+        sk.counts[k] = v
     sk.offset = int(offset)
     sk.n = int(stream_len)
     return sk
+
+
+def to_ref_bytes(sk: FrequentItems, lg_max_map_size: int | None = None) -> bytes:
+    """FrequentLongsSketch serial-v1 image of a long-keyed sketch
+    (frequencies/FrequentLongsSketch.java:570-607 toByteArray)."""
+    return _to_ref_bytes(sk, lg_max_map_size, serde.LONGS)
+
+
+def to_ref_bytes_items(sk: FrequentItems, lg_max_map_size: int | None = None) -> bytes:
+    """FrequentItemsSketch<String> serial-v1 image
+    (frequencies/FrequentItemsSketch.java:498-540 toByteArray with
+    ArrayOfStringsSerDe)."""
+    return _to_ref_bytes(sk, lg_max_map_size, serde.STRINGS)
 
 
 def from_ref_bytes(buf: bytes) -> FrequentItems:
     """Heapify a FrequentLongsSketch serial-v1 image
     (frequencies/FrequentLongsSketch.java:228-266 getInstance)."""
-    if len(buf) < 8:
-        raise ValueError("frequencies image too short")
-    pre_longs, ser_ver, fam_id, lg_max, _lg_cur, flags = struct.unpack_from(
-        "<BBBBBB", buf, 0
-    )
-    if ser_ver != _SER_VER:
-        raise ValueError(f"unsupported frequencies serVer {ser_ver}")
-    if fam_id != _FAMILY_ID:
-        raise ValueError(f"not a FREQUENCY image (family {fam_id})")
-    empty = (flags & _EMPTY_FLAG_MASK) != 0
-    sk = FrequentItems(max_map_cap(lg_max))
-    if empty:
-        if pre_longs != 1:
-            raise ValueError("empty image must have 1 preamble long")
-        return sk
-    if pre_longs != 4:
-        raise ValueError(f"non-empty image needs 4 preamble longs, got {pre_longs}")
-    (active,) = struct.unpack_from("<i", buf, 8)
-    (stream_len,) = struct.unpack_from("<q", buf, 16)
-    (offset,) = struct.unpack_from("<q", buf, 24)
-    need = 32 + 16 * active
-    if len(buf) < need:
-        raise ValueError(f"truncated image: {len(buf)} < {need}")
-    vals = np.frombuffer(buf, dtype="<i8", count=active, offset=32)
-    keys = np.frombuffer(buf, dtype="<i8", count=active, offset=32 + 8 * active)
-    for k, v in zip(keys.tolist(), vals.tolist()):
-        sk.counts[int(k)] = int(v)
-    sk.offset = int(offset)
-    sk.n = int(stream_len)
-    return sk
+    return _from_ref_bytes(buf, serde.LONGS)
+
+
+def from_ref_bytes_items(buf: bytes) -> FrequentItems:
+    """Heapify a FrequentItemsSketch<String> serial-v1 image
+    (frequencies/FrequentItemsSketch.java:232-296 getInstance with
+    ArrayOfStringsSerDe)."""
+    return _from_ref_bytes(buf, serde.STRINGS)

@@ -14,17 +14,25 @@ the reference draws the halving coin from a process-global Random
 (kll/KllDoublesHelper.java:86-88); Spark task retries must be
 idempotent, so our coin is a counter-based hash of (sketch seed,
 compaction index) — deterministic for a fixed insertion order.
+
+This is the package's one KLL engine; the item type is a serde
+(kernels/serde.py). kernels/kll_items.KllItems runs the same engine over
+object arrays, and one reference reader/writer serves the doubles,
+floats, longs and strings images.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from . import serde
 from .hashing import hash64
+from .quantile_search import quantile_from_view, rank_from_view, view_with_minmax
 
 DEFAULT_K = 200  # kll/KllSketch.java:97
 _C = 2.0 / 3.0
 _MIN_CAP = 8
+_IMAGE_MAGIC, _IMAGE_VER = 0x4B4C4C31, 3  # "KLL1"
 
 
 def rank_error(k: int, pmf: bool = True) -> float:
@@ -33,20 +41,37 @@ def rank_error(k: int, pmf: bool = True) -> float:
 
 
 class KllDoubles:
-    """Heap KLL sketch over float64 items."""
+    """Heap KLL sketch over float64 items. The engine is item-type
+    agnostic: a subclass overrides only the empty level array, the item
+    coercion and the item serde (kernels/kll_items.KllItems)."""
+
+    _SERDE = serde.DOUBLES
+    _NO_ITEM = float("nan")  # quantile of an empty sketch
+
+    @staticmethod
+    def _empty() -> np.ndarray:
+        return np.empty(0, np.float64)
+
+    @staticmethod
+    def _coerce(values) -> np.ndarray:
+        """Update items as a level array, NaN dropped."""
+        values = np.asarray(values, dtype=np.float64)
+        return values[~np.isnan(values)]
 
     def __init__(self, k: int = DEFAULT_K, seed: int = 9001):
         self.k = k
         self.seed = seed
-        self.levels: list[np.ndarray] = [np.empty(0, np.float64)]
+        self.levels: list[np.ndarray] = [self._empty()]
         self.n = 0
         self._compactions = 0
         # exact stream extremes, tracked through compaction like the
         # reference's minItem/maxItem fields (KllDoublesSketch), so
         # rank-0/rank-1 queries return the true extremes even after
         # compaction dropped them from the retained set
-        self._ref_min: float | None = None
-        self._ref_max: float | None = None
+        self._ref_min = None
+        self._ref_max = None
+        # LEVEL_ZERO_SORTED of a parsed reference image (None: our build)
+        self._ref_l0_sorted: bool | None = None
 
     def _cap(self, level: int) -> int:
         num = len(self.levels)
@@ -62,23 +87,26 @@ class KllDoubles:
         h = hash64(np.array([self._compactions], dtype=np.uint64), self.seed)[0]
         return bool(h & np.uint64(1))
 
-    def update_many(self, values: np.ndarray) -> "KllDoubles":
-        values = np.asarray(values, dtype=np.float64)
-        values = values[~np.isnan(values)]
+    def _widen(self, lo, hi) -> None:
+        if lo is not None and (self._ref_min is None or lo < self._ref_min):
+            self._ref_min = lo
+        if hi is not None and (self._ref_max is None or hi > self._ref_max):
+            self._ref_max = hi
+
+    def update_many(self, values) -> "KllDoubles":
+        values = self._coerce(values)
         if len(values) == 0:
             return self
         self.levels[0] = np.concatenate([self.levels[0], values])
         self.n += len(values)
-        lo, hi = float(values.min()), float(values.max())
-        if self._ref_min is None or lo < self._ref_min:
-            self._ref_min = lo
-        if self._ref_max is None or hi > self._ref_max:
-            self._ref_max = hi
+        self._ref_l0_sorted = None  # level 0 is ours now: sort it on write
+        # .tolist() hands back Python floats / the items themselves
+        self._widen(*np.array([values.min(), values.max()], values.dtype).tolist())
         self._compress()
         return self
 
-    def update(self, v: float) -> "KllDoubles":
-        return self.update_many(np.array([v]))
+    def update(self, v) -> "KllDoubles":
+        return self.update_many([v])
 
     def _num_items(self) -> int:
         return sum(len(lv) for lv in self.levels)
@@ -96,9 +124,9 @@ class KllDoubles:
             buf = np.sort(self.levels[target])
             start = 1 if self._coin() else 0
             promoted = buf[start::2]
-            self.levels[target] = np.empty(0, np.float64)
+            self.levels[target] = self._empty()
             if target + 1 >= len(self.levels):
-                self.levels.append(np.empty(0, np.float64))
+                self.levels.append(self._empty())
             self.levels[target + 1] = np.concatenate(
                 [self.levels[target + 1], promoted]
             )
@@ -107,19 +135,16 @@ class KllDoubles:
         """Merge level-wise then re-compact (kll/KllDoublesHelper.java:134-196)."""
         for h, items in enumerate(other.levels):
             while h >= len(self.levels):
-                self.levels.append(np.empty(0, np.float64))
+                self.levels.append(self._empty())
             self.levels[h] = np.concatenate([self.levels[h], items])
         self.n += other.n
-        for ext in (other._ref_min, other._ref_max):
-            if ext is not None:
-                if self._ref_min is None or ext < self._ref_min:
-                    self._ref_min = ext
-                if self._ref_max is None or ext > self._ref_max:
-                    self._ref_max = ext
+        self._ref_l0_sorted = None
+        self._widen(other._ref_min, other._ref_max)
         self._compress()
         return self
 
-    # --- queries (weight-sorted view, DoublesSketchSortedView.java:99-118) ---
+    # --- queries (weight-sorted view, DoublesSketchSortedView.java:99-118;
+    # ItemsSketchSortedView.java:120-151 for items) ---
 
     def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
         items, weights = [], []
@@ -128,99 +153,75 @@ class KllDoubles:
                 items.append(lv)
                 weights.append(np.full(len(lv), 2**h, dtype=np.int64))
         if not items:
-            return np.empty(0, np.float64), np.empty(0, np.int64)
+            return self._empty(), np.empty(0, np.int64)
         it = np.concatenate(items)
         wt = np.concatenate(weights)
         order = np.argsort(it, kind="stable")
         return it[order], wt[order]
 
     def _view_with_minmax(self) -> tuple[np.ndarray, np.ndarray]:
-        """(items, cumulative weights) with the tracked stream extremes
-        injected exactly as the reference sorted view does
-        (quantilescommon/IncludeMinMax.java:118-155): prepend min with
-        cumweight 1 if the smallest retained item isn't it; append max
-        borrowing weight 1 from the previous last."""
-        it, wt = self._sorted_view()
-        if len(it) == 0:
-            return it, np.empty(0, np.int64)
-        cum = np.cumsum(wt)
-        if self._ref_min is not None and it[0] != self._ref_min:
-            it = np.concatenate([[self._ref_min], it])
-            cum = np.concatenate([[1], cum])
-        if self._ref_max is not None and it[-1] != self._ref_max:
-            n = cum[-1]
-            cum[-1] = n - 1
-            it = np.concatenate([it, [self._ref_max]])
-            cum = np.concatenate([cum, [n]])
-        return it, cum
+        return view_with_minmax(*self._sorted_view(), self._ref_min, self._ref_max)
 
-    def get_quantile(self, rank: float, inclusive: bool = True) -> float:
+    def get_quantile(self, rank: float, inclusive: bool = True):
         """Both reference criteria (QuantileSearchCriteria.java:41,59)
         via the shared sorted-view search (kernels/quantile_search.py)."""
-        from .quantile_search import quantile_from_view
-
         it, cum = self._view_with_minmax()
         if len(it) == 0:
-            return float("nan")
-        return float(quantile_from_view(it, cum, self.n, rank, inclusive))
+            return self._NO_ITEM
+        q = quantile_from_view(it, cum, self.n, rank, inclusive)
+        return q.item() if isinstance(q, np.generic) else q
 
-    def get_rank(self, value: float, inclusive: bool = True) -> float:
-        from .quantile_search import rank_from_view
-
+    def get_rank(self, value, inclusive: bool = True) -> float:
         it, cum = self._view_with_minmax()
         if len(it) == 0:
             return float("nan")
         return rank_from_view(it, cum, self.n, value, inclusive)
 
-    def get_cdf(self, split_points: np.ndarray, inclusive: bool = True) -> np.ndarray:
+    def get_cdf(self, split_points, inclusive: bool = True) -> np.ndarray:
         return np.array(
-            [self.get_rank(float(v), inclusive) for v in split_points] + [1.0]
+            [self.get_rank(v, inclusive) for v in split_points] + [1.0]
         )
 
-    def get_pmf(self, split_points: np.ndarray, inclusive: bool = True) -> np.ndarray:
+    def get_pmf(self, split_points, inclusive: bool = True) -> np.ndarray:
         cdf = self.get_cdf(split_points, inclusive)
         return np.diff(np.concatenate([[0.0], cdf]))
 
-    # --- serialization (versioned preamble, PreambleUtil discipline) ---
+    # --- private partial image (the partial->final exchange format; never
+    # outlives a query). int64 header (magic, ver, k, n, n_levels,
+    # compactions, has_extremes), serde(min, max) when present, then per
+    # level an int64 count and serde(items).
 
     def serialize(self) -> bytes:
-        header = np.array(
-            [0x4B4C4C31, 2, self.k, self.n, len(self.levels), self._compactions],
-            dtype="<i8",
-        ).tobytes()
-        ext = np.array(
-            [np.nan if self._ref_min is None else self._ref_min,
-             np.nan if self._ref_max is None else self._ref_max],
-            dtype="<f8").tobytes()
-        parts = [header, ext]
+        has_ext = self._ref_min is not None
+        parts = [np.array(
+            [_IMAGE_MAGIC, _IMAGE_VER, self.k, self.n, len(self.levels),
+             self._compactions, has_ext], dtype="<i8").tobytes()]
+        if has_ext:
+            parts.append(self._SERDE.to_bytes([self._ref_min, self._ref_max]))
         for lv in self.levels:
             parts.append(np.array([len(lv)], dtype="<i8").tobytes())
-            parts.append(np.asarray(lv, dtype="<f8").tobytes())
+            parts.append(self._SERDE.to_bytes(lv))
         return b"".join(parts)
 
     @classmethod
     def deserialize(cls, buf: bytes, seed: int = 9001) -> "KllDoubles":
-        head = np.frombuffer(buf[:48], dtype="<i8")
-        if head[0] != 0x4B4C4C31 or head[1] not in (1, 2):
+        if len(buf) < 56:
+            raise ValueError("KLL image too short")
+        magic, ver, k, n, n_levels, compactions, has_ext = (
+            np.frombuffer(buf, dtype="<i8", count=7).tolist())
+        if magic != _IMAGE_MAGIC or ver != _IMAGE_VER:
             raise ValueError("bad KLL image")
-        sk = cls(k=int(head[2]), seed=seed)
-        sk.n = int(head[3])
-        sk._compactions = int(head[5])
-        n_levels = int(head[4])
+        sk = cls(k=k, seed=seed)
+        sk.n, sk._compactions = n, compactions
+        off = 56
+        if has_ext:
+            ext, off = cls._SERDE.from_bytes(buf, off, 2)
+            sk._ref_min, sk._ref_max = ext.tolist()
         sk.levels = []
-        off = 48
-        if head[1] == 2:  # v2 carries the exact stream extremes
-            mn, mx = np.frombuffer(buf[48:64], dtype="<f8")
-            sk._ref_min = None if np.isnan(mn) else float(mn)
-            sk._ref_max = None if np.isnan(mx) else float(mx)
-            off = 64
         for _ in range(n_levels):
-            cnt = int(np.frombuffer(buf[off : off + 8], dtype="<i8")[0])
-            off += 8
-            sk.levels.append(
-                np.frombuffer(buf[off : off + 8 * cnt], dtype="<f8").astype(np.float64)
-            )
-            off += 8 * cnt
+            (cnt,) = np.frombuffer(buf, dtype="<i8", count=1, offset=off).tolist()
+            lv, off = cls._SERDE.from_bytes(buf, off + 8, cnt)
+            sk.levels.append(lv)
         return sk
 
 
@@ -240,27 +241,29 @@ def _ref_level_capacity(k: int, num_levels: int, level: int, m: int) -> int:
     return max(m, (tmp + 1) >> 1)
 
 
-def _from_ref_bytes_typed(buf: bytes, seed: int, dtype: str) -> "KllDoubles":
-    """Shared reader for the three numeric KLL image types. The KLL
-    preamble does NOT self-describe its item type (the reference also
-    dispatches by caller: KllDoublesSketch.heapify vs
-    KllFloatsSketch.heapify vs KllLongsSketch.heapify), so the caller
-    picks the reader; only the item width differs between layouts."""
-    width = np.dtype(dtype).itemsize
+def _from_ref_bytes_typed(buf: bytes, seed: int, item_serde,
+                          cls: type = KllDoubles) -> KllDoubles:
+    """Shared reader for every KLL image type (doubles, floats, longs,
+    items). The KLL preamble does NOT self-describe its item type (the
+    reference also dispatches by caller: KllDoublesSketch.heapify vs
+    KllFloatsSketch / KllLongsSketch / KllItemsSketch.heapify), so the
+    caller picks the serde; only the item encoding differs between
+    layouts (structure table kll/KllPreambleUtil.java:124-134)."""
+    if len(buf) < 8:
+        raise ValueError("KLL image too short")
     pre_ints, ser_ver, fam, flags = buf[0], buf[1], buf[2], buf[3]
     if fam != _FAMILY_KLL:
         raise ValueError(f"not a KLL image (family {fam})")
     k = int(np.frombuffer(buf[4:6], dtype="<u2")[0])
     m = buf[6]
-    sk = KllDoubles(k=k, seed=seed)
-    is_empty = bool(flags & 1)  # EMPTY_BIT_MASK
+    sk = cls(k=k, seed=seed)
     if pre_ints == 2:  # COMPACT_EMPTY or COMPACT_SINGLE
-        if is_empty:
+        if flags & 1:  # EMPTY_BIT_MASK
             return sk
-        v = float(np.frombuffer(buf[8:8 + width], dtype=dtype)[0])
-        sk.levels = [np.array([v])]
+        item, _ = item_serde.from_bytes(buf, 8, 1)
+        sk.levels = [item]
         sk.n = 1
-        sk._ref_min = sk._ref_max = v
+        sk._ref_min = sk._ref_max = item.tolist()[0]
         return sk
     if pre_ints != 5:
         raise ValueError(f"bad KLL preamble ints {pre_ints} (serVer {ser_ver})")
@@ -271,20 +274,17 @@ def _from_ref_bytes_typed(buf: bytes, seed: int, dtype: str) -> "KllDoubles":
     off += 4 * num_levels
     cap = sum(_ref_level_capacity(k, num_levels, h, m) for h in range(num_levels))
     lev_full = lev + [cap]
-    mn, mx = np.frombuffer(buf[off:off + 2 * width], dtype=dtype)
-    off += 2 * width
-    retained = cap - lev_full[0]
-    items = np.frombuffer(buf[off:off + width * retained], dtype=dtype)
+    # exact min/max are carried by the image, not derivable from the
+    # retained items once compaction dropped the extremes
+    ext, off = item_serde.from_bytes(buf, off, 2)
+    items, _ = item_serde.from_bytes(buf, off, cap - lev_full[0])
     # items are stored packed from lev_full[0]; split into per-level arrays
     sk.levels = [
-        items[lev_full[h] - lev_full[0]: lev_full[h + 1] - lev_full[0]]
-        .astype(np.float64).copy()
+        items[lev_full[h] - lev_full[0]: lev_full[h + 1] - lev_full[0]].copy()
         for h in range(num_levels)
     ]
     sk.n = n
-    # exact min/max are carried by the image, not derivable from the
-    # retained items once compaction dropped the extremes
-    sk._ref_min, sk._ref_max = float(mn), float(mx)
+    sk._ref_min, sk._ref_max = ext.tolist()
     # remember the image's LEVEL_ZERO_SORTED flag: the write side
     # preserves level-0 order and this flag so a parse->serialize round
     # trip reproduces the source bytes exactly
@@ -292,103 +292,28 @@ def _from_ref_bytes_typed(buf: bytes, seed: int, dtype: str) -> "KllDoubles":
     return sk
 
 
-def from_ref_bytes(buf: bytes, seed: int = 9001) -> "KllDoubles":
-    """Parse a KllDoublesSketch image serialized by the reference
-    library / C++ port (kll/KllPreambleUtil.java layout, native little-
-    endian): COMPACT_EMPTY and COMPACT_SINGLE (8-byte preamble +
-    optional item) and COMPACT_FULL (20-byte preamble, shortened
-    levels int[numLevels], min, max, packed retained items; the top
-    boundary is reconstructed as computeTotalItemCapacity(k, m,
-    numLevels) exactly as KllHeapDoublesSketch's segment constructor
-    does at :129-140). Validated in tests/test_ref_goldens.py against
-    the in-tree goldens and live against datasketches-java."""
-    return _from_ref_bytes_typed(buf, seed, "<f8")
-
-
-def from_ref_bytes_floats(buf: bytes, seed: int = 9001) -> "KllDoubles":
-    """Parse a KllFloatsSketch image (kll/KllFloatsSketch.java, same
-    preamble, float32 items) into a KllDoubles — lossless, since every
-    float32 casts exactly to float64."""
-    return _from_ref_bytes_typed(buf, seed, "<f4")
-
-
-def from_ref_bytes_longs(buf: bytes, seed: int = 9001) -> "KllDoubles":
-    """Parse a KllLongsSketch image (kll/KllLongsSketch.java, same
-    preamble, int64 items) into a KllDoubles. Raises if any item or
-    extreme exceeds 2^53 in magnitude (the float64-exact integer
-    range) rather than silently losing precision."""
-    sk = _from_ref_bytes_typed(buf, seed, "<i8")
-    limit = float(1 << 53)
-    vals = [abs(v) for v in (sk._ref_min, sk._ref_max) if v is not None]
-    vals += [float(np.abs(lv).max()) for lv in sk.levels if len(lv)]
-    if any(v > limit for v in vals):
-        raise ValueError("KllLongsSketch item exceeds 2^53; not float64-exact")
-    return sk
-
-
-def to_ref_bytes(sk: "KllDoubles") -> bytes:
-    """Serialize in the reference library's KllDoublesSketch wire
-    format (KllPreambleUtil layout, little-endian): COMPACT_EMPTY,
-    COMPACT_SINGLE (serVer=2) or COMPACT_FULL (serVer=1, 20-byte
-    preamble + shortened levels int[numLevels] + min + max + packed
-    items). The full levels boundaries are reconstructed the way the
-    reference reader does — levels[numLevels] = its
-    computeTotalItemCapacity(k, m, numLevels) — so heapify() splits
-    our per-level item counts back exactly; round-trip tested in
-    tests/test_ref_goldens.py. min/max fields are the retained
-    extremes (exact whenever no compaction dropped an extreme — always
-    true in the exact regime; a parse via from_ref_bytes carries the
-    image's own exact min/max through)."""
-    return _to_ref_bytes_typed(sk, "<f8")
-
-
-def to_ref_bytes_floats(sk: "KllDoubles") -> bytes:
-    """Serialize as a KllFloatsSketch image (same preamble, float32
-    items — kll/KllFloatsSketch.java). Raises if any retained item or
-    extreme does not cast to float32 and back exactly (the writer
-    never silently loses precision; a state parsed by
-    from_ref_bytes_floats always qualifies)."""
-    for a in (np.asarray(lv, np.float64) for lv in sk.levels if len(lv)):
-        if not np.array_equal(a.astype(np.float32).astype(np.float64), a):
-            raise ValueError("item not exactly representable as float32")
-    for v in (getattr(sk, "_ref_min", None), getattr(sk, "_ref_max", None)):
-        if v is not None and float(np.float32(v)) != float(v):
-            raise ValueError("min/max not exactly representable as float32")
-    return _to_ref_bytes_typed(sk, "<f4")
-
-
-def to_ref_bytes_longs(sk: "KllDoubles") -> bytes:
-    """Serialize as a KllLongsSketch image (same preamble, int64 items
-    — kll/KllLongsSketch.java). Raises if any retained item or extreme
-    is non-integral or exceeds 2^53 in magnitude (the float64-exact
-    integer range; a state parsed by from_ref_bytes_longs always
-    qualifies)."""
-    limit = float(1 << 53)
-    vals = [np.asarray(lv, np.float64) for lv in sk.levels if len(lv)]
-    for a in vals:
-        if np.abs(a).max() > limit or not np.array_equal(np.rint(a), a):
-            raise ValueError("item not an int64-exact float64")
-    for v in (getattr(sk, "_ref_min", None), getattr(sk, "_ref_max", None)):
-        if v is not None and (abs(v) > limit or v != int(v)):
-            raise ValueError("min/max not an int64-exact float64")
-    return _to_ref_bytes_typed(sk, "<i8")
-
-
-def _to_ref_bytes_typed(sk: "KllDoubles", dtype: str) -> bytes:
-    """Shared writer for the three numeric KLL image types (the
-    reference dispatches serialization by sketch class exactly as it
-    dispatches heapify — KllDoublesSketch vs KllFloatsSketch vs
-    KllLongsSketch; only the item width differs between layouts)."""
+def _to_ref_bytes_typed(sk: KllDoubles, item_serde) -> bytes:
+    """Shared writer for every KLL image type (the reference dispatches
+    serialization by sketch class exactly as it dispatches heapify;
+    only the item encoding differs between layouts — KllHelper.java:
+    435-501 toByteArray): COMPACT_EMPTY, COMPACT_SINGLE (serVer=2) or
+    COMPACT_FULL (serVer=1, 20-byte preamble + shortened levels
+    int[numLevels] + min + max + packed items). The full levels
+    boundaries are reconstructed the way the reference reader does —
+    levels[numLevels] = its computeTotalItemCapacity(k, m, numLevels) —
+    so heapify() splits our per-level item counts back exactly. min/max
+    are the tracked stream extremes (a parsed image carries its own),
+    else the retained extremes."""
     m = 8  # reference default M (KllSketch.java DEFAULT_M)
     k16 = np.array([sk.k], dtype="<u2").tobytes()
-    retained = np.concatenate([lv for lv in sk.levels]) if sk.levels else np.empty(0)
+    retained = np.concatenate(sk.levels)
     if sk.n == 0:
         #         preInts serVer famID flags(EMPTY)
         return bytes([2, 1, _FAMILY_KLL, 1]) + k16 + bytes([m, 0])
     if sk.n == 1:
         return (
             bytes([2, 2, _FAMILY_KLL, 4]) + k16 + bytes([m, 0])  # SINGLE_ITEM
-            + np.array(retained[:1]).astype(dtype).tobytes()
+            + item_serde.to_bytes(retained[:1])
         )
     num_levels = len(sk.levels)
     cap = sum(_ref_level_capacity(sk.k, num_levels, h, m) for h in range(num_levels))
@@ -403,22 +328,75 @@ def _to_ref_bytes_typed(sk: "KllDoubles", dtype: str) -> bytes:
             "retained items exceed the reference layout's capacity for "
             f"k={sk.k}, numLevels={num_levels} — compact the sketch first"
         )
-    l0_sorted = getattr(sk, "_ref_l0_sorted", None)
-    if l0_sorted is None:  # our own build: sort level 0, set the flag
-        lvl0, flags = np.sort(np.asarray(sk.levels[0], dtype=np.float64)), 2
+    if sk._ref_l0_sorted is None:  # our own build: sort level 0, set the flag
+        lvl0, flags = np.sort(sk.levels[0]), 2
     else:  # parsed image: keep its order and flag for byte identity
-        lvl0, flags = np.asarray(sk.levels[0], dtype=np.float64), 2 * l0_sorted
-    items = np.concatenate([lvl0] + [np.asarray(lv, np.float64) for lv in sk.levels[1:]])
-    mn = getattr(sk, "_ref_min", None)
-    mx = getattr(sk, "_ref_max", None)
-    mn = float(retained.min()) if mn is None else mn
-    mx = float(retained.max()) if mx is None else mx
-    head = (
+        lvl0, flags = sk.levels[0], 2 * sk._ref_l0_sorted
+    mn = retained.min() if sk._ref_min is None else sk._ref_min
+    mx = retained.max() if sk._ref_max is None else sk._ref_max
+    return (
         bytes([5, 1, _FAMILY_KLL, flags]) + k16 + bytes([m, 0])  # flags: LEVEL_ZERO_SORTED
         + np.array([sk.n], dtype="<i8").tobytes()
         + np.array([sk.k], dtype="<u2").tobytes()             # min_k
         + bytes([num_levels, 0])
         + bounds[:num_levels].astype("<i4").tobytes()
-        + np.array([mn, mx], dtype=np.float64).astype(dtype).tobytes()
+        + item_serde.to_bytes([mn, mx])
+        + item_serde.to_bytes(np.concatenate([lvl0] + sk.levels[1:]))
     )
-    return head + items.astype(dtype).tobytes()
+
+
+_FLOATS = serde.Fixed("<f4", "<f8")  # float32 images into float64 state
+_LONGS = serde.Fixed("<i8", "<f8")   # int64 images, exact up to 2^53
+
+
+def from_ref_bytes(buf: bytes, seed: int = 9001) -> KllDoubles:
+    """Parse a KllDoublesSketch image serialized by the reference
+    library / C++ port (kll/KllPreambleUtil.java layout, native little-
+    endian): COMPACT_EMPTY and COMPACT_SINGLE (8-byte preamble +
+    optional item) and COMPACT_FULL (20-byte preamble, shortened
+    levels int[numLevels], min, max, packed retained items; the top
+    boundary is reconstructed as computeTotalItemCapacity(k, m,
+    numLevels) exactly as KllHeapDoublesSketch's segment constructor
+    does at :129-140). Validated in tests/test_ref_goldens.py against
+    the in-tree goldens and live against datasketches-java."""
+    return _from_ref_bytes_typed(buf, seed, serde.DOUBLES)
+
+
+def from_ref_bytes_floats(buf: bytes, seed: int = 9001) -> KllDoubles:
+    """Parse a KllFloatsSketch image (kll/KllFloatsSketch.java, same
+    preamble, float32 items) into a KllDoubles — lossless, since every
+    float32 casts exactly to float64."""
+    return _from_ref_bytes_typed(buf, seed, _FLOATS)
+
+
+def from_ref_bytes_longs(buf: bytes, seed: int = 9001) -> KllDoubles:
+    """Parse a KllLongsSketch image (kll/KllLongsSketch.java, same
+    preamble, int64 items) into a KllDoubles. Raises if any item or
+    extreme exceeds 2^53 in magnitude (the float64-exact integer
+    range) rather than silently losing precision."""
+    return _from_ref_bytes_typed(buf, seed, _LONGS)
+
+
+def to_ref_bytes(sk: KllDoubles) -> bytes:
+    """Serialize in the reference library's KllDoublesSketch wire
+    format; round-trip tested in tests/test_ref_goldens.py and live in
+    tests/test_live_jvm_interop.py."""
+    return _to_ref_bytes_typed(sk, serde.DOUBLES)
+
+
+def to_ref_bytes_floats(sk: KllDoubles) -> bytes:
+    """Serialize as a KllFloatsSketch image (same preamble, float32
+    items — kll/KllFloatsSketch.java). Raises if any retained item or
+    extreme does not cast to float32 and back exactly (the writer
+    never silently loses precision; a state parsed by
+    from_ref_bytes_floats always qualifies)."""
+    return _to_ref_bytes_typed(sk, _FLOATS)
+
+
+def to_ref_bytes_longs(sk: KllDoubles) -> bytes:
+    """Serialize as a KllLongsSketch image (same preamble, int64 items
+    — kll/KllLongsSketch.java). Raises if any retained item or extreme
+    is non-integral or exceeds 2^53 in magnitude (the float64-exact
+    integer range; a state parsed by from_ref_bytes_longs always
+    qualifies)."""
+    return _to_ref_bytes_typed(sk, _LONGS)

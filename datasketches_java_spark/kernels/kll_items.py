@@ -4,22 +4,18 @@ The reference ships per-primitive KLL clones plus a generic-order
 variant (kll/KllItemsSketch.java:45, comparator + ArrayOfItemsSerDe;
 sorted-view queries quantilescommon/ItemsSketchSortedView.java) so a
 user can ask "p99 caption by LEXICOGRAPHIC order" — a query the
-doubles kernel cannot express. This is that variant re-expressed the
-way kernels/kll.py re-expresses KllDoublesSketch: identical level
-structure (level-0 buffer, geometric capacity decay c=2/3 floor 8,
-sort + random-halve promotion, weight 2^h at level h — compaction
-kll/KllHelper.java analog of KllDoublesHelper.java:58-108, merge
-:134-196), but items live in object arrays ordered by Python's
-comparison operator — for str that is Unicode code-point order, which
-equals UTF-8 byte order (UTF-8 is order-preserving), i.e. the same
-binary collation Spark and DuckDB use for strings. That shared order
-is what lets the exact-regime gate query compare hash-exactly against
-a SQL oracle.
+doubles kernel cannot express. Here there is ONE KLL engine
+(kernels/kll.KllDoubles: level structure, seeded compaction, merge,
+sorted views, both query criteria, the reference image codec and the
+private partial image) and the item type is a serde: KllItems holds
+its items in object arrays, drops None instead of NaN, and encodes
+them with ArrayOfStringsSerDe (kernels/serde.STRINGS).
 
-Deterministic randomness divergence (SURVEY.md §4): the halving coin
-is a counter-based hash of (seed, compaction index), not the
-reference's process-global Random — Spark task retries must be
-idempotent.
+Items are ordered by Python's comparison operator — for str that is
+Unicode code-point order, which equals UTF-8 byte order (UTF-8 is
+order-preserving), i.e. the same binary collation Spark and DuckDB use
+for strings. That shared order is what lets the exact-regime gate query
+compare hash-exactly against a SQL oracle.
 
 Error contract: same as the doubles kernel — normalized rank error
 2.446/k^0.9433 at 99% confidence (kll/KllHelper.java:295-299); KLL's
@@ -30,138 +26,26 @@ from __future__ import annotations
 
 import numpy as np
 
-from .hashing import hash64
-from .kll import DEFAULT_K, _C, _MIN_CAP
+from . import serde
+from .kll import KllDoubles, _from_ref_bytes_typed, _to_ref_bytes_typed
 
 
-def _obj(items) -> np.ndarray:
-    a = np.empty(len(items), dtype=object)
-    a[:] = list(items)
-    return a
-
-
-_EMPTY = _obj([])
-
-
-class KllItems:
+class KllItems(KllDoubles):
     """Heap KLL sketch over arbitrary totally-ordered Python items
-    (strings in the Spark face). Structure mirrors kernels/kll.py's
-    KllDoubles; see module docstring for the reference mapping."""
+    (strings in the Spark face, and on every wire)."""
 
-    def __init__(self, k: int = DEFAULT_K, seed: int = 9001):
-        self.k = k
-        self.seed = seed
-        self.levels: list[np.ndarray] = [_EMPTY.copy()]
-        self.n = 0
-        self._compactions = 0
-        # exact stream extremes, like the reference's minItem/maxItem
-        # (KllItemsSketch tracks them independently of compaction)
-        self._ref_min = None
-        self._ref_max = None
+    _SERDE = serde.STRINGS
+    _NO_ITEM = None
 
-    def _cap(self, level: int) -> int:
-        depth = len(self.levels) - 1 - level
-        return max(_MIN_CAP, int(np.ceil(self.k * (_C**depth))))
+    @staticmethod
+    def _empty() -> np.ndarray:
+        return np.empty(0, dtype=object)
 
-    def _total_cap(self) -> int:
-        return sum(self._cap(h) for h in range(len(self.levels)))
-
-    def _coin(self) -> bool:
-        self._compactions += 1
-        h = hash64(np.array([self._compactions], dtype=np.uint64), self.seed)[0]
-        return bool(h & np.uint64(1))
-
-    def update_many(self, items) -> "KllItems":
-        vals = [v for v in items if v is not None]
-        if not vals:
-            return self
-        self.levels[0] = np.concatenate([self.levels[0], _obj(vals)])
-        self.n += len(vals)
-        lo, hi = min(vals), max(vals)
-        if self._ref_min is None or lo < self._ref_min:
-            self._ref_min = lo
-        if self._ref_max is None or hi > self._ref_max:
-            self._ref_max = hi
-        self._compress()
-        return self
-
-    def update(self, v) -> "KllItems":
-        return self.update_many([v])
-
-    def _num_items(self) -> int:
-        return sum(len(lv) for lv in self.levels)
-
-    def _compress(self) -> None:
-        while self._num_items() > self._total_cap():
-            target = None
-            for h in range(len(self.levels)):
-                if len(self.levels[h]) > self._cap(h):
-                    target = h
-                    break
-            if target is None:
-                target = 0
-            buf = self.levels[target][
-                np.argsort(self.levels[target], kind="stable")
-            ]
-            start = 1 if self._coin() else 0
-            promoted = buf[start::2]
-            self.levels[target] = _EMPTY.copy()
-            if target + 1 >= len(self.levels):
-                self.levels.append(_EMPTY.copy())
-            self.levels[target + 1] = np.concatenate(
-                [self.levels[target + 1], promoted]
-            )
-
-    def merge(self, other: "KllItems") -> "KllItems":
-        for h, items in enumerate(other.levels):
-            while h >= len(self.levels):
-                self.levels.append(_EMPTY.copy())
-            self.levels[h] = np.concatenate([self.levels[h], items])
-        self.n += other.n
-        for ext in (other._ref_min, other._ref_max):
-            if ext is not None:
-                if self._ref_min is None or ext < self._ref_min:
-                    self._ref_min = ext
-                if self._ref_max is None or ext > self._ref_max:
-                    self._ref_max = ext
-        self._compress()
-        return self
-
-    # --- queries (ItemsSketchSortedView.java:120-151 analog) ---
-
-    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        items, weights = [], []
-        for h, lv in enumerate(self.levels):
-            if len(lv):
-                items.append(lv)
-                weights.append(np.full(len(lv), 2**h, dtype=np.int64))
-        if not items:
-            return _EMPTY.copy(), np.empty(0, np.int64)
-        it = np.concatenate(items)
-        wt = np.concatenate(weights)
-        order = np.argsort(it, kind="stable")
-        return it[order], wt[order]
-
-    def _view_with_minmax(self) -> tuple[np.ndarray, np.ndarray]:
-        """(items, cumulative weights) with the tracked stream extremes
-        injected like the reference sorted view
-        (quantilescommon/IncludeMinMax.java generic form): prepend min
-        with cumweight 1 when the smallest retained item isn't it,
-        append max borrowing weight 1 from the previous last — so
-        rank-0/rank-1 return the exact extremes the image carries."""
-        it, wt = self._sorted_view()
-        if len(it) == 0:
-            return it, np.empty(0, np.int64)
-        cum = np.cumsum(wt)
-        if self._ref_min is not None and it[0] != self._ref_min:
-            it = np.concatenate([np.array([self._ref_min], dtype=object), it])
-            cum = np.concatenate([[1], cum])
-        if self._ref_max is not None and it[-1] != self._ref_max:
-            n = cum[-1]
-            cum[-1] = n - 1
-            it = np.concatenate([it, np.array([self._ref_max], dtype=object)])
-            cum = np.concatenate([cum, [n]])
-        return it, cum
+    @staticmethod
+    def _coerce(items) -> np.ndarray:
+        """Update items as a level array, None dropped (the reference's
+        update(null) no-op)."""
+        return serde.object_array([v for v in items if v is not None])
 
     def get_quantile_frac(self, p: int, q: int):
         """min v with q·cumweight(v) >= p·n — the INCLUSIVE criterion
@@ -173,189 +57,16 @@ class KllItems:
         idx = int(np.searchsorted(q * cum, p * self.n, side="left"))
         return it[min(idx, len(it) - 1)]
 
-    def get_quantile(self, rank: float, inclusive: bool = True):
-        """Both reference criteria (QuantileSearchCriteria.java:41,59)."""
-        from .quantile_search import quantile_from_view
-
-        it, cum = self._view_with_minmax()
-        if len(it) == 0:
-            return None
-        return quantile_from_view(it, cum, self.n, rank, inclusive)
-
-    def get_rank(self, value, inclusive: bool = True) -> float:
-        """Normalized rank of `value` under either criterion."""
-        from .quantile_search import rank_from_view
-
-        it, cum = self._view_with_minmax()
-        if len(it) == 0:
-            return float("nan")
-        return rank_from_view(it, cum, self.n, value, inclusive)
-
     # --- reference wire format (KllItemsSketch<String>) ---
 
     def to_ref_bytes(self) -> bytes:
-        """Serialize in the reference KllItemsSketch wire format
-        (kll/KllPreambleUtil.java layout; KllHelper.java:435-501
-        toByteArray, items branch — ITEMS images are always compact):
-        COMPACT_EMPTY / COMPACT_SINGLE (serde-encoded single item) /
-        COMPACT_FULL (20-byte preamble + shortened levels
-        int[numLevels] + serde(min) + serde(max) + serde(retained
-        items)). Items encode per ArrayOfStringsSerDe (int32 LE UTF-8
-        length + bytes). min/max are the retained extremes unless the
-        sketch was parsed from an image carrying its own."""
-        from .freq_compat import _serde_strings
-        from .kll import _FAMILY_KLL, _ref_level_capacity
-
-        m = 8
-        k16 = np.array([self.k], dtype="<u2").tobytes()
-        if self.n == 0:
-            return bytes([2, 1, _FAMILY_KLL, 1]) + k16 + bytes([m, 0])
-        retained = [s for lv in self.levels for s in lv]
-        if self.n == 1:
-            return (
-                bytes([2, 2, _FAMILY_KLL, 4]) + k16 + bytes([m, 0])
-                + _serde_strings(retained[:1])
-            )
-        num_levels = len(self.levels)
-        cap = sum(
-            _ref_level_capacity(self.k, num_levels, h, m)
-            for h in range(num_levels)
-        )
-        counts = [len(lv) for lv in self.levels]
-        bounds = np.empty(num_levels + 1, dtype=np.int64)
-        bounds[num_levels] = cap
-        for h in range(num_levels - 1, -1, -1):
-            bounds[h] = bounds[h + 1] - counts[h]
-        if bounds[0] < 0:
-            raise ValueError(
-                "retained items exceed the reference layout's capacity "
-                f"for k={self.k}, numLevels={num_levels}"
-            )
-        mn = getattr(self, "_ref_min", None)
-        mx = getattr(self, "_ref_max", None)
-        if mn is None:
-            mn = min(retained)
-        if mx is None:
-            mx = max(retained)
-        lvl0 = sorted(self.levels[0])
-        items = lvl0 + [s for lv in self.levels[1:] for s in lv]
-        return (
-            bytes([5, 1, _FAMILY_KLL, 2]) + k16 + bytes([m, 0])
-            + np.array([self.n], dtype="<i8").tobytes()
-            + np.array([self.k], dtype="<u2").tobytes()
-            + bytes([num_levels, 0])
-            + bounds[:num_levels].astype("<i4").tobytes()
-            + _serde_strings([mn, mx])
-            + _serde_strings(items)
-        )
+        """Serialize in the reference KllItemsSketch wire format (the
+        shared KLL writer, kernels/kll._to_ref_bytes_typed, with items
+        per ArrayOfStringsSerDe)."""
+        return _to_ref_bytes_typed(self, serde.STRINGS)
 
     @classmethod
     def from_ref_bytes(cls, buf: bytes, seed: int = 9001) -> "KllItems":
         """Heapify a KllItemsSketch<String> image (the segment
-        constructor path of kll/KllHeapItemsSketch.java; structure
-        table at kll/KllPreambleUtil.java:124-134)."""
-        from .freq_compat import _deserde_strings
-        from .kll import _FAMILY_KLL, _ref_level_capacity
-
-        if len(buf) < 8:
-            raise ValueError("KLL items image too short")
-        pre_ints, ser_ver, fam, flags = buf[0], buf[1], buf[2], buf[3]
-        if fam != _FAMILY_KLL:
-            raise ValueError(f"not a KLL image (family {fam})")
-        k = int(np.frombuffer(buf[4:6], dtype="<u2")[0])
-        m = buf[6]
-        sk = cls(k=k, seed=seed)
-        if pre_ints == 2:
-            if flags & 1:  # EMPTY
-                return sk
-            sk.levels = [_obj(_deserde_strings(buf, 8, 1))]
-            sk.n = 1
-            return sk
-        if pre_ints != 5:
-            raise ValueError(f"bad KLL preamble ints {pre_ints} (serVer {ser_ver})")
-        n = int(np.frombuffer(buf[8:16], dtype="<i8")[0])
-        num_levels = buf[18]
-        off = 20
-        lev = np.frombuffer(buf[off:off + 4 * num_levels], dtype="<i4").tolist()
-        off += 4 * num_levels
-        cap = sum(
-            _ref_level_capacity(k, num_levels, h, m) for h in range(num_levels)
-        )
-        lev_full = lev + [cap]
-        mn_mx = _deserde_strings(buf, off, 2)
-        for s in mn_mx:
-            off += 4 + len(s.encode("utf-8"))
-        retained = cap - lev_full[0]
-        items = _deserde_strings(buf, off, retained)
-        sk.levels = [
-            _obj(items[lev_full[h] - lev_full[0]: lev_full[h + 1] - lev_full[0]])
-            for h in range(num_levels)
-        ]
-        sk.n = n
-        sk._ref_min, sk._ref_max = mn_mx[0], mn_mx[1]
-        return sk
-
-    # --- string serde (shuffle format; length-prefixed UTF-8) ---
-
-    def serialize_strings(self) -> bytes:
-        """Compact shuffle image for str-typed sketches: int64 header
-        (magic, ver, k, n, n_levels, compactions) + per level
-        (count:int32, then count × (len:int32, utf8 bytes)). This is
-        the partial→final exchange format, not the reference's
-        ArrayOfStringsSerDe wire layout."""
-        parts = [
-            np.array(
-                [0x4B4C4C53, 2, self.k, self.n, len(self.levels),
-                 self._compactions],
-                dtype="<i8",
-            ).tobytes()
-        ]
-        for lv in self.levels:
-            enc = [s.encode("utf-8") for s in lv]
-            parts.append(np.array([len(enc)], dtype="<i4").tobytes())
-            for b in enc:
-                parts.append(np.array([len(b)], dtype="<i4").tobytes())
-                parts.append(b)
-        # exact extremes (v2): int32 length or -1 for absent
-        for ext in (self._ref_min, self._ref_max):
-            if ext is None:
-                parts.append(np.array([-1], dtype="<i4").tobytes())
-            else:
-                b = ext.encode("utf-8")
-                parts.append(np.array([len(b)], dtype="<i4").tobytes())
-                parts.append(b)
-        return b"".join(parts)
-
-    @classmethod
-    def deserialize_strings(cls, buf: bytes, seed: int = 9001) -> "KllItems":
-        head = np.frombuffer(buf[:48], dtype="<i8")
-        if head[0] != 0x4B4C4C53 or head[1] not in (1, 2):
-            raise ValueError("bad KLL-items image")
-        ver = int(head[1])
-        sk = cls(k=int(head[2]), seed=seed)
-        sk.n = int(head[3])
-        sk._compactions = int(head[5])
-        sk.levels = []
-        off = 48
-        for _ in range(int(head[4])):
-            cnt = int(np.frombuffer(buf[off:off + 4], dtype="<i4")[0])
-            off += 4
-            out = []
-            for _ in range(cnt):
-                ln = int(np.frombuffer(buf[off:off + 4], dtype="<i4")[0])
-                off += 4
-                out.append(buf[off:off + ln].decode("utf-8"))
-                off += ln
-            sk.levels.append(_obj(out))
-        if ver >= 2:
-            exts = []
-            for _ in range(2):
-                ln = int(np.frombuffer(buf[off:off + 4], dtype="<i4")[0])
-                off += 4
-                if ln < 0:
-                    exts.append(None)
-                else:
-                    exts.append(buf[off:off + ln].decode("utf-8"))
-                    off += ln
-            sk._ref_min, sk._ref_max = exts
-        return sk
+        constructor path of kll/KllHeapItemsSketch.java)."""
+        return _from_ref_bytes_typed(buf, seed, serde.STRINGS, cls)

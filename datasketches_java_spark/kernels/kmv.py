@@ -253,32 +253,6 @@ def jaccard_bounds(
     return max(0.0, f - num_std_dev * sd), f, min(1.0, f + num_std_dev * sd)
 
 
-def jaccard_bounds_batch(
-    sigs_a: list[np.ndarray], sigs_b: list[np.ndarray], k: int,
-    num_std_dev: float = 2.0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(lb, est, ub) arrays for N signature pairs, one vectorized pass.
-
-    Same math as `jaccard_bounds` (union sample at common θ → binomial
-    proportion), but all pairs in a batch are flattened into one
-    lexsort — ~50x faster than the per-pair loop in verification
-    batches (the hot path of the pipeline).
-    """
-    n = len(sigs_a)
-    if n == 0:
-        z = np.empty(0, np.float64)
-        return z, z.copy(), z.copy()
-    vals_a = np.concatenate(
-        [np.asarray(s) for s in sigs_a] or [np.empty(0, np.int64)]
-    )
-    vals_b = np.concatenate(
-        [np.asarray(s) for s in sigs_b] or [np.empty(0, np.int64)]
-    )
-    la = np.fromiter((len(s) for s in sigs_a), np.int64, n)
-    lb_ = np.fromiter((len(s) for s in sigs_b), np.int64, n)
-    return jaccard_bounds_flat(vals_a, la, vals_b, lb_, k, num_std_dev)
-
-
 def jaccard_bounds_flat_chunked(
     vals_a: np.ndarray, la: np.ndarray,
     vals_b: np.ndarray, lb_: np.ndarray,
@@ -328,8 +302,12 @@ def jaccard_bounds_flat(
     vals_b: np.ndarray, lb_: np.ndarray,
     k: int, num_std_dev: float = 2.0,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Flat-form core of jaccard_bounds_batch: signatures arrive as two
-    back-to-back value arrays + per-pair lengths (exactly the layout of
+    """(lb, est, ub) arrays for N signature pairs, one vectorized pass.
+
+    Same math as `jaccard_bounds` (union sample at common θ → binomial
+    proportion), but all pairs in a batch are flattened into one
+    lexsort — the hot path of the pipeline's verification batches.
+    Signatures arrive as two back-to-back value arrays + per-pair lengths (exactly the layout of
     an Arrow binary column), so the Arrow verify path feeds buffers in
     with zero per-row Python. Pair membership of a value is positional;
     a/b interleaving is irrelevant because everything downstream keys

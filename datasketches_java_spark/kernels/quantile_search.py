@@ -55,3 +55,27 @@ def rank_from_view(items: np.ndarray, cum: np.ndarray, n: int,
     side = "right" if inclusive else "left"  # LE : LT
     idx = int(np.searchsorted(items, value, side=side))
     return float(cum[idx - 1]) / n if idx > 0 else 0.0
+
+
+def view_with_minmax(items: np.ndarray, weights: np.ndarray, mn, mx
+                     ) -> tuple[np.ndarray, np.ndarray]:
+    """(items, cumulative weights) of a weight-sorted view with the
+    stream extremes injected exactly as the reference sorted view does
+    (quantilescommon/IncludeMinMax.java:118-155, doubles and generic
+    forms): if the smallest retained item isn't the stream min, prepend
+    min with cumweight 1; if the largest isn't the stream max, append
+    max borrowing weight 1 from the previous last. Makes rank-0/rank-1
+    queries return the exact stream extremes. An extreme of None (not
+    tracked) is not injected."""
+    if len(items) == 0:
+        return items, np.empty(0, np.int64)
+    cum = np.cumsum(weights)
+    if mn is not None and items[0] != mn:
+        items = np.concatenate([np.array([mn], dtype=items.dtype), items])
+        cum = np.concatenate([[1], cum])
+    if mx is not None and items[-1] != mx:
+        n = cum[-1]
+        cum[-1] = n - 1
+        items = np.concatenate([items, np.array([mx], dtype=items.dtype)])
+        cum = np.concatenate([cum, [n]])
+    return items, cum

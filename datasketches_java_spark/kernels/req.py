@@ -36,6 +36,7 @@ from __future__ import annotations
 import numpy as np
 
 from .hashing import hash64
+from .quantile_search import quantile_from_view, rank_from_view, view_with_minmax
 
 DEFAULT_K = 12       # ReqSketchBuilder default: ~1% rel. error @ 95%
 MIN_K = 4            # ReqSketch.java:91
@@ -224,40 +225,17 @@ class ReqDoubles:
         return it[order], wt[order]
 
     def _view_with_minmax(self) -> tuple[np.ndarray, np.ndarray]:
-        """(items, cumulative weights) with the stream min/max injected
-        exactly as the reference sorted view does
-        (quantilescommon/IncludeMinMax.java:118-155): if the smallest
-        retained item isn't the stream min, prepend min with cumweight
-        1; if the largest isn't the stream max, append max borrowing
-        weight 1 from the previous last. Makes rank-0/rank-1 queries
-        return the exact stream extremes."""
-        it, wt = self._sorted_view()
-        if len(it) == 0:
-            return it, np.empty(0, np.int64)
-        cum = np.cumsum(wt)
-        if it[0] != self.min:
-            it = np.concatenate([[self.min], it])
-            cum = np.concatenate([[1], cum])
-        if it[-1] != self.max:
-            n = cum[-1]
-            cum[-1] = n - 1
-            it = np.concatenate([it, [self.max]])
-            cum = np.concatenate([cum, [n]])
-        return it, cum
+        return view_with_minmax(*self._sorted_view(), self.min, self.max)
 
     def get_rank(self, value: float, inclusive: bool = True) -> float:
         """Both reference criteria (BaseReqSketch.java getRank over
         quantilescommon/QuantileSearchCriteria.java:41,59)."""
-        from .quantile_search import rank_from_view
-
         it, cum = self._view_with_minmax()
         if len(it) == 0:
             return float("nan")
         return rank_from_view(it, cum, self.n, value, inclusive)
 
     def get_quantile(self, rank: float, inclusive: bool = True) -> float:
-        from .quantile_search import quantile_from_view
-
         it, cum = self._view_with_minmax()
         if len(it) == 0:
             return float("nan")
