@@ -11,6 +11,7 @@ their accuracy contracts are asserted in tests/ instead.
 
 from __future__ import annotations
 
+import contextvars
 import os
 import sys
 from collections.abc import Callable
@@ -29,8 +30,9 @@ TEXT_CFG = DedupConfig(phash_bands=0, phash_max_hamming=-1)
 
 class SharedRuns(RunScope):
     """The pipeline runs the gate queries share: one run_pipeline per
-    (session, corpus, config), owned by this scope. Closing it frees
-    every run and forgets it, so the next query runs the pipeline anew."""
+    (session, corpus, config), owned by this scope alone. Closing it
+    frees every run and forgets it, so the next query runs the pipeline
+    anew."""
 
     def __init__(self):
         super().__init__()
@@ -41,7 +43,9 @@ class SharedRuns(RunScope):
 
         k = (id(spark), key, cfg.config_hash())
         if k not in self.runs:
-            self.runs[k] = run_pipeline(spark, corpus, cfg)
+            # built in a fresh context, where no scope is open: a scope
+            # the caller has open must not own (and free) a shared run
+            self.runs[k] = contextvars.Context().run(run_pipeline, spark, corpus, cfg)
             self.own(self.runs[k].scope)
         return self.runs[k]
 
@@ -862,11 +866,12 @@ def _q_partition_boundaries_orders(spark, sf_dir):
     reference Partitioner (partitions/Partitioner.java:113-166, P1) as
     ONE distributed KLL pass per level (operators/partitioner.py).
 
-    ORACLE-CHECKED in the exact regime (k=2^18 ≥ table rows at every
-    gate/bench tier, no compaction): under the INCLUSIVE criterion the
-    boundaries are position math — boundary_p = sorted[ceil(p·n/P)],
-    delta_p = ceil(p·n/P) − ceil((p−1)·n/P) (+1 at p=1) — which DuckDB
-    reproduces with row_number(). The lossy regime's rank-error
+    ORACLE-CHECKED in the exact regime (k=65535, the largest k the KLL
+    image holds, ≥ the 15,000 orders of the sf0.01 gate tier, so no
+    compaction; sf0.1's 150,000 orders are lossy): under the INCLUSIVE
+    criterion the boundaries are position math — boundary_p =
+    sorted[ceil(p·n/P)], delta_p = ceil(p·n/P) − ceil((p−1)·n/P) (+1 at
+    p=1) — which DuckDB reproduces with row_number(). The lossy regime's rank-error
     contract is pytest-gated (tests/test_partitioner.py live parity
     with the embedded Java GenericPartitionBoundaries)."""
     from datasketches_java_spark.operators.partitioner import (
@@ -876,7 +881,7 @@ def _q_partition_boundaries_orders(spark, sf_dir):
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     rows = partition_boundaries(
-        orders, "o_totalprice", num_parts=8, k=1 << 18
+        orders, "o_totalprice", num_parts=8, k=65535
     )
     return partition_boundaries_df(spark, rows)
 

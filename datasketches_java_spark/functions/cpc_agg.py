@@ -2,11 +2,10 @@
 
 Spark face over kernels/cpc.py (reference cpc/CpcUnion.java merge
 semantics) on functions/sketch_reduce.py: partial CPC per (Arrow batch,
-group) — map-side combine, 8·k bytes of state per group cross the shuffle
-regardless of group size (40% smaller serialized than HLL at equal
-accuracy in the reference's compressed form; our uncompressed images
-trade that for vectorized updates, see kernels/cpc.py) — then the
-sorted native merge and one batched finisher that unions each group. Merged results use the ICON estimator
+group) — map-side combine, one reference compressed CPC image per group
+crosses the shuffle regardless of group size (40% smaller than HLL at
+equal accuracy) — then the sorted native merge and one batched finisher
+that unions each group. Merged results use the ICON estimator
 with the reference's own confidence tables; accuracy is pytest-gated
 (tests/test_cpc.py) and the gate query cpc_users_by_type is rows-only
 (probabilistic estimates are not SQL-expressible), mirroring
@@ -21,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import cpc_compat
 from ..kernels.cpc import DEFAULT_LG_K, CpcSketch
 from .sketch_reduce import group_partials, reduce_partials
 
@@ -43,10 +43,10 @@ def cpc_distinct_agg(
             sk.update_longs(sub[value_col].to_numpy(np.int64))
         else:
             sk.update_strings(sub[value_col].astype(str).to_numpy())
-        return (sk.serialize(),)
+        return (cpc_compat.to_ref_bytes(sk),)
 
     def finish(blobs) -> tuple:
-        sk = reduce(CpcSketch.merge, map(CpcSketch.deserialize, blobs))
+        sk = reduce(CpcSketch.merge, map(cpc_compat.from_ref_bytes, blobs))
         if not sk.merge_flag:
             sk.merge_flag = True  # one partial: still report union-form ICON
         lb, ub = sk.get_bounds(kappa)

@@ -4,9 +4,10 @@ The reference's quantile story at scale is the mergeable sketch
 (kll/KllDoublesSketch.java:275 merge, kll/KllDoublesHelper.java:134-196);
 this is its Spark face over kernels/kll.py:
 
- 1. partial (sketch_reduce.group_partials): one serialized KLL sketch
-    per (Arrow batch, group) — map-side combine; O(k log n) state per
-    group crosses the shuffle regardless of group size.
+ 1. partial (sketch_reduce.group_partials): one KLL sketch per (Arrow
+    batch, group) — map-side combine; O(k log n) state per group crosses
+    the shuffle regardless of group size, as a reference
+    KllDoublesSketch image (the sketch's one serialized form).
  2. final (sketch_reduce.reduce_partials): sorted native merge, then a
     batched finisher merges each group's sketches and answers quantile
     queries from the weight-sorted view.
@@ -31,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import kll
 from ..kernels.kll import DEFAULT_K, KllDoubles
 from .sketch_reduce import group_partials, reduce_partials
 
@@ -48,14 +50,15 @@ def _quantile_frac(sk, p: int, q: int) -> float:
 
 
 def kll_partial(values: np.ndarray, k: int = DEFAULT_K, seed: int = 9001) -> bytes:
-    """One serialized partial sketch over `values` (NaN skipped)."""
-    return KllDoubles(k=k, seed=seed).update_many(values).serialize()
+    """One partial sketch over `values` (NaN skipped), as its reference
+    image."""
+    return kll.to_ref_bytes(KllDoubles(k=k, seed=seed).update_many(values))
 
 
 def kll_merge(blobs, seed: int = 9001) -> KllDoubles:
-    """Merge serialized partial sketches, in the order given."""
+    """Merge partial sketch images, in the order given."""
     return reduce(KllDoubles.merge,
-                  (KllDoubles.deserialize(b, seed=seed) for b in blobs))
+                  (kll.from_ref_bytes(b, seed) for b in blobs))
 
 
 def _kll_partials(
@@ -80,13 +83,14 @@ def kll_sketch_agg(
     k: int = DEFAULT_K,
     seed: int = 9001,
 ) -> DataFrame:
-    """Per-group serialized KLL sketch (group, sketch binary) — the
-    mergeable partial-aggregate form (kll/KllDoublesSketch.java
-    toByteArray), for operators that consume sketch state directly
-    (KS drift tests, cross-window comparisons) rather than quantiles."""
+    """Per-group KLL sketch (group, sketch binary) for operators that
+    consume sketch state directly (KS drift tests, cross-window
+    comparisons) rather than quantiles. `sketch` is a KllDoublesSketch
+    image (kll/KllDoublesSketch.java toByteArray): datasketches-java
+    heapifies it, and so do Spark's kll_sketch_get_*_double built-ins."""
     return reduce_partials(
         _kll_partials(df, group_col, value_col, k, seed), group_col,
-        lambda blobs: (kll_merge(blobs, seed).serialize(),),
+        lambda blobs: (kll.to_ref_bytes(kll_merge(blobs, seed)),),
         f"{group_col} string, sketch binary",
     )
 
@@ -144,11 +148,11 @@ def kll_items_quantile_agg(
     def build(sub: pd.DataFrame) -> tuple:
         sk = KllItems(k=k, seed=seed)
         sk.update_many([v for v in sub[value_col] if v is not None])
-        return (sk.serialize(),)
+        return (sk.to_ref_bytes(),)
 
     def finish(blobs) -> tuple:
         sk = reduce(KllItems.merge, (
-            KllItems.deserialize(bytes(b), seed=seed) for b in blobs
+            KllItems.from_ref_bytes(bytes(b), seed=seed) for b in blobs
         ))
         return (sk.n, *(sk.get_quantile_frac(p, q) for p, q in quantiles))
 
@@ -197,8 +201,8 @@ def ks_pairwise(sketches: DataFrame, group_col: str = "group",
             nums, dens = [], []
             for ba, bb in zip(pdf["sk_a"], pdf["sk_b"]):
                 num, den = ks_delta_rational(
-                    KllDoubles.deserialize(bytes(ba), seed=seed),
-                    KllDoubles.deserialize(bytes(bb), seed=seed),
+                    kll.from_ref_bytes(bytes(ba), seed),
+                    kll.from_ref_bytes(bytes(bb), seed),
                 )
                 nums.append(num)
                 dens.append(den)

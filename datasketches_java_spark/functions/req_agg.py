@@ -3,7 +3,8 @@
 Spark face over kernels/req.py (reference req/ReqSketch.java merge
 :381-405) on functions/sketch_reduce.py: partial REQ sketch per (Arrow
 batch, group) — map-side combine, O(k·log(n/k)) state per group crosses
-the shuffle — then the sorted native merge and one batched finisher
+the shuffle as a reference ReqSketch image — then the sorted native
+merge and one batched finisher
 that merges each group's sketches and answers quantiles. Identical
 two-level shape to functions/kll_agg.py; quantile extraction uses the
 same INCLUSIVE integer rank fractions (min v with q·cumweight(v) ≥
@@ -23,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import req
 from ..kernels.req import DEFAULT_K, ReqDoubles
 from .kll_agg import _quantile_frac
 from .sketch_reduce import group_partials, reduce_partials
@@ -43,11 +45,11 @@ def req_quantile_agg(
     def build(sub: pd.DataFrame) -> tuple:
         sk = ReqDoubles(k=k, hra=hra, seed=seed)
         sk.update_many(sub[value_col].to_numpy(np.float64))
-        return (sk.serialize(),)
+        return (req.to_ref_bytes(sk),)
 
     def finish(blobs) -> tuple:
         sk = reduce(ReqDoubles.merge,
-                    (ReqDoubles.deserialize(b, seed=seed) for b in blobs))
+                    (req.from_ref_bytes(b, seed) for b in blobs))
         return (sk.n, *(_quantile_frac(sk, p, q) for p, q in quantiles))
 
     partials = group_partials(

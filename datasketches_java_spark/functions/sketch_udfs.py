@@ -132,7 +132,8 @@ def tuple_sketch_agg(
     reference tuple/TupleSketch.java + arrayofdoubles): a Theta sample
     of distinct keys where each retained key carries combined summary
     columns. Two-level partial/final like kmv_distinct_agg — O(k·d)
-    state per group per task.
+    state per group per task, shipped as an ArrayOfDoublesCompactSketch
+    image that datasketches-java heapifies.
 
     `summary_exprs` maps output names to Spark Columns evaluated per
     input ROW; rows of the same key combine per `combiner`. Output:
@@ -153,11 +154,11 @@ def tuple_sketch_agg(
     def build(sub: pd.DataFrame) -> tuple:
         h = _hash_strings(sub["__key"], seed)
         v = sub[[f"__s_{n}" for n in names]].to_numpy(np.float64)
-        return (TupleKmv.from_stream(h, v, k, combiner=combiner).serialize(),)
+        return (TupleKmv.from_stream(h, v, k, combiner=combiner).to_ref_bytes(seed),)
 
     def finish(blobs) -> tuple:
         sk = reduce(lambda a, b: a.union(b, combiner=combiner),
-                    map(TupleKmv.deserialize, blobs))
+                    (TupleKmv.from_ref_bytes(b, k, seed) for b in blobs))
         return (sk.distinct_estimate(), len(sk.hashes),
                 *(float(t) for t in sk.summary_totals()))
 

@@ -3,9 +3,9 @@
 Spark face over kernels/tdigest.py (reference tdigest/TDigestDouble.java
 merge :115-130) on functions/sketch_reduce.py: partial digest per (Arrow
 batch, group) — map-side combine, O(k) centroids per group cross the
-shuffle — then the sorted native merge and one batched finisher that
-merges each group's digests and queries them. The same two-level shape
-as functions/kll_agg.py.
+shuffle as a reference TDigestDouble image — then the sorted native
+merge and one batched finisher that merges each group's digests and
+queries them. The same two-level shape as functions/kll_agg.py.
 
 Gate contract (tdigest_caption_len_by_source): while every group's item
 count keeps the K_2 packing bound below 2 (n ≲ 150 at k=200; any n ≤ a
@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import tdigest
 from ..kernels.tdigest import DEFAULT_K, TDigest
 from .sketch_reduce import group_partials, reduce_partials
 
@@ -44,10 +45,10 @@ def tdigest_median_agg(
     def build(sub: pd.DataFrame) -> tuple:
         td = TDigest(k=k)
         td.update_many(sub[value_col].to_numpy(np.float64))
-        return (td.serialize(),)
+        return (tdigest.to_ref_bytes(td),)
 
     def finish(blobs) -> tuple:
-        td = reduce(TDigest.merge, map(TDigest.deserialize, blobs))
+        td = reduce(TDigest.merge, map(tdigest.from_ref_bytes, blobs))
         # med2 = v_⌊(n+1)/2⌋ + v_⌈(n+1)/2⌉ via the INCLUSIVE-criterion
         # order statistic over the centroid view (first centroid whose
         # cumulative weight reaches j). In the singleton regime this

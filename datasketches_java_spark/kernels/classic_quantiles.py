@@ -53,7 +53,8 @@ def _from_ref_bytes(buf: bytes, seed: int, cls: type, legacy: bool):
     if ser_ver not in ((1, 2, 3) if legacy else (2, 3)):
         raise ValueError(f"unsupported classic serial version {ser_ver}")
     k = int(np.frombuffer(buf[4:6], dtype="<u2")[0])
-    sk = cls(k=k, seed=seed)
+    sk = cls(seed=seed)
+    sk.k = k  # a classic k (2 to 32768) may be below KLL's floor of 8
     if (flags & _EMPTY_FLAG) or pre_longs == 1:
         return sk
     item_serde = cls._SERDE

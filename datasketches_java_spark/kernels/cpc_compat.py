@@ -42,8 +42,11 @@ import struct
 import numpy as np
 
 from ._cpc_tables import (
+    COLUMN_PERMUTATIONS_DEC,
     COLUMN_PERMUTATIONS_ENC,
+    DECODING_TABLES,
     ENCODING_TABLES,
+    UNARY_DECODING_TABLE_65,
     UNARY_ENCODING_TABLE_65,
 )
 from .cpc import CpcSketch, DEFAULT_UPDATE_SEED
@@ -123,189 +126,127 @@ def _golomb_base_bits(k: int, count: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# derived decoding tables (CompressionData.java:64-81)
+# low-level bit streams (CpcCompression.java:151-413): codes packed
+# LSB-first into little-endian 32-bit words. Every partial of a CPC
+# aggregate is one image, so both directions run in NumPy.
 
-def _make_decoding_table(encoding_table: np.ndarray) -> np.ndarray:
-    dec = np.zeros(4096, dtype=np.uint16)
-    enc = encoding_table.astype(np.int64)
-    for byte_value, entry in enumerate(enc):
-        code_value = int(entry) & 0xFFF
-        code_length = int(entry) >> 12
-        decoding_entry = (code_length << 8) | byte_value
-        for garbage in range(1 << (12 - code_length)):
-            dec[(code_value | (garbage << code_length)) & 0xFFF] = decoding_entry
-    return dec
+_BLOCK = 1 << 18  # bit positions decoded at once: bounded memory at any lg_k
 
 
-def _make_inverse_permutation(perm: np.ndarray) -> np.ndarray:
-    inv = np.zeros_like(perm)
-    inv[perm] = np.arange(len(perm), dtype=perm.dtype)
-    return inv
+def _pack(values: np.ndarray, lengths: np.ndarray, padding: int) -> np.ndarray:
+    """Codes (value, bit length) at their running offsets, then
+    `padding` zero bits so a 12-bit peek can't overrun."""
+    lengths = lengths.astype(np.int64)
+    starts = np.cumsum(lengths) - lengths
+    n_words = -(-(int(lengths.sum()) + padding) // 32)
+    v = values.astype(np.uint64) << (starts & 31).astype(np.uint64)
+    # a code (<= 26 bits) straddles at most two words; codes' bits never
+    # overlap, so summing (exact in float64 below 2^53) is OR-ing
+    idx = starts >> 5
+    words = np.bincount(idx, (v & np.uint64(0xFFFFFFFF)).astype(np.float64),
+                        n_words + 1)
+    words += np.bincount(idx + 1, (v >> np.uint64(32)).astype(np.float64), n_words + 1)
+    return words[:n_words].astype(np.uint32)
 
 
-DECODING_TABLES = np.stack([_make_decoding_table(t) for t in ENCODING_TABLES])
-UNARY_DECODING_TABLE_65 = _make_decoding_table(UNARY_ENCODING_TABLE_65)
-COLUMN_PERMUTATIONS_DEC = np.stack(
-    [_make_inverse_permutation(p) for p in COLUMN_PERMUTATIONS_ENC]
-)
+def _bits_at(words: np.ndarray, pos: np.ndarray, nbits: int) -> np.ndarray:
+    """The nbits (<= 32) stream bits starting at each bit position."""
+    w = np.concatenate([words.astype(np.uint64), np.zeros(2, np.uint64)])
+    both = w[pos >> 5] | (w[(pos >> 5) + 1] << np.uint64(32))
+    return ((both >> (pos & 31).astype(np.uint64))
+            & np.uint64((1 << nbits) - 1)).astype(np.int64)
 
 
-# ---------------------------------------------------------------------------
-# low-level bit streams (CpcCompression.java:151-413). Plain-Python bit
-# buffers: these run once per serialized sketch image (driver/test tier,
-# k <= 2^26), never in the distributed hot path.
-
-class _BitWriter:
-    __slots__ = ("words", "bit_buf", "buf_bits")
-
-    def __init__(self) -> None:
-        self.words: list[int] = []
-        self.bit_buf = 0
-        self.buf_bits = 0
-
-    def put(self, value: int, nbits: int) -> None:
-        self.bit_buf |= value << self.buf_bits
-        self.buf_bits += nbits
-        while self.buf_bits >= 32:
-            self.words.append(self.bit_buf & 0xFFFFFFFF)
-            self.bit_buf >>= 32
-            self.buf_bits -= 32
-
-    def write_unary(self, value: int) -> None:
-        # writeUnary: runs of 16 zeros, then 1 << remaining
-        while value >= 16:
-            value -= 16
-            self.put(0, 16)
-        self.put(1 << value, 1 + value)
-
-    def finish(self, padding: int) -> np.ndarray:
-        self.put(0, padding)
-        if self.buf_bits > 0:
-            self.words.append(self.bit_buf & 0xFFFFFFFF)
-            self.bit_buf = 0
-            self.buf_bits = 0
-        return np.array(self.words, dtype=np.uint32)
-
-
-class _BitReader:
-    __slots__ = ("words", "next", "bit_buf", "buf_bits")
-
-    def __init__(self, words: np.ndarray) -> None:
-        self.words = words.astype(np.int64)
-        self.next = 0
-        self.bit_buf = 0
-        self.buf_bits = 0
-
-    def _fill(self, need: int) -> None:
-        if self.buf_bits < need:
-            self.bit_buf |= int(self.words[self.next]) << self.buf_bits
-            self.next += 1
-            self.buf_bits += 32
-
-    def take(self, nbits: int) -> int:
-        self._fill(nbits)
-        v = self.bit_buf & ((1 << nbits) - 1)
-        self.bit_buf >>= nbits
-        self.buf_bits -= nbits
-        return v
-
-    def decode(self, table: np.ndarray) -> int:
-        """One 12-bit-peek table lookup; returns the decoded byte."""
-        self._fill(12)
-        lookup = int(table[self.bit_buf & 0xFFF])
-        self.bit_buf >>= lookup >> 8
-        self.buf_bits -= lookup >> 8
-        return lookup & 0xFF
-
-    def read_unary(self) -> int:
-        subtotal = 0
-        while True:
-            self._fill(8)
-            peek8 = self.bit_buf & 0xFF
-            if peek8 == 0:  # 8 trailing zeros: partial codeword
-                subtotal += 8
-                self.buf_bits -= 8
-                self.bit_buf >>= 8
-                continue
-            tz = (peek8 & -peek8).bit_length() - 1
-            self.bit_buf >>= 1 + tz
-            self.buf_bits -= 1 + tz
-            return subtotal + tz
+def _decode(words: np.ndarray, n: int, fields) -> list[np.ndarray]:
+    """The first n codes of a stream. `fields(p)` decodes a code at each
+    candidate start p into (end, *values); code 0 starts at bit 0 and
+    each next one where the last ended. Per block of bit positions the
+    starts are found by pointer doubling over end (the starts of codes
+    m..2m-1 are end^m of those of codes 0..m-1); the first code that
+    ends past the block opens the next one."""
+    if n == 0:
+        return fields(np.empty(0, np.int64))[1:]
+    total, start, parts = 32 * len(words), 0, []
+    while n > 0:
+        if start >= total:
+            raise ValueError("truncated CPC bit stream")
+        p = np.arange(start, min(start + _BLOCK, total))
+        end, *vals = fields(p)
+        m = len(p)  # the sink: a start past this block
+        jump = np.append(np.minimum(end - start, m), m)
+        s = np.zeros(1, np.int64)
+        while len(s) < n and s[-1] < m:
+            s = np.concatenate([s, jump[s]])
+            jump = jump[jump]
+        s = s[:n][s[:n] < m]
+        parts.append([v[s] for v in vals])
+        start, n = int(end[s[-1]]), n - len(s)
+    return [np.concatenate(c) for c in zip(*parts)]
 
 
 def _compress_bytes(byte_array: np.ndarray, table_idx: int) -> np.ndarray:
-    table = ENCODING_TABLES[table_idx].astype(np.int64)
-    w = _BitWriter()
-    for b in byte_array.astype(np.int64):
-        info = int(table[b])
-        w.put(info & 0xFFF, info >> 12)
-    return w.finish(11)  # 11 zero-bits: 12-bit peek can't overrun
+    info = ENCODING_TABLES[table_idx].astype(np.int64)[byte_array]
+    return _pack(info & 0xFFF, info >> 12, 11)
 
 
 def _uncompress_bytes(words: np.ndarray, num_bytes: int, table_idx: int) -> np.ndarray:
-    table = DECODING_TABLES[table_idx]
-    r = _BitReader(words)
-    out = np.empty(num_bytes, dtype=np.uint8)
-    for i in range(num_bytes):
-        out[i] = r.decode(table)
-    return out
+    def fields(p):
+        e = DECODING_TABLES[table_idx][_bits_at(words, p, 12)].astype(np.int64)
+        return p + (e >> 8), e & 0xFF
+
+    return _decode(words, num_bytes, fields)[0].astype(np.uint8)
 
 
 def _compress_pairs(pairs: np.ndarray, base_bits: int) -> np.ndarray:
-    unary = UNARY_ENCODING_TABLE_65.astype(np.int64)
-    w = _BitWriter()
-    pred_row = 0
-    pred_col = 0
-    for row_col in pairs.astype(np.int64):
-        row = int(row_col) >> 6
-        col = int(row_col) & 63
-        if row != pred_row:
-            pred_col = 0
-        y_delta = row - pred_row
-        x_delta = col - pred_col
-        pred_row = row
-        pred_col = col + 1
-        info = int(unary[x_delta])
-        w.put(info & 0xFFF, info >> 12)
-        w.write_unary(y_delta >> base_bits)
-        w.put(y_delta & ((1 << base_bits) - 1), base_bits)
-    return w.finish(max(0, 10 - base_bits))
+    """Per sorted rowCol pair: the column delta (length-limited unary
+    table), the row delta's Golomb hi in true unary (hi zeros, then a
+    one) and its base_bits low bits; a new row restarts the column."""
+    row, col = pairs >> 6, pairs & 63
+    y = np.diff(row, prepend=0)
+    x = col - np.where(y > 0, 0, np.concatenate([[0], col[:-1] + 1]))
+    info = UNARY_ENCODING_TABLE_65.astype(np.int64)[x]
+    hi, one = y >> base_bits, np.ones_like(y)
+    values = np.stack([info & 0xFFF, 0 * y, one, y & ((1 << base_bits) - 1)], 1)
+    lengths = np.stack([info >> 12, hi, one, base_bits * one], 1)
+    return _pack(values.ravel(), lengths.ravel(), max(0, 10 - base_bits))
 
 
 def _uncompress_pairs(words: np.ndarray, num_pairs: int, base_bits: int) -> np.ndarray:
-    r = _BitReader(words)
-    out = np.empty(num_pairs, dtype=np.int64)
-    pred_row = 0
-    pred_col = 0
-    for i in range(num_pairs):
-        x_delta = r.decode(UNARY_DECODING_TABLE_65)
-        golomb_hi = r.read_unary()
-        golomb_lo = r.take(base_bits) if base_bits else 0
-        y_delta = (golomb_hi << base_bits) | golomb_lo
-        if y_delta > 0:
-            pred_col = 0
-        row = pred_row + y_delta
-        col = pred_col + x_delta
-        out[i] = (row << 6) | col
-        pred_row = row
-        pred_col = col + 1
-    return out
+    bits = np.unpackbits(words.astype("<u4").view(np.uint8), bitorder="little")
+    ones = np.append(np.flatnonzero(bits), len(bits))
+
+    def fields(p):
+        e = UNARY_DECODING_TABLE_65[_bits_at(words, p, 12)].astype(np.int64)
+        q = p + (e >> 8)  # the Golomb hi's unary code
+        z = ones[np.minimum(np.searchsorted(ones, q), len(ones) - 1)]  # its one
+        y = ((z - q) << base_bits) | _bits_at(words, z + 1, base_bits)
+        return z + 1 + base_bits, e & 0xFF, y
+
+    x, y = _decode(words, num_pairs, fields)
+    row = np.cumsum(y)
+    # the column restarts at each new row, else follows the last one + 1
+    seg = np.maximum.accumulate(np.where(y > 0, np.arange(len(y)), 0))
+    c1 = np.cumsum(x + 1)
+    col = c1 - np.concatenate([[0], c1])[seg] - 1
+    return (row << 6) | col
 
 
 # ---------------------------------------------------------------------------
 # sketch <-> (window bytes, surprising pairs)
 
 def _set_bits_as_pairs(pattern: np.ndarray) -> np.ndarray:
-    """All set bits of a uint64 row array as sorted rowCol pairs.
-    Column-at-a-time (64 vector passes) — O(k) memory, no k x 64 blowup."""
-    chunks = []
-    for col in range(64):
-        rows = np.nonzero((pattern >> np.uint64(col)) & np.uint64(1))[0]
-        if len(rows):
-            chunks.append((rows.astype(np.int64) << 6) | col)
-    if not chunks:
-        return np.empty(0, dtype=np.int64)
-    return np.sort(np.concatenate(chunks))
+    """All set bits of a uint64 row array as sorted rowCol pairs: the
+    non-zero rows' bits unpacked 2^16 rows at a time, so memory stays
+    O(k) whatever lg_k."""
+    rows = np.flatnonzero(pattern)
+    chunks = [np.empty(0, np.int64)]
+    for lo in range(0, len(rows), 1 << 16):
+        r = rows[lo:lo + (1 << 16)]
+        bits = np.unpackbits(pattern[r].astype("<u8").view(np.uint8),
+                             bitorder="little").reshape(-1, 64)
+        i, col = np.nonzero(bits)  # row-major: rowCol order
+        chunks.append((r[i] << 6) | col)
+    return np.concatenate(chunks)
 
 
 def _decompose(sk: CpcSketch) -> tuple[np.ndarray | None, np.ndarray]:

@@ -43,6 +43,20 @@ def hash64(x: np.ndarray, seed: int = 9001) -> np.ndarray:
     return mix64(x ^ seed_mix(seed))
 
 
+def coin(seed: int, *key: int) -> bool:
+    """A seeded fair coin keyed on non-negative ints: the deterministic
+    stand-in for the reference's process-global Random (SURVEY.md §4),
+    so a task retry, or a sketch heapified from its image, flips the
+    same coins."""
+    h = int(seed_mix(seed))
+    for v in key:  # mix64 in Python ints: a scalar here, not an array
+        h ^= v
+        h = ((h ^ (h >> 30)) * int(_MIX1)) & 0xFFFFFFFFFFFFFFFF
+        h = ((h ^ (h >> 27)) * int(_MIX2)) & 0xFFFFFFFFFFFFFFFF
+        h ^= h >> 31
+    return bool(h & 1)
+
+
 def hash63(x: np.ndarray, seed: int = 9001) -> np.ndarray:
     """Seeded uniform 63-bit hash, returned as non-negative int64.
 

@@ -12,13 +12,16 @@ normalized rank error 2.446/k^0.9433 at 99% confidence
 One deliberate divergence (SURVEY.md §4 "deterministic randomness"):
 the reference draws the halving coin from a process-global Random
 (kll/KllDoublesHelper.java:86-88); Spark task retries must be
-idempotent, so our coin is a counter-based hash of (sketch seed,
-compaction index) — deterministic for a fixed insertion order.
+idempotent, so our coin is a seeded hash of (n, level, level length) —
+state the reference image carries, so a heapified sketch flips the
+coins the live one would.
 
 This is the package's one KLL engine; the item type is a serde
 (kernels/serde.py). kernels/kll_items.KllItems runs the same engine over
 object arrays, and one reference reader/writer serves the doubles,
-floats, longs and strings images.
+floats, longs and strings images. The reference image is the only
+serialized form: partials cross the shuffle as KllDoublesSketch /
+KllItemsSketch bytes that datasketches-java heapifies.
 """
 
 from __future__ import annotations
@@ -26,13 +29,24 @@ from __future__ import annotations
 import numpy as np
 
 from . import serde
-from .hashing import hash64
+from .hashing import coin
 from .quantile_search import quantile_from_view, rank_from_view, view_with_minmax
 
 DEFAULT_K = 200  # kll/KllSketch.java:97
-_C = 2.0 / 3.0
-_MIN_CAP = 8
-_IMAGE_MAGIC, _IMAGE_VER = 0x4B4C4C31, 3  # "KLL1"
+_M = 8  # minimum level capacity (KllSketch.java DEFAULT_M)
+_MAX_K = 0xFFFF  # the image's k is a u16
+
+
+def _ref_level_capacity(k: int, num_levels: int, level: int, m: int = _M) -> int:
+    """KllHelper.levelCapacity / intCapAux(Aux) (KllHelper.java:315-321,
+    751-771): cap(level) = max(m, round(k·(2/3)^depth)) computed in the
+    reference's exact integer arithmetic, so the engine compacts to the
+    capacities the reference layout holds and level boundaries match
+    its serialized images bit-for-bit."""
+    depth = num_levels - level - 1
+    pow3 = 3 ** depth
+    tmp = ((2 * k) << depth) // pow3
+    return max(m, (tmp + 1) >> 1)
 
 
 def rank_error(k: int, pmf: bool = True) -> float:
@@ -59,11 +73,12 @@ class KllDoubles:
         return values[~np.isnan(values)]
 
     def __init__(self, k: int = DEFAULT_K, seed: int = 9001):
+        if not _M <= k <= _MAX_K:
+            raise ValueError(f"KLL k must be in [{_M}, {_MAX_K}], got {k}")
         self.k = k
         self.seed = seed
         self.levels: list[np.ndarray] = [self._empty()]
         self.n = 0
-        self._compactions = 0
         # exact stream extremes, tracked through compaction like the
         # reference's minItem/maxItem fields (KllDoublesSketch), so
         # rank-0/rank-1 queries return the true extremes even after
@@ -74,18 +89,10 @@ class KllDoubles:
         self._ref_l0_sorted: bool | None = None
 
     def _cap(self, level: int) -> int:
-        num = len(self.levels)
-        # top level has capacity k; lower levels decay by c, floor 8
-        depth = num - 1 - level
-        return max(_MIN_CAP, int(np.ceil(self.k * (_C**depth))))
+        return _ref_level_capacity(self.k, len(self.levels), level)
 
     def _total_cap(self) -> int:
         return sum(self._cap(h) for h in range(len(self.levels)))
-
-    def _coin(self) -> bool:
-        self._compactions += 1
-        h = hash64(np.array([self._compactions], dtype=np.uint64), self.seed)[0]
-        return bool(h & np.uint64(1))
 
     def _widen(self, lo, hi) -> None:
         if lo is not None and (self._ref_min is None or lo < self._ref_min):
@@ -122,7 +129,7 @@ class KllDoubles:
             if target is None:
                 target = 0
             buf = np.sort(self.levels[target])
-            start = 1 if self._coin() else 0
+            start = int(coin(self.seed, self.n, target, len(buf)))
             promoted = buf[start::2]
             self.levels[target] = self._empty()
             if target + 1 >= len(self.levels):
@@ -186,59 +193,10 @@ class KllDoubles:
         cdf = self.get_cdf(split_points, inclusive)
         return np.diff(np.concatenate([[0.0], cdf]))
 
-    # --- private partial image (the partial->final exchange format; never
-    # outlives a query). int64 header (magic, ver, k, n, n_levels,
-    # compactions, has_extremes), serde(min, max) when present, then per
-    # level an int64 count and serde(items).
-
-    def serialize(self) -> bytes:
-        has_ext = self._ref_min is not None
-        parts = [np.array(
-            [_IMAGE_MAGIC, _IMAGE_VER, self.k, self.n, len(self.levels),
-             self._compactions, has_ext], dtype="<i8").tobytes()]
-        if has_ext:
-            parts.append(self._SERDE.to_bytes([self._ref_min, self._ref_max]))
-        for lv in self.levels:
-            parts.append(np.array([len(lv)], dtype="<i8").tobytes())
-            parts.append(self._SERDE.to_bytes(lv))
-        return b"".join(parts)
-
-    @classmethod
-    def deserialize(cls, buf: bytes, seed: int = 9001) -> "KllDoubles":
-        if len(buf) < 56:
-            raise ValueError("KLL image too short")
-        magic, ver, k, n, n_levels, compactions, has_ext = (
-            np.frombuffer(buf, dtype="<i8", count=7).tolist())
-        if magic != _IMAGE_MAGIC or ver != _IMAGE_VER:
-            raise ValueError("bad KLL image")
-        sk = cls(k=k, seed=seed)
-        sk.n, sk._compactions = n, compactions
-        off = 56
-        if has_ext:
-            ext, off = cls._SERDE.from_bytes(buf, off, 2)
-            sk._ref_min, sk._ref_max = ext.tolist()
-        sk.levels = []
-        for _ in range(n_levels):
-            (cnt,) = np.frombuffer(buf, dtype="<i8", count=1, offset=off).tolist()
-            lv, off = cls._SERDE.from_bytes(buf, off + 8, cnt)
-            sk.levels.append(lv)
-        return sk
-
 
 # --- reference-format interop (reads the reference library's own bytes)
 
 _FAMILY_KLL = 15  # common/Family.java:135
-
-
-def _ref_level_capacity(k: int, num_levels: int, level: int, m: int) -> int:
-    """KllHelper.levelCapacity / intCapAux(Aux) (KllHelper.java:315-321,
-    751-771): cap(level) = max(m, round(k·(2/3)^depth)) computed in the
-    reference's exact integer arithmetic so reconstructed level
-    boundaries match its serialized images bit-for-bit."""
-    depth = num_levels - level - 1
-    pow3 = 3 ** depth
-    tmp = ((2 * k) << depth) // pow3
-    return max(m, (tmp + 1) >> 1)
 
 
 def _from_ref_bytes_typed(buf: bytes, seed: int, item_serde,
@@ -301,22 +259,25 @@ def _to_ref_bytes_typed(sk: KllDoubles, item_serde) -> bytes:
     int[numLevels] + min + max + packed items). The full levels
     boundaries are reconstructed the way the reference reader does —
     levels[numLevels] = its computeTotalItemCapacity(k, m, numLevels) —
-    so heapify() splits our per-level item counts back exactly. min/max
-    are the tracked stream extremes (a parsed image carries its own),
-    else the retained extremes."""
-    m = 8  # reference default M (KllSketch.java DEFAULT_M)
+    so heapify() splits our per-level item counts back exactly. Levels
+    above 0 are written sorted, as the reference keeps them (its sorted
+    view merges them as sorted runs). min/max are the tracked stream
+    extremes (a parsed image carries its own), else the retained
+    extremes."""
+    if not 0 < sk.k <= _MAX_K:
+        raise ValueError(f"k={sk.k} does not fit the KLL image's u16 field")
     k16 = np.array([sk.k], dtype="<u2").tobytes()
     retained = np.concatenate(sk.levels)
     if sk.n == 0:
         #         preInts serVer famID flags(EMPTY)
-        return bytes([2, 1, _FAMILY_KLL, 1]) + k16 + bytes([m, 0])
+        return bytes([2, 1, _FAMILY_KLL, 1]) + k16 + bytes([_M, 0])
     if sk.n == 1:
         return (
-            bytes([2, 2, _FAMILY_KLL, 4]) + k16 + bytes([m, 0])  # SINGLE_ITEM
+            bytes([2, 2, _FAMILY_KLL, 4]) + k16 + bytes([_M, 0])  # SINGLE_ITEM
             + item_serde.to_bytes(retained[:1])
         )
     num_levels = len(sk.levels)
-    cap = sum(_ref_level_capacity(sk.k, num_levels, h, m) for h in range(num_levels))
+    cap = sum(_ref_level_capacity(sk.k, num_levels, h) for h in range(num_levels))
     counts = [len(lv) for lv in sk.levels]
     # boundaries from the top down: levels[numLevels] = cap
     bounds = np.empty(num_levels + 1, dtype=np.int64)
@@ -335,13 +296,14 @@ def _to_ref_bytes_typed(sk: KllDoubles, item_serde) -> bytes:
     mn = retained.min() if sk._ref_min is None else sk._ref_min
     mx = retained.max() if sk._ref_max is None else sk._ref_max
     return (
-        bytes([5, 1, _FAMILY_KLL, flags]) + k16 + bytes([m, 0])  # flags: LEVEL_ZERO_SORTED
+        bytes([5, 1, _FAMILY_KLL, flags]) + k16 + bytes([_M, 0])  # flags: LEVEL_ZERO_SORTED
         + np.array([sk.n], dtype="<i8").tobytes()
         + np.array([sk.k], dtype="<u2").tobytes()             # min_k
         + bytes([num_levels, 0])
         + bounds[:num_levels].astype("<i4").tobytes()
         + item_serde.to_bytes([mn, mx])
-        + item_serde.to_bytes(np.concatenate([lvl0] + sk.levels[1:]))
+        + item_serde.to_bytes(np.concatenate(
+            [lvl0] + [np.sort(lv) for lv in sk.levels[1:]]))
     )
 
 

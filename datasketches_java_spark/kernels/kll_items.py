@@ -6,10 +6,11 @@ sorted-view queries quantilescommon/ItemsSketchSortedView.java) so a
 user can ask "p99 caption by LEXICOGRAPHIC order" — a query the
 doubles kernel cannot express. Here there is ONE KLL engine
 (kernels/kll.KllDoubles: level structure, seeded compaction, merge,
-sorted views, both query criteria, the reference image codec and the
-private partial image) and the item type is a serde: KllItems holds
-its items in object arrays, drops None instead of NaN, and encodes
-them with ArrayOfStringsSerDe (kernels/serde.STRINGS).
+sorted views, both query criteria and the reference image codec) and
+the item type is a serde: KllItems holds its items in object arrays,
+drops None instead of NaN, and encodes them with ArrayOfStringsSerDe
+(kernels/serde.STRINGS). Its one serialized form, partials included,
+is the reference KllItemsSketch<String> image.
 
 Items are ordered by Python's comparison operator — for str that is
 Unicode code-point order, which equals UTF-8 byte order (UTF-8 is

@@ -9,8 +9,8 @@ doubles per the deterministic schedule, floor MIN_K=4 —
 ReqCompactor.java:224-240 ensureEnoughSections); a compaction selects
 `min(trailingOnes(state)+1, numSections)` contiguous sections from the
 accuracy-sacrificed end (low ranks when hra=True), promotes the
-even- or odd-indexed half of the sorted range (coin flipped
-deterministically on odd compaction counts — :127-128), and keeps the
+even- or odd-indexed half of the sorted range (the coin of the
+previous, even, state flipped on odd states — :127-128), and keeps the
 protected half (`nomCap/2 + (numSections-secs)·sectionSize` items —
 computeCompactionRange :249-257). High-rank-accuracy mode protects the
 TOP of each buffer, giving relative (not additive) rank error at the
@@ -19,23 +19,24 @@ BaseReqSketch.java:39,198-216, with exact ranks inside the
 baseCap = 3k window (exactRank :191-196).
 
 This is a faithful per-level re-expression in NumPy (batched appends
-between compress passes; the coin comes from the same seeded splitmix
-lane KLL uses so distributed runs are deterministic). The reference's
-item type is float32; this engine's is float64 throughout.
+between compress passes). The reference draws its even-state coin from
+a Random; here it is a seeded hash of (lg_weight, state), state the
+image carries, so distributed runs are deterministic and a heapified
+sketch compacts exactly as the live one would. The reference's item
+type is float32: updates round items to float32 as the reference does
+(held in float64 arrays), and sectionSizeFlt is float32 as well.
 
 Wire interop: `from_ref_bytes`/`to_ref_bytes` implement the
 reference's serial-v1 image layout (req/ReqSerDe.java:36-121 —
-EMPTY / RAWITEMS / EXACT / ESTIMATION forms, family id 17). Reads are
-lossless (float32 → float64); writes down-cast items to float32, so
-they are byte-faithful only for float32-representable values
-(integers, counts — this engine's REQ use cases).
+EMPTY / RAWITEMS / EXACT / ESTIMATION forms, family id 17), the one
+serialized form, partials included. Both directions are lossless.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .hashing import hash64
+from .hashing import coin
 from .quantile_search import quantile_from_view, rank_from_view, view_with_minmax
 
 DEFAULT_K = 12       # ReqSketchBuilder default: ~1% rel. error @ 95%
@@ -61,7 +62,7 @@ def _trailing_ones(state: int) -> int:
 
 class _Compactor:
     __slots__ = ("lg_weight", "hra", "state", "section_size_flt",
-                 "section_size", "num_sections", "coin", "buf")
+                 "section_size", "num_sections", "buf")
 
     def __init__(self, lg_weight: int, hra: bool, section_size: int):
         self.lg_weight = lg_weight
@@ -70,7 +71,6 @@ class _Compactor:
         self.section_size_flt = float(section_size)
         self.section_size = section_size
         self.num_sections = INIT_NUM_SECTIONS
-        self.coin = False
         self.buf = np.empty(0, np.float64)  # kept sorted
 
     def nom_capacity(self) -> int:
@@ -79,7 +79,7 @@ class _Compactor:
     def _ensure_enough_sections(self) -> bool:
         # ReqCompactor.java:226-241
         if self.state >= (1 << (self.num_sections - 1)) and self.section_size > MIN_K:
-            szf = self.section_size_flt / _SQRT2
+            szf = float(np.float32(self.section_size_flt / _SQRT2))  # a Java float
             ne = _nearest_even(szf)
             if ne >= MIN_K:
                 self.section_size_flt = szf
@@ -88,7 +88,7 @@ class _Compactor:
                 return True
         return False
 
-    def compact(self, coin_fn) -> np.ndarray:
+    def compact(self, seed: int) -> np.ndarray:
         """One compaction; returns the promoted items (sorted)."""
         buf_len = len(self.buf)
         secs = min(_trailing_ones(self.state) + 1, self.num_sections)
@@ -100,11 +100,9 @@ class _Compactor:
             self._ensure_enough_sections()
             return np.empty(0, np.float64)
         lo, hi = (0, buf_len - non_compact) if self.hra else (non_compact, buf_len)
-        if self.state & 1:
-            self.coin = not self.coin  # odd count: flip (:127)
-        else:
-            self.coin = coin_fn()      # even count: fresh random flip
-        promote = self.buf[lo + (1 if self.coin else 0):hi:2].copy()
+        # even state: a fresh flip; odd state: that flip inverted (:127)
+        flip = coin(seed, self.lg_weight, self.state & ~1) ^ bool(self.state & 1)
+        promote = self.buf[lo + flip:hi:2].copy()
         self.buf = self.buf[hi:] if self.hra else self.buf[:lo]
         self.state += 1
         self._ensure_enough_sections()
@@ -130,15 +128,9 @@ class ReqDoubles:
         self.n = 0
         self.min = np.nan
         self.max = np.nan
-        self._coins = 0
         self.compactors = [_Compactor(0, hra, k)]
 
     # --- internals ---------------------------------------------------
-
-    def _coin(self) -> bool:
-        self._coins += 1
-        h = hash64(np.array([self._coins], dtype=np.uint64), self.seed)[0]
-        return bool(h & np.uint64(1))
 
     def _max_nom(self) -> int:
         return sum(c.nom_capacity() for c in self.compactors)
@@ -156,14 +148,14 @@ class ReqDoubles:
             if len(c.buf) >= c.nom_capacity():
                 if h + 1 >= len(self.compactors):
                     self._grow()
-                promoted = c.compact(self._coin)
+                promoted = c.compact(self.seed)
                 nxt = self.compactors[h + 1]
                 nxt.buf = np.sort(np.concatenate([nxt.buf, promoted]))
 
     # --- updates -----------------------------------------------------
 
     def update_many(self, values: np.ndarray) -> "ReqDoubles":
-        v = np.asarray(values, dtype=np.float64)
+        v = np.asarray(values, dtype=np.float32).astype(np.float64)
         v = v[~np.isnan(v)]
         if len(v) == 0:
             return self
@@ -259,51 +251,6 @@ class ReqDoubles:
         ub = min(rank + num_std_dev * rel, rank + num_std_dev * fix)
         return lb, ub
 
-    # --- serialization (internal versioned format) --------------------
-
-    _MAGIC = 0x52455131  # "REQ1"
-
-    def serialize(self) -> bytes:
-        head = np.array(
-            [self._MAGIC, 1, self.k, int(self.hra), self.n,
-             len(self.compactors), self._coins],
-            dtype="<i8",
-        ).tobytes()
-        parts = [head, np.array([self.min, self.max], dtype="<f8").tobytes()]
-        for c in self.compactors:
-            parts.append(np.array(
-                [c.state, c.num_sections, c.section_size, len(c.buf)],
-                dtype="<i8").tobytes())
-            parts.append(np.array([c.section_size_flt], dtype="<f8").tobytes())
-            parts.append(c.buf.astype("<f8").tobytes())
-        return b"".join(parts)
-
-    @classmethod
-    def deserialize(cls, buf: bytes, seed: int = 9001) -> "ReqDoubles":
-        head = np.frombuffer(buf[:56], dtype="<i8")
-        if head[0] != cls._MAGIC or head[1] != 1:
-            raise ValueError("bad REQ image")
-        sk = cls(k=int(head[2]), hra=bool(head[3]), seed=seed)
-        sk.n = int(head[4])
-        n_comp = int(head[5])
-        sk._coins = int(head[6])
-        mm = np.frombuffer(buf[56:72], dtype="<f8")
-        sk.min, sk.max = float(mm[0]), float(mm[1])
-        off = 72
-        sk.compactors = []
-        for h in range(n_comp):
-            st, ns, ss, cnt = np.frombuffer(buf[off:off + 32], dtype="<i8")
-            off += 32
-            ssf = float(np.frombuffer(buf[off:off + 8], dtype="<f8")[0])
-            off += 8
-            c = _Compactor(h, sk.hra, sk.k)
-            c.state, c.num_sections, c.section_size = int(st), int(ns), int(ss)
-            c.section_size_flt = ssf
-            c.buf = np.frombuffer(buf[off:off + 8 * cnt], dtype="<f8").copy()
-            off += 8 * int(cnt)
-            sk.compactors.append(c)
-        return sk
-
 
 # ---------------------------------------------------------------------------
 # Reference wire format — ReqSketch serial v1 (req/ReqSerDe.java:36-121).
@@ -341,7 +288,7 @@ def _read_ref_compactor(buf: bytes, off: int, h: int, hra: bool,
     c = _Compactor(int(lg_wt), hra, k)
     c.state = state
     c.section_size_flt = ssf
-    c.section_size = int(round(ssf))  # sectionSize = round(sectionSizeFlt) (:203)
+    c.section_size = _nearest_even(ssf)  # nearestEven(sectionSizeFlt) (:203)
     c.num_sections = int(num_sections)
     # this kernel keeps buffers sorted between compactions; sorting a
     # reference buffer changes no rank/weight semantics (the reference
@@ -407,9 +354,8 @@ def _write_ref_compactor(c: _Compactor) -> bytes:
 
 def to_ref_bytes(sk: ReqDoubles) -> bytes:
     """Serialize to the reference serial-v1 layout (ReqSerDe.toByteArray,
-    ReqSerDe.java:265-313). Items are down-cast to float32 (the
-    reference REQ is a floats sketch); exact for float32-representable
-    values. The reference can heapify these images directly."""
+    ReqSerDe.java:265-313). Lossless: items are float32 from update on.
+    The reference can heapify these images directly."""
     empty = sk.n == 0
     n_levels = len(sk.compactors)
     raw = (not empty) and sk.n <= MIN_K

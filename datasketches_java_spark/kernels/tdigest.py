@@ -235,34 +235,6 @@ class TDigest:
                           * (value - float(self.means[lower])) / span) / total)
         return float((weight_below + weight_delta / 2.0) / total)
 
-    # --- serialization (versioned LE preamble) ----------------------
-
-    _MAGIC = 0x54444731  # "TDG1"
-
-    def serialize(self) -> bytes:
-        head = np.array([self._MAGIC, 1, self.k, len(self.means)], dtype="<u4")
-        return (
-            head.tobytes()
-            + np.array([self.min, self.max], dtype="<f8").tobytes()
-            + self.means.astype("<f8").tobytes()
-            + self.weights.astype("<f8").tobytes()
-        )
-
-    @classmethod
-    def deserialize(cls, buf: bytes) -> "TDigest":
-        head = np.frombuffer(buf[:16], dtype="<u4")
-        if head[0] != cls._MAGIC or head[1] != 1:
-            raise ValueError("bad tdigest image")
-        td = cls(k=int(head[2]))
-        n = int(head[3])
-        mm = np.frombuffer(buf[16:32], dtype="<f8")
-        td.min, td.max = float(mm[0]), float(mm[1])
-        off = 32
-        td.means = np.frombuffer(buf[off:off + 8 * n], dtype="<f8").copy()
-        off += 8 * n
-        td.weights = np.frombuffer(buf[off:off + 8 * n], dtype="<f8").copy()
-        return td
-
 
 # --- reference-format interop (reads the reference library's own bytes)
 
@@ -341,7 +313,11 @@ def to_ref_bytes(td: TDigest) -> bytes:
     short}, then empty / single-value / full images. A Java
     TDigestDouble.heapify() reads these bytes directly — the write
     side of the interop lane whose read side is from_ref_bytes
-    (round-trip tested in tests/test_ref_goldens.py)."""
+    (round-trip tested in tests/test_ref_goldens.py), and the one
+    serialized form: partials cross the shuffle as these bytes.
+    Lossless for this engine's state (weights are integer counts)."""
+    if not 0 < td.k <= 0xFFFF:
+        raise ValueError(f"k={td.k} does not fit the t-digest image's u16 field")
     n_c = len(td.means)
     k16 = np.array([td.k], dtype="<u2").tobytes()
     if n_c == 0:

@@ -29,6 +29,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import tuple_compat as tc
+from .mmh3 import compute_seed_hash
+
 _MAX63 = np.int64(2**62 - 1 + 2**62)  # int64 max as "no threshold"
 
 
@@ -77,8 +80,8 @@ class TupleKmv:
         self.theta = np.int64(theta)
         # reference empty rule marker (tuple/Filter.java:70): set by
         # filter() when nothing survives a NON-estimating source;
-        # False on every other construction path. NOT serialized —
-        # a round-trip re-derives emptiness from (retained, theta).
+        # False on every other construction path. Not in the image:
+        # a round trip re-derives emptiness from (retained, theta).
         self.filtered_empty = False
 
     @property
@@ -164,31 +167,18 @@ class TupleKmv:
         meaningful for the 'sum' combiner."""
         return self.summaries.sum(axis=0) / self._theta_frac()
 
-    # --- serialization (versioned LE preamble, PreambleUtil style) --
+    # --- the reference image (the partial and final exchange format) --
 
-    _MAGIC = 0x54504C31  # "TPL1"
-
-    def serialize(self) -> bytes:
-        head = np.array(
-            [self._MAGIC, 1, self.k, len(self.hashes), self.d, 0],
-            dtype="<u4",
-        ).tobytes()
-        return (
-            head
-            + np.asarray([self.theta], dtype="<i8").tobytes()
-            + self.hashes.astype("<i8").tobytes()
-            + self.summaries.astype("<f8").tobytes()
-        )
+    def to_ref_bytes(self, seed: int = 9001) -> bytes:
+        """The ArrayOfDoublesCompactSketch image
+        (tuple_compat.aod_to_ref_bytes). It carries the hashes, the
+        summaries and theta, not k: the reader passes it back."""
+        return tc.aod_to_ref_bytes(tc.ArrayOfDoublesSketchImage(
+            self.hashes, self.summaries, int(self.theta),
+            empty=len(self.hashes) == 0 and self.theta == _MAX63,
+            seed_hash=compute_seed_hash(seed)))
 
     @classmethod
-    def deserialize(cls, buf: bytes) -> "TupleKmv":
-        head = np.frombuffer(buf[:24], dtype="<u4")
-        if head[0] != cls._MAGIC or head[1] != 1:
-            raise ValueError("bad tuple sketch image")
-        k, n, d = int(head[2]), int(head[3]), int(head[4])
-        theta = np.frombuffer(buf[24:32], dtype="<i8")[0]
-        off = 32
-        h = np.frombuffer(buf[off:off + 8 * n], dtype="<i8").astype(np.int64)
-        off += 8 * n
-        s = np.frombuffer(buf[off:off + 8 * n * d], dtype="<f8").reshape(n, d)
-        return cls(h, s.copy(), k, theta, d=d)
+    def from_ref_bytes(cls, buf: bytes, k: int, seed: int = 9001) -> "TupleKmv":
+        img = tc.aod_from_ref_bytes(buf, check_seed_hash=compute_seed_hash(seed))
+        return cls(img.hashes, img.values, k, img.theta_long, d=img.values.shape[1])

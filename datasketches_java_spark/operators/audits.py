@@ -4,8 +4,8 @@ the shared functions/sketch_reduce.py:
 
  1. group_partials: per (Arrow batch, cluster) the row count, the KMV
     union of the member signatures (ThetaUnionImpl.java:272-303) and a
-    KLL sketch of the caption lengths — map-side combine, O(k) state
-    per cluster whatever its size.
+    KLL sketch of the caption lengths as a reference KllDoublesSketch
+    image — map-side combine, O(k) state per cluster whatever its size.
  2. reduce_partials: one native ObjectHashAggregate exchange (summed
     counts, sorted sketch arrays), then the batched finisher: per
     cluster row, the KMV union + binomial bounds and the KLL merge +

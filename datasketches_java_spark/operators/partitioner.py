@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.kll_agg import kll_merge, kll_partial
 from ..functions.sketch_reduce import reduce_partials
+from ..kernels import kll
 from ..kernels.kll import DEFAULT_K, KllDoubles
 
 INCLUDE_BOTH = "INCLUDE_BOTH"
@@ -184,11 +185,11 @@ def _sketch_ranges(
     )
 
     merged = reduce_partials(
-        partials, "rid", lambda blobs: (kll_merge(blobs, seed).serialize(),),
+        partials, "rid", lambda blobs: (kll.to_ref_bytes(kll_merge(blobs, seed)),),
         "rid long, sketch binary",
     )
     return {
-        int(r["rid"]): KllDoubles.deserialize(bytes(r["sketch"]), seed=seed)
+        int(r["rid"]): kll.from_ref_bytes(bytes(r["sketch"]), seed)
         for r in merged.collect()
     }
 

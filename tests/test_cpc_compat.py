@@ -21,8 +21,6 @@ from datasketches_java_spark.kernels.cpc_compat import (
     COLUMN_PERMUTATIONS_DEC,
     DECODING_TABLES,
     UNARY_DECODING_TABLE_65,
-    _BitReader,
-    _BitWriter,
     _compress_bytes,
     _compress_pairs,
     _golomb_base_bits,
@@ -75,13 +73,18 @@ def test_column_permutations_invert():
 
 
 def test_unary_roundtrip():
+    """A pair's Golomb-hi row delta is true unary (writeUnary: hi zero
+    bits, then a one), runs of 16 and more included."""
     values = [0, 1, 7, 15, 16, 17, 31, 32, 100, 1000]
-    w = _BitWriter()
+    x_len = int(UNARY_ENCODING_TABLE_65[0]) >> 12  # column delta 0
     for v in values:
-        w.write_unary(v)
-    words = w.finish(11)
-    r = _BitReader(words)
-    assert [r.read_unary() for _ in values] == values
+        words = _compress_pairs(np.array([v << 6]), 0)
+        bits = np.unpackbits(words.view(np.uint8), bitorder="little")
+        assert not bits[x_len:x_len + v].any() and bits[x_len + v] == 1
+        assert _uncompress_pairs(words, 1, 0).tolist() == [v << 6]
+    pairs = (np.cumsum(values) << 6) | np.arange(len(values))
+    assert np.array_equal(
+        _uncompress_pairs(_compress_pairs(pairs, 0), len(pairs), 0), pairs)
 
 
 def test_low_level_bytes_roundtrip():

@@ -57,3 +57,20 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) >= {"id_a", "id_b", "jaccard_est"}
+
+
+def test_shared_run_outlives_the_scope_that_built_it(spark, smoke_sf_dir, duck):
+    """SHARED_RUNS alone owns the runs it hands out: the scope open when
+    a query first builds a run closes, and a later query that shares the
+    run, in its own scope, still reads it (it failed with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND when the first scope freed it)."""
+    from datasketches_java_spark.scope import RunScope
+
+    try:
+        for name in ("corpus_dup_pairs", "corpus_clusters"):
+            with RunScope():
+                sdf = entrymod.queries()[name](spark, smoke_sf_dir).toPandas()
+            odf = duck.sql(entrymod.oracle_sql()[name]).df()
+            assert not compare(sdf, odf), name
+    finally:
+        entrymod.SHARED_RUNS.close()

@@ -1,6 +1,7 @@
 """Item serdes (kernels/serde.py) and the one-engine-per-family codecs
-built on them: the KLL engine's private partial image, the shared KLL
-reference reader/writer, and the string consumers' bounds checks."""
+built on them: the shared KLL reference reader/writer (the engine's one
+serialized form, partials included) and the string consumers' bounds
+checks."""
 
 import copy
 
@@ -53,26 +54,34 @@ def _lossy(cls, lo, hi):
     return cls(k=16).update_many(np.arange(lo, hi, dtype=np.float64))
 
 
+def _image(sk) -> bytes:
+    return K._to_ref_bytes_typed(sk, sk._SERDE)
+
+
+def _heapify(cls, buf: bytes, seed: int = 9001):
+    return K._from_ref_bytes_typed(buf, seed, cls._SERDE, cls)
+
+
 @pytest.mark.parametrize("cls", [K.KllDoubles, KllItems])
-def test_private_image_round_trip_then_merge_equals_in_memory(cls):
-    """Lossy regime: merging deserialized partials must equal merging
-    the live sketches, so the image carries k, n, the levels, the
-    compaction counter (the next coin flips depend on it) and the
-    extremes."""
+def test_ref_image_round_trip_then_merge_equals_in_memory(cls):
+    """Lossy regime: merging heapified partials must equal merging the
+    live sketches, so the image carries everything later work reads:
+    k, n, the levels and the extremes (the coin is keyed on n and the
+    level sizes)."""
     a, b = _lossy(cls, 0, 3000), _lossy(cls, 2000, 5500)
-    assert a._compactions > 0 and len(a.levels) > 2
-    a2, b2 = (cls.deserialize(s.serialize(), seed=s.seed) for s in (a, b))
+    assert len(a.levels) > 2
+    a2, b2 = (_heapify(cls, _image(s), s.seed) for s in (a, b))
     for src, back in ((a, a2), (b, b2)):
-        assert (back.k, back.n, back._compactions) == (src.k, src.n, src._compactions)
+        assert (back.k, back.n) == (src.k, src.n)
         assert (back._ref_min, back._ref_max) == (src._ref_min, src._ref_max)
-        assert [lv.tolist() for lv in back.levels] == [lv.tolist() for lv in src.levels]
+        assert ([sorted(lv.tolist()) for lv in back.levels]
+                == [sorted(lv.tolist()) for lv in src.levels])
     mem = copy.deepcopy(a).merge(b)
     wire = a2.merge(b2)
-    assert wire._compactions == mem._compactions
-    assert [lv.tolist() for lv in wire.levels] == [lv.tolist() for lv in mem.levels]
+    assert _image(wire) == _image(mem)
     for r in (0.0, 0.3, 0.5, 0.9, 1.0):
         assert wire.get_quantile(r) == mem.get_quantile(r)
-    empty = cls.deserialize(cls(k=16).serialize())
+    empty = _heapify(cls, _image(cls(k=16)))
     assert empty.n == 0 and empty._ref_min is None
 
 
@@ -84,19 +93,11 @@ def test_parsed_single_item_image_keeps_its_extremes(cls, item, stream):
     """A COMPACT_SINGLE image's item is the stream min and max; once
     compaction drops it from the retained set, rank 0 must still
     return it, and so must the re-serialized image's min."""
-    single = cls(k=8).update(item)
-    if cls is KllItems:
-        sk = KllItems.from_ref_bytes(single.to_ref_bytes())
-    else:
-        sk = K.from_ref_bytes(K.to_ref_bytes(single))
+    sk = _heapify(cls, _image(cls(k=8).update(item)))
     assert sk._ref_min == sk._ref_max == item
     sk.update_many(stream)
     assert sk.get_quantile(0.0) == item
-    if cls is KllItems:
-        back = KllItems.from_ref_bytes(sk.to_ref_bytes())
-    else:
-        back = K.from_ref_bytes(K.to_ref_bytes(sk))
-    assert back._ref_min == item
+    assert _heapify(cls, _image(sk))._ref_min == item
 
 
 def test_truncated_string_section_raises_in_every_consumer():

@@ -290,7 +290,7 @@ def test_kll_merge_matches_combined():
 def test_kll_serialization_roundtrip():
     sk = kll.KllDoubles(128)
     sk.update_many(np.random.default_rng(2).uniform(0, 10, 5000))
-    sk2 = kll.KllDoubles.deserialize(sk.serialize())
+    sk2 = kll.from_ref_bytes(kll.to_ref_bytes(sk))
     for q in (0.1, 0.5, 0.9):
         assert sk.get_quantile(q) == sk2.get_quantile(q)
     assert sk2.n == sk.n

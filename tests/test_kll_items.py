@@ -70,7 +70,7 @@ def test_lossy_rank_error_contract():
 def test_string_serde_roundtrip():
     items = ["αβγ", "", "z" * 500, "a\nb", "naïve", "zebra"] * 40
     sk = KllItems(k=50).update_many(items)
-    rt = KllItems.deserialize(sk.serialize())
+    rt = KllItems.from_ref_bytes(sk.to_ref_bytes())
     assert rt.n == sk.n
     it1, wt1 = sk._sorted_view()
     it2, wt2 = rt._sorted_view()

@@ -6,6 +6,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from datasketches_java_spark.kernels import req, tdigest
 from datasketches_java_spark.kernels.cpc import CpcSketch
 from datasketches_java_spark.kernels.req import ReqDoubles
 from datasketches_java_spark.kernels.tdigest import TDigest
@@ -21,7 +22,7 @@ small_floats = st.lists(
 @given(small_floats)
 def test_tdigest_serde_and_quantile_monotone(vals):
     td = TDigest(k=100).update_many(np.array(vals))
-    back = TDigest.deserialize(td.serialize())
+    back = tdigest.from_ref_bytes(tdigest.to_ref_bytes(td))
     assert back.n == td.n
     qs = [back.get_quantile(r) for r in (0.0, 0.25, 0.5, 0.75, 1.0)]
     assert qs == sorted(qs)                      # monotone in rank
@@ -43,7 +44,7 @@ def test_tdigest_merge_weight_conservation(a, b):
 @given(small_floats)
 def test_req_serde_preserves_every_query(vals):
     sk = ReqDoubles(k=8).update_many(np.array(vals))
-    back = ReqDoubles.deserialize(sk.serialize())
+    back = req.from_ref_bytes(req.to_ref_bytes(sk))
     for r in (0.0, 0.1, 0.5, 0.9, 1.0):
         assert back.get_quantile(r) == sk.get_quantile(r)
     assert back.n == sk.n and back._retained() == sk._retained()

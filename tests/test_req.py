@@ -5,6 +5,7 @@ bounds, merge, serde, and the distributed agg face."""
 import numpy as np
 import pytest
 
+from datasketches_java_spark.kernels import req
 from datasketches_java_spark.kernels.req import ReqDoubles
 
 
@@ -64,12 +65,12 @@ def test_merge_matches_single_stream_envelope():
 def test_serde_round_trip():
     rng = np.random.default_rng(6)
     sk = ReqDoubles(k=24).update_many(rng.normal(0, 1, 50_000))
-    back = ReqDoubles.deserialize(sk.serialize())
+    back = req.from_ref_bytes(req.to_ref_bytes(sk))
     assert back.n == sk.n
     assert back._retained() == sk._retained()
     for r in (0.1, 0.5, 0.99):
         assert back.get_quantile(r) == sk.get_quantile(r)
-    # deserialized sketch keeps updating identically (schedule state)
+    # the heapified sketch keeps updating identically (schedule state)
     sk.update_many(np.arange(100.0))
     back.update_many(np.arange(100.0))
     assert sk.get_quantile(0.5) == back.get_quantile(0.5)

@@ -14,31 +14,34 @@ import pandas as pd
 import pytest
 
 from datasketches_java_spark.functions.sketch_reduce import reduce_partials
+from datasketches_java_spark.kernels import kll, req, tdigest
 from datasketches_java_spark.kernels.kll import KllDoubles
 from datasketches_java_spark.kernels.req import ReqDoubles
 from datasketches_java_spark.kernels.tdigest import TDigest
 
-# family -> (new empty sketch, deserialize); all three merge in place
-# and return self, so reduce(merge) folds blobs in the order given
+# family -> (new empty sketch, its reference codec module); all three
+# merge in place and return self, so reduce(merge) folds partial
+# images in the order given
 _FAMILIES = {
-    "kll": (lambda: KllDoubles(k=8), KllDoubles.deserialize),
-    "req": (lambda: ReqDoubles(k=12), ReqDoubles.deserialize),
-    "tdigest": (lambda: TDigest(k=20), TDigest.deserialize),
+    "kll": (lambda: KllDoubles(k=8), kll),
+    "req": (lambda: ReqDoubles(k=12), req),
+    "tdigest": (lambda: TDigest(k=20), tdigest),
 }
 
 
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 def test_reduce_partials_merge_order_invariant(spark, family):
-    new, load = _FAMILIES[family]
+    new, codec = _FAMILIES[family]
     vals = np.random.default_rng(11).normal(100.0, 30.0, 1500)
     blobs = []
     for part in np.array_split(vals, 6):
         sk = new()
         sk.update_many(part)
-        blobs.append(sk.serialize())
+        blobs.append(codec.to_ref_bytes(sk))
 
     def fold(sketches) -> bytes:  # merge in the order given
-        return reduce(lambda x, y: x.merge(y), map(load, sketches)).serialize()
+        return codec.to_ref_bytes(reduce(
+            lambda x, y: x.merge(y), map(codec.from_ref_bytes, sketches)))
 
     a, b = [0, 1, 2, 3, 4, 5], [3, 5, 0, 4, 2, 1]
     # precondition: a per-group final that folds partials in arrival

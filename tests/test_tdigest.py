@@ -5,6 +5,7 @@ accuracy (tight tails), exact min/max, merge ≈ whole-stream accuracy."""
 import numpy as np
 import pytest
 
+from datasketches_java_spark.kernels import tdigest
 from datasketches_java_spark.kernels.tdigest import TDigest
 
 
@@ -70,7 +71,7 @@ def test_rank_quantile_inverse():
 def test_round_trip():
     rng = np.random.default_rng(6)
     td = TDigest(k=100).update_many(rng.normal(size=5_000))
-    td2 = TDigest.deserialize(td.serialize())
+    td2 = tdigest.from_ref_bytes(tdigest.to_ref_bytes(td))
     assert td2.k == 100 and td2.n == td.n
     assert td2.min == td.min and td2.max == td.max
     np.testing.assert_array_equal(td2.means, td.means)

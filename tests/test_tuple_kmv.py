@@ -77,10 +77,12 @@ def test_round_trip():
     sk = TupleKmv.from_stream(
         _h(np.arange(5000)), rng.random((5000, 3)), k=256
     )
-    sk2 = TupleKmv.deserialize(sk.serialize())
+    sk2 = TupleKmv.from_ref_bytes(sk.to_ref_bytes(), k=256)
     assert sk2.k == sk.k and sk2.theta == sk.theta and sk2.d == 3
     np.testing.assert_array_equal(sk2.hashes, sk.hashes)
-    np.testing.assert_allclose(sk2.summaries, sk.summaries)
+    np.testing.assert_array_equal(sk2.summaries, sk.summaries)
+    with pytest.raises(ValueError, match="seed hash"):
+        TupleKmv.from_ref_bytes(sk.to_ref_bytes(), k=256, seed=7)
 
 
 def test_multi_column_summaries():
@@ -150,4 +152,4 @@ def test_filtered_empty_exists_on_all_paths():
     assert a.union(a).filtered_empty is False
     assert a.intersect(a).filtered_empty is False
     assert a.a_not_b(a).filtered_empty is False
-    assert TupleKmv.deserialize(a.serialize()).filtered_empty is False
+    assert TupleKmv.from_ref_bytes(a.to_ref_bytes(), k=8).filtered_empty is False

@@ -81,16 +81,19 @@ COLUMN_PERMUTATIONS_ENC = _unpack(_PERM, np.uint8, (16, 56))
 
 def make_decoding_table(encoding_table: np.ndarray, num_byte_values: int) -> np.ndarray:
     """CompressionData.makeDecodingTable(:64-86): 4096-entry 12-bit-peek
-    inverse; entry = (codeLength << 8) | byteValue."""
+    inverse; entry = (codeLength << 8) | byteValue. A peek decodes to
+    the byte whose code is its low codeLength bits (the codes are
+    prefix-free), found one code length at a time."""
+    enc = encoding_table[:num_byte_values].astype(np.int64)
+    length = enc >> 12
+    peek = np.arange(4096)
     dec = np.zeros(4096, dtype=np.uint16)
-    for byte_value in range(num_byte_values):
-        e = int(encoding_table[byte_value])
-        code_value = e & 0xFFF
-        code_length = e >> 12
-        entry = (code_length << 8) | byte_value
-        garbage = 12 - code_length
-        for g in range(1 << garbage):
-            dec[(code_value | (g << code_length)) & 0xFFF] = entry
+    for cl in np.unique(length):
+        b = np.flatnonzero(length == cl)
+        lut = np.full(1 << cl, -1)
+        lut[enc[b] & 0xFFF] = (cl << 8) | b
+        hit = lut[peek & ((1 << cl) - 1)]
+        dec[hit >= 0] = hit[hit >= 0]
     return dec
 
 
