@@ -425,10 +425,12 @@ def _q_ebpps_source_sample(spark, sf_dir):
 def _q_theta_user_overlap(spark, sf_dir):
     """Theta intersection / A-not-B between per-event-type user sets
     (reference T4/T5: theta/ThetaIntersectionImpl.java:442-480,
-    theta/ThetaAnotBimpl.java:83-98): high-value users shared between
-    event types and exclusive to each. Exact regime (distinct users
-    << k=4096 ⇒ θ=1, retained = exact set cardinality); θ<1 estimation
-    semantics are pytest-gated (tests/test_kernels.py)."""
+    theta/ThetaAnotBimpl.java:83-98), run by Spark's theta_intersection
+    and theta_difference over theta_sketch_agg images: high-value users
+    shared between event types and exclusive to each. Exact regime
+    (distinct users << k=4096 ⇒ θ=1, estimate = exact set cardinality);
+    the images' determinism and Java parity are pytest-gated
+    (tests/test_theta_lane.py, tests/test_live_jvm_interop.py)."""
     from datasketches_java_spark.functions.sketch_udfs import (
         kmv_sketch_bytes_agg, theta_pair_set_ops,
     )
@@ -523,8 +525,9 @@ def _q_minhash_dup_docs(spark, sf_dir):
 
 
 def _q_kmv_distinct_by_source(spark, sf_dir):
-    """Theta/KMV distinct-count estimate with bounds per source
-    (reference T1/T2; exactness asserted vs binomial bounds in tests)."""
+    """Theta distinct-count estimate with bounds per source (reference
+    T1/T2: Spark's theta_sketch_agg image, read by the reference
+    estimate and binomial bounds; exactness asserted in tests)."""
     from datasketches_java_spark.functions.sketch_udfs import kmv_distinct_agg
 
     return kmv_distinct_agg(

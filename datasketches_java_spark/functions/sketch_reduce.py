@@ -86,6 +86,13 @@ def reduce_partials(
                 f"no merge rule for partial column {f.name} {f.dataType.simpleString()}"
             )
 
+    return finish_rows(partials.groupBy(key).agg(*aggs), finish, schema)
+
+
+def finish_rows(df: DataFrame, finish: Callable[..., tuple], schema: str) -> DataFrame:
+    """One row (key, *finish(*values)) per row (key, *values) of `df`,
+    in one batched mapInPandas."""
+
     def finisher(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
@@ -94,4 +101,4 @@ def reduce_partials(
                     for row in pdf.itertuples(index=False, name=None)
                 ])
 
-    return partials.groupBy(key).agg(*aggs).mapInPandas(finisher, schema)
+    return df.mapInPandas(finisher, schema)

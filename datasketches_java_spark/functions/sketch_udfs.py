@@ -1,20 +1,27 @@
 """Sketch aggregations as Arrow-grouped UDAFs.
 
-`kmv_distinct_agg` is the Spark face of the Theta/KMV distinct-count
-lifecycle (SURVEY.md §3.1): per-group vectorized hash → bottom-k →
-estimate with binomial bounds (theta/ThetaSketch.java:621-623 estimate,
-thetacommon/BinomialBoundsN.java bounds). The KMV and tuple aggregates
-run on functions/sketch_reduce.py: a partial sketch per (Arrow batch,
-group), a sorted native merge, one batched finisher — signature state
-stays O(k) per group regardless of group size. VarOpt runs on it too,
-its partial a k-sample frame per (Arrow batch, group); EBPPS keeps its
-own single-level grouped map (see ebpps_sample_agg).
+The raw-item theta lane (SURVEY.md §3.1 T1-T5, T7) runs on Spark's
+built-in datasketches-java theta functions: `theta_sketch_agg` builds
+one compact reference image per group (partial and final aggregation
+stay in the JVM, and the image bytes do not depend on the partition
+layout), `theta_intersection` / `theta_difference` run the pairwise
+set algebra, and `kmv_distinct_agg` reads each group's image once in a
+batched finisher, kernels/theta_compat.estimate_bounds (the reference
+getEstimate / getLowerBound / getUpperBound). Items are the value cast
+to a Spark string, hashed as MurmurHash3 of its UTF-8 bytes with seed
+9001, the reference's update(String).
+
+The tuple aggregate runs on functions/sketch_reduce.py: a partial
+sketch per (Arrow batch, group), a sorted native merge, one batched
+finisher, so its state stays O(k) per group whatever the group size.
+VarOpt runs on it too, its partial a k-sample frame per (Arrow batch,
+group); EBPPS keeps its own single-level grouped map (see
+ebpps_sample_agg).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Iterator
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -22,40 +29,60 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_UPDATE_SEED
-from ..kernels import kmv
+from ..kernels import theta_compat
 from ..kernels.hashing import hash_bytes_batch
+from ..kernels.mmh3 import mmh3_128
 from ..kernels.shingle import _flatten_utf8
-from .sketch_reduce import blob_frame, frame_blob, group_partials, reduce_partials
+from ..kernels.tuple_kmv import TupleKmv
+from .sketch_reduce import (
+    blob_frame, finish_rows, frame_blob, group_partials, reduce_partials,
+)
+
+# the one-item image of '': the reference's update(String) skips the
+# empty string, but the engine counts it as a value (NULL is the no-op)
+_EMPTY_STRING_IMAGE = theta_compat.serialize_compact(
+    theta_compat.hash_bytes_items([b""]))
 
 
 def _hash_strings(values: pd.Series, seed: int) -> np.ndarray:
-    """63-bit hashes; the caller must handle NULLs (see _kmv_partials —
-    the reference's update(null) is a NO-OP, theta/UpdatableThetaSketch
-    update contract, so NULL must not hash like an empty string)."""
+    """63-bit hashes of the stringified values, NULL hashed as ''; the
+    private hash of the sampling and frequent-item lanes."""
     data, starts, lens = _flatten_utf8(values.fillna("").astype(str))
     return (hash_bytes_batch(data, starts, lens, seed) >> np.uint64(1)).astype(np.int64)
 
 
-def _kmv_partials(
-    df: DataFrame, group_col: str, value_col: str, k: int, seed: int
+def theta_lg_k(k: int) -> int:
+    """log2 of a theta k: a power of two in Spark's lgNomEntries range."""
+    lg = int(k).bit_length() - 1
+    if k != 1 << lg or not 4 <= lg <= 26:
+        raise ValueError(f"theta k must be a power of two in [2^4, 2^26], got {k}")
+    return lg
+
+
+def kmv_sketch_bytes_agg(
+    df: DataFrame, group_col: str, value_col: str, k: int = 4096,
+    seed: int = DEFAULT_UPDATE_SEED,
 ) -> DataFrame:
-    """(group, sketch): one bottom-k sketch per (Arrow batch, group).
-    NULL values are masked out (reference update(null) no-op) instead
-    of hashing as ''."""
-
-    def build(sub: pd.DataFrame) -> tuple:
-        v = sub[value_col]
-        h = _hash_strings(v, seed)[v.notna().to_numpy()]
-        return (kmv.serialize(kmv.bottom_k(h, k), k),)
-
-    return group_partials(
-        df.select(F.col(group_col).cast("string").alias(group_col), value_col),
-        group_col, build, f"{group_col} string, sketch binary",
+    """(group string, sketch binary): per group the reference compact
+    theta image (CompactThetaSketch.toByteArray, theta/ThetaSketch.java
+    :423) of the distinct values, built by Spark's theta_sketch_agg.
+    Exact (theta = 1) up to k distinct values; beyond, the k smallest
+    hashes with theta the (k+1)-th. NULL values are update no-ops; an
+    all-NULL group keeps the empty image. The image is mergeable:
+    theta_union_agg of images equals the one-pass image."""
+    lg = theta_lg_k(k)
+    if seed != DEFAULT_UPDATE_SEED:
+        raise ValueError(f"Spark's theta functions hash with seed {DEFAULT_UPDATE_SEED}")
+    v = F.col(value_col).cast("string")
+    return df.groupBy(F.col(group_col).cast("string").alias(group_col)).agg(
+        F.theta_sketch_agg(v, lg).alias("sketch"),
+        F.max(v == "").alias("has_empty"),
+    ).select(
+        group_col,
+        F.when(F.col("has_empty"),
+               F.theta_union("sketch", F.lit(_EMPTY_STRING_IMAGE), lg))
+        .otherwise(F.col("sketch")).alias("sketch"),
     )
-
-
-def _kmv_union(blobs, k: int) -> np.ndarray:
-    return kmv.union_many([kmv.deserialize(b)[0] for b in blobs], k)
 
 
 def kmv_distinct_agg(
@@ -65,58 +92,34 @@ def kmv_distinct_agg(
     k: int = 4096,  # reference default nominal entries, thetacommon/ThetaUtil.java:55
     seed: int = DEFAULT_UPDATE_SEED,
 ) -> DataFrame:
-    """Per-group distinct-count estimate with 2SD bounds.
-
-    Two-level, like Catalyst's partial/final split: (1) one serialized
-    sketch per (arrow batch, group) — map-side combine, so only O(k)
-    bytes per group cross the shuffle; (2) the batched finisher unions
-    each group's sorted sketches (ThetaUnionImpl semantics). A group
-    of 10^10 rows never materializes in one pandas frame.
-    Output: (group, distinct_est, distinct_lb, distinct_ub, retained).
-    """
-
-    def finish(blobs) -> tuple:
-        u = _kmv_union(blobs, k)
-        lb, est, ub = kmv.estimate_bounds(u, k, 2)
-        return (est, lb, ub, len(u))
-
-    return reduce_partials(
-        _kmv_partials(df, group_col, value_col, k, seed), group_col, finish,
+    """Per-group distinct-count estimate with 2SD bounds: the
+    kmv_sketch_bytes_agg image of each group, read by one batched
+    finisher over the G group rows. Output: (group, distinct_est,
+    distinct_lb, distinct_ub, retained)."""
+    return finish_rows(
+        kmv_sketch_bytes_agg(df, group_col, value_col, k, seed),
+        partial(theta_compat.estimate_bounds, num_std_dev=2),
         f"{group_col} string, distinct_est double, distinct_lb double, "
         "distinct_ub double, retained bigint",
     )
 
 
-def kmv_sketch_bytes_agg(
-    df: DataFrame, group_col: str, value_col: str, k: int = 4096,
-    seed: int = DEFAULT_UPDATE_SEED,
-) -> DataFrame:
-    """Per-group serialized KMV sketch (BinaryType) — the mergeable
-    partial-aggregate form that crosses checkpoints/shuffles, the
-    analog of CompactThetaSketch.toByteArray (theta/ThetaSketch.java:423).
-    The union of per-batch bottom-k sketches is the bottom-k of the
-    whole group, so the bytes match a one-pass sketch."""
-    return reduce_partials(
-        _kmv_partials(df, group_col, value_col, k, seed), group_col,
-        lambda blobs: (kmv.serialize(_kmv_union(blobs, k), k),),
-        f"{group_col} string, sketch binary",
+def _tuple_partial(
+    sub: pd.DataFrame, names: list[str], k: int, combiner: str, seed: int
+) -> tuple:
+    """One ArrayOfDoublesCompactSketch image of a batch's (key, summary)
+    rows. Keys hash as the reference's update(String): MurmurHash3 of
+    the UTF-8 bytes, [0] >>> 1 (NULL hashes as ''); hash 0 is never
+    stored."""
+    h = np.fromiter(
+        (mmh3_128(s.encode("utf-8"), seed)[0] >> 1
+         for s in sub["__key"].fillna("")),
+        np.int64, len(sub),
     )
-
-
-def kmv_merge_sketches(sketches: list[bytes]) -> tuple[float, float, float]:
-    """Driver-side final merge of serialized sketches → (lb, est, ub).
-    Union is associative/commutative, so any merge tree is equivalent
-    (ThetaUnionImpl semantics)."""
-    sigs = []
-    k = None
-    for b in sketches:
-        sig, kk = kmv.deserialize(b)
-        sigs.append(sig)
-        k = kk if k is None else min(k, kk)
-    if k is None:
-        return 0.0, 0.0, 0.0
-    u = kmv.union_many(sigs, k)
-    return kmv.estimate_bounds(u, k, 2)
+    v = sub[[f"__s_{n}" for n in names]].to_numpy(np.float64)
+    keep = h != 0
+    return (TupleKmv.from_stream(h[keep], v[keep], k, combiner=combiner)
+            .to_ref_bytes(seed),)
 
 
 def tuple_sketch_agg(
@@ -131,7 +134,7 @@ def tuple_sketch_agg(
     """Per-group TUPLE sketch aggregation (kernels/tuple_kmv.py;
     reference tuple/TupleSketch.java + arrayofdoubles): a Theta sample
     of distinct keys where each retained key carries combined summary
-    columns. Two-level partial/final like kmv_distinct_agg — O(k·d)
+    columns. Two-level partial/final on functions/sketch_reduce.py — O(k·d)
     state per group per task, shipped as an ArrayOfDoublesCompactSketch
     image that datasketches-java heapifies.
 
@@ -140,8 +143,6 @@ def tuple_sketch_agg(
     (group, distinct_est, retained, total_<name>... ) where totals are
     the unbiased all-keys estimates (exact when distinct <= k).
     """
-    from ..kernels.tuple_kmv import TupleKmv
-
     names = list(summary_exprs.keys())
     proj = df.select(
         F.col(group_col).cast("string").alias(group_col),
@@ -150,11 +151,6 @@ def tuple_sketch_agg(
           else c.cast("double").alias(f"__s_{n}")
           for n, c in summary_exprs.items()],
     )
-
-    def build(sub: pd.DataFrame) -> tuple:
-        h = _hash_strings(sub["__key"], seed)
-        v = sub[[f"__s_{n}" for n in names]].to_numpy(np.float64)
-        return (TupleKmv.from_stream(h, v, k, combiner=combiner).to_ref_bytes(seed),)
 
     def finish(blobs) -> tuple:
         sk = reduce(lambda a, b: a.union(b, combiner=combiner),
@@ -167,7 +163,11 @@ def tuple_sketch_agg(
         + ", ".join(f"total_{n} double" for n in names)
     )
     return reduce_partials(
-        group_partials(proj, group_col, build, f"{group_col} string, sketch binary"),
+        group_partials(
+            proj, group_col,
+            partial(_tuple_partial, names=names, k=k, combiner=combiner, seed=seed),
+            f"{group_col} string, sketch binary",
+        ),
         group_col, finish, schema,
     )
 
@@ -289,21 +289,20 @@ def ebpps_sample_agg(
 def theta_pair_set_ops(
     sketches: DataFrame, group_col: str = "group", sketch_col: str = "sketch"
 ) -> DataFrame:
-    """All-pairs Theta set algebra over per-group serialized KMV
-    sketches (reference T4/T5: theta/ThetaIntersectionImpl.java:442-480
-    intersection θ-rule, theta/ThetaAnotBimpl.java:83-98 A-not-B;
-    corner cases thetacommon/SetOperationCornerCases.java — both empty
-    inputs and θ<1 inputs follow the min-θ rule in kernels/kmv.py).
+    """All-pairs theta set algebra over per-group compact images
+    (reference T4/T5: theta/ThetaIntersectionImpl.java:442-480
+    intersection, theta/ThetaAnotBimpl.java:83-98 A-not-B, both under
+    the min-theta rule), run by Spark's theta_intersection and
+    theta_difference.
 
     Input: (group, sketch) as produced by kmv_sketch_bytes_agg. Output
     one row per unordered pair a<b: (group_a, group_b, n_common,
-    n_a_only, n_b_only) = RETAINED counts of A∩B, A\\B, B\\A under the
-    pair's min-θ. In the exact regime (θ=1, distinct < k) these are
-    the exact set cardinalities — the DuckDB INTERSECT/EXCEPT oracle
-    (gate query theta_user_overlap); in estimation mode divide by θ
-    for the estimate (pytest-gated).
+    n_a_only, n_b_only) = the rounded estimates of |A∩B|, |A\\B| and
+    |B\\A|. In the exact regime (theta = 1, distinct <= k) these are
+    the exact set cardinalities, the DuckDB INTERSECT/EXCEPT oracle
+    (gate query theta_user_overlap). An empty image is the empty set.
 
-    The pair join is a crossJoin of two G-row sketch frames — G groups
+    The pair join is a crossJoin of two G-row sketch frames: G groups
     of O(k) state, the already-reduced form; at any scale this is a
     broadcast of sketches, never of data."""
     a = sketches.select(
@@ -312,32 +311,11 @@ def theta_pair_set_ops(
     b = sketches.select(
         F.col(group_col).alias("group_b"), F.col(sketch_col).alias("sk_b")
     )
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("group_a") < F.col("group_b"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n_c, n_a, n_b = [], [], []
-            for ba, bb in zip(pdf["sk_a"], pdf["sk_b"]):
-                sa, ka = kmv.deserialize(bytes(ba))
-                sb, kb = kmv.deserialize(bytes(bb))
-                kk = min(ka, kb)
-                n_c.append(len(kmv.intersect(sa, sb, kk)))
-                n_a.append(len(kmv.a_not_b(sa, sb, kk)))
-                n_b.append(len(kmv.a_not_b(sb, sa, kk)))
-            yield pd.DataFrame(
-                {
-                    "group_a": pdf["group_a"],
-                    "group_b": pdf["group_b"],
-                    "n_common": np.asarray(n_c, np.int64),
-                    "n_a_only": np.asarray(n_a, np.int64),
-                    "n_b_only": np.asarray(n_b, np.int64),
-                }
-            )
-
-    return pairs.mapInPandas(
-        gen,
-        "group_a string, group_b string, n_common bigint, "
-        "n_a_only bigint, n_b_only bigint",
+    return a.crossJoin(F.broadcast(b)).filter(
+        F.col("group_a") < F.col("group_b")
+    ).select(
+        "group_a", "group_b",
+        F.theta_sketch_estimate(F.theta_intersection("sk_a", "sk_b")).alias("n_common"),
+        F.theta_sketch_estimate(F.theta_difference("sk_a", "sk_b")).alias("n_a_only"),
+        F.theta_sketch_estimate(F.theta_difference("sk_b", "sk_a")).alias("n_b_only"),
     )

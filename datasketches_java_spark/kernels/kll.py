@@ -4,8 +4,9 @@ Semantics follow the reference (kll/KllDoublesSketch.java:323-393,
 compaction kll/KllDoublesHelper.java:58-108, merge :134-196): a
 level-0 item buffer; when capacity overflows, the lowest over-capacity
 level is sorted and randomly halved (keep odd or even positions) into
-the level above, so an item at level h carries weight 2^h. Level
-capacities decay geometrically (c = 2/3, floor 8), giving the published
+the level above, so an item at level h carries weight 2^h; an
+odd-length level keeps one item in place, so the retained weight is n.
+Level capacities decay geometrically (c = 2/3, floor 8), giving the published
 normalized rank error 2.446/k^0.9433 at 99% confidence
 (kll/KllHelper.java:65-68,295-299; default k=200 kll/KllSketch.java:97).
 
@@ -130,8 +131,11 @@ class KllDoubles:
                 target = 0
             buf = np.sort(self.levels[target])
             start = int(coin(self.seed, self.n, target, len(buf)))
-            promoted = buf[start::2]
-            self.levels[target] = self._empty()
+            # an odd-length level keeps its smallest item in place, as
+            # KllDoublesHelper keeps the level's first: weight stays n
+            odd = len(buf) % 2
+            promoted = buf[odd + start::2]
+            self.levels[target] = buf[:odd]
             if target + 1 >= len(self.levels):
                 self.levels.append(self._empty())
             self.levels[target + 1] = np.concatenate(

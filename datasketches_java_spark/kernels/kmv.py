@@ -6,9 +6,12 @@ rebuild via quickselect :294-306; estimate `count·2^63/θ`:
 theta/ThetaSketch.java:621-623). A compact ordered Theta sketch IS a
 bottom-k MinHash signature, and the reference's JaccardSimilarity
 (theta/JaccardSimilarity.java:57-98) composes union∘intersect over such
-signatures exactly as `jaccard_estimate` below. Set algebra mirrors
-ThetaUnionImpl.java:272-303 (θ_out = min θ, keep hashes < θ),
-ThetaIntersectionImpl.java:442-480 and ThetaAnotBimpl.java:83-98.
+signatures exactly as `jaccard_estimate` below. The union mirrors
+ThetaUnionImpl.java:272-303 (θ_out = min θ, keep hashes < θ).
+
+These are the pipeline's signatures: bottom-k over 31-bit shingle
+hashes. Raw-item distinct counts use the reference theta image and
+Spark's theta functions instead (functions/sketch_udfs.py).
 
 Signatures are sorted non-negative int64 arrays (63-bit hash space), so
 Spark LongType round-trips preserve order. An empty array is the empty
@@ -160,20 +163,6 @@ def union_many(sigs: list[np.ndarray], k: int) -> np.ndarray:
     merged = np.unique(np.concatenate(sigs))
     merged = merged[merged <= th]
     return merged[:k]
-
-
-def intersect(sig_a: np.ndarray, sig_b: np.ndarray, k: int) -> np.ndarray:
-    """Theta intersection (ThetaIntersectionImpl.java:442-480)."""
-    th = min(theta_of(sig_a, k), theta_of(sig_b, k))
-    out = np.intersect1d(sig_a, sig_b)
-    return out[out <= th]
-
-
-def a_not_b(sig_a: np.ndarray, sig_b: np.ndarray, k: int) -> np.ndarray:
-    """Theta A-not-B (ThetaAnotBimpl.java:83-98,184-208)."""
-    th = min(theta_of(sig_a, k), theta_of(sig_b, k))
-    out = np.setdiff1d(sig_a, sig_b)
-    return out[out <= th]
 
 
 def estimate(sig: np.ndarray, k: int, hash_space: float = _TWO63) -> float:
@@ -402,26 +391,3 @@ def jaccard_bounds_flat(
     hi = np.where(both_empty, 1.0, np.where(one_empty, 0.0, hi))
     return lo, f, hi
 
-
-# --- serialization: versioned little-endian preamble (PreambleUtil analog) ---
-
-_MAGIC = 0x4B4D5631  # "KMV1"
-
-
-def serialize(sig: np.ndarray, k: int) -> bytes:
-    """Compact byte image: magic, version, k, count, sorted hashes.
-
-    Mirrors the preamble discipline of theta/PreambleUtil.java so
-    checkpointed BinaryType columns stay stable across code versions.
-    """
-    header = np.array([_MAGIC, 1, k, len(sig)], dtype="<u4")
-    return header.tobytes() + np.asarray(sig, dtype="<i8").tobytes()
-
-
-def deserialize(buf: bytes) -> tuple[np.ndarray, int]:
-    header = np.frombuffer(buf[:16], dtype="<u4")
-    if header[0] != _MAGIC or header[1] != 1:
-        raise ValueError("bad KMV sketch image")
-    k, count = int(header[2]), int(header[3])
-    sig = np.frombuffer(buf[16 : 16 + 8 * count], dtype="<i8").astype(np.int64)
-    return sig, k

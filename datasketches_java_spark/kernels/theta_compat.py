@@ -44,6 +44,7 @@ import struct
 
 import numpy as np
 
+from .bounds import ref_binomial_lower_bound, ref_binomial_upper_bound
 from .mmh3 import compute_seed_hash, mmh3_128, mmh3_128_longs
 
 SER_VER = 3
@@ -90,6 +91,25 @@ def build_theta(keys_hashed: np.ndarray, k: int = 4096) -> tuple[np.ndarray, int
 def estimate(n_retained: int, theta_long: int) -> float:
     """curCount / (thetaLong / LONG_MAX) (theta/ThetaSketch.java:621-623)."""
     return n_retained * (float(LONG_MAX) / float(theta_long))
+
+
+def estimate_bounds(
+    image: bytes, num_std_dev: int = 2, seed: int = DEFAULT_SEED
+) -> tuple[float, float, float, int]:
+    """(estimate, lower bound, upper bound, retained) of a theta image:
+    the reference getEstimate / getLowerBound / getUpperBound
+    (theta/ThetaSketch.java:262-266,378-382,621-623). Exact mode
+    (theta = 1 or empty) bounds are the retained count; estimating
+    mode takes BinomialBoundsN at theta = thetaLong / 2^63, so
+    num_std_dev must be 1, 2 or 3."""
+    h, theta_long, empty = deserialize_compact(image, seed)
+    n = len(h)
+    est = estimate(n, theta_long)
+    if empty or theta_long == LONG_MAX:
+        return est, float(n), float(n), n
+    theta = theta_long / float(LONG_MAX)
+    return (est, ref_binomial_lower_bound(n, theta, num_std_dev),
+            ref_binomial_upper_bound(n, theta, num_std_dev), n)
 
 
 def serialize_compact(

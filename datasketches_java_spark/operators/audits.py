@@ -3,9 +3,12 @@ reduce over one joined row set, members ⋈ signatures ⋈ captions, on
 the shared functions/sketch_reduce.py:
 
  1. group_partials: per (Arrow batch, cluster) the row count, the KMV
-    union of the member signatures (ThetaUnionImpl.java:272-303) and a
-    KLL sketch of the caption lengths as a reference KllDoublesSketch
-    image — map-side combine, O(k) state per cluster whatever its size.
+    union of the member signatures (ThetaUnionImpl.java:272-303) in the
+    signatures' own wire format (sorted little-endian int32 31-bit
+    hashes: pipeline hashes, not raw items, so they stay on
+    kernels/kmv.py rather than theta images) and a KLL sketch of the
+    caption lengths as a reference KllDoublesSketch image — map-side
+    combine, O(k) state per cluster whatever its size.
  2. reduce_partials: one native ObjectHashAggregate exchange (summed
     counts, sorted sketch arrays), then the batched finisher: per
     cluster row, the KMV union + binomial bounds and the KLL merge +
@@ -44,7 +47,7 @@ _HASH_SPACE_32 = float(2**31)  # pipeline signatures are top-32-bit truncated
 
 def _finish(n_rows, kmv_blobs, kll_blobs, k: int) -> tuple:
     """KMV union + binomial bounds, KLL merge + p50/p99 for one cluster."""
-    u = kmv.union_many([kmv.deserialize(b)[0] for b in kmv_blobs], k)
+    u = kmv.union_many([np.frombuffer(b, dtype="<i4") for b in kmv_blobs], k)
     lb, est, ub = kmv.estimate_bounds(u, k, 2, hash_space=_HASH_SPACE_32)
     sk = kll_merge(kll_blobs)
     return (n_rows, est, lb, ub,
@@ -53,9 +56,9 @@ def _finish(n_rows, kmv_blobs, kll_blobs, k: int) -> tuple:
 
 def _build(sub: pd.DataFrame, k: int) -> tuple:
     """Row count, KMV partial union, KLL partial of caption lengths."""
-    # sig wire format: little-endian int32 bytes
+    # sig wire format: little-endian int32 bytes; the partial keeps it
     sigs = [np.frombuffer(s, dtype="<i4") for s in sub["sig"]]
-    return (len(sub), kmv.serialize(kmv.union_many(sigs, k), k),
+    return (len(sub), kmv.union_many(sigs, k).astype("<i4").tobytes(),
             kll_partial(sub["cap_len"].to_numpy(np.float64)))
 
 

@@ -7,12 +7,18 @@ state table, exactly like the reference's update→union lifecycle but
 with parquet/Iceberg state instead of heap memory.
 
 `run_incremental_signatures` wires: readStream (file source) →
-foreachBatch( signature map → per-group KMV partials → DISTRIBUTED
-merge with the persisted state via sketch_reduce.reduce_partials ) → versioned
+foreachBatch( per-group theta images of the batch (Spark's
+theta_sketch_agg, functions/sketch_udfs.kmv_sketch_bytes_agg) →
+DISTRIBUTED merge with the persisted state by Spark's theta_union_agg ) → versioned
 state write + atomic CURRENT-pointer flip (the Iceberg snapshot
 pattern) + Spark checkpointing for exactly-once resume. Nothing sketch-
 sized ever passes through the driver — state merge scales with
 executors, not driver memory.
+
+Every state sketch is a reference compact theta image; the manifest
+says so under "format", and a state whose manifest lacks it (the
+engine's earlier private bottom-k images) is refused with a ValueError
+naming the directory.
 
 DELTA-MERGE STATE (round 4, verdict #8): the state table is hash-
 bucketed by group (`bucket = pmod(xxhash64(group), n_buckets)`); each
@@ -36,19 +42,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.sketch_reduce import reduce_partials
-from ..functions.sketch_udfs import _kmv_union, kmv_sketch_bytes_agg
-from ..kernels import kmv
+from ..functions.sketch_udfs import kmv_sketch_bytes_agg, theta_lg_k
+from ..kernels.theta_compat import estimate_bounds
 from ..scope import RunScope, own
 
 _CURRENT = "CURRENT"
+_FORMAT = "theta-compact"  # the manifest's "format": what the sketches are
 
 
 def _current_manifest(state_dir: str) -> tuple[str | None, dict]:
     """(manifest name, manifest dict) of the committed state. The dict
     carries "buckets" (bucket→delta-dir map), "commit" (monotone commit
-    index) and "batch" (the writing stream's namespaced batch token,
-    for retry detection)."""
+    index), "batch" (the writing stream's namespaced batch token, for
+    retry detection) and "format". Raises ValueError for a state whose
+    sketches are not in _FORMAT, so they are never misread."""
     ptr = os.path.join(state_dir, _CURRENT)
     if not os.path.exists(ptr):
         return None, {"buckets": {}}
@@ -59,6 +66,11 @@ def _current_manifest(state_dir: str) -> tuple[str | None, dict]:
         with open(path) as f:
             man = json.load(f)
         man.setdefault("buckets", {})
+        if man["buckets"] and man.get("format") != _FORMAT:
+            raise ValueError(
+                f"sketch state {state_dir} is not in the {_FORMAT} image "
+                "format (written by an older engine); rebuild it from its source"
+            )
         return name, man
     return None, {"buckets": {}}
 
@@ -100,10 +112,13 @@ def run_incremental_signatures(
     max_files_per_trigger: int = 1,
     n_buckets: int = 64,
 ) -> None:
-    """Stream parquet files from source_dir; maintain per-group KMV
+    """Stream parquet files from source_dir; maintain per-group theta
     distinct sketches under state_dir (bucketed delta versions + JSON
     manifest + CURRENT pointer). availableNow => drains the backlog
-    then stops (resumable: the Spark checkpoint remembers progress)."""
+    then stops (resumable: the Spark checkpoint remembers progress).
+    k is a power of two in [2^4, 2^26]."""
+    lg_k = theta_lg_k(k)
+    _current_manifest(state_dir)  # refuse a state in another format up front
     schema = spark.read.parquet(source_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -111,9 +126,6 @@ def run_incremental_signatures(
         .parquet(source_dir)
     )
     os.makedirs(state_dir, exist_ok=True)
-
-    def merge_group(blobs) -> tuple:
-        return (kmv.serialize(_kmv_union(blobs, k), k),)
 
     def _bucket_of(col):
         return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
@@ -133,7 +145,7 @@ def run_incremental_signatures(
         if prev_man.get("batch") == token:
             # retry of an already-committed batch (failure landed between
             # the CURRENT flip and the stream-checkpoint commit): state
-            # already includes this batch — the KMV union is idempotent,
+            # already includes this batch — the theta union is idempotent,
             # so skipping preserves exactly-once semantics.
             return
         commit = int(prev_man.get("commit", -1)) + 1
@@ -154,8 +166,8 @@ def run_incremental_signatures(
                     sess.read.parquet(*prev_paths).select(group_col, "sketch"))
             # distributed merge of touched buckets only: per-group sketch
             # union on executors, written partitioned by bucket
-            merged = reduce_partials(
-                new, group_col, merge_group, f"{group_col} string, sketch binary"
+            merged = new.groupBy(group_col).agg(
+                F.theta_union_agg("sketch", lg_k).alias("sketch")
             ).withColumn("bucket", _bucket_of(F.col(group_col)))
             out = os.path.join(state_dir, version)
             merged.write.mode("overwrite").partitionBy("bucket").parquet(out)
@@ -164,8 +176,8 @@ def run_incremental_signatures(
                 new_map[str(b)] = version
             mpath = os.path.join(state_dir, manifest_name)
             with open(mpath + ".tmp", "w") as f:
-                json.dump(
-                    {"buckets": new_map, "commit": commit, "batch": token}, f)
+                json.dump({"buckets": new_map, "commit": commit,
+                           "batch": token, "format": _FORMAT}, f)
             os.replace(mpath + ".tmp", mpath)
             _flip_current(state_dir, manifest_name)
         # GC with a one-generation grace period (round-4 advice): keep
@@ -193,7 +205,8 @@ def run_incremental_signatures(
 
 
 def read_state_estimates(state_dir: str, k: int = 256) -> pd.DataFrame:
-    """Distinct-count estimates from the persisted sketch state."""
+    """Distinct-count estimates with 2SD bounds from the persisted
+    sketch state. Each image carries its own theta, so k is not read."""
     import glob as _glob
 
     _, man = _current_manifest(state_dir)
@@ -202,9 +215,6 @@ def read_state_estimates(state_dir: str, k: int = 256) -> pd.DataFrame:
         for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
     ]
     state = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-    rows = []
-    for g, b in zip(state.iloc[:, 0], state["sketch"]):
-        sig, kk = kmv.deserialize(bytes(b))
-        lb, est, ub = kmv.estimate_bounds(sig, kk, 2)
-        rows.append((g, est, lb, ub))
+    rows = [(g, *estimate_bounds(b, 2)[:3])
+            for g, b in zip(state.iloc[:, 0], state["sketch"])]
     return pd.DataFrame(rows, columns=["group", "distinct_est", "distinct_lb", "distinct_ub"])

@@ -13,9 +13,14 @@ a reread-merge-rewrite table.
 Reference tie-in: the windowed lane is the reference's
 update→estimate lifecycle (theta/UpdateSketch.java) run per event-time
 window; the stateful lane is its union-accumulator lifecycle
-(theta/Union.java) with the accumulator held by the state store. Both
-reuse kernels/kmv.py, so stream and batch estimates agree exactly for
-the same input set (KMV state is order-insensitive).
+(theta/Union.java) with the accumulator held by the state store. Its
+state is the reference compact theta image that the batch lane's
+theta_sketch_agg writes (functions/sketch_udfs.kmv_sketch_bytes_agg),
+built by that image's Python twin (kernels/theta_compat: MurmurHash3
+of the value's Spark string, the k smallest hashes, theta the
+(k+1)-th), and its estimate is read by the batch lane's finisher, so
+stream and batch estimates agree exactly for the same input set (the
+image is order-insensitive).
 
 Scale notes (1000-executor shape):
 - the windowed agg is a standard shuffle-on-(window, group) stateful
@@ -31,6 +36,7 @@ from __future__ import annotations
 
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernels import kmv
+from ..kernels import theta_compat as tc
 
 
 def windowed_event_counts(
@@ -111,12 +117,7 @@ def windowed_event_counts(
 _STATE_SCHEMA = StructType([StructField("sketch", BinaryType())])
 
 
-def _running_kmv_func(k: int, group_col: str, value_col: str):
-    import numpy as np
-
-    from ..config import DEFAULT_UPDATE_SEED
-    from ..functions.sketch_udfs import _hash_strings
-
+def _running_theta_func(k: int, group_col: str, value_col: str):
     def fn(
         key: Tuple[str],
         pdfs: Iterator[pd.DataFrame],
@@ -124,16 +125,21 @@ def _running_kmv_func(k: int, group_col: str, value_col: str):
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             (blob,) = state.get
-            sk, _ = kmv.deserialize(bytes(blob))
+            h, theta, _ = tc.deserialize_compact(bytes(blob))
         else:
-            sk = np.empty(0, np.int64)
+            h, theta = np.empty(0, np.int64), tc.LONG_MAX
         n_new = 0
         for pdf in pdfs:
-            h = _hash_strings(pdf[value_col], DEFAULT_UPDATE_SEED)
-            sk = kmv.union_many([sk, kmv.bottom_k(h, k)], k)
+            new = tc.hash_bytes_items(
+                [v.encode("utf-8") for v in pdf[value_col].dropna()])
+            # union under the min-theta rule: hashes at or above the
+            # state's theta are outside the sample
+            h, t = tc.build_theta(np.concatenate([h, new[new < theta]]), k)
+            theta = min(theta, t)
             n_new += len(pdf)
-        state.update((bytearray(kmv.serialize(sk, k)),))
-        lb, est, ub = kmv.estimate_bounds(sk, k)
+        image = tc.serialize_compact_v4(h, theta)
+        state.update((bytearray(image),))
+        est, lb, ub, _ = tc.estimate_bounds(image, 2)
         yield pd.DataFrame(
             {
                 group_col: [key[0]],
@@ -158,8 +164,8 @@ def running_distinct_by_group(
     max_files_per_trigger: int = 1,
 ) -> None:
     """Running per-group distinct-count estimates via
-    `applyInPandasWithState`: the state store holds one serialized KMV
-    sketch per group (the reference's union-accumulator lifecycle,
+    `applyInPandasWithState`: the state store holds one compact theta
+    image per group (the reference's union-accumulator lifecycle,
     theta/Union.java, with Spark's checkpointed state store as the
     accumulator's home); every micro-batch updates the sketch with its
     rows and emits the group's refreshed estimate + binomial bounds.
@@ -186,9 +192,10 @@ def running_distinct_by_group(
     )
     updates = (
         stream.withColumn(group_col, F.col(group_col).cast("string"))
+        .withColumn(value_col, F.col(value_col).cast("string"))
         .groupBy(group_col)
         .applyInPandasWithState(
-            _running_kmv_func(k, group_col, value_col),
+            _running_theta_func(k, group_col, value_col),
             out_schema,
             _STATE_SCHEMA,
             "update",

@@ -134,7 +134,7 @@ def test_finisher_merge_order_invariant(spark):
     assert len(vals) > DEFAULT_K
     parts = np.array_split(vals, 5)
     kll_blobs = [kll_partial(p) for p in parts]
-    kmv_blobs = [kmv.serialize(kmv.bottom_k(p.astype(np.int64), k), k)
+    kmv_blobs = [kmv.bottom_k(p.astype(np.int32), k).astype("<i4").tobytes()
                  for p in parts]
 
     def run(order):
@@ -155,7 +155,7 @@ def test_finisher_merge_order_invariant(spark):
     ra, rb = run(a), run(b)
     assert ra.equals(rb)
     assert ra["n_rows"] == len(vals)
-    u = kmv.union_many([kmv.deserialize(blob)[0] for blob in kmv_blobs], k)
+    u = kmv.union_many([np.frombuffer(blob, dtype="<i4") for blob in kmv_blobs], k)
     lb, est, ub = kmv.estimate_bounds(u, k, 2, hash_space=float(2**31))
     assert (ra["kmv_union_lb"], ra["kmv_union_est"], ra["kmv_union_ub"]) == (lb, est, ub)
     want = kll_merge(sorted(kll_blobs))

@@ -332,14 +332,10 @@ def _converted_aggs():
         kll_items_quantile_agg, kll_sketch_agg,
     )
     from datasketches_java_spark.functions.req_agg import req_quantile_agg
-    from datasketches_java_spark.functions.sketch_udfs import (
-        kmv_distinct_agg, kmv_sketch_bytes_agg, tuple_sketch_agg,
-    )
+    from datasketches_java_spark.functions.sketch_udfs import tuple_sketch_agg
     from datasketches_java_spark.functions.tdigest_agg import tdigest_median_agg
 
     return {
-        "kmv_distinct_agg": lambda df: kmv_distinct_agg(df, "g", "s", k=64),
-        "kmv_sketch_bytes_agg": lambda df: kmv_sketch_bytes_agg(df, "g", "s", k=64),
         "tuple_sketch_agg": lambda df: tuple_sketch_agg(
             df, "g", "s", {"n": F.lit(1), "v": "v"}, k=64),
         "cpc_distinct_agg": lambda df: cpc_distinct_agg(df, "g", "u", lg_k=8),
@@ -348,6 +344,19 @@ def _converted_aggs():
         "kll_items_quantile_agg": lambda df: kll_items_quantile_agg(df, "g", "s"),
         "req_quantile_agg": lambda df: req_quantile_agg(df, "g", "v"),
         "tdigest_median_agg": lambda df: tdigest_median_agg(df, "g", "v"),
+    }
+
+
+def _theta_aggs():
+    """The raw-item theta aggregates: Spark's built-in theta functions,
+    not the shared reduce."""
+    from datasketches_java_spark.functions.sketch_udfs import (
+        kmv_distinct_agg, kmv_sketch_bytes_agg,
+    )
+
+    return {
+        "kmv_distinct_agg": lambda df: kmv_distinct_agg(df, "g", "s", k=64),
+        "kmv_sketch_bytes_agg": lambda df: kmv_sketch_bytes_agg(df, "g", "s", k=64),
     }
 
 
@@ -361,11 +370,11 @@ def _nulls_frame(spark):
     return spark.createDataFrame(rows, "g long, s string, v double, u long")
 
 
-@pytest.mark.parametrize("name", sorted(_converted_aggs()))
+@pytest.mark.parametrize("name", sorted({**_converted_aggs(), **_theta_aggs()}))
 def test_null_group_kept(spark, name):
-    """Every sketch aggregate on the shared reduce keeps a NULL group
-    like SQL GROUP BY, and the NULL group's rows land only there."""
-    out = _converted_aggs()[name](_nulls_frame(spark)).toPandas()
+    """Every keyed sketch aggregate keeps a NULL group like SQL GROUP
+    BY, and the NULL group's rows land only there."""
+    out = {**_converted_aggs(), **_theta_aggs()}[name](_nulls_frame(spark)).toPandas()
     assert len(out) == 3
     assert sorted(out["g"].dropna()) == ["1", "2"]
     assert out["g"].isna().sum() == 1
@@ -384,6 +393,66 @@ def test_converted_agg_plan_has_no_grouped_map(spark, name):
     p = df._jdf.queryExecution().explainString(mode.fromString("simple"))
     assert "FlatMapGroupsInPandas" not in p, p
     assert "ObjectHashAggregate" in p and "MapInPandas" in p, p
+
+
+def _theta_plans():
+    from datasketches_java_spark.functions.sketch_udfs import (
+        kmv_sketch_bytes_agg, theta_pair_set_ops,
+    )
+
+    return {
+        **_theta_aggs(),
+        "theta_pair_set_ops": lambda df: theta_pair_set_ops(
+            kmv_sketch_bytes_agg(df, "g", "s", k=64), "g"),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_theta_plans()))
+def test_theta_agg_plans(spark, name):
+    """The theta images are built, merged and intersected in the JVM:
+    the only Python node is kmv_distinct_agg's one batched finisher."""
+    df = _theta_plans()[name](_nulls_frame(spark))
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    p = df._jdf.queryExecution().explainString(mode.fromString("simple"))
+    python_nodes = ("InPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+    if name == "kmv_distinct_agg":
+        assert p.count("MapInPandas") == 1, p
+        assert sum(p.count(n) for n in python_nodes) == 1, p
+    else:
+        assert not any(n in p for n in python_nodes), p
+
+
+def test_theta_pair_set_ops_empty_group(spark):
+    """An all-NULL group's image is the empty set (the reference's
+    empty rules, thetacommon/SetOperationCornerCases.java): nothing in
+    common with any group, A-not-empty is A, empty-not-B is empty."""
+    import pandas as pd
+
+    from datasketches_java_spark.functions.sketch_udfs import (
+        kmv_sketch_bytes_agg, theta_pair_set_ops,
+    )
+
+    rows = pd.DataFrame({
+        "g": ["a"] * 10 + ["z", "z"],
+        "u": [f"u{i}" for i in range(10)] + [None, None],
+    })
+    df = spark.createDataFrame(rows, "g string, u string")
+    out = theta_pair_set_ops(kmv_sketch_bytes_agg(df, "g", "u", k=64), "g").collect()
+    assert [(r["group_a"], r["group_b"], r["n_common"], r["n_a_only"], r["n_b_only"])
+            for r in out] == [("a", "z", 0, 10, 0)]
+
+
+def test_theta_k_must_be_a_power_of_two_in_range(spark):
+    from datasketches_java_spark.functions.sketch_udfs import (
+        kmv_distinct_agg, kmv_sketch_bytes_agg,
+    )
+
+    df = _nulls_frame(spark)
+    for bad in (100, 8, 1 << 27):
+        with pytest.raises(ValueError):
+            kmv_sketch_bytes_agg(df, "g", "s", k=bad)
+        with pytest.raises(ValueError):
+            kmv_distinct_agg(df, "g", "s", k=bad)
 
 
 def _row_aggs():
@@ -428,6 +497,7 @@ def test_no_eval_type_warning(spark):
     df = _nulls_frame(spark).dropna()
     builds = [
         *_converted_aggs().values(),
+        *_theta_aggs().values(),
         *_row_aggs().values(),
         lambda d: ebpps_sample_agg(d, "g", "s", "v", k=2.0),
         lambda d: sketch_family_audit(d, "g", "u", "v"),

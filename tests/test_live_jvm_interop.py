@@ -1001,3 +1001,60 @@ def test_tuple_jaccard_matches_theta_port(spark):
     ) == bool(JT.exactlyEqual(a, a, ops))
     assert not tc.exactly_equal(
         np.sort(pa.hashes), pa.theta_long, np.sort(pb.hashes), pb.theta_long)
+
+
+def test_builtin_theta_bounds_match_java(spark):
+    """The one theta finisher (theta_compat.estimate_bounds) reads the
+    images Spark's theta_sketch_agg builds exactly as datasketches-java
+    does: getEstimate, getLowerBound(2), getUpperBound(2) and the
+    retained count, in the exact and the estimating regime."""
+    import pandas as pd
+
+    from datasketches_java_spark.functions.sketch_udfs import kmv_sketch_bytes_agg
+
+    jvm = spark._jvm
+    pdf = pd.DataFrame({
+        "g": ["exact"] * 50 + ["est"] * 3000 + ["one"],
+        "v": list(range(50)) + list(range(3000)) + [7],
+    })
+    images = kmv_sketch_bytes_agg(spark.createDataFrame(pdf), "g", "v", k=64).collect()
+    assert len(images) == 3
+    for r in images:
+        img = bytes(r["sketch"])
+        js = jvm.org.apache.datasketches.theta.Sketches.heapifySketch(_mem(spark, img))
+        est, lb, ub, retained = tc.estimate_bounds(img, 2)
+        assert (est, lb, ub, retained) == (
+            js.getEstimate(), js.getLowerBound(2), js.getUpperBound(2),
+            js.getRetainedEntries(True))
+        assert js.isEstimationMode() == (r["g"] == "est")
+
+
+def test_tuple_partial_unions_with_java_sketch_over_same_keys(spark):
+    """A tuple_sketch_agg partial hashes its keys as the reference's
+    update(String): unioned in datasketches-java with a Java-built
+    ArrayOfDoublesUpdatableSketch over the same 300 keys, the keys
+    meet, so the union estimates 300 (not 600) and sums both sides'
+    summaries per key."""
+    import pandas as pd
+
+    from datasketches_java_spark.functions.sketch_udfs import _tuple_partial
+
+    jvm = spark._jvm
+    aod = jvm.org.apache.datasketches.tuple.arrayofdoubles
+    keys = [f"key-{i}" for i in range(300)]
+    (ours,) = _tuple_partial(
+        pd.DataFrame({"__key": keys, "__s_v": 1.0}), ["v"],
+        k=4096, combiner="sum", seed=9001)
+    bld = aod.ArrayOfDoublesUpdatableSketchBuilder()
+    bld.setNumberOfValues(1)
+    theirs = bld.build()
+    arr = spark._sc._gateway.new_array(jvm.double, 1)
+    arr[0] = 2.0
+    for key in keys:
+        theirs.update(key, arr)
+    u = aod.ArrayOfDoublesSetOperationBuilder().setNumberOfValues(1).buildUnion()
+    u.union(aod.ArrayOfDoublesSketches.heapifySketch(_mem(spark, ours)))
+    u.union(theirs.compact())
+    res = u.getResult()
+    assert res.getEstimate() == 300.0
+    assert sorted(row[0] for row in res.getValues()) == [3.0] * 300

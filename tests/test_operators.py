@@ -64,13 +64,14 @@ def test_kmv_distinct_agg_accuracy(spark, docs):
 
 
 def test_kmv_sketch_bytes_merge(spark, docs):
-    from datasketches_java_spark.functions.sketch_udfs import (
-        kmv_merge_sketches,
-        kmv_sketch_bytes_agg,
-    )
+    """Per-source images union (Spark's theta_union_agg) to the image of
+    all texts; the finisher reads it."""
+    from datasketches_java_spark.functions.sketch_udfs import kmv_sketch_bytes_agg
+    from datasketches_java_spark.kernels.theta_compat import estimate_bounds
 
-    sk = kmv_sketch_bytes_agg(docs, "source", "text", k=4096).toPandas()
-    lb, est, ub = kmv_merge_sketches([bytes(b) for b in sk["sketch"]])
+    sk = kmv_sketch_bytes_agg(docs, "source", "text", k=4096)
+    merged = sk.agg(F.theta_union_agg("sketch", 12)).collect()[0][0]
+    est, lb, ub, _ = estimate_bounds(bytes(merged), 2)
     true = docs.select("text").distinct().count()
     assert lb <= true <= ub
     assert est == true  # unsaturated at smoke scale
