@@ -6,7 +6,7 @@ rebuild via quickselect :294-306; estimate `count·2^63/θ`:
 theta/ThetaSketch.java:621-623). A compact ordered Theta sketch IS a
 bottom-k MinHash signature, and the reference's JaccardSimilarity
 (theta/JaccardSimilarity.java:57-98) composes union∘intersect over such
-signatures exactly as `jaccard_estimate` below. The union mirrors
+signatures exactly as `jaccard_bounds_flat` below. The union mirrors
 ThetaUnionImpl.java:272-303 (θ_out = min θ, keep hashes < θ).
 
 These are the pipeline's signatures: bottom-k over 31-bit shingle
@@ -131,28 +131,11 @@ def bottom_k_flat(
     return h, lens, counts
 
 
-def bottom_k(hashes: np.ndarray, k: int) -> np.ndarray:
-    """Sorted bottom-k of one hash set (deduped)."""
-    u = np.unique(np.asarray(hashes, dtype=np.int64))
-    if len(u) > k:
-        u = u[:k]
-    return u
-
-
 def theta_of(sig: np.ndarray, k: int) -> np.int64:
     """θ of a bottom-k signature: k-th smallest if saturated, else 2^63."""
     if len(sig) >= k:
         return np.int64(sig[k - 1])
     return THETA_MAX
-
-
-def union(sig_a: np.ndarray, sig_b: np.ndarray, k: int) -> np.ndarray:
-    """Theta union: θ = min(θs), keep bottom-k of merged hashes < θ
-    (ThetaUnionImpl.java:272-303; empty rule: union of empties is empty)."""
-    merged = np.unique(np.concatenate([sig_a, sig_b]))
-    th = min(theta_of(sig_a, k), theta_of(sig_b, k))
-    merged = merged[merged <= th]
-    return merged[:k]
 
 
 def union_many(sigs: list[np.ndarray], k: int) -> np.ndarray:
@@ -199,47 +182,6 @@ def estimate_bounds(
     lb = ref_binomial_lower_bound(k - 1, theta, num_std_dev)
     ub = ref_binomial_upper_bound(k - 1, theta, num_std_dev)
     return lb, est, ub
-
-
-def jaccard_estimate(sig_a: np.ndarray, sig_b: np.ndarray, k: int) -> float:
-    """Jaccard estimate from two bottom-k signatures.
-
-    Mirrors JaccardSimilarity.jaccard (theta/JaccardSimilarity.java:57-98):
-    form the union sample at the common θ, then the fraction of the
-    union's retained hashes present in both sets estimates J.
-    """
-    if len(sig_a) == 0 and len(sig_b) == 0:
-        return 1.0  # reference: two empties are exactly equal (test :37-41)
-    if len(sig_a) == 0 or len(sig_b) == 0:
-        return 0.0
-    u = union(sig_a, sig_b, k)
-    if len(u) == 0:
-        return 0.0
-    in_a = np.isin(u, sig_a, assume_unique=True)
-    in_b = np.isin(u, sig_b, assume_unique=True)
-    return float(np.count_nonzero(in_a & in_b)) / float(len(u))
-
-
-def jaccard_bounds(
-    sig_a: np.ndarray, sig_b: np.ndarray, k: int, num_std_dev: float = 2.0
-) -> tuple[float, float, float]:
-    """(lb, est, ub) for Jaccard, per the reference's B-over-A ratio
-    bounds (thetacommon/BoundsOnRatiosInThetaSketchedSets.java:59-101),
-    here via the normal approximation of a binomial proportion over the
-    union sample."""
-    if len(sig_a) == 0 and len(sig_b) == 0:
-        return 1.0, 1.0, 1.0
-    if len(sig_a) == 0 or len(sig_b) == 0:
-        return 0.0, 0.0, 0.0
-    u = union(sig_a, sig_b, k)
-    n = len(u)
-    if n == 0:
-        return 0.0, 0.0, 0.0
-    in_a = np.isin(u, sig_a, assume_unique=True)
-    in_b = np.isin(u, sig_b, assume_unique=True)
-    f = float(np.count_nonzero(in_a & in_b)) / n
-    sd = np.sqrt(max(f * (1.0 - f), 1.0 / n) / n)
-    return max(0.0, f - num_std_dev * sd), f, min(1.0, f + num_std_dev * sd)
 
 
 def jaccard_bounds_flat_chunked(
@@ -293,14 +235,17 @@ def jaccard_bounds_flat(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(lb, est, ub) arrays for N signature pairs, one vectorized pass.
 
-    Same math as `jaccard_bounds` (union sample at common θ → binomial
-    proportion), but all pairs in a batch are flattened into one
-    lexsort — the hot path of the pipeline's verification batches.
-    Signatures arrive as two back-to-back value arrays + per-pair lengths (exactly the layout of
-    an Arrow binary column), so the Arrow verify path feeds buffers in
-    with zero per-row Python. Pair membership of a value is positional;
-    a/b interleaving is irrelevant because everything downstream keys
-    on (pair, value)."""
+    Form the union sample at the common θ (JaccardSimilarity.jaccard),
+    then bound the fraction of it present in both sets by the normal
+    approximation of a binomial proportion (the reference's B-over-A
+    ratio bounds, thetacommon/BoundsOnRatiosInThetaSketchedSets.java
+    :59-101). All pairs in a batch are flattened into one lexsort —
+    the hot path of the pipeline's verification batches. Signatures
+    arrive as two back-to-back value arrays + per-pair lengths (exactly
+    the layout of an Arrow binary column), so the Arrow verify path
+    feeds buffers in with zero per-row Python. Pair membership of a
+    value is positional; a/b interleaving is irrelevant because
+    everything downstream keys on (pair, value)."""
     n = len(la)
     if n == 0:
         z = np.empty(0, np.float64)
@@ -383,7 +328,7 @@ def jaccard_bounds_flat(
     hi = np.clip(f + num_std_dev * sd, 0.0, 1.0)
     # corner cases (SetOperationCornerCases analog): two empties are
     # exactly equal → (1,1,1); exactly one empty → certainly disjoint
-    # → (0,0,0), matching the scalar jaccard_bounds early-outs
+    # → (0,0,0)
     both_empty = (la == 0) & (lb_ == 0)
     one_empty = ((la == 0) | (lb_ == 0)) & ~both_empty
     f = np.where(both_empty, 1.0, np.where(one_empty, 0.0, f))

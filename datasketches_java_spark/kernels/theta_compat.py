@@ -11,7 +11,8 @@ theta/CompactOperations.java:218-266):
   bytes 3-4   lgNomLongs/lgArrLongs — 0 for compact
   byte 5      flags: 2 READ_ONLY | 4 EMPTY | 8 COMPACT | 16 ORDERED |
               32 SINGLEITEM (theta/PreambleUtil.java:207-212)
-  bytes 6-7   16-bit seed hash (common/Util.java:967 computeSeedHash)
+  bytes 6-7   16-bit seed hash (common/Util.java:967 computeSeedHash);
+              0 in the empty image, as the reference writes it
   [preLongs>1] bytes 8-11 retained count, bytes 12-15 p = 0.0f
   [preLongs>2] bytes 16-23 thetaLong
   then the ordered long[] of retained hashes.
@@ -123,13 +124,11 @@ def serialize_compact(
     n = len(h)
     if empty is None:
         empty = n == 0 and theta_long == LONG_MAX
-    seed_hash = compute_seed_hash(seed)
-
     if empty:
+        # seed hash 0, as the reference's EmptyCompactSketch writes it
         flags = FLAG_READ_ONLY | FLAG_COMPACT | FLAG_ORDERED | FLAG_EMPTY
-        return struct.pack(
-            "<BBBBBBH", 1, SER_VER, FAMILY_COMPACT, 0, 0, flags, seed_hash
-        )
+        return struct.pack("<BBBBBBH", 1, SER_VER, FAMILY_COMPACT, 0, 0, flags, 0)
+    seed_hash = compute_seed_hash(seed)
     if n == 1 and theta_long == LONG_MAX:
         flags = FLAG_READ_ONLY | FLAG_COMPACT | FLAG_ORDERED | FLAG_SINGLEITEM
         return (

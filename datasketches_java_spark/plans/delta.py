@@ -16,14 +16,14 @@ cost of a batch must scale with the DELTA, not the corpus. Per ingest:
      existed then);
   4. verify only the surviving delta pairs (channel scoring joins the
      signature columns back, old rows fetched by id);
-  5. append the new signatures, edges and id map as a NEW batch
-     directory and atomically flip a JSON manifest (same
-     snapshot-pointer pattern as streaming/incremental.py): each ingest
-     writes O(delta) bytes, a crashed ingest leaves the previous
-     manifest intact, and the manifest carries per-batch lineage (batch
-     id, row/edge counts, config hash). The counts are observed in the
-     jobs that write the rows (an Observation directly above each
-     write, so a retried task counts once), never re-read from disk;
+  5. append the new signatures, edges and id map to the state's three
+     unbucketed tables and commit one snapshot (sources/state_store.py
+     owns the format, the atomic flip, replay tokens and GC): each
+     ingest writes O(delta) bytes, and the manifest's "batches" carry
+     per-batch lineage (batch id, row/edge counts, config hash). The
+     counts are observed in the jobs that write the rows (an
+     Observation directly above each write, so a retried task counts
+     once), never re-read from disk;
   6. `state_clusters`: connected components over the stored verified
      edges — CC cost is edge-count-scaled (operators/cluster.py), never
      corpus-scaled — with the vertices and the min-image_id names both
@@ -32,8 +32,7 @@ cost of a batch must scale with the DELTA, not the corpus. Per ingest:
 
 Every state read passes its fixed schema (SIG_SCHEMA, VERIFY_SCHEMA,
 the id map's two columns), so no read starts a footer job to infer
-it. The on-disk format is unchanged, so existing state directories read
-as before.
+it.
 
 Exactness: with hot-band caps disabled or untriggered, N sequential
 ingests produce the same verified-pair SET and cluster partition as a
@@ -50,10 +49,7 @@ never collected anywhere.
 
 from __future__ import annotations
 
-import json
-import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -66,52 +62,28 @@ from ..operators.signatures import (
 )
 from ..operators.verify import VERIFY_SCHEMA, verify_pairs
 from ..scope import RunScope, own
+from ..sources import state_store
 
-_MANIFEST = "MANIFEST.json"
-_IDMAP_SCHEMA = "id64 bigint, image_id string"
-
-
-def _read_manifest(state_dir: str) -> dict:
-    try:
-        with open(os.path.join(state_dir, _MANIFEST)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {"batches": []}
+_FORMAT = "dedup/2"  # the manifest's "format": the store layout of this lane
+_SCHEMAS = {
+    "signatures": SIG_SCHEMA,
+    "verified": VERIFY_SCHEMA,
+    "idmap": "id64 bigint, image_id string",
+}
 
 
-def _flip_manifest(state_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(state_dir, f".{_MANIFEST}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(state_dir, _MANIFEST))
-
-
-def _batch_paths(state_dir: str, manifest: dict, kind: str) -> list[str]:
-    return [
-        os.path.join(state_dir, kind, b["id"])
-        for b in manifest["batches"]
-        if b[f"n_{kind}"] > 0
-    ]
-
-
-def _read_batches(
-    spark: SparkSession, state_dir: str, manifest: dict, kind: str, schema: str
-) -> DataFrame | None:
-    paths = _batch_paths(state_dir, manifest, kind)
-    return spark.read.schema(schema).parquet(*paths) if paths else None
+def _table(spark: SparkSession, snap: state_store.Snapshot, table: str) -> DataFrame | None:
+    paths = snap.paths(table)
+    return spark.read.schema(_SCHEMAS[table]).parquet(*paths) if paths else None
 
 
 def read_state(
     spark: SparkSession, state_dir: str
 ) -> tuple[DataFrame | None, DataFrame | None, dict]:
-    """(signatures, verified edges, manifest) for the CURRENT state —
+    """(signatures, verified edges, manifest) for the committed state —
     parquet reads of exactly the batch directories the manifest lists."""
-    manifest = _read_manifest(state_dir)
-    return (
-        _read_batches(spark, state_dir, manifest, "signatures", SIG_SCHEMA),
-        _read_batches(spark, state_dir, manifest, "verified", VERIFY_SCHEMA),
-        manifest,
-    )
+    snap = state_store.load(state_dir, _FORMAT)
+    return _table(spark, snap, "signatures"), _table(spark, snap, "verified"), snap.manifest
 
 
 def _write_counted(df: DataFrame, path: str) -> int:
@@ -136,24 +108,16 @@ def ingest_batch(
     `state_clusters`, reading it on demand instead of per micro-batch).
     See module docstring for the plan.
 
-    `epoch` makes the ingest IDEMPOTENT per source batch: Structured
-    Streaming's foreachBatch re-delivers the same epoch_id after a
-    failed/interrupted micro-batch, so a replayed (already committed)
-    epoch is a no-op — the manifest records each batch's epoch, and the
-    atomic flip (_flip_manifest) means a crash mid-ingest leaves the
-    epoch unrecorded and the orphan batch directory unreferenced (the
-    replay writes a fresh directory; orphans are never read). The
-    streaming sink passes a STRING token namespaced by its checkpoint
-    identity ('<query_id>:<epoch_id>') so two streams, or a recreated
-    checkpoint restarting at epoch 0, can never false-match each
-    other's recorded epochs."""
-    os.makedirs(state_dir, exist_ok=True)
-    manifest = _read_manifest(state_dir)
-    if epoch is not None and any(
-        b.get("epoch") == epoch for b in manifest["batches"]
-    ):
+    `epoch` makes the ingest IDEMPOTENT per source batch: a token the
+    state already holds (sources/state_store.py's replay rule) is a
+    no-op, so a foreachBatch re-delivery after a failure ingests once.
+    The streaming sink passes tokens namespaced by its checkpoint
+    ('<query_id>:<epoch_id>'); a crash mid-ingest leaves the previous
+    snapshot and an orphan the next commit collects."""
+    snap = state_store.load(state_dir, _FORMAT)
+    if snap.replayed(epoch):
         return state_clusters(spark, state_dir) if compute_clusters else None
-    sigs_old = _read_batches(spark, state_dir, manifest, "signatures", SIG_SCHEMA)
+    sigs_old = _table(spark, snap, "signatures")
 
     # the scope frees sigs_new even if a write below raises; it closes
     # before state_clusters, whose CC labels the caller's scope owns
@@ -188,25 +152,21 @@ def ingest_batch(
 
         verified_new = verify_pairs(candidates, sigs_all, cfg)
 
-        batch_id = f"b{len(manifest['batches']):05d}_{uuid.uuid4().hex[:8]}"
-        sig_path = os.path.join(state_dir, "signatures", batch_id)
-        edge_path = os.path.join(state_dir, "verified", batch_id)
-        map_path = os.path.join(state_dir, "idmap", batch_id)
-        n_sig = _write_counted(sigs_new, sig_path)
-        n_edge = _write_counted(verified_new, edge_path)
-        id_map(new_corpus).write.parquet(map_path)
-        manifest["batches"].append(
-            {
-                "id": batch_id,
-                "n_signatures": n_sig,
-                "n_verified": n_edge,
-                "n_idmap": n_sig,
-                "config_hash": cfg.config_hash(),
-                "ts": round(time.time(), 1),
-                **({"epoch": epoch} if epoch is not None else {}),
-            }
-        )
-        _flip_manifest(state_dir, manifest)
+        version = snap.new_version()
+        n_sig = _write_counted(sigs_new, snap.path("signatures", version))
+        n_edge = _write_counted(verified_new, snap.path("verified", version))
+        id_map(new_corpus).write.parquet(snap.path("idmap", version))
+        counts = {"signatures": n_sig, "verified": n_edge, "idmap": n_sig}
+        batch = {
+            "id": version,
+            **{f"n_{t}": n for t, n in counts.items()},
+            "config_hash": cfg.config_hash(),
+            "ts": round(time.time(), 1),
+            **({"epoch": epoch} if epoch is not None else {}),
+        }
+        snap.commit(version, token=epoch,
+                    append=[t for t, n in counts.items() if n > 0],
+                    batches=snap.manifest.get("batches", []) + [batch])
     if not compute_clusters:
         return None
     return state_clusters(spark, state_dir)
@@ -214,19 +174,19 @@ def ingest_batch(
 
 def state_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     """Cluster assignment (image_id, cluster_id, cluster_size) over the
-    CURRENT state — connected components on the full stored edge set
+    committed state — connected components on the full stored edge set
     (edge-scaled, not corpus-scaled), min-image_id cluster naming (the
     pipeline's convention, plans/pipeline.py). The id map is both the
     vertex set and the boundary remap, so the signatures are not read."""
-    manifest = _read_manifest(state_dir)
-    edges_cur = _read_batches(spark, state_dir, manifest, "verified", VERIFY_SCHEMA)
-    idmap = _read_batches(spark, state_dir, manifest, "idmap", _IDMAP_SCHEMA)
+    snap = state_store.load(state_dir, _FORMAT)
+    edges_cur = _table(spark, snap, "verified")
+    idmap = _table(spark, snap, "idmap")
     edges = (
         edges_cur.select("id_a", "id_b")
         if edges_cur is not None
         else spark.createDataFrame([], "id_a bigint, id_b bigint")
     )
-    total_edges = sum(b["n_verified"] for b in manifest["batches"])
+    total_edges = sum(b["n_verified"] for b in snap.manifest["batches"])
     labels64 = connected_components(edges, idmap.select("id64"),
                                     n_edges=total_edges)
     # boundary remap — slim two-column join, bucketed at web scale

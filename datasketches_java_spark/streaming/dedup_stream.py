@@ -1,33 +1,18 @@
 """Structured-Streaming near-duplicate ingest: readStream source →
-foreachBatch delta-dedup sink over the manifest-versioned state
-(plans/delta.py).
+foreachBatch delta-dedup sink over the delta state (plans/delta.py).
 
 This is the streaming face of the incremental ingest lane: each
 micro-batch pays O(delta) work (sign new rows once, semi-join-prune
 stored bands to touched band keys, drop old×old candidates), and the
-dedup state lives OUTSIDE Spark's state store — in the same
-atomically-flipped parquet+manifest layout batch ingest uses — so a
-batch job, a second stream, or an ad-hoc `state_clusters` reader can
-all consume it.
+dedup state lives OUTSIDE Spark's state store, in the versioned store
+batch ingest uses (sources/state_store.py), so a batch job, a second
+stream, or an ad-hoc `state_clusters` reader can all consume it.
 
-Exactly-once ingest semantics come from two pieces composed:
-  - Structured Streaming's checkpoint gives at-least-once foreachBatch
-    delivery with a monotone `epoch_id` that REPEATS on replay after a
-    failure;
-  - `ingest_batch(epoch=...)` is idempotent per epoch: a committed
-    epoch is recorded in the manifest (atomic flip), so a replay is a
-    no-op, and a crash mid-ingest leaves an unreferenced orphan
-    directory the replay supersedes.
-
-Epoch tokens are NAMESPACED by the stream's persistent query id (the
-`id` Structured Streaming writes into `checkpoint_dir/metadata`): raw
-epoch_ids are only unique PER CHECKPOINT, so without the namespace a
-fresh checkpoint (corruption recovery, reprocessing) or a second
-stream feeding the same state_dir would restart at epoch 0 and have
-its first batches silently discarded as historic replays. Same
-checkpoint -> same id -> replays still dedupe; new checkpoint -> new
-id -> no false replay. If the metadata file is unreadable the
-checkpoint path itself is the namespace.
+Exactly-once ingest composes Structured Streaming's at-least-once
+foreachBatch delivery (an `epoch_id` that REPEATS on replay after a
+failure) with the store's replay rule: each micro-batch commits under
+the token '<query id>:<epoch_id>' (`state_store.batch_token`), and a
+token the state already holds is a no-op.
 
 Clustering is deliberately NOT computed per micro-batch: connected
 components is a multi-job stage whose output no sink consumes
@@ -42,27 +27,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import FROZEN, DedupConfig
 from ..plans.delta import ingest_batch
+from ..sources import state_store
 
 CORPUS_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
     "caption string, phash long"
 )
-
-
-def _stream_tag(checkpoint_dir: str | None) -> str | None:
-    """Persistent identity of the stream writing this checkpoint: the
-    query `id` from `checkpoint_dir/metadata` (written at start(),
-    before the first batch), falling back to the checkpoint path."""
-    if checkpoint_dir is None:
-        return None
-    import json
-    import os
-
-    try:
-        with open(os.path.join(checkpoint_dir, "metadata")) as f:
-            return str(json.load(f)["id"])
-    except Exception:
-        return checkpoint_dir
 
 
 def dedup_sink(
@@ -71,20 +41,16 @@ def dedup_sink(
 ):
     """foreachBatch function: ingest each micro-batch into the delta
     state, idempotent per (stream, epoch) — see module docstring.
-    `checkpoint_dir=None` keeps raw-int epoch tokens (single-stream,
-    never-recreated checkpoint; pre-namespace manifests)."""
-    holder: dict[str, str] = {}
+    `checkpoint_dir=None` keeps raw-int epoch tokens (one stream whose
+    checkpoint is never recreated)."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if checkpoint_dir is not None and "tag" not in holder:
-            holder["tag"] = _stream_tag(checkpoint_dir)
-        tag = holder.get("tag")
-        token = f"{tag}:{int(epoch_id)}" if tag else int(epoch_id)
         ingest_batch(
             batch_df.sparkSession, state_dir, batch_df, cfg,
-            epoch=token, compute_clusters=False,
+            epoch=state_store.batch_token(checkpoint_dir, epoch_id),
+            compute_clusters=False,
         )
 
     return _sink

@@ -135,7 +135,7 @@ def test_streaming_gc_grace_period(spark, tmp_path):
         with open(os.path.join(state, "CURRENT")) as f:
             name = f.read().strip()
         with open(os.path.join(state, name)) as f:
-            return set(json.load(f)["buckets"].values())
+            return {v for vs in json.load(f)["tables"]["sketches"].values() for v in vs}
 
     _append(["a", "b"])
     run_incremental_signatures(spark, src, state, ckpt, n_buckets=4)
@@ -146,9 +146,9 @@ def test_streaming_gc_grace_period(spark, tmp_path):
     v1 = _versions()
     assert v1 != v0
     for v in v0:
-        assert os.path.isdir(os.path.join(state, v)), v
+        assert os.path.isdir(os.path.join(state, "sketches", v)), v
     # batch 2: v0 is now unreachable from BOTH live manifests => GC'd
     _append(["d"])
     run_incremental_signatures(spark, src, state, ckpt, n_buckets=4)
     for v in v0 - v1 - _versions():
-        assert not os.path.isdir(os.path.join(state, v)), v
+        assert not os.path.isdir(os.path.join(state, "sketches", v)), v

@@ -134,8 +134,8 @@ def test_finisher_merge_order_invariant(spark):
     assert len(vals) > DEFAULT_K
     parts = np.array_split(vals, 5)
     kll_blobs = [kll_partial(p) for p in parts]
-    kmv_blobs = [kmv.bottom_k(p.astype(np.int32), k).astype("<i4").tobytes()
-                 for p in parts]
+    kmv_blobs = [kmv.bottom_k_flat(p.astype(np.int32), np.zeros(len(p), np.int64), 1, k)[0]
+                 .astype("<i4").tobytes() for p in parts]
 
     def run(order):
         pdf = pd.DataFrame({

@@ -87,7 +87,9 @@ def test_crash_leaves_previous_manifest(spark, corpus, tmp_path):
     os.makedirs(os.path.join(state, "signatures", "b_orphan"), exist_ok=True)
     _, _, man_after = read_state(spark, state)
     assert man_after == man_before
-    with open(os.path.join(state, "MANIFEST.json")) as f:
+    with open(os.path.join(state, "CURRENT")) as f:
+        name = f.read().strip()
+    with open(os.path.join(state, name)) as f:
         assert len(json.load(f)["batches"]) == 1
 
 

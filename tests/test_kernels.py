@@ -94,23 +94,39 @@ def test_bottom_k_batch_matches_per_row():
         assert np.array_equal(sigs[i], np.sort(sigs[i]))
 
 
+def _sig(hashes: np.ndarray, k: int) -> np.ndarray:
+    """Sorted bottom-k of one hash set, through the signature stage's
+    kernel (one row)."""
+    hashes = np.asarray(hashes, dtype=np.int64)
+    vals, _, _ = kmv.bottom_k_flat(hashes, np.zeros(len(hashes), np.int64), 1, k)
+    return vals
+
+
+def _jaccard(a: np.ndarray, b: np.ndarray, k: int, num_std_dev: float = 2.0):
+    """(lb, est, ub) of one signature pair, through the verify stage's
+    kernel."""
+    lo, est, hi = kmv.jaccard_bounds_flat(
+        a, np.array([len(a)]), b, np.array([len(b)]), k, num_std_dev)
+    return lo[0], est[0], hi[0]
+
+
 def test_empty_rules():
     """Union / Jaccard corner cases (SetOpsCornerCasesTest analog);
     the intersection and A-not-B cases run on Spark's theta functions
     (tests/test_dist_aggs.py::test_theta_pair_set_ops_empty_group)."""
     e = np.empty(0, np.int64)
-    s = kmv.bottom_k(hash63(np.arange(10, dtype=np.uint64)), 8)
-    assert len(kmv.union(e, e, 8)) == 0
-    assert np.array_equal(kmv.union(e, s, 8), s)
-    assert kmv.jaccard_estimate(e, e, 8) == 1.0  # two empties exactly equal
-    assert kmv.jaccard_estimate(e, s, 8) == 0.0
+    s = _sig(hash63(np.arange(10, dtype=np.uint64)), 8)
+    assert len(kmv.union_many([e, e], 8)) == 0
+    assert np.array_equal(kmv.union_many([e, s], 8), s)
+    assert _jaccard(e, e, 8) == (1.0, 1.0, 1.0)  # two empties exactly equal
+    assert _jaccard(e, s, 8) == (0.0, 0.0, 0.0)
     assert kmv.estimate(e, 8) == 0.0
 
 
 def test_single_item():
-    s = kmv.bottom_k(hash63(np.array([7], dtype=np.uint64)), 256)
+    s = _sig(hash63(np.array([7], dtype=np.uint64)), 256)
     assert kmv.estimate(s, 256) == 1.0
-    assert kmv.jaccard_estimate(s, s, 256) == 1.0
+    assert _jaccard(s, s, 256)[1] == 1.0
 
 
 def test_distinct_estimate_within_bounds():
@@ -118,7 +134,7 @@ def test_distinct_estimate_within_bounds():
     for n in (1_000, 100_000):
         for k in (256, 4096):
             h = hash63(np.arange(n, dtype=np.uint64))
-            sig = kmv.bottom_k(h, k)
+            sig = _sig(h, k)
             lb, est, ub = kmv.estimate_bounds(sig, k, 2)
             assert lb <= n <= ub, (n, k, lb, est, ub)
             if n > k:
@@ -130,8 +146,8 @@ def test_jaccard_identical_sets():
     (theta/JaccardSimilarityTest.java:80-140)."""
     for n in (10, 1 << 10, 1 << 16):
         h = hash63(np.arange(n, dtype=np.uint64))
-        sig = kmv.bottom_k(h, 256)
-        assert kmv.jaccard_estimate(sig, sig, 256) > 0.9999
+        sig = _sig(h, 256)
+        assert _jaccard(sig, sig, 256)[1] > 0.9999
 
 
 def test_jaccard_overlap_thresholds():
@@ -140,31 +156,30 @@ def test_jaccard_overlap_thresholds():
     k = 4096
     n = 100_000
     base = np.arange(n, dtype=np.uint64)
-    a = kmv.bottom_k(hash63(base), k)
-    b95 = kmv.bottom_k(hash63(np.concatenate([base[: int(n * 0.95)],
-                                              base[-int(n * 0.05):] + 10_000_000])), k)
-    j95 = kmv.jaccard_estimate(a, b95, k)
+    a = _sig(hash63(base), k)
+    b95 = _sig(hash63(np.concatenate([base[: int(n * 0.95)],
+                                      base[-int(n * 0.05):] + 10_000_000])), k)
+    lb, j95, ub = _jaccard(a, b95, k, 2)
     true95 = 0.95 / 1.05
     assert abs(j95 - true95) < 0.03
-    lb, est, ub = kmv.jaccard_bounds(a, b95, k, 2)
-    assert lb <= true95 <= ub or abs(est - true95) < 0.02
-    b05 = kmv.bottom_k(hash63(np.concatenate([base[: int(n * 0.05)],
-                                              base[-int(n * 0.95):] + 10_000_000])), k)
-    j05 = kmv.jaccard_estimate(a, b05, k)
+    assert lb <= true95 <= ub or abs(j95 - true95) < 0.02
+    b05 = _sig(hash63(np.concatenate([base[: int(n * 0.05)],
+                                      base[-int(n * 0.95):] + 10_000_000])), k)
+    j05 = _jaccard(a, b05, k)[1]
     assert j05 < 0.061 + 0.02
 
 
 def test_union_merge_order_invariance():
     """HllSketchMergeOrderTest analog: any merge tree → same sketch."""
     rng = np.random.default_rng(7)
-    parts = [kmv.bottom_k(hash63(rng.integers(0, 1 << 50, 500).astype(np.uint64)), 64)
+    parts = [_sig(hash63(rng.integers(0, 1 << 50, 500).astype(np.uint64)), 64)
              for _ in range(8)]
     ref = kmv.union_many(parts, 64)
     for seed in range(5):
         perm = np.random.default_rng(seed).permutation(8)
         acc = np.empty(0, np.int64)
         for i in perm:
-            acc = kmv.union(acc, parts[i], 64)
+            acc = kmv.union_many([acc, parts[i]], 64)
         assert np.array_equal(acc, ref)
 
 
@@ -319,6 +334,6 @@ def test_kll_serialization_roundtrip():
 def test_binomial_bounds_cover_true_n():
     n, k = 1_000_000, 4096
     h = hash63(np.arange(n, dtype=np.uint64))
-    sig = kmv.bottom_k(h, k)
+    sig = _sig(h, k)
     lb, _est, ub = kmv.estimate_bounds(sig, k, 3)
     assert lb <= n <= ub

@@ -74,10 +74,10 @@ def test_delta_merge_rewrites_only_touched_buckets(spark, smoke_sf_dir, tmp_path
         with open(os.path.join(state, "CURRENT")) as f:
             name = f.read().strip()
         with open(os.path.join(state, name)) as f:
-            return json.load(f)["buckets"]
+            return json.load(f)["tables"]["sketches"]
 
     def file_stats(bmap, bucket):
-        d = os.path.join(state, bmap[str(bucket)], f"bucket={bucket}")
+        d = os.path.join(state, "sketches", bmap[str(bucket)][0], f"bucket={bucket}")
         return {
             p: os.stat(p).st_mtime_ns
             for p in sorted(glob.glob(os.path.join(d, "*.parquet")))
@@ -125,8 +125,9 @@ def test_fresh_checkpoint_continues_incremental_state(spark, smoke_sf_dir, tmp_p
     replays nor overwrite delta directories the committed manifest
     still references (versions are commit-indexed, batch tokens are
     checkpoint-namespaced)."""
+    import json
+
     from datasketches_java_spark.streaming.incremental import (
-        _current_manifest,
         read_state_estimates,
         run_incremental_signatures,
     )
@@ -149,8 +150,12 @@ def test_fresh_checkpoint_continues_incremental_state(spark, smoke_sf_dir, tmp_p
         spark, src_b, state, str(tmp_path / "ck_b"),
         group_col="event_type", value_col="user_id", k=4096)
 
-    _, man = _current_manifest(state)
-    assert "batch" in man and ":" in str(man["batch"])
+    with open(os.path.join(state, "CURRENT")) as f:
+        name = f.read().strip()
+    with open(os.path.join(state, name)) as f:
+        man = json.load(f)
+    # one token namespace per checkpoint, each a stream tag
+    assert len(man["epochs"]) == 2 and "" not in man["epochs"]
     est = read_state_estimates(state, 4096).set_index("group")
     exact = (
         events.groupBy("event_type")

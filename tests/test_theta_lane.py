@@ -79,6 +79,17 @@ def test_images_deterministic_and_equal_the_stream_twin(spark):
     assert theta == tc.LONG_MAX
 
 
+def test_all_null_group_state_equals_the_batch_image(spark):
+    """A group whose values are all NULL keeps the empty image, and the
+    stream's state is byte-equal to Spark's (seed hash 0 included)."""
+    pdf = pd.DataFrame({"g": ["nul"] * 3, "u": pd.array([None] * 3, dtype="Int64")})
+    df = spark.createDataFrame(pdf, "g string, u long")
+    (img,) = [bytes(r["sketch"]) for r in kmv_sketch_bytes_agg(df, "g", "u", k=K).collect()]
+    assert img == bytes.fromhex("01030300001e0000")
+    for chunks in (1, 3):
+        assert _stream_image(pdf, "nul", chunks) == img
+
+
 def _old_state(root) -> str:
     """A state directory in the engine's earlier private bottom-k image:
     <u4 header (magic 0x4B4D5631, version 1, k, n), then <i8 hashes."""
